@@ -47,16 +47,12 @@ def documents_as_media(df: DataFrame) -> DataFrame:
     """Adapter: treat the documents table as a binary-payload corpus so
     the plumbing is exercisable on the synthetic testdata.
 
-    r10 (guide §4/§2.5): repartition to session width BEFORE the
-    payload column is built — every downstream decode kernel
-    (mapInPandas) otherwise inherits the single-row-group scan's
-    1-task split and runs the whole corpus decode serially (stage
-    profile: mm_phash_dedup = one 2.4 s task).  The payload shuffle is
-    exactly the cost a splittable 100 TB source would not pay, and is
-    harmless there (the fanout contract in queries/_util)."""
-    df = df.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, "doc_id"
-    )
+    r10 (guide §4/§2.5): callers pass a scan spread on ``doc_id``
+    (``tbl(..., spread="doc_id")``) so the payload column is built
+    after the spread — every downstream decode kernel (mapInPandas)
+    otherwise inherits the single-row-group scan's 1-task split and
+    runs the whole corpus decode serially (stage profile:
+    mm_phash_dedup = one 2.4 s task)."""
     return df.select(
         F.col("doc_id").alias("media_id"),
         F.lit("image").alias("kind"),

@@ -4,29 +4,23 @@ Together with connected components (queries/components.py) this covers
 the two standard iterative-graph shapes: label fixpoints and weighted
 power iteration.  No GraphFrames dependency.
 
-Per-iteration plan (the round-3 rework — r2 spent 3 joins a round):
+Ranks are exact scaled int64s (``pagerank_exact``,
+``pagerank_personalized_exact``), so any aggregation order — Spark
+partial aggregation, DuckDB single-threaded — yields identical
+integers and the cross-engine oracle can hash-compare values.
 
-    contribs = weighted_edges ⋈ ranks  →  groupBy(dst).sum  →  update
+Per-iteration plan: ONE join of the static deg-folded edge table with
+the rank table, then ONE aggregation on ``dst``.  ``prepare_rank_graph``
+builds the edge table once, persisted hash-partitioned on the loop's
+aggregation key, so consecutive rounds reuse its partitioning instead
+of re-shuffling the edges; ``localCheckpoint`` truncates the rank
+lineage every ``_CKPT_EVERY`` rounds.
 
-exactly ONE join + ONE aggregation per round.  The out-degree weight
-``w = 1/deg`` is folded into the static edge table once up front, so
-the rank state is a bare (v, rank) pair and never re-joins the degree
-table.  Nodes without inflow (and the dangling-mass scalar) are
-detected ONCE before the loop; graphs where every node has an in-edge
-(any symmetrized graph) skip the per-round nodes rejoin entirely.
-
-``localCheckpoint`` truncates lineage each round (iterative plans
-otherwise grow exponentially) and preserves partitioning: the edge
-table is persisted hash-partitioned on ``src`` and ranks exit each
-round partitioned on the aggregation key, so consecutive iterations
-reuse both sides' partitioning instead of re-shuffling the edges.
-
-Scale: the rank table is (id, double) — tiny relative to edges; the
+Scale: the rank table is (id, int64) — tiny relative to edges; the
 per-iteration cost is the contribution aggregation's shuffle of
-(dst, share) pairs, never the edge payload.  At 100 TB of edges the
-src-partitioned persist is the co-location strategy; dangling-node
-mass redistribution (the standard correction) costs one scalar agg per
-round only on graphs that actually have dangling nodes.
+(dst, share) pairs, never the edge payload.  Past the broadcast budget
+the rank side joins by shuffled hash against the src-partitioned edge
+persist.
 """
 
 from __future__ import annotations
@@ -142,142 +136,6 @@ def prepare_rank_graph(
         e.unpersist()
 
 
-def pagerank(
-    edges: DataFrame,
-    damping: float = 0.85,
-    max_iter: int = 20,
-    tol: float | None = 1e-6,
-    check_every: int = 4,
-) -> DataFrame:
-    """(src, dst) directed edges → (v, rank); ranks sum to 1.
-
-    Driver-side scalar jobs are the iteration tax, so they are kept off
-    the hot path: dangling detection and the no-inflow node set are
-    computed once up front, and the L1-delta convergence probe runs
-    every ``check_every`` rounds (``tol=None`` disables it for
-    fixed-iteration runs)."""
-    spark = edges.sparkSession
-
-    # ONE pass over the (persisted) edge table builds every piece of
-    # node metadata the algorithm needs — r2 ran a separate driver job
-    # per structure probe, each re-deriving the edge table, and the
-    # setup cost dwarfed the iterations on mid-sized graphs.
-    e = edges.persist()
-    deg_tbl = e.groupBy(F.col("src").alias("v")).agg(
-        F.count("*").alias("deg")
-    )
-    in_tbl = (
-        e.select(F.col("dst").alias("v"))
-        .distinct()
-        .withColumn("has_in", F.lit(True))
-    )
-    meta = deg_tbl.join(in_tbl, "v", "full").persist()
-    stats = meta.agg(
-        F.count("*").alias("n"),
-        F.count(F.when(F.col("deg").isNull(), 1)).alias("n_dangling"),
-        F.count(F.when(F.col("has_in").isNull(), 1)).alias("n_no_inflow"),
-        F.sum("deg").alias("n_edges"),
-    ).collect()[0]
-    n = stats["n"]
-    has_dangling = stats["n_dangling"] > 0
-    all_have_inflow = stats["n_no_inflow"] == 0
-    n_edges = stats["n_edges"] or 0
-
-    nodes = meta.select("v")
-    dangling_nodes = (
-        meta.filter(F.col("deg").isNull()).select("v")
-        if has_dangling
-        else None
-    )
-    we = None
-    try:
-        # pin loop shuffles (the contribs agg) to the graph-sized width;
-        # AQE off for the loop — every round's plan is pinned (explicit
-        # broadcast hint, persisted static side), every round executes
-        # inside the context (eager per-round checkpoint), and the
-        # adaptive re-planning per round is pure driver latency here
-        with (
-            loop_shuffle_width(spark, int(n_edges), 20_000) as iter_n,
-            aqe_disabled(spark),
-        ):
-            # fold 1/deg into the edge table once; persist partitioned
-            # on src so every iteration's join reuses this layout
-            # without an exchange
-            we = (
-                e.join(
-                    meta.filter(F.col("deg").isNotNull()).select(
-                        F.col("v").alias("src"), "deg"
-                    ),
-                    "src",
-                )
-                .select("src", "dst", (F.lit(1.0) / F.col("deg")).alias("w"))
-                .repartition(iter_n, "src")
-                .persist()
-            )
-            # no eager count: the first iteration materializes the
-            # persist — same work, one fewer driver-side job barrier
-
-            # initial ranks stay lazy — lineage is one hop off the
-            # persisted meta table; the round-1 checkpoint truncates it
-            ranks = nodes.select("v", F.lit(1.0 / n).alias("rank"))
-            for it in range(max_iter):
-                dangling = (
-                    ranks.join(dangling_nodes, "v")
-                    .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-                    .collect()[0][0]
-                    if has_dangling
-                    else 0.0
-                )
-                base = (1.0 - damping) / n + damping * dangling / n
-                # a checkpointed rank table has no Catalyst size stats, so
-                # hint the broadcast ourselves while the node set is small:
-                # the edge table then never shuffles (map-side hash join +
-                # partial agg); past the threshold it degrades gracefully
-                # to the co-partitioned sort-merge join
-                rank_side = ranks.withColumnRenamed("v", "src")
-                if n * 48 < 64 << 20:  # ~48B/row vs 64MB broadcast budget
-                    rank_side = F.broadcast(rank_side)
-                else:
-                    # same §3.1 gate as _power_iterate: shuffled-hash
-                    # with the node-sized rank side as build, so the
-                    # src-partitioned edge persist streams unsorted
-                    # (SMJ re-sorted it every round — the sf10 decade's
-                    # super-linear term)
-                    rank_side = rank_side.hint("shuffle_hash")
-                contribs = (
-                    we.join(rank_side, "src")
-                    .groupBy("dst")
-                    .agg(F.sum(F.col("rank") * F.col("w")).alias("inflow"))
-                )
-                updated = contribs.select(
-                    F.col("dst").alias("v"),
-                    (
-                        F.lit(base) + F.lit(damping) * F.col("inflow")
-                    ).alias("rank"),
-                )
-                if not all_have_inflow:
-                    # nodes with no in-edges restart at the base mass
-                    updated = nodes.join(updated, "v", "left").select(
-                        "v", F.coalesce("rank", F.lit(base)).alias("rank")
-                    )
-                new = updated.localCheckpoint(eager=True)
-                if tol is not None and (it + 1) % check_every == 0:
-                    delta = (
-                        new.join(ranks.withColumnRenamed("rank", "old"), "v")
-                        .agg(F.sum(F.abs(F.col("rank") - F.col("old"))))
-                        .collect()[0][0]
-                    )
-                    if delta < tol:
-                        return new
-                ranks = new
-            return ranks
-    finally:
-        e.unpersist()
-        meta.unpersist()
-        if we is not None:
-            we.unpersist()
-
-
 def pagerank_exact(
     edges: DataFrame | None = None,
     iters: int = 10,
@@ -291,7 +149,7 @@ def pagerank_exact(
     hash-checkable tier of the operator.
 
     Double power iteration is aggregation-order-dependent in the last
-    bits, so the float ``pagerank`` above can only be rows-verified
+    bits, so a float PageRank could only be rows-verified
     cross-engine.  This variant keeps every rank as an int64 scaled by
     ``scale`` and replaces each float op with integer ops that are
     associative and order-independent:

@@ -5,83 +5,40 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from ..session import ensure_utc
-from ..tables import load_table
+from ..tables import load_table, scan_is_narrow
 
 
-def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    ensure_utc(spark)
-    return load_table(spark, sf_dir, name)
-
-
-def fanout(
-    df: DataFrame,
-    cols: str | list[str] = "doc_id",
-    gate: bool = True,
+def tbl(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    spread: str | Column | list[str | Column] | None = None,
 ) -> DataFrame:
-    """Unsplittable-source fan-out: repartition to default parallelism
-    before a compute-heavy row-local stage — but ONLY when the scan is
-    not already parallel (``gate=True``, the default).
+    """Scan one testdata table; with ``spread`` (a column name, or a
+    list of names/Columns), hash-repartition it to
+    ``defaultParallelism`` on that key when the scan is narrow.
 
-    The testdata parquet files are single row groups below the split
-    size, so Spark cannot split the scan — without this, hash/HOF-heavy
-    projections run as ONE task (measured: minhash sketches 2.7s
-    single-core → ~0.6s spread over 32).  The repartition is NOT free
-    where the source is splittable: it is a full shuffle write+fetch of
-    the source bytes, exactly the exchange a properly-split source
-    never needs (r10 verdict item 1 — the earlier "harmless extra
-    map-side pass" claim here was wrong).  So the gate reads the scan
-    parallelism ``tables.load_table`` stamped on the frame
-    (``_sg_scan_parts``, a driver-side re-run of Spark's own file-split
-    algorithm over os.stat sizes — zero py4j cost; an RDD-probe
-    alternative measured ~105 ms per call) and returns ``df`` unchanged
-    when the scan already yields at least ``defaultParallelism``
-    partitions: at 100 TB the gate always skips, on the single-
-    row-group testdata it always fires.  Row-local downstream math is
-    unaffected by the reordering either way.  NOTE: python attributes
-    do not survive narrow ops, so gated call sites must wrap the
-    ``tbl(...)`` frame itself (select/filter AFTER fanout — Catalyst
-    pushes both below the repartition, the plan is identical); a frame
-    without the tag repartitions unconditionally, the historical
-    behavior.
-
-    ``gate=False`` keeps the unconditional spread for MID-PLAN callers
-    (the basket pre-explode width fix): the spread there exists to
-    redistribute rows before an O(k²) explode, not to split a scan, so
-    it must always run regardless of the input's width.
-
-    ``cols=None`` spreads ROUND-ROBIN instead of hash-partitioning: a
-    keyed fanout forces its key columns into the scan's ReadSchema
-    even when the query never reads them (the tpch_q1 plan-contract
-    regression, r10), while round-robin needs no column at all.
-    BUT round-robin pays a local sort of the whole input on the map
-    side (SPARK-23207 retry determinism) — measured at 1.17 s vs
-    0.74 s for a keyed spread on the tpch_q1 map task (r10 second
-    optimization pass).  So when the query DOES read usable columns,
-    prefer passing Column expressions: ``F.xxhash64(<cols the query
-    already reads>)`` is the guide-§2.5 deterministic synthetic key —
-    no extra ReadSchema column, no map-side sort, retry-safe (the key
-    derives from row content, not ``rand()``)."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if gate:
-        n_scan = getattr(df, "_sg_scan_parts", None)
-        if n_scan is not None and n_scan >= target:
-            return df
-    if cols is None:
-        return df.repartition(target)
-    cols = [cols] if isinstance(cols, (str, Column)) else cols
-    return df.repartition(target, *cols)
-
-
-def scan_tagged(src: DataFrame, out: DataFrame) -> DataFrame:
-    """Propagate ``load_table``'s ``_sg_scan_parts`` scan-parallelism
-    tag across a NARROW transform (select/filter — partition count is
-    unchanged by either), so :func:`fanout`'s splittability gate still
-    sees it.  Python attributes do not survive DataFrame methods, which
-    otherwise silently degrades the gate to "always repartition"."""
-    tag = getattr(src, "_sg_scan_parts", None)
-    if tag is not None:
-        out._sg_scan_parts = tag
-    return out
+    The testdata parquet files are single row groups, so Spark reads
+    each on ONE task — hash/HOF-heavy row-local projections then run
+    single-core (measured: minhash sketches 2.7 s single-core → ~0.6 s
+    spread over 32).  The repartition is a full shuffle of the source
+    bytes, which a scan that is already wide never needs, so the
+    spread applies only when ``tables.scan_is_narrow`` counts fewer
+    row groups than ``defaultParallelism`` in the footers.  Remote,
+    nested and wide paths keep the scan as Spark splits it.  Filters
+    and column pruning written after ``tbl`` still reach the scan.
+    Prefer Column keys such as ``F.xxhash64(<cols the query already
+    reads>)`` when the query does not read the natural key: a key
+    column joins the scan's ReadSchema."""
+    ensure_utc(spark)
+    df = load_table(spark, sf_dir, name)
+    if spread is None:
+        return df
+    target = spark.sparkContext.defaultParallelism
+    if not scan_is_narrow(f"{sf_dir.rstrip('/')}/{name}.parquet", target):
+        return df
+    keys = [spread] if isinstance(spread, (str, Column)) else spread
+    return df.repartition(target, *keys)
 
 
 import threading

@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import query
-from ._util import fanout, shared_plan, tbl
+from ._util import shared_plan, tbl
 
 
 def _dec(c: str) -> Column:
@@ -43,7 +43,7 @@ def _exact_avg(c: str) -> Column:
 )
 def a1_daily_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly→daily mean rollup, the EP2 spine (N:183-188,199-205).
-    r10 note: a ROUND-ROBIN fanout was A/B'd here and was
+    r10 note: a ROUND-ROBIN spread was A/B'd here and was
     neutral-to-negative (1.44 → 1.56 s) — the keyless repartition's
     map-side sort (SPARK-23207) cost what the spread saved.  The
     xxhash64-keyed spread (second pass; same device as tpch_q1) has no
@@ -51,9 +51,9 @@ def a1_daily_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     the three measure columns the aggregate already reads; decimal
     sums are exact under any row placement."""
     return (
-        fanout(
-            tbl(spark, sf_dir, "lineitem"),
-            cols=[F.xxhash64("l_quantity", "l_extendedprice", "l_discount")],
+        tbl(
+            spark, sf_dir, "lineitem",
+            spread=[F.xxhash64("l_quantity", "l_extendedprice", "l_discount")],
         )
         .groupBy(F.to_date("l_shipdate").alias("ship_date"))
         .agg(
@@ -270,26 +270,23 @@ def a_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fanout (r10, guide §2.5/§6): the single-row-group testdata scan
+    # spread (r10, guide §2.5/§6): the single-row-group testdata scan
     # runs the whole 8-aggregate decimal map side on ONE task (stage
     # profile: 1.8 s CPU, 3 tasks, one doing all the work); spread the
-    # filtered rows first — at 100 TB the source is splittable and the
-    # exchange is one harmless extra map pass (fanout contract).
+    # filtered rows first — a scan that is already wide skips it (see
+    # _util.tbl).
     # Spread key: xxhash64 over measure columns the aggregate already
     # reads (guide §2.5 deterministic synthetic key).  Round-robin
-    # (cols=None) was the first fix, but a keyless repartition pays a
+    # was the first fix, but a keyless repartition pays a
     # local sort of the whole input on the single map task
     # (SPARK-23207) — A/B at sf0.1: rr 1.17 s / xxhash 0.74 s / no
-    # fanout 1.15 s.  The hash key adds no ReadSchema column (the
+    # spread 1.15 s.  The hash key adds no ReadSchema column (the
     # plan-contract test pins 7) and decimal sums are exact under any
-    # row placement.
-    # fanout wraps the SCAN frame (the splittability gate reads the
-    # load_table tag, which narrow ops drop); Catalyst pushes the
-    # shipdate filter below the repartition, so the physical plan is
-    # unchanged (plan-contract test pins PushedFilters + ReadSchema).
-    li = fanout(
-        tbl(spark, sf_dir, "lineitem"),
-        cols=[F.xxhash64("l_quantity", "l_extendedprice", "l_discount", "l_tax")],
+    # row placement.  Catalyst pushes the shipdate filter below the
+    # repartition (plan-contract test pins PushedFilters + ReadSchema).
+    li = tbl(
+        spark, sf_dir, "lineitem",
+        spread=[F.xxhash64("l_quantity", "l_extendedprice", "l_discount", "l_tax")],
     ).filter(
         F.col("l_shipdate") <= F.lit("2001-09-02 00:00:00").cast("timestamp")
     )
@@ -376,7 +373,7 @@ _PART_REV_SQL = """rev AS (
 def _part_revenue(li: DataFrame) -> DataFrame:
     """(p, rev_e4) — the Spark twin of _PART_REV_SQL.
 
-    r10 note (measured and left alone): BOTH a fanout here (the lazy
+    r10 note (measured and left alone): BOTH a scan spread here (the lazy
     rank/prefix consumers read this frame twice, so the spread
     exchange pays double: 1.65 → 2.72 s A/B at sf0.1) and a
     shared_plan checkpoint (1.56 → 2.6 s — non-adaptive compile +

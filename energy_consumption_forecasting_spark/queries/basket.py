@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import query
-from ._util import fanout, tbl
+from ._util import tbl
 
 _MINSUP = 2  # pair must co-occur in >= 2 baskets
 
@@ -126,12 +126,14 @@ def pair_counts_from_lines(
     # sizes the post-shuffle stage by its INPUT bytes (~5 MB at sf0.1
     # → 4 tasks), but that stage runs the C(k,2) pair explode +
     # partial pair agg whose output is 2.4× its input — the
-    # expansion-width disease.  fanout's keyed REPARTITION_BY_NUM is
+    # expansion-width disease.  A keyed REPARTITION_BY_NUM is
     # exempt from AQE coalescing, and the basket groupBy reuses the
     # partitioning (same key, same width → no second exchange), so the
     # explode runs at session width.  Interleaved A/B at sf0.1:
     # 1.47 → 1.18 s median.
-    baskets = fanout(pruned, "l_orderkey", gate=False).groupBy("l_orderkey").agg(
+    baskets = pruned.repartition(
+        pruned.sparkSession.sparkContext.defaultParallelism, "l_orderkey"
+    ).groupBy("l_orderkey").agg(
         F.array_sort(F.collect_set("l_partkey")).alias("arr")
     )
     # r11 (guide §2.3 "narrower types"): the pair aggregation groups on
@@ -140,16 +142,18 @@ def pair_counts_from_lines(
     # array), cutting the partial-agg exchange row from 24 to 16 bytes
     # and the hash-agg key comparison to one long.  Keys at or past
     # 2^31 fail fast in-plan (raise_error) rather than corrupt — wider
-    # catalogs must widen the pack, not silently wrap.  Unpacked after
-    # the support filter; output identical (div/mod invert the pack).
+    # catalogs must widen the pack, not silently wrap — and so do
+    # negative keys, which Spark's truncating div/% would unpack into
+    # the wrong pair.  Unpacked after the support filter; output
+    # identical (div/mod invert the pack).
     packed = basket_pairs(baskets).select(
         F.when(
-            F.col("p2") < F.lit(_PACK_LIM),
+            (F.col("p1") >= 0) & (F.col("p2") < F.lit(_PACK_LIM)),
             F.col("p1") * F.lit(_PACK_LIM) + F.col("p2"),
         )
         .otherwise(
             F.raise_error(
-                F.lit("basket pair key >= 2^31: widen the pair packing")
+                F.lit("basket pair key < 0 or >= 2^31: widen the pair packing")
             ).cast("long")
         )
         .alias("pk")
@@ -411,7 +415,9 @@ def a_basket_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("l_orderkey", "l_partkey")
     # Session-width basket exchange — same expansion-width fix as
     # pair_counts_from_lines (C(k,3) amplification here).
-    baskets = fanout(pruned, "l_orderkey", gate=False).groupBy("l_orderkey").agg(
+    baskets = pruned.repartition(
+        spark.sparkContext.defaultParallelism, "l_orderkey"
+    ).groupBy("l_orderkey").agg(
         F.array_sort(F.collect_set("l_partkey")).alias("arr")
     )
     # triples through THREE pipelined explodes (r10 — the basket_pairs

@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import query
-from ._util import fanout, shared_plan, tbl
+from ._util import shared_plan, tbl
 
 _STAGES = ("view", "click", "purchase")
 
@@ -165,7 +165,7 @@ def sketch_cms_heavyhitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     first two md5 hex chars of ``salt:token`` — engine-portable string
     keys, no integer-hash conversion anywhere."""
     occ = (
-        fanout(tbl(spark, sf_dir, "documents"))
+        tbl(spark, sf_dir, "documents", spread="doc_id")
         .select(F.explode(F.filter(F.split("text", r"\s+"), lambda x: x != "")).alias("w"))
     )
     # ONE corpus pass (r10, guide §2.3): the exact count table is the

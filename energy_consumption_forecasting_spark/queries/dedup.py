@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from . import query
 from ..functions.vectors import as_double, cosine
-from ._util import fanout, shared_plan, tbl
+from ._util import shared_plan, tbl
 
 MAX_DOC_FREQ = 100  # stop-shingle cap for candidate generation
 N_HASHES = 8
@@ -77,9 +77,9 @@ def tokens_frame(docs: DataFrame) -> DataFrame:
 
 
 def _tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fanout: the md5-heavy sketch projections downstream must not run
-    # as one task on the single-row-group testdata (see _util.fanout).
-    return tokens_frame(fanout(tbl(spark, sf_dir, "documents")))
+    # spread: the md5-heavy sketch projections downstream must not run
+    # as one task on the single-row-group testdata.
+    return tokens_frame(tbl(spark, sf_dir, "documents", spread="doc_id"))
 
 
 def shingle_arrays_frame(toks: DataFrame) -> DataFrame:
@@ -168,8 +168,10 @@ def _pairs_from_members(members: DataFrame) -> DataFrame:
 # ids) the pair packs EXACTLY into one int64 as doc_a*2^31 + doc_b —
 # a 24->16 byte exchange row and a one-long hash-agg key.  Ids at or
 # past 2^31 fail fast in-plan rather than wrap silently (wider corpora
-# must widen the pack).  div/mod invert the pack, so unpacked output
-# is bit-identical to the unpacked aggregation.
+# must widen the pack), and so do negative ids, which Spark's
+# truncating div/% would unpack into the wrong pair.  div/mod invert
+# the pack, so unpacked output is bit-identical to the unpacked
+# aggregation.
 _PAIR_PACK = 1 << 31
 
 
@@ -179,12 +181,12 @@ def _packed_pairs_from_members(members: DataFrame) -> DataFrame:
     pairs) enter the downstream distinct/count exchange."""
     return _pairs_from_members(members).select(
         F.when(
-            F.col("doc_b") < F.lit(_PAIR_PACK),
+            (F.col("doc_a") >= 0) & (F.col("doc_b") < F.lit(_PAIR_PACK)),
             F.col("doc_a") * F.lit(_PAIR_PACK) + F.col("doc_b"),
         )
         .otherwise(
             F.raise_error(
-                F.lit("doc pair key >= 2^31: widen the pair packing")
+                F.lit("doc pair key < 0 or >= 2^31: widen the pair packing")
             ).cast("long")
         )
         .alias("pk")
@@ -888,10 +890,10 @@ def _cos_sig_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._util import shared_frame, shared_persist
 
     def build() -> DataFrame:
-        base = fanout(tbl(spark, sf_dir, "embeddings"), "vec_id").select(
+        base = tbl(spark, sf_dir, "embeddings", spread="vec_id").select(
             "vec_id", as_double("embedding").alias("v")
         )
-        # fanout above: the signature + norm math is row-local and
+        # spread above: the signature + norm math is row-local and
         # heavy — spread the single-row-group scan first.  The norm
         # rides attach_rung_sig's Arrow pass (r10).
         return shared_persist(attach_rung_sig(base))
@@ -1258,14 +1260,14 @@ def _semdedup_sub_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._util import shared_frame, shared_persist
 
     def build() -> DataFrame:
-        # fanout (r10): the persisted frame inherits the scan's split
+        # spread (r10): the persisted frame inherits the scan's split
         # count (4 single-row-group files at sf1), and every downstream
         # stage of the dominance pass — including the cosine scoring of
         # ~N·target bucket pairs — ran at that width (measured: 4-task
         # 7.3s-CPU scoring stage on 32 cores).  Spread before persist.
-        base = fanout(
-            tbl(spark, sf_dir, "embeddings"), "vec_id"
-        ).select("vec_id", "label", as_double("embedding").alias("v"))
+        base = tbl(spark, sf_dir, "embeddings", spread="vec_id").select(
+            "vec_id", "label", as_double("embedding").alias("v")
+        )
         nb = base.agg(
             F.count("*").alias("n"), F.countDistinct("label").alias("c")
         ).withColumn("_k", F.pmod(F.col("n"), F.lit(1)))
@@ -1449,7 +1451,7 @@ def dedup_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     source-sized broadcast.  Exact integers + one final division per
     pair (the cross-engine float rule)."""
     ssh = (
-        tokens_frame(fanout(tbl(spark, sf_dir, "documents"))
+        tokens_frame(tbl(spark, sf_dir, "documents", spread="doc_id")
                      .select(F.col("source").alias("doc_id"), "text"))
         .filter(F.size("a") >= 3)
         .select(
@@ -1546,7 +1548,7 @@ def _ppjoin_ordered_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ranking import global_row_number_lazy
 
     d = (
-        fanout(tbl(spark, sf_dir, "documents"))
+        tbl(spark, sf_dir, "documents", spread="doc_id")
         .filter(F.col("doc_id") % 3 == 0)
         .select(
             "doc_id",

@@ -64,7 +64,7 @@ def f8_spatial_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mm_payload_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary metadata pass: size + content hash; the payload column is
     projected away immediately (check ReadSchema — bytes never shuffle)."""
-    media = documents_as_media(tbl(spark, sf_dir, "documents"))
+    media = documents_as_media(tbl(spark, sf_dir, "documents", spread="doc_id"))
     return payload_stats(media)
 
 
@@ -79,7 +79,7 @@ def mm_payload_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metadata-driven frame sampling (every 5th frame) — the index plan
     needs no decode at all."""
-    media = documents_as_media(tbl(spark, sf_dir, "documents"))
+    media = documents_as_media(tbl(spark, sf_dir, "documents", spread="doc_id"))
     return sample_frames(media, every_n=5).select(
         "media_id", F.col("frame_idx").cast("long").alias("frame_idx")
     )
@@ -147,7 +147,7 @@ def mm_extract_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     moments and derives mean/std in a fixed 3-op IEEE sequence, so the
     DuckDB oracle recomputing the same bytes reproduces every column
     bit-for-bit (closes the r3 `no_oracle` gap)."""
-    media = documents_as_media(tbl(spark, sf_dir, "documents"))
+    media = documents_as_media(tbl(spark, sf_dir, "documents", spread="doc_id"))
     return extract_features(media)
 
 
@@ -192,7 +192,7 @@ def mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     emits the pixel count and the exact integer checksum of the resized
     frame (pixel values are uint8-exact floats), which the DuckDB
     oracle recomputes byte-for-byte (closes the r3 `no_oracle` gap)."""
-    media = documents_as_media(tbl(spark, sf_dir, "documents"))
+    media = documents_as_media(tbl(spark, sf_dir, "documents", spread="doc_id"))
     resized = resize_images(media, (8, 8))
     return resized.select(
         "media_id",
@@ -845,7 +845,7 @@ def mm_audio_rms(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches, RMS included (one division + one sqrt)."""
     from ..operators.multimodal import audio_rms_windows, documents_as_media
 
-    media = documents_as_media(tbl(spark, sf_dir, "documents"))
+    media = documents_as_media(tbl(spark, sf_dir, "documents", spread="doc_id"))
     return audio_rms_windows(media)
 
 
@@ -945,7 +945,7 @@ def mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     column algebra; grouping is ONE hash partition on the 64-bit key.
     At 100 TB the phash groupBy is the scale path — candidate pairs
     come from equal signatures, never from pairwise image comparison."""
-    media = documents_as_media(tbl(spark, sf_dir, "documents"))
+    media = documents_as_media(tbl(spark, sf_dir, "documents", spread="doc_id"))
     resized = resize_images(media, (8, 8))
     hashed = resized.withColumn(
         "s",

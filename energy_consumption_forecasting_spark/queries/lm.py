@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import query
-from ._util import fanout, shared_plan, tbl
+from ._util import shared_plan, tbl
 from .text import _toks
 
 _TOKS_SQL = """
@@ -40,7 +40,7 @@ def _doc_bigram_occurrences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, w1, bigram) — one row per bigram OCCURRENCE, row-local
     expansion from the token array."""
     toks = (
-        fanout(tbl(spark, sf_dir, "documents"))
+        tbl(spark, sf_dir, "documents", spread="doc_id")
         .select("doc_id", _toks(F.lower(F.col("text"))).alias("a"))
         .filter(F.size("a") >= 2)
     )
@@ -88,7 +88,7 @@ def _doc_lm_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrence."""
     occ = _doc_bigram_occurrences(spark, sf_dir)
     uni = (
-        fanout(tbl(spark, sf_dir, "documents"))
+        tbl(spark, sf_dir, "documents", spread="doc_id")
         .select(F.explode(_toks(F.lower(F.col("text")))).alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("c1"))
@@ -160,7 +160,7 @@ def text_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan, no text shuffled — 2-char pairs only), map-side-combinable
     count, orderBy+limit top-{BPE_TOP_PAIRS}."""
     words = (
-        fanout(tbl(spark, sf_dir, "documents"))
+        tbl(spark, sf_dir, "documents", spread="doc_id")
         .select(
             F.explode(
                 F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
@@ -209,7 +209,7 @@ def pipeline_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.bpe import learn_bpe
 
     words = (
-        fanout(tbl(spark, sf_dir, "documents"))
+        tbl(spark, sf_dir, "documents", spread="doc_id")
         .select(
             F.explode(
                 F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
@@ -245,7 +245,7 @@ def pipeline_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.bpe import bpe_encode_words, learn_bpe
 
     doc_words = (
-        fanout(tbl(spark, sf_dir, "documents"))
+        tbl(spark, sf_dir, "documents", spread="doc_id")
         .select(
             "doc_id",
             F.explode(
@@ -301,7 +301,7 @@ def pipeline_bpe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.bpe import bpe_encode_words, learn_bpe
 
     doc_words = (
-        fanout(tbl(spark, sf_dir, "documents"))
+        tbl(spark, sf_dir, "documents", spread="doc_id")
         .select(
             F.explode(
                 F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
@@ -343,7 +343,7 @@ UNIGRAM_ROUNDS = 3
 def _vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct alphabetic words with corpus counts (the BPE word rule)."""
     return (
-        fanout(tbl(spark, sf_dir, "documents"))
+        tbl(spark, sf_dir, "documents", spread="doc_id")
         .select(
             F.explode(
                 F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
@@ -437,7 +437,7 @@ def pipeline_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         vocab, logp, max_len=UNIGRAM_MAX_LEN
     ).withColumnRenamed("w", "ew")
     doc_words = (
-        fanout(tbl(spark, sf_dir, "documents"))
+        tbl(spark, sf_dir, "documents", spread="doc_id")
         .select(
             "doc_id",
             F.explode(

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import query
-from ._util import fanout, shared_plan, tbl
+from ._util import shared_plan, tbl
 
 
 def _tokens(c):
@@ -304,12 +304,12 @@ def pipeline_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes (16 bytes) are the only thing shuffled; the dup-hash set is
     the HAVING>1 aggregate, broadcast back; per-doc re-agg + one left
     join for zero-hit docs."""
-    # fanout (r10): the per-window md5 projection is the query's CPU —
+    # spread (r10): the per-window md5 projection is the query's CPU —
     # at sf1 the 2-row-group parquet ran it as TWO tasks (8.7 s of the
     # wall on 2 of 32 cores, twice — both `wins` consumers recompute
     # it); spread the scan before the heavy row-local work.
     docs = (
-        fanout(tbl(spark, sf_dir, "documents"))
+        tbl(spark, sf_dir, "documents", spread="doc_id")
         .select("doc_id", _tokens(F.col("text")).alias("a"))
         .filter(F.size("a") >= SUBSTR_WINDOW)
     )
@@ -824,10 +824,10 @@ def pipeline_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r10 (guide §2.4): the lazy prefix sum reads its input twice
     # (bucket partials + main pass) — checkpoint the 2-longs-per-doc
-    # frame so the corpus tokenize runs once, spread by fanout instead
+    # frame so the corpus tokenize runs once, spread by tbl instead
     # of the parquet's row-group count.
     toks = (
-        fanout(tbl(spark, sf_dir, "documents")).select("doc_id", "text")
+        tbl(spark, sf_dir, "documents", spread="doc_id").select("doc_id", "text")
         .select(
             "doc_id",
             F.size(_tokens(F.col("text"))).cast("long").alias("n_tokens"),
@@ -1515,7 +1515,7 @@ def _dsir_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     every gate SF; a 100-TB run raises DSIR_SCALE precision by
     computing u in DECIMAL(38,0) (documented, not needed here)."""
     docs = (
-        fanout(tbl(spark, sf_dir, "documents"))
+        tbl(spark, sf_dir, "documents", spread="doc_id")
         .select(
             "doc_id",
             (
@@ -1836,7 +1836,7 @@ def pipeline_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays pure."""
     from ..operators.ranking import global_row_number_lazy
 
-    docs = fanout(tbl(spark, sf_dir, "documents")).select(
+    docs = tbl(spark, sf_dir, "documents", spread="doc_id").select(
         "doc_id",
         F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "").alias(
             "a"
@@ -1845,7 +1845,7 @@ def pipeline_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r10 (guide §2.4): the lazy rank consumes its input twice (bucket
     # counts + main pass) — without the checkpoint the tokenize +
     # array_distinct subtree ran once per consumer; the checkpointed
-    # frame is 2 longs/doc.  fanout spreads the single-row-group scan
+    # frame is 2 longs/doc.  The spread widens the single-row-group scan
     # so the distinct-ratio HOF work isn't serialized on 2 tasks.
     scored = docs.select(
         "doc_id",

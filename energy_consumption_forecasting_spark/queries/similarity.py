@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from . import query
 from ..functions.vectors import as_double, cosine
-from ._util import fanout, scan_tagged, shared_frame, shared_persist, shared_plan, tbl
+from ._util import shared_frame, shared_persist, shared_plan, tbl
 
 N_QUERIES = 5
 TOP_K = 5
@@ -59,14 +59,14 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     global sort)."""
     from ..functions.vectors import cosine_prenormed, with_norm
 
-    # fanout (r10): the scoring pass is row-local fold math over the
+    # spread (r10): the scoring pass is row-local fold math over the
     # whole corpus and ran at the parquet's 4-split width at sf1;
     # with_norm folds each side's norm ONCE (the plain `cosine` HOF
     # re-derived both norms per PAIR — 3 interpreted folds instead of
     # 1, with the corpus norm recomputed per query).  Bit-identical:
     # same fold over the same array either way.
     e = with_norm(
-        fanout(tbl(spark, sf_dir, "embeddings"), "vec_id").select(
+        tbl(spark, sf_dir, "embeddings", spread="vec_id").select(
             "vec_id", "label", as_double("embedding").alias("v")
         )
     )
@@ -299,6 +299,17 @@ def _sq8_fit_shared(spark: SparkSession, sf_dir: str, e: DataFrame) -> DataFrame
     )
 
 
+def _vectors(
+    spark: SparkSession, sf_dir: str, spread: str | None = None
+) -> DataFrame:
+    """(vec_id, v: array<double>) over the embeddings scan; ``spread``
+    as in ``tbl``.  The ANN tiers take the plain frame for fits and
+    queries and a spread one for their row-local encode/assign HOFs."""
+    return tbl(spark, sf_dir, "embeddings", spread=spread).select(
+        "vec_id", as_double("embedding").alias("v")
+    )
+
+
 def _ivf_fit_shared(spark: SparkSession, sf_dir: str, e: DataFrame) -> DataFrame:
     from ..operators.ann import ivf_fit_frame
 
@@ -341,14 +352,13 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAME fit frame and hash-pins metric + recall."""
     from ..operators.ann import ivf_assign_lazy, ivf_search_lazy
 
-    raw = tbl(spark, sf_dir, "embeddings")
-    e = scan_tagged(raw, raw.select("vec_id", as_double("embedding").alias("v")))
+    e = _vectors(spark, sf_dir)
     fit = _ivf_fit_shared(spark, sf_dir, e)
-    # fanout (r10 second pass): the single-row-group scan ran the whole
+    # spread (r10 second pass): the single-row-group scan ran the whole
     # cell-assign + search pipeline as ONE task (warm stage profile:
     # 1-task ~0.7-1.2 s CPU stages across the quantized tiers); spread
     # the corpus before the encode/assign HOFs.
-    assigned = ivf_assign_lazy(fanout(e, "vec_id"), fit)
+    assigned = ivf_assign_lazy(_vectors(spark, sf_dir, "vec_id"), fit)
     queries_df = e.filter(F.col("vec_id") < N_QUERIES)
     return ivf_search_lazy(
         assigned, queries_df, fit, k=TOP_K, nprobe=4
@@ -389,9 +399,7 @@ def sim_topk_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim_topk_bruteforce."""
     from ..operators.ann import topk_blocked
 
-    e = tbl(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double("embedding").alias("v")
-    )
+    e = _vectors(spark, sf_dir)
     q = e.filter(F.col("vec_id") < N_QUERIES)
     return topk_blocked(e, q, k=TOP_K).select(
         "query_id", "neighbor_id", "cos_sim", "rank"
@@ -413,11 +421,9 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction launches zero jobs."""
     from ..operators.ann import pq_encode_lazy, pq_topk_table_lazy
 
-    e = tbl(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double("embedding").alias("v")
-    )
+    e = _vectors(spark, sf_dir)
     fit = _pq_fit_shared(spark, sf_dir, e)
-    # fanout A/B'd here (r10 second pass) and NEUTRAL (1.40 vs 1.46 s
+    # a spread A/B'd here (r10 second pass) and NEUTRAL (1.40 vs 1.46 s
     # interleaved): the PQ encode's 0.6 s single-task CPU ≈ what the
     # exchange + 32-task scoring round-trips cost — left unspread,
     # unlike the heavier rotate/assign tiers.
@@ -444,12 +450,10 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_topk_table_lazy,
     )
 
-    e = tbl(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double("embedding").alias("v")
-    )
+    e = _vectors(spark, sf_dir)
     ivf_fit = _ivf_fit_shared(spark, sf_dir, e)
     fit = _pq_fit_shared(spark, sf_dir, e)
-    # fanout A/B'd here (r10 second pass) and LOSES (1.41 vs 1.54 s
+    # a spread A/B'd here (r10 second pass) and LOSES (1.41 vs 1.54 s
     # interleaved): both join branches must exchange, which costs more
     # than the spread saves — left on the scan layout.
     encoded = pq_encode_lazy(e, fit, m=8).join(
@@ -482,12 +486,13 @@ def sim_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_topk_table_lazy,
     )
 
-    raw = tbl(spark, sf_dir, "embeddings")
-    e = scan_tagged(raw, raw.select("vec_id", as_double("embedding").alias("v")))
+    e = _vectors(spark, sf_dir)
     fit = _opq_fit_shared(spark, sf_dir, e)
-    # fanout: spread the 1-task rotate + encode (see sim_ivf_topk note)
+    # spread the 1-task rotate + encode (see sim_ivf_topk note)
     encoded = pq_encode_lazy(
-        opq_rotate_lazy(fanout(e, "vec_id"), fit), fit.select("books"), m=8
+        opq_rotate_lazy(_vectors(spark, sf_dir, "vec_id"), fit),
+        fit.select("books"),
+        m=8,
     )
     q = e.filter(F.col("vec_id") < N_QUERIES)
     out = pq_topk_table_lazy(
@@ -639,10 +644,9 @@ def sim_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantization arithmetic, zero construction jobs, hash unchanged."""
     from ..operators.ann import sq8_encode_lazy, sq8_topk_lazy
 
-    raw = tbl(spark, sf_dir, "embeddings")
-    e = scan_tagged(raw, raw.select("vec_id", as_double("embedding").alias("v")))
+    e = _vectors(spark, sf_dir)
     encoded = sq8_encode_lazy(
-        fanout(e, "vec_id"), _sq8_fit_shared(spark, sf_dir, e)
+        _vectors(spark, sf_dir, "vec_id"), _sq8_fit_shared(spark, sf_dir, e)
     )
     q = e.filter(F.col("vec_id") < N_QUERIES)
     return sq8_topk_lazy(encoded, q, k=TOP_K)
@@ -665,11 +669,10 @@ def sim_sq8_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         sq8_ivf_topk_lazy,
     )
 
-    raw = tbl(spark, sf_dir, "embeddings")
-    e = scan_tagged(raw, raw.select("vec_id", as_double("embedding").alias("v")))
+    e = _vectors(spark, sf_dir)
     ivf_fit = _ivf_fit_shared(spark, sf_dir, e)
-    # fanout once, shared by both join branches (see sim_ivfpq_topk)
-    ec = fanout(e, "vec_id")
+    # spread once, shared by both join branches (see sim_ivfpq_topk)
+    ec = _vectors(spark, sf_dir, "vec_id")
     corpus = sq8_encode_lazy(ec, _sq8_fit_shared(spark, sf_dir, e)).join(
         ivf_assign_lazy(ec, ivf_fit).select("vec_id", "cell"), "vec_id"
     )
@@ -807,9 +810,7 @@ def sim_tier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_encode_lazy,
     )
 
-    e = tbl(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double("embedding").alias("v")
-    )
+    e = _vectors(spark, sf_dir)
     qvec = {
         r["vec_id"]: np.asarray(r["v"])
         for r in e.filter(F.col("vec_id") < N_QUERIES).collect()
@@ -1546,21 +1547,19 @@ def _jl_proj_spark(vcol_name: str):
 def emb_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sparse-sign JL projection of every embedding, long format
     (vec_id, k, p).  Row-local arithmetic: ZERO shuffles beyond the
-    unsplittable-source fanout; the 16 fold expressions stay inside
+    single-row-group scan spread; the 16 fold expressions stay inside
     whole-stage codegen.  Bit-stable cross-engine: the Spark fold and
     DuckDB's list_dot_product both accumulate in index order and the
     +-1 entries and /4 scale are exact in binary FP."""
     from ..functions.vectors import plane_dots_arrow
     from ._jl_signs import JL_SIGNS
 
-    raw = tbl(spark, sf_dir, "embeddings")
-    e = scan_tagged(raw, raw.select("vec_id", as_double("embedding").alias("v")))
     # r10 (guide §4.2): the projection fold runs in one Arrow pass
     # (bit-identical per-dimension accumulation, /4 exact) instead of
     # 16 interpreted HOF folds per row; construction is one py4j call
     # instead of 1,024 literal Columns.
     proj = plane_dots_arrow(
-        fanout(e, "vec_id").select("vec_id", "v"), JL_SIGNS, divisor=4.0
+        _vectors(spark, sf_dir, "vec_id"), JL_SIGNS, divisor=4.0
     )
     return proj.select(
         "vec_id", F.posexplode(F.col("parr")).alias("k", "p")

@@ -11,7 +11,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import query
-from ._util import fanout, shared_plan, tbl
+from ._util import shared_plan, tbl
 
 _TOKEN_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
 
@@ -478,7 +478,7 @@ def text_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
 
-    toks = fanout(tbl(spark, sf_dir, "documents")).select(
+    toks = tbl(spark, sf_dir, "documents", spread="doc_id").select(
         "doc_id", _toks(F.lower(F.col("text"))).alias("a")
     )
     staged = (
@@ -603,7 +603,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     perdoc = (
-        fanout(tbl(spark, sf_dir, "documents"))
+        tbl(spark, sf_dir, "documents", spread="doc_id")
         .select("doc_id", _toks().alias("a"))
         .select(
             "doc_id",
@@ -790,7 +790,7 @@ def text_hashing_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode -> ONE map-side-combinable groupBy on (doc, bucket); output
     is the sparse feature matrix, at most 256 rows per document
     regardless of document length."""
-    docs = fanout(tbl(spark, sf_dir, "documents")).select("doc_id", "text")
+    docs = tbl(spark, sf_dir, "documents", spread="doc_id").select("doc_id", "text")
     tok = docs.select(
         "doc_id",
         F.explode(
@@ -970,7 +970,7 @@ def text_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable aggregations — the (word, doc) collapse then
     the word rollup — with the corpus size folded in as a broadcast
     scalar, never a zero-filled dense matrix."""
-    tok = fanout(tbl(spark, sf_dir, "documents")).select(
+    tok = tbl(spark, sf_dir, "documents", spread="doc_id").select(
         "doc_id",
         F.explode(
             F.filter(F.split("text", r"\s+"), lambda x: x != "")
@@ -1058,8 +1058,10 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``global_prefix_sums_lazy``)."""
     from ..operators.ranking import global_prefix_sums_lazy
 
-    docs = tbl(spark, sf_dir, "documents").select("doc_id", "text")
-    tok = fanout(docs).select(
+    docs = tbl(spark, sf_dir, "documents", spread="doc_id").select(
+        "doc_id", "text"
+    )
+    tok = docs.select(
         "doc_id",
         F.explode(
             F.filter(F.split("text", r"\s+"), lambda x: x != "")
@@ -1081,7 +1083,7 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         first_doc.groupBy(F.col("d0").alias("doc_id"))
         .agg(F.sum("k0").cast("long").alias("new_words"))
     )
-    ntok = fanout(docs).select(
+    ntok = docs.select(
         "doc_id",
         F.size(F.filter(F.split("text", r"\s+"), lambda x: x != ""))
         .cast("long")
@@ -1420,7 +1422,7 @@ def text_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate adds in arbitrary order, and JVM vs libm ln can differ
     at the last ulp, so both sides round to 9 digits (values are O(1);
     the accumulated error is <=1e-13)."""
-    toks = fanout(tbl(spark, sf_dir, "documents")).select(
+    toks = tbl(spark, sf_dir, "documents", spread="doc_id").select(
         "doc_id", F.array_sort(_toks(F.lower(F.col("text")))).alias("a")
     )
 
@@ -1536,7 +1538,7 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     the accumulation-order and libm-ln ulps."""
     from pyspark.sql import Window
 
-    toks = fanout(tbl(spark, sf_dir, "documents").select("doc_id", "text")).select(
+    toks = tbl(spark, sf_dir, "documents", spread="doc_id").select(
         F.explode(_toks(F.lower(F.col("text")))).alias("w")
     )
     cnt = toks.groupBy("w").agg(F.count("*").alias("c"))
@@ -1625,7 +1627,7 @@ def text_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect).  Floats: exact integer counts everywhere; one ln and
     two divisions per (source, token) term, round(9) both sides for
     the accumulation order."""
-    tok = fanout(tbl(spark, sf_dir, "documents").select("doc_id", "source", "text")).select(
+    tok = tbl(spark, sf_dir, "documents", spread="doc_id").select(
         "source", F.explode(_toks(F.lower(F.col("text")))).alias("w")
     )
     sw = tok.groupBy("source", "w").agg(F.count("*").alias("c_sw"))

@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import glob as _glob
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -147,82 +148,43 @@ def load_events(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-def _size_bytes(conf_val: str) -> int:
-    """Parse a Spark size conf ('128m', '4194304b', '134217728')."""
-    s = str(conf_val).strip().lower()
-    units = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
-    if s and s[-1] in units:
-        return int(float(s[:-1]) * units[s[-1]])
-    return int(s)
+def scan_is_narrow(path: str, target: int) -> bool:
+    """Whether a parquet scan of ``path`` runs on fewer than ``target``
+    tasks, read from the footers alone.
 
+    Spark splits a parquet file by byte range, but every row group is
+    read by the one split that holds its midpoint, so the row-group
+    count bounds the scan's useful parallelism whatever the split
+    size.  The answer is True only for a local path (no scheme, or
+    ``file:``) whose part files list flat and hold fewer than
+    ``target`` row groups in total; footer reads stop once the count
+    reaches ``target``.  Remote schemes, nested or Hive-partitioned
+    directories and wide files all answer False, and callers then
+    leave the scan as Spark splits it."""
+    import pyarrow.parquet as pq
 
-_SCAN_PARTS_CACHE: dict = {}
-
-
-def est_scan_partitions(spark: SparkSession, path: str) -> int | None:
-    """Driver-side estimate of the scan parallelism a parquet path
-    yields — Spark's own split algorithm (FilePartition.getFilePartitions
-    / FilePartition.maxSplitBytes, public source) re-run over os.stat
-    sizes, so the gate in ``queries._util.fanout`` costs ZERO py4j
-    round-trips per call (a ``df.rdd.getNumPartitions()`` probe measured
-    ~105 ms/call — 35 gated sites × 3 bench reps would be ~10 s of pure
-    probe tax).  Calibrated against the real RDD partition count on the
-    testdata tables and multi-file fixtures (tests/test_plan_contracts).
-    Returns None for non-local paths (caller then skips the gate and
-    repartitions, the historical behavior)."""
-    p = path[7:] if path.startswith("file://") else path
-    try:
-        if os.path.isdir(p):
-            names = set(_glob.glob(os.path.join(p, "*.parquet"))) | set(
-                _glob.glob(os.path.join(p, "part-*"))
-            )
-            files = [os.path.getsize(f) for f in names]
-        else:
-            files = [os.path.getsize(p)]
-    except OSError:
-        return None
-    if not files:
-        return None
-    max_part = _size_bytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
-    )
-    open_cost = _size_bytes(
-        spark.conf.get("spark.sql.files.openCostInBytes", "4m")
-    )
-    min_parts = spark.sparkContext.defaultParallelism
-    key = (
-        spark.sparkContext.applicationId,
-        p,
-        tuple(sorted(files)),
-        max_part,
-        open_cost,
-        min_parts,
-    )
-    hit = _SCAN_PARTS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    total = sum(files) + open_cost * len(files)
-    bytes_per_core = total // max(min_parts, 1)
-    max_split = min(max_part, max(open_cost, bytes_per_core))
-    # per-file byte-range splits, then the greedy descending pack
-    splits: list[int] = []
-    for size in files:
-        off = 0
-        while off < size:
-            splits.append(min(max_split, size - off))
-            off += max_split
-    splits.sort(reverse=True)
-    n, cur = 0, 0
-    for s in splits:
-        if cur and cur + s > max_split:
-            n, cur = n + 1, 0
-        cur += s + open_cost
-    if cur:
-        n += 1
-    if len(_SCAN_PARTS_CACHE) > 256:
-        _SCAN_PARTS_CACHE.clear()
-    _SCAN_PARTS_CACHE[key] = n
-    return n
+    url = urlparse(path)
+    if url.scheme not in ("", "file"):
+        return False
+    local = url.path if url.scheme else path
+    if os.path.isdir(local):
+        entries = [
+            os.path.join(local, e)
+            for e in sorted(os.listdir(local))
+            if not e.startswith(("_", "."))
+        ]
+        if not entries or any(os.path.isdir(e) for e in entries):
+            return False
+    elif os.path.isfile(local):
+        entries = [local]
+    else:
+        return False
+    groups = 0
+    for f in entries:
+        groups += pq.read_metadata(f).num_row_groups
+        if groups >= target:
+            return False
+    return True
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -230,13 +192,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
     if name == "events":
-        df = load_events(spark, path)
-    else:
-        df = _read_parquet(spark, path, _footer_spark_schema(path))
-    # scan-parallelism tag for queries._util.fanout's splittability gate
-    # (narrow ops drop python attributes, so fanout must wrap THIS frame)
-    df._sg_scan_parts = est_scan_partitions(spark, path)
-    return df
+        return load_events(spark, path)
+    return _read_parquet(spark, path, _footer_spark_schema(path))
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

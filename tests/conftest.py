@@ -71,7 +71,6 @@ SLOW_NODE_IDS = {
     "tests/test_ml_extras.py::test_som_recovers_separated_clusters",
     "tests/test_ohlc_stream.py::test_available_now_leaves_no_checkpoint_or_view",
     "tests/test_ohlc_stream.py::test_multibatch_equals_batch",
-    "tests/test_pagerank.py::test_pagerank_matches_reference",
     "tests/test_pagerank.py::test_power_iterate_shuffled_hash_tier_matches_broadcast",
     "tests/test_parity.py::test_oracle_parity[graph_modularity]",
     "tests/test_parity.py::test_oracle_parity[m10_gbt_eval]",

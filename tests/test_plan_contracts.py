@@ -214,84 +214,126 @@ def test_calendar_bounded_window_contract_all_queries(spark):
     )
 
 
-# --- fanout splittability gate (r11 verdict item 3) ---------------------------
+# --- scan spread decision (tbl(..., spread=...)) -------------------------------
 #
-# The scan-site fanout exists ONLY because the testdata parquet is a
-# single unsplittable row group: at 100 TB the source is splittable and
-# the repartition would be a full extra exchange of the fact table.
-# These tests pin both sides of the gate: the single-split testdata
-# keeps the spread, a multi-file (splittable) source skips it — and the
-# pure-python split estimator that drives the gate matches Spark's real
-# partition count so the decision is made from true scan parallelism.
+# The spread exists ONLY because the testdata parquet is a single row
+# group, which Spark reads on one task: at 100 TB the source has many
+# row groups and the repartition would be a full extra exchange of the
+# fact table.  These tests pin both sides of the row-group rule and the
+# inputs the rule must not misread.
+
+_SPREAD_RE = re.compile(r"hashpartitioning\(doc_id#\d+L?, (\d+)\), REPARTITION_BY_NUM")
 
 
-def test_fanout_gate_skips_on_splittable_source(spark, tmp_path):
-    import os
+def _spread_widths(df) -> list[int]:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return [int(n) for n in _SPREAD_RE.findall(buf.getvalue())]
 
-    from pyspark.sql import functions as F
 
-    from energy_consumption_forecasting_spark.tables import est_scan_partitions
-    from energy_consumption_forecasting_spark.queries._util import fanout
+@contextlib.contextmanager
+def _conf(spark, key: str, value: str):
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _write_docs(path: str, n_rows: int, row_group_size: int, text_bytes: int = 8):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = pa.table(
+        {
+            "doc_id": pa.array(range(n_rows), pa.int64()),
+            "text": [f"{i:0{text_bytes}d}" for i in range(n_rows)],
+        }
+    )
+    pq.write_table(table, path, row_group_size=row_group_size, compression="none")
+
+
+def test_tbl_spread_kept_on_single_row_group(spark):
+    from energy_consumption_forecasting_spark.queries._util import tbl
 
     target = spark.sparkContext.defaultParallelism
-    # enough part files that the packed split count clears the session
-    # parallelism; scan confs pinned small so the fixture stays tiny
-    # (default 4 MB openCost packs ~3 small files per split, capping
-    # the partition count below 32 for any uniform small-file layout)
-    path = os.path.join(str(tmp_path), "wide.parquet")
-    spark.range(0, 200_000).withColumn(
-        "doc_id", F.col("id")
-    ).repartition(2 * target + 8).write.mode("overwrite").parquet(path)
-
-    old_max = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    old_open = spark.conf.get("spark.sql.files.openCostInBytes")
-    try:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "131072")
-        spark.conf.set("spark.sql.files.openCostInBytes", "1024")
-        est = est_scan_partitions(spark, path)
-        wide = spark.read.parquet(path)
-        actual = wide.rdd.getNumPartitions()
-        assert est == actual, f"estimator {est} != actual {actual}"
-        assert actual >= target
-
-        wide._sg_scan_parts = est
-        assert fanout(wide, "doc_id") is wide, "gate failed to skip"
-        # ungated callers (mid-plan pre-explode spreads) still spread
-        assert fanout(wide, "doc_id", gate=False) is not wide
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", old_max)
-        spark.conf.set("spark.sql.files.openCostInBytes", old_open)
+    docs = tbl(spark, SF_SMALL, "documents", spread="doc_id")
+    assert _spread_widths(docs) == [target]
+    assert _spread_widths(tbl(spark, SF_SMALL, "documents")) == []
 
 
-def test_fanout_gate_keeps_spread_on_unsplittable_source(spark):
-    from energy_consumption_forecasting_spark.queries._util import fanout, tbl
-    from energy_consumption_forecasting_spark.tables import est_scan_partitions
+def test_tbl_spread_skipped_on_many_row_groups(spark, tmp_path):
+    from energy_consumption_forecasting_spark.queries._util import tbl
 
-    docs = tbl(spark, SF_SMALL, "documents")
-    assert docs._sg_scan_parts == est_scan_partitions(
-        spark, f"{SF_SMALL}/documents.parquet"
-    )
-    assert docs._sg_scan_parts < spark.sparkContext.defaultParallelism
-    spread = fanout(docs)
-    assert spread is not docs
-    assert spread.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    target = spark.sparkContext.defaultParallelism
+    _write_docs(str(tmp_path / "documents.parquet"), 2 * target, 2)
+    docs = tbl(spark, str(tmp_path), "documents", spread="doc_id")
+    assert _spread_widths(docs) == []
 
 
-def test_scan_partition_estimator_matches_spark(spark):
-    """Calibration: the driver-side re-run of Spark's file-split
-    algorithm must equal df.rdd.getNumPartitions() on every testdata
-    table (single file) — the layouts the gate actually sees."""
-    from energy_consumption_forecasting_spark.tables import (
-        TABLE_NAMES,
-        est_scan_partitions,
-        load_table,
-    )
+def test_tbl_spread_skipped_on_many_files(spark, tmp_path):
+    from energy_consumption_forecasting_spark.queries._util import tbl
 
-    for name in TABLE_NAMES:
-        df = load_table(spark, SF_SMALL, name)
-        est = est_scan_partitions(spark, f"{SF_SMALL}/{name}.parquet")
-        actual = df.rdd.getNumPartitions()
-        assert est == actual, f"{name}: est {est} != actual {actual}"
+    target = spark.sparkContext.defaultParallelism
+    table_dir = tmp_path / "documents.parquet"
+    table_dir.mkdir()
+    (table_dir / "_SUCCESS").write_text("")
+    for i in range(target):
+        _write_docs(str(table_dir / f"part-{i:05d}.parquet"), 4, 4)
+    docs = tbl(spark, str(tmp_path), "documents", spread="doc_id")
+    assert _spread_widths(docs) == []
+
+
+def test_tbl_spread_skipped_on_remote_path_without_local_io(spark, monkeypatch):
+    import os
+
+    import pyarrow.parquet as pq
+
+    from energy_consumption_forecasting_spark.queries import _util
+
+    local = _util.tbl(spark, SF_SMALL, "documents")
+    monkeypatch.setattr(_util, "load_table", lambda *_: local)
+
+    def no_io(*_a, **_k):
+        raise AssertionError("remote path touched the local filesystem")
+
+    with monkeypatch.context() as m:
+        for mod, name in (
+            (os, "listdir"),
+            (os.path, "isdir"),
+            (os.path, "isfile"),
+            (pq, "read_metadata"),
+        ):
+            m.setattr(mod, name, no_io)
+        docs = _util.tbl(spark, "s3a://bucket/sf1", "documents", spread="doc_id")
+    assert _spread_widths(docs) == []
+
+
+def test_tbl_spread_kept_on_row_group_larger_than_split(spark, tmp_path):
+    """Spark cuts one big row group into many byte-range splits, but
+    only the split holding its midpoint reads rows: the scan is still
+    one task of work, so the spread stays."""
+    from energy_consumption_forecasting_spark.queries._util import tbl
+    from energy_consumption_forecasting_spark.tables import load_table
+
+    target = spark.sparkContext.defaultParallelism
+    _write_docs(str(tmp_path / "documents.parquet"), 64, 64, text_bytes=16 << 10)
+    with _conf(spark, "spark.sql.files.maxPartitionBytes", "16k"):
+        raw = load_table(spark, str(tmp_path), "documents")
+        assert raw.rdd.getNumPartitions() >= target
+        docs = tbl(spark, str(tmp_path), "documents", spread="doc_id")
+        assert _spread_widths(docs) == [target]
+
+
+def test_tbl_loads_with_spark_size_string_conf(spark):
+    from energy_consumption_forecasting_spark.queries._util import tbl
+
+    with _conf(spark, "spark.sql.files.maxPartitionBytes", "128mb"):
+        docs = tbl(spark, SF_SMALL, "documents", spread="doc_id")
+        assert docs.count() > 0
+    assert _spread_widths(docs) == [spark.sparkContext.defaultParallelism]
 
 
 def test_q1_filter_pushes_below_fanout_exchange(spark):

@@ -401,6 +401,36 @@ def test_mega_basket_pairs_lossless_and_bounded(spark):
     assert got == want
 
 
+def test_basket_pair_pack_rejects_negative_ids(spark):
+    """Spark's div/% truncate toward zero, so a packed pair with a
+    negative item id would unpack into the wrong pair; the pack guard
+    must fail the query in-plan instead."""
+    import pytest
+
+    from energy_consumption_forecasting_spark.queries.basket import (
+        pair_counts_from_lines,
+    )
+
+    lines = spark.createDataFrame(
+        [(b, i) for b in (1, 2) for i in (-3, 5)],
+        "l_orderkey long, l_partkey long",
+    )
+    with pytest.raises(Exception, match="basket pair key < 0"):
+        pair_counts_from_lines(lines).collect()
+
+
+def test_doc_pair_pack_rejects_negative_ids(spark):
+    import pytest
+
+    from energy_consumption_forecasting_spark.queries.dedup import (
+        _packed_pairs_from_members,
+    )
+
+    members = spark.createDataFrame([([-3, 5],)], "docs array<long>")
+    with pytest.raises(Exception, match="doc pair key < 0"):
+        _packed_pairs_from_members(members).collect()
+
+
 def test_minhash_parameterization_prefix_consistent(spark):
     """The (n_perm, bands, rows) parameterization must nest: the first 8
     elements of a 16-perm signature are exactly the 8-perm signature
@@ -448,7 +478,7 @@ def test_dsir_fixed_point_tracks_log_pooled_weights(spark):
         DSIR_SCALE,
         _dsir_scored,
     )
-    from energy_consumption_forecasting_spark.queries._util import fanout, tbl
+    from energy_consumption_forecasting_spark.queries._util import tbl
     from pyspark.sql import functions as F
 
     sf = "/root/testdata/sf0.01"

@@ -1,6 +1,6 @@
 """Dump explain("formatted") for queries WITHOUT executing them —
-the plan-evidence half of tools/profile_r10.py, usable for capturing
-before/after snapshots from any git state regardless of host load.
+plan evidence for before/after snapshots from any git state,
+independent of host load.
 
 Usage:
     python tools/plan_dump.py --tag before [--sf DIR] [--out DIR] q1 q2 ...
