@@ -319,28 +319,3 @@ def bucket_pair_scores_arrow(df, n_bands, out_a="vec_a", out_b="vec_b",
 
     cols = ["vec_id", "band", "bucket", "sig", "smask", "v", "nrm"]
     return df.select(*cols).mapInArrow(_run, ddl)
-
-
-def _to_arrow(dt):
-    """Minimal Spark→Arrow type map for the scorer's pass-through
-    columns (ids and small scalars)."""
-    import pyarrow as pa
-    from pyspark.sql.types import (
-        DoubleType,
-        FloatType,
-        IntegerType,
-        LongType,
-        StringType,
-    )
-
-    if isinstance(dt, LongType):
-        return pa.int64()
-    if isinstance(dt, IntegerType):
-        return pa.int32()
-    if isinstance(dt, DoubleType):
-        return pa.float64()
-    if isinstance(dt, FloatType):
-        return pa.float32()
-    if isinstance(dt, StringType):
-        return pa.string()
-    raise TypeError(f"score_pairs_arrow: unsupported key type {dt}")

@@ -1,15 +1,15 @@
-"""Clustering — SURVEY §2.7 M3 (PCA), M5 (time-series k-means with DTW),
-M6 (silhouette).
+"""Time-series clustering — SURVEY §2.7 M5 (time-series k-means with
+DTW, k-Shape).
 
-Reference: PCA(k=3) (ts_kmeans_base.ipynb:940-951), TimeSeriesKMeans
-(n_clusters, metric="dtw") (K:1942-1944,2023-2025), silhouette
-(K:1945-1946,2026-2027).
+Reference: TimeSeriesKMeans (n_clusters, metric="dtw")
+(ts_kmeans_base.ipynb:1942-1944,2023-2025).  M3 PCA and M6 silhouette
+live with their queries (queries/ml_queries.py::_pca_fit_frame and
+::silhouette_frame).
 
-MLlib covers PCA / euclidean KMeans / silhouette JVM-side.  DTW has no
-MLlib form: the distance matrix is computed distributed (one pandas-UDF
-task per series-pair block), and only the k-medoids assignment loop —
-O(n_series²) on a ≤105-month matrix — runs on the driver, per SURVEY
-§4.2.6."""
+DTW has no MLlib form: the distance matrix is computed distributed (one
+pandas-UDF task per series-pair block), and only the k-medoids
+assignment loop — O(n_series²) on a ≤105-month matrix — runs on the
+driver, per SURVEY §4.2.6."""
 
 from __future__ import annotations
 
@@ -18,35 +18,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-def assemble(df: DataFrame, cols: list[str], output_col: str = "features") -> DataFrame:
-    from pyspark.ml.feature import VectorAssembler
-
-    return VectorAssembler(inputCols=cols, outputCol=output_col).transform(df)
-
-
-def fit_pca(df: DataFrame, cols: list[str], k: int = 3):
-    """MLlib PCA over assembled features; returns (model, projected df)."""
-    from pyspark.ml.feature import PCA
-
-    assembled = assemble(df, cols)
-    model = PCA(k=k, inputCol="features", outputCol="pca").fit(assembled)
-    return model, model.transform(assembled)
-
-
-def fit_kmeans(df: DataFrame, cols: list[str], k: int = 12, seed: int = 42):
-    """MLlib KMeans (euclidean baseline for M5) + silhouette score."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.evaluation import ClusteringEvaluator
-
-    assembled = assemble(df, cols)
-    model = KMeans(k=k, seed=seed, featuresCol="features").fit(assembled)
-    clustered = model.transform(assembled)
-    silhouette = ClusteringEvaluator(
-        featuresCol="features", predictionCol="prediction", metricName="silhouette"
-    ).evaluate(clustered)
-    return model, clustered, float(silhouette)
 
 
 def _dtw(a: np.ndarray, b: np.ndarray) -> float:

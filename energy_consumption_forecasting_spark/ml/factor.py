@@ -105,15 +105,3 @@ def varimax(L: np.ndarray, n_iter: int = 100, tol: float = 1e-8) -> np.ndarray:
             break
         var_old = var_new
     return L @ R
-
-
-def factor_analysis(
-    df: DataFrame, cols: list[str], n_factors: int = 3, rotate: bool = True
-) -> list[tuple[str, list[float]]]:
-    """End-to-end M4: distributed correlation pass → driver-side
-    factoring (+ varimax) → (column, loadings) list."""
-    R = correlation_matrix(df, cols)
-    L = principal_axis_factoring(R, n_factors)
-    if rotate:
-        L = varimax(L)
-    return [(c, [float(x) for x in L[i]]) for i, c in enumerate(cols)]

@@ -1,22 +1,24 @@
-"""Approximate nearest neighbor indexes over embedding columns.
+"""Approximate nearest neighbor operators over embedding columns.
 
-Three tiers (SURVEY §7 phase 5 similarity-search requirement):
+Two families, both DataFrame-in / DataFrame-out:
 
-1. **Brute force** (queries/similarity.py) — exact, O(Q·N), the
-   verification baseline.
-2. **IVF** (here) — KMeans coarse quantizer; each vector is assigned to
-   its nearest centroid cell, queries probe the ``nprobe`` nearest
-   cells only.  Recall/cost trades off via n_cells × nprobe.  At 100 TB
-   the cell assignment is a narrow column and the search is a
-   cell-equi-join — no full-corpus scan per query.
-3. **Random-hyperplane LSH** (queries/similarity.py::sim_lsh_hyperplane)
-   — sign-bit signatures against fixed hyperplanes; bucket collisions
-   are the candidates.  Plane literals are deterministic, so the
-   operator is exactly verifiable cross-engine.
+* **Blocked exact top-k** (``topk_blocked``) — corpus and query rows
+  packed into matrix blocks, one BLAS kernel per block pair against a
+  broadcast query side, exact sequential-fold rescoring of the kept
+  candidates.  The verification baseline for the quantized tiers.
+* **Quantized ANN** — IVF coarse cells, PQ/ADC codes, OPQ rotation and
+  SQ8 scalar codes.  Every quantizer is a LAZY 1-row fit frame
+  (``*_fit_frame``) attached to corpus and query plans by a 1-row
+  broadcast crossJoin; encoders (``ivf_assign_lazy``,
+  ``opq_rotate_lazy``, ``pq_encode_lazy``, ``sq8_encode_lazy``) and
+  searchers (``ivf_search_lazy``, ``pq_topk_table_lazy``,
+  ``sq8_topk_lazy``, ``sq8_ivf_topk_lazy``) read the fit from columns,
+  so building a plan launches no job.  The registered ``sim_*`` queries
+  and the persisted index (sources/ann_index.py, plus its streaming
+  ingest) share this one code path.
 
-Vectorized scoring: ``topk_numpy`` runs the dot products as one numpy
-matmul per Arrow batch (mapInPandas) — the scale path when the
-per-element Catalyst fold becomes CPU-bound.
+Random-hyperplane LSH lives with its queries
+(queries/similarity.py::sim_lsh_hyperplane).
 """
 
 from __future__ import annotations
@@ -29,440 +31,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-def build_ivf(
-    emb: DataFrame,
-    vec_col: str = "v",
-    n_cells: int = 16,
-    seed: int = 42,
-) -> tuple[DataFrame, "object"]:
-    """Fit the coarse quantizer and return (assigned df, kmeans model).
-
-    ``assigned`` = input plus a ``cell`` column (nearest centroid id)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feat = emb.withColumn("__features", array_to_vector(F.col(vec_col)))
-    model = KMeans(k=n_cells, seed=seed, featuresCol="__features").fit(feat)
-    assigned = (
-        model.transform(feat)
-        .withColumnRenamed("prediction", "cell")
-        .drop("__features")
-    )
-    return assigned, model
-
-
-def ivf_search(
-    assigned: DataFrame,
-    queries: DataFrame,
-    model,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-    k: int = 5,
-    nprobe: int = 4,
-) -> DataFrame:
-    """Probe the ``nprobe`` nearest cells per query, score candidates,
-    keep per-query top-k.
-
-    The query→cell fan-out happens ON the cluster: queries join the
-    broadcast centroid table (n_cells rows), rank cells per query with
-    a per-query window, keep ``nprobe`` (r1 collected the query set
-    row-by-row on the driver — wrong shape for a large query table).
-    Candidates then come from a cell equi-join, so the scored set is
-    N · nprobe / n_cells per query instead of N."""
-    from pyspark.sql import Window
-
-    from ..functions.vectors import cosine_prenormed, norm2
-
-    spark = assigned.sparkSession
-    cent = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        "cell int, cv array<double>",
-    )
-    d2 = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("cv"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wq = Window.partitionBy("query_id").orderBy("d2", "cell")
-    probe = (
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        )
-        .join(F.broadcast(cent))
-        .withColumn("d2", d2)
-        .withColumn("__cr", F.row_number().over(wq))
-        .filter(F.col("__cr") <= nprobe)
-        .select("query_id", "cell", "qv")
-        .withColumn("qnrm", F.sqrt(norm2(F.col("qv"))))
-    )
-
-    cand = assigned.withColumn(
-        "nrm", F.sqrt(norm2(F.col(vec_col)))
-    ).join(F.broadcast(probe), "cell")
-    scored = cand.filter(F.col(id_col) != F.col("query_id")).select(
-        "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        cosine_prenormed(
-            F.col("qv"), F.col(vec_col), F.col("qnrm"), F.col("nrm")
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def topk_numpy(
-    emb: DataFrame,
-    queries: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-    k: int = 5,
-) -> DataFrame:
-    """Vectorized brute-force top-k: one numpy matmul per Arrow batch
-    against the broadcast query matrix, then a global per-query top-k
-    merge.  This is the CPU-efficient form of sim_topk_bruteforce —
-    identical semantics, BLAS throughput."""
-    from pyspark.sql import Window
-
-    qids = [q[0] for q in queries]
-    Q = np.asarray([q[1] for q in queries], dtype=np.float64)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
-    )
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
-            S = Mn @ Qn.T  # (batch, n_queries)
-            out = []
-            ids = pdf[id_col].to_numpy()
-            # per-batch top-k prune before the shuffle: only k rows per
-            # query leave each batch
-            for j, qid in enumerate(qids):
-                col = S[:, j]
-                top = np.argsort(-col)[: k + 1]
-                for i in top:
-                    if ids[i] != qid:
-                        out.append(
-                            {
-                                "query_id": qid,
-                                "neighbor_id": int(ids[i]),
-                                "cos_sim": float(col[i]),
-                            }
-                        )
-            yield pd.DataFrame(out, columns=["query_id", "neighbor_id", "cos_sim"])
-
-    partial = emb.select(id_col, vec_col).mapInPandas(score, schema=schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
-
-
-# --- Product quantization (PQ) tier ---------------------------------------------
-def train_pq_codebooks(
-    emb: DataFrame,
-    vec_col: str = "v",
-    m: int = 8,
-    k: int = 16,
-    sample: int = 2048,
-    iters: int = 10,
-    seed: int = 7,
-) -> np.ndarray:
-    """Train PQ codebooks on a driver-side SAMPLE — the standard
-    (FAISS-style) recipe: codebooks are tiny (m × k × dim/m floats) and
-    training needs only a representative sample, so the full corpus is
-    never collected.  Deterministic: seeded sample order (sorted
-    limit), seeded init, fixed Lloyd iteration count.
-
-    Returns codebooks of shape (m, k, sub_dim)."""
-    rows = (
-        emb.select(vec_col)
-        .limit(sample)
-        .toPandas()[vec_col]
-        .tolist()
-    )
-    X = np.asarray(rows, dtype=np.float64)
-    n, dim = X.shape
-    assert dim % m == 0, f"dim {dim} not divisible by m {m}"
-    sub = dim // m
-    rng = np.random.default_rng(seed)
-    books = np.empty((m, k, sub))
-    for j in range(m):
-        Xj = X[:, j * sub : (j + 1) * sub]
-        cent = Xj[rng.choice(n, size=k, replace=False)]
-        for _ in range(iters):
-            d = ((Xj[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            assign = d.argmin(axis=1)
-            for c in range(k):
-                mask = assign == c
-                if mask.any():
-                    cent[c] = Xj[mask].mean(axis=0)
-        books[j] = cent
-    return books
-
-
-def pq_encode(emb: DataFrame, books: np.ndarray, vec_col: str = "v",
-              id_col: str = "vec_id") -> DataFrame:
-    """Encode every vector to its m-byte PQ code (nearest centroid per
-    subspace) — one Arrow-batched pass; the code column is what an
-    index would store (8 bytes vs 256 for the raw float32[64])."""
-    spark = emb.sparkSession
-    b = spark.sparkContext.broadcast(books)
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bb = b.value
-        m, _, sub = bb.shape
-        for pdf in batches:
-            X = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            codes = np.empty((len(X), m), dtype=np.int32)
-            for j in range(m):
-                Xj = X[:, j * sub : (j + 1) * sub]
-                d = ((Xj[:, None, :] - bb[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = d.argmin(axis=1)
-            yield pd.DataFrame({id_col: pdf[id_col], "code": list(codes)})
-
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("code", T.ArrayType(T.IntegerType())),
-        ]
-    )
-    return emb.select(id_col, vec_col).mapInPandas(encode, schema=schema)
-
-
-def pq_topk(
-    encoded: DataFrame,
-    queries: np.ndarray,
-    query_ids: list[int],
-    books: np.ndarray,
-    k_neighbors: int = 5,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """ADC (asymmetric distance) search: each query precomputes its
-    (m × k) subspace distance table; scoring a code is m table lookups
-    — no float vector is ever touched at query time.  Per-batch local
-    top-k prunes before the shuffle (same discipline as topk_numpy);
-    the final per-query top-k is a window over ≤ batches×k rows."""
-    from pyspark.sql import Window
-
-    spark = encoded.sparkSession
-    m, kc, sub = books.shape
-    # (Q, m, kc) distance tables
-    tables = np.stack(
-        [
-            ((books[j][None, :, :] - queries[:, None, j * sub : (j + 1) * sub])
-             ** 2).sum(axis=2)
-            for j in range(m)
-        ],
-        axis=1,
-    )
-    bt = spark.sparkContext.broadcast((tables, np.asarray(query_ids)))
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tabs, qids = bt.value
-        for pdf in batches:
-            C = np.asarray(pdf["code"].tolist(), dtype=np.int64)  # (B, m)
-            out_q, out_v, out_d = [], [], []
-            for qi, qid in enumerate(qids):
-                # gather: sum over subspaces of table[j, code[:, j]]
-                d = np.zeros(len(C))
-                for j in range(tabs.shape[1]):
-                    d += tabs[qi, j, C[:, j]]
-                top = np.argsort(d, kind="stable")[:k_neighbors]
-                out_q.extend([int(qid)] * len(top))
-                out_v.extend(pdf[id_col].to_numpy()[top].tolist())
-                out_d.extend(d[top].tolist())
-            yield pd.DataFrame(
-                {"query_id": out_q, id_col: out_v, "adc_dist": out_d}
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField(id_col, T.LongType()),
-            T.StructField("adc_dist", T.DoubleType()),
-        ]
-    )
-    partial = encoded.mapInPandas(score, schema=schema)
-    w = Window.partitionBy("query_id").orderBy("adc_dist", id_col)
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_neighbors)
-    )
-
-
-def ivfpq_topk(
-    encoded_with_cell: DataFrame,
-    queries: np.ndarray,
-    query_ids: list[int],
-    books: np.ndarray,
-    probe_cells: dict[int, list[int]],
-    k_neighbors: int = 5,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """IVF+PQ composite: each query scores ONLY vectors whose coarse
-    cell is in its probe list (cell filter), by ADC table lookups (PQ
-    scores) — the candidate-pruning and the compression compose, which
-    is how billion-scale indexes are actually built.  (Codes are over
-    raw vectors, not cell residuals — documented simplification; the
-    plan shape is identical.)"""
-    from pyspark.sql import Window
-
-    spark = encoded_with_cell.sparkSession
-    m, kc, sub = books.shape
-    tables = np.stack(
-        [
-            ((books[j][None, :, :] - queries[:, None, j * sub : (j + 1) * sub])
-             ** 2).sum(axis=2)
-            for j in range(m)
-        ],
-        axis=1,
-    )
-    probe_sets = {int(q): frozenset(c) for q, c in probe_cells.items()}
-    bt = spark.sparkContext.broadcast((tables, np.asarray(query_ids), probe_sets))
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tabs, qids, probes = bt.value
-        for pdf in batches:
-            C = np.asarray(pdf["code"].tolist(), dtype=np.int64)
-            cells = pdf["cell"].to_numpy()
-            ids = pdf[id_col].to_numpy()
-            out_q, out_v, out_d = [], [], []
-            for qi, qid in enumerate(qids):
-                mask = np.isin(cells, list(probes[int(qid)]))
-                if not mask.any():
-                    continue
-                Cm, idm = C[mask], ids[mask]
-                d = np.zeros(len(Cm))
-                for j in range(tabs.shape[1]):
-                    d += tabs[qi, j, Cm[:, j]]
-                top = np.argsort(d, kind="stable")[:k_neighbors]
-                out_q.extend([int(qid)] * len(top))
-                out_v.extend(idm[top].tolist())
-                out_d.extend(d[top].tolist())
-            yield pd.DataFrame(
-                {"query_id": out_q, id_col: out_v, "adc_dist": out_d}
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField(id_col, T.LongType()),
-            T.StructField("adc_dist", T.DoubleType()),
-        ]
-    )
-    partial = encoded_with_cell.mapInPandas(score, schema=schema)
-    w = Window.partitionBy("query_id").orderBy("adc_dist", id_col)
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_neighbors)
-    )
-
-
-def train_opq_rotation(
-    emb: DataFrame,
-    vec_col: str = "v",
-    m: int = 8,
-    k: int = 16,
-    sample: int = 2048,
-    opq_iters: int = 5,
-    kmeans_iters: int = 6,
-    seed: int = 7,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Optimized Product Quantization (Ge et al., CVPR'13): learn an
-    orthogonal rotation R that redistributes variance across the PQ
-    subspaces before quantizing, by alternating
-
-      1. codebooks <- k-means per subspace of the rotated sample X·R
-      2. R <- argmin_R ||X·R − Y||_F  over orthogonal R (orthogonal
-         Procrustes: SVD of Xᵀ·Y), Y = the quantized reconstruction
-
-    which monotonically decreases quantization error.  Same driver-side
-    sample recipe as ``train_pq_codebooks`` — R is dim×dim (KBs) and
-    codebooks are m×k×(dim/m); neither grows with the corpus, and the
-    full-corpus encode stays a broadcast-and-map pass.
-
-    Returns ``(R, books)``; encode/search use ``x·R`` everywhere plain
-    PQ used ``x``."""
-    rows = emb.select(vec_col).limit(sample).toPandas()[vec_col].tolist()
-    X = np.asarray(rows, dtype=np.float64)
-    n, dim = X.shape
-    assert dim % m == 0, f"dim {dim} not divisible by m {m}"
-    sub = dim // m
-    rng = np.random.default_rng(seed)
-    R = np.eye(dim)
-
-    def _kmeans(Xj: np.ndarray, cent: np.ndarray) -> np.ndarray:
-        for _ in range(kmeans_iters):
-            d = ((Xj[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            assign = d.argmin(axis=1)
-            for c in range(k):
-                mask = assign == c
-                if mask.any():
-                    cent[c] = Xj[mask].mean(axis=0)
-        return cent
-
-    books = np.empty((m, k, sub))
-    for it in range(opq_iters):
-        Xr = X @ R
-        Y = np.empty_like(Xr)
-        for j in range(m):
-            Xj = Xr[:, j * sub : (j + 1) * sub]
-            if it == 0:
-                cent = Xj[rng.choice(n, size=k, replace=False)]
-            else:
-                cent = books[j]
-            books[j] = _kmeans(Xj, cent.copy())
-            d = ((Xj[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-            Y[:, j * sub : (j + 1) * sub] = books[j][d.argmin(axis=1)]
-        # orthogonal Procrustes: rotate X toward its own reconstruction
-        U, _, Vt = np.linalg.svd(X.T @ Y)
-        R = U @ Vt
-    return R, books
-
-
-def rotate_vectors(
-    emb: DataFrame, R: np.ndarray, vec_col: str = "v", id_col: str = "vec_id"
-) -> DataFrame:
-    """Apply the OPQ rotation corpus-wide: one Arrow-batched matmul per
-    batch (R rides a broadcast; no shuffle — row-local projection)."""
-    spark = emb.sparkSession
-    br = spark.sparkContext.broadcast(R)
-
-    def rot(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        Rv = br.value
-        for pdf in batches:
-            X = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], vec_col: list(X @ Rv)}
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField(vec_col, T.ArrayType(T.DoubleType())),
-        ]
-    )
-    return emb.select(id_col, vec_col).mapInPandas(rot, schema=schema)
 
 
 # --- blocked query-table path (no driver collect) -------------------------------
@@ -643,273 +211,6 @@ def pack_code_blocks(
     )
 
 
-def pq_topk_table(
-    encoded: DataFrame,
-    queries: DataFrame,
-    books: np.ndarray,
-    k_neighbors: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-    rotation: np.ndarray | None = None,
-    centroids: np.ndarray | None = None,
-    nprobe: int = 4,
-) -> DataFrame:
-    """ADC search with a query TABLE: code blocks x broadcast query
-    blocks; each kernel call builds the (blockQ, m, kc) distance tables
-    from the query block and the KB-sized broadcast codebooks, then
-    scores codes by table lookups.
-
-    ``rotation`` (OPQ) rotates the query block before table build;
-    ``centroids`` (IVF+PQ over ``e_cells``) restricts each query to its
-    ``nprobe`` nearest coarse cells — both computed inside the kernel,
-    never on the driver."""
-    cb = pack_code_blocks(
-        encoded,
-        id_col=id_col,
-        cell_col="cell" if centroids is not None else None,
-    )
-    qb = pack_blocks(queries, id_col, vec_col, prefix="q_")
-    pairs = cb.crossJoin(F.broadcast(qb))
-
-    spark = encoded.sparkSession
-    bt = spark.sparkContext.broadcast((books, rotation, centroids))
-
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField(id_col, T.LongType()),
-            T.StructField("adc_dist", T.DoubleType()),
-        ]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bks, R, cents = bt.value
-        m, kc, sub = bks.shape
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                C = np.stack(row["e_codes"]).astype(np.int64)
-                eids = np.asarray(row["e_ids"], dtype=np.int64)
-                Q = np.stack(row["q_vecs"]).astype(np.float64)
-                qids = np.asarray(row["q_ids"], dtype=np.int64)
-                # IVF cells are assigned on the RAW vector at build time
-                # (build_ivf trains unrotated; ann_ingest assigns raw), so
-                # the coarse probe below must use the UN-rotated query.
-                # Only the ADC tables see the OPQ-rotated space.
-                Qraw = Q
-                if R is not None:
-                    Q = Q @ R
-                # (blockQ, m, kc) ADC tables
-                tabs = np.stack(
-                    [
-                        ((bks[j][None, :, :]
-                          - Q[:, None, j * sub : (j + 1) * sub]) ** 2
-                         ).sum(axis=2)
-                        for j in range(m)
-                    ],
-                    axis=1,
-                )
-                cells = (
-                    np.asarray(row["e_cells"], dtype=np.int64)
-                    if cents is not None
-                    else None
-                )
-                out_q, out_v, out_d = [], [], []
-                for qi in range(len(qids)):
-                    Cq, idq = C, eids
-                    if cents is not None:
-                        cd = ((cents - Qraw[qi]) ** 2).sum(axis=1)
-                        probe = set(np.argsort(cd)[:nprobe].tolist())
-                        mask = np.isin(cells, list(probe))
-                        if not mask.any():
-                            continue
-                        Cq, idq = C[mask], eids[mask]
-                    d = np.zeros(len(Cq))
-                    for j in range(m):
-                        d += tabs[qi, j, Cq[:, j]]
-                    top = np.argsort(d, kind="stable")[:k_neighbors]
-                    out_q.extend([int(qids[qi])] * len(top))
-                    out_v.extend(idq[top].tolist())
-                    out_d.extend(d[top].tolist())
-                yield pd.DataFrame(
-                    {"query_id": out_q, id_col: out_v, "adc_dist": out_d}
-                )
-
-    partial = pairs.mapInPandas(kernel, schema=schema)
-    return _topk_window(partial, k_neighbors, "adc_dist", asc=True,
-                        id_col=id_col)
-
-
-# --- SQ8 scalar quantization -------------------------------------------------------
-def sq8_train(emb: DataFrame, vec_col: str = "v") -> tuple[list[float], list[float]]:
-    """Per-dimension [min, max] ranges for 8-bit scalar quantization
-    (the FAISS ``SQ8`` recipe).  Unlike PQ/IVF codebooks these are
-    exact order-independent aggregates, so the whole tier is
-    deterministic and cross-engine verifiable.
-
-    Plan: posexplode → groupBy(dim) with map-side combine, so the
-    shuffle carries dims × partitions partial rows, never the corpus;
-    the collected stats are 2×dim driver scalars (KB-sized)."""
-    stats = (
-        emb.select(F.posexplode(vec_col).alias("i", "x"))
-        .groupBy("i")
-        .agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
-        .orderBy("i")
-        .collect()
-    )
-    return [r.mn for r in stats], [r.mx for r in stats]
-
-
-def _sq8_lit(mins: list[float], maxs: list[float]):
-    mn = F.array(*[F.lit(float(x)) for x in mins])
-    mx = F.array(*[F.lit(float(x)) for x in maxs])
-    return mn, mx
-
-
-def sq8_encode(
-    emb: DataFrame,
-    mins: list[float],
-    maxs: list[float],
-    vec_col: str = "v",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Quantize each dimension to a uint8 code: ``floor((x−mn)/(mx−mn)
-    ·255 + 0.5)`` clipped to [0,255] (code 0 for degenerate dims) — a
-    pure Catalyst ``transform``, no Python anywhere.  The code column
-    is 8× smaller than float64 / 4× smaller than float32 — the
-    in-memory index column an executor actually caches at scale."""
-    mn, mx = _sq8_lit(mins, maxs)
-
-    def code(x, i):
-        lo = F.element_at(mn, i + 1)
-        hi = F.element_at(mx, i + 1)
-        raw = F.floor((x - lo) / (hi - lo) * 255.0 + 0.5).cast("int")
-        return F.when(
-            hi > lo, F.least(F.lit(255), F.greatest(F.lit(0), raw))
-        ).otherwise(F.lit(0))
-
-    return emb.select(id_col, F.transform(F.col(vec_col), code).alias("code"))
-
-
-def sq8_reconstruct(
-    code_col, mins: list[float], maxs: list[float]
-):
-    """Dequantize: ``mn + code·(mx−mn)/255`` per dimension — the exact
-    double arithmetic the oracle mirrors textually."""
-    mn, mx = _sq8_lit(mins, maxs)
-    return F.transform(
-        code_col,
-        lambda c, i: F.element_at(mn, i + 1)
-        + c.cast("double")
-        * (F.element_at(mx, i + 1) - F.element_at(mn, i + 1))
-        / F.lit(255.0),
-    )
-
-
-def sq8_topk(
-    encoded: DataFrame,
-    queries_df: DataFrame,
-    mins: list[float],
-    maxs: list[float],
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-) -> DataFrame:
-    """Asymmetric SQ8 search: the RAW query vector scored against
-    reconstructed corpus vectors (queries are few — quantizing them
-    would only lose precision).  Broadcast the query table against the
-    encoded corpus, fold-dot cosine, per-query rank window.  Composes
-    with the IVF cell column for the pruned tier; this function is the
-    full-scan form (same role as sim_topk_bruteforce for raw floats)."""
-    from pyspark.sql import Window
-
-    from ..functions.vectors import cosine
-
-    rv = sq8_reconstruct(F.col("code"), mins, maxs)
-    corpus = encoded.select(
-        F.col(id_col).alias("neighbor_id"), rv.alias("rv")
-    )
-    q = queries_df.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    scored = corpus.join(
-        F.broadcast(q), F.col("query_id") != F.col("neighbor_id")
-    ).select(
-        "query_id",
-        "neighbor_id",
-        cosine(F.col("qv"), F.col("rv")).alias("sq_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sq_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sq_sim", "rank")
-    )
-
-
-def sq8_ivf_topk(
-    encoded_with_cell: DataFrame,
-    queries_df: DataFrame,
-    centroids,
-    mins: list[float],
-    maxs: list[float],
-    k: int = 5,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-) -> DataFrame:
-    """IVF + SQ8 composite: coarse cells prune candidates, uint8 codes
-    decode AFTER the cell equi-join so only probed cells pay the
-    dequantize — the memory layout (cell, code) is what an executor
-    holds at scale (9 bytes/dim vs 8 bytes/dim... vs 64 for float64).
-    Probe lists ride the broadcast centroid table on RAW query vectors
-    (the OPQ round-4 lesson: never probe in a transformed space the
-    assigner didn't use)."""
-    from pyspark.sql import Window
-
-    from ..functions.vectors import cosine
-
-    spark = encoded_with_cell.sparkSession
-    cent = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cell int, cv array<double>",
-    )
-    d2 = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("cv"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wq = Window.partitionBy("query_id").orderBy("d2", "cell")
-    probe = (
-        queries_df.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        )
-        .join(F.broadcast(cent))
-        .withColumn("d2", d2)
-        .withColumn("__cr", F.row_number().over(wq))
-        .filter(F.col("__cr") <= nprobe)
-        .select("query_id", "cell", "qv")
-    )
-    cand = encoded_with_cell.join(F.broadcast(probe), "cell").filter(
-        F.col(id_col) != F.col("query_id")
-    )
-    rv = sq8_reconstruct(F.col("code"), mins, maxs)
-    scored = cand.select(
-        "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        cosine(F.col("qv"), rv).alias("sq_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sq_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sq_sim", "rank")
-    )
-
-
 # --- LAZY fit frames (r10 purity item) ---------------------------------------------
 #
 # The r9 PCA scalar-attach pattern generalized to the quantized ANN
@@ -918,10 +219,12 @@ def sq8_ivf_topk(
 # (or, for SQ8, an exact in-plan aggregate), and attaches to corpus /
 # query plans via 1-row broadcast crossJoin.  The registered sim_*
 # queries build end-to-end lazy plans — constructing them launches
-# ZERO jobs — while the eager trainers above remain for execution-time
-# contexts (the ann_index ingest source, bounded eval collects, tests).
+# ZERO jobs.  Execution-time users (sources/ann_index.py collects each
+# fit once into meta.json and rebuilds the frames from it; bounded eval
+# collects) go through the same frames, so there is one quantizer
+# implementation.
 #
-# Solver note: the lazy IVF fit runs a seeded numpy Lloyd on the sorted
+# Solver note: the IVF fit runs a seeded numpy Lloyd on the sorted
 # sample instead of MLlib KMeans (whose .fit() is irreducibly eager).
 # All IVF-tier queries are rows-only BY DESIGN (centroids are
 # solver-shaped); the hash-checked gates (sim_tier_eval) re-derive
@@ -1052,9 +355,11 @@ def ivf_search_lazy(
     k: int = 5,
     nprobe: int = 4,
 ) -> DataFrame:
-    """ivf_search with the probe list derived from the lazy fit frame
-    instead of a driver-held model — same cell equi-join, same scoring
-    algebra, zero construction jobs."""
+    """IVF search: probe the ``nprobe`` nearest cells per query, score
+    the candidates, keep the per-query top-k.  The probe list comes from
+    the attached fit frame (a per-query window over the posexploded
+    centroids), and candidates come from a cell equi-join, so each query
+    scores N · nprobe / n_cells vectors instead of N."""
     from pyspark.sql import Window
 
     from ..functions.vectors import cosine_prenormed, norm2
@@ -1084,8 +389,10 @@ def ivf_search_lazy(
 def sq8_fit_frame(emb: DataFrame, vec_col: str = "v") -> DataFrame:
     """The SQ8 quantizer fit as a LAZY 1-row frame: per-dimension
     min/max via posexplode → groupBy partials (map-side combine), the
-    dim-ordered arrays assembled INSIDE the plan — the exact aggregates
-    sq8_train collects, deferred to action time."""
+    dim-ordered arrays assembled INSIDE the plan.  Unlike PQ/IVF
+    codebooks these are exact order-independent aggregates (the FAISS
+    ``SQ8`` recipe), so the whole tier is deterministic and
+    cross-engine verifiable."""
     per_dim = (
         emb.select(F.posexplode(vec_col).alias("i", "x"))
         .groupBy("i")
@@ -1107,10 +414,11 @@ def sq8_encode_lazy(
     vec_col: str = "v",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """sq8_encode against the lazy fit: identical quantization
-    arithmetic with the ranges read from attached COLUMNS instead of
-    plan literals (bit-identical codes — the SQ8 tier stays
-    oracle-exact).  Output carries mn/mx alongside the code so the
+    """Quantize each dimension to a uint8 code: ``floor((x−mn)/(mx−mn)
+    ·255 + 0.5)`` clipped to [0,255] (code 0 for degenerate dims), with
+    the ranges read from attached COLUMNS — pure Catalyst, no Python,
+    and the oracle mirrors the arithmetic textually.  Values outside a
+    frozen range clip.  Output carries mn/mx alongside the code so the
     downstream reconstruct needs no second fit subtree; inside
     whole-stage codegen the 1-row broadcast columns are references,
     not per-row copies."""
@@ -1130,8 +438,8 @@ def sq8_encode_lazy(
 
 
 def _sq8_reconstruct_cols(code_col):
-    """Dequantize against mn/mx COLUMNS (sq8_reconstruct's arithmetic,
-    lazy-fit form) — caller's frame must carry mn/mx."""
+    """Dequantize ``mn + code·(mx−mn)/255`` per dimension against mn/mx
+    COLUMNS — caller's frame must carry mn/mx."""
     return F.transform(
         code_col,
         lambda c, i: F.element_at(F.col("mn"), i + 1)
@@ -1148,8 +456,10 @@ def sq8_topk_lazy(
     id_col: str = "vec_id",
     vec_col: str = "v",
 ) -> DataFrame:
-    """sq8_topk against a lazy-fit encoded frame (carries code+mn+mx):
-    same asymmetric scoring, zero construction jobs."""
+    """Asymmetric SQ8 search over an encoded frame (code+mn+mx): the RAW
+    query vector scored against reconstructed corpus vectors (quantizing
+    the few queries would only lose precision) — broadcast query table,
+    fold-dot cosine, per-query rank window; the full-scan form."""
     from pyspark.sql import Window
 
     from ..functions.vectors import cosine
@@ -1187,9 +497,10 @@ def sq8_ivf_topk_lazy(
     id_col: str = "vec_id",
     vec_col: str = "v",
 ) -> DataFrame:
-    """sq8_ivf_topk with BOTH fits lazy: probe lists from the IVF fit
-    frame, dequantize from the carried mn/mx columns after the cell
-    equi-join — pruning × compression, zero construction jobs."""
+    """IVF + SQ8 composite: probe lists from the IVF fit frame on RAW
+    query vectors (never probe in a space the assigner didn't use),
+    dequantize from the carried mn/mx columns after the cell equi-join
+    so only probed cells pay the decode — pruning × compression."""
     from pyspark.sql import Window
 
     from ..functions.vectors import cosine
@@ -1218,8 +529,8 @@ def sq8_ivf_topk_lazy(
 def _pq_train_np(
     X: np.ndarray, m: int, k: int, iters: int, seed: int
 ) -> np.ndarray:
-    """train_pq_codebooks' numpy core on an in-memory sample (shared by
-    the lazy fold and any eager caller that already holds the sample)."""
+    """PQ codebook training on an in-memory sample: per subspace, a
+    seeded Lloyd with one rng across subspaces.  Returns (m, k, sub)."""
     n, dim = X.shape
     assert dim % m == 0, f"dim {dim} not divisible by m {m}"
     sub = dim // m
@@ -1284,7 +595,7 @@ def pq_encode_lazy(
     """PQ encode as pure Catalyst HOFs against the attached codebooks:
     per subspace, argmin of squared distance between the vector slice
     and the 16 centroids — no Arrow pass, no broadcast variable, zero
-    construction jobs.  First-index ties match np.argmin in pq_encode."""
+    construction jobs.  First-index ties, like np.argmin."""
     at = emb.crossJoin(F.broadcast(fit))
     # One F.expr for the whole m-subspace argmin (r10 — see _d2_sql):
     # textually the same slice/transform/array_position tree the Column
@@ -1315,12 +626,17 @@ def pq_topk_table_lazy(
     opq_fit: DataFrame | None = None,
     nprobe: int = 4,
 ) -> DataFrame:
-    """pq_topk_table with every fit as a lazy frame: the (tiny) query
-    block rows carry books / centroids / rotation as attached columns,
-    so the kernel reads them from its own row — no driver-held numpy,
-    no broadcast variable, zero construction jobs.  The corpus blocks
-    carry only ids/codes(/cells); the KB-sized fit payload rides the
-    broadcast qb side once per block pair."""
+    """ADC (asymmetric distance) search with a query TABLE: code blocks
+    × broadcast query blocks; each kernel call builds the (blockQ, m, kc)
+    distance tables and scores codes by m table lookups.  ``opq_fit``
+    rotates the query block before the table build; ``ivf_fit``
+    restricts each query to its ``nprobe`` nearest cells, probed on the
+    UN-rotated query (cells are assigned on raw vectors).  The (tiny)
+    query block rows carry books / centroids / rotation as attached
+    columns, so the kernel reads them from its own row — no driver-held
+    numpy, no broadcast variable, zero construction jobs.  The corpus
+    blocks carry only ids/codes(/cells); the KB-sized fit payload rides
+    the broadcast qb side once per block pair."""
     cb = pack_code_blocks(
         encoded,
         id_col=id_col,
@@ -1417,9 +733,12 @@ def opq_fit_frame(
     kmeans_iters: int = 6,
     seed: int = 7,
 ) -> DataFrame:
-    """OPQ rotation + codebooks as a LAZY 1-row frame — the identical
-    Ge et al. alternation train_opq_rotation runs, folded over the
-    sorted sample.  ``rt`` holds the COLUMNS of R (R transposed) so the
+    """Optimized Product Quantization (Ge et al., CVPR'13) as a LAZY
+    1-row frame: learn an orthogonal rotation R that redistributes
+    variance across the PQ subspaces by alternating per-subspace k-means
+    on the rotated sample X·R with orthogonal Procrustes (SVD of Xᵀ·Y,
+    Y the quantized reconstruction), folded over the sorted sample.
+    ``rt`` holds the COLUMNS of R (R transposed) so the
     in-plan rotation is a per-output-dim dot: rotated[d] = v · rt[d]."""
 
     def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -2,10 +2,19 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from ..session import ensure_utc
 from ..tables import load_table, scan_is_narrow
+
+# Gate fixtures are staged under ``.stage`` at the repository root, next
+# to the package directory.
+STAGE_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    ".stage",
+)
 
 
 def tbl(

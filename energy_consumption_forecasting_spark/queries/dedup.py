@@ -1374,7 +1374,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a corpus cross join; the dominance set is a narrow distinct
     of ids and the survivor filter is a broadcast-able anti-join.  At
     100 TB, labels are the IVF cell assignment
-    (operators/ann.py::build_ivf) computed once and reused by the ANN
+    (operators/ann.py::ivf_fit_frame) computed once and reused by the ANN
     tiers, and the target keeps each cell's dominance pass bounded."""
     from ..functions.vectors import cosine_prenormed
 

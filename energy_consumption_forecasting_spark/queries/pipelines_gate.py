@@ -35,8 +35,8 @@ from pyspark.sql import functions as F
 
 from . import query
 from ..session import ensure_utc
+from ._util import STAGE_DIR
 
-STAGE_DIR = "/root/repo/.stage"
 WDIR = f"{STAGE_DIR}/ep1_weather"
 BDIR = f"{STAGE_DIR}/ep1_balance"
 

@@ -471,7 +471,7 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OPQ/ADC ANN: Ge et al.'s optimized PQ — an orthogonal rotation
     learned on the training sample (alternating per-subspace k-means /
-    orthogonal-Procrustes, operators/ann.py::train_opq_rotation)
+    orthogonal-Procrustes, operators/ann.py::opq_fit_frame)
     equalizes subspace variance before the same 8x16 PQ encode, cutting
     quantization error vs sim_pq_topk at identical index size.  The
     rotation applies in-plan as a HOF dot per output dimension;

@@ -4,10 +4,11 @@ fixed-width) exercised through the correctness gate, not just pytest.
 r1 review gap: the CSV/fixed-width sources were tested only in pytest;
 no registered query materialized a file and read it back through
 ``queries()``.  Here deterministic fixtures (byte-stable literals) are
-staged under ``/root/repo/.stage`` at import time (idempotent, so the
-oracle can run before or after the Spark query), Spark reads them
-through the real source operators, and DuckDB reads THE SAME FILES via
-``read_csv`` — a genuine two-engine file-parse comparison.
+staged under ``_util.STAGE_DIR`` (``<repo>/.stage``) at import time
+(idempotent, so the oracle can run before or after the Spark query),
+Spark reads them through the real source operators, and DuckDB reads
+THE SAME FILES via ``read_csv`` — a genuine two-engine file-parse
+comparison.
 
 Reference parity: per-year CSVs with preamble rows
 (normalization.ipynb:101,127 ``header=4``) and GHCN .dly positional
@@ -23,9 +24,8 @@ from pyspark.sql import types as T
 from pyspark.sql import functions as F
 
 from . import query
-from ._util import tbl
+from ._util import STAGE_DIR, tbl
 
-STAGE_DIR = "/root/repo/.stage"
 CSV_DIR = f"{STAGE_DIR}/s2_csv"
 DLY_DIR = f"{STAGE_DIR}/s4_dly"
 

@@ -120,19 +120,3 @@ STATIONS_SCHEMA = T.StructType(
         T.StructField("unk3", T.StringType()),
     ]
 )
-
-
-def ghcnd_daily_schema() -> T.StructType:
-    """128-column wide daily-weather schema (ETL.py:101-120 layout)."""
-    fields = [
-        T.StructField("ID", T.StringType()),
-        T.StructField("YEAR", T.IntegerType()),
-        T.StructField("MONTH", T.IntegerType()),
-        T.StructField("ELEMENT", T.StringType()),
-    ]
-    for day in range(1, 32):
-        fields.append(T.StructField(f"VALUE{day}", T.DoubleType()))
-        fields.append(T.StructField(f"MFLAG{day}", T.StringType()))
-        fields.append(T.StructField(f"QFLAG{day}", T.StringType()))
-        fields.append(T.StructField(f"SFLAG{day}", T.StringType()))
-    return T.StructType(fields)

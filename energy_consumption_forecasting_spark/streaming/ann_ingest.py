@@ -8,83 +8,25 @@ full rebuild.  The standard production split applies:
   trained on the initial corpus and FROZEN — retraining them would
   invalidate every stored code, so drift is handled by periodic
   rebuilds, not per-batch updates (the FAISS/Milvus convention);
-* each micro-batch is encoded row-locally against the broadcast
-  quantizers (one Arrow pass: subspace argmin + nearest-cell assign)
-  and appended to the cell-partitioned codes parquet — an append-only
-  sink, no state store, no shuffle beyond the partitioned write.
+* each micro-batch is encoded by ``sources/ann_index.encode_with_meta``
+  — the same in-plan encoders over 1-row fit frames rebuilt from
+  ``meta.json`` that the batch build uses — and appended to the
+  cell-partitioned codes parquet: an append-only sink, no state store.
 
 Searches running against the index directory see new vectors on their
 next scan; `search_ann_index` needs no changes.  Equivalence contract
 (tests/test_ann_ingest.py): streaming the corpus into an empty index
 yields exactly the codes a one-shot batch build produces with the same
-frozen quantizers.
+frozen quantizers — by construction, since both go through one
+encoder.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-
-def encode_with_meta(batch: DataFrame, meta: dict) -> DataFrame:
-    """(vec_id, code[, cell]) for a batch of vectors under FROZEN
-    quantizers — one Arrow-batched pass, quantizers on a broadcast.
-    Handles both index kinds: PQ (subspace argmin) and SQ8 (frozen
-    per-dimension min/max ranges; out-of-range appends clip, exactly
-    like FAISS SQ on drifted data)."""
-    spark = batch.sparkSession
-    is_sq8 = meta.get("kind") == "sq8"
-    b = spark.sparkContext.broadcast(
-        (
-            meta.get("codebooks"),
-            meta.get("rotation"),
-            meta.get("centroids"),
-            (meta.get("mins"), meta.get("maxs")) if is_sq8 else None,
-        )
-    )
-    has_cells = meta.get("centroids") is not None
-
-    def encode(batches):
-        books, R, cents, sq = b.value
-        for pdf in batches:
-            X = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            if sq is not None:
-                mn = np.asarray(sq[0])
-                mx = np.asarray(sq[1])
-                span = np.where(mx > mn, mx - mn, 1.0)
-                codes = np.clip(
-                    np.floor((X - mn) / span * 255.0 + 0.5), 0, 255
-                ).astype(np.int32)
-                codes[:, mx <= mn] = 0
-            else:
-                Xr = X @ R if R is not None else X
-                m, _, sub = books.shape
-                codes = np.empty((len(X), m), dtype=np.int32)
-                for j in range(m):
-                    Xj = Xr[:, j * sub : (j + 1) * sub]
-                    d = ((Xj[:, None, :] - books[j][None, :, :]) ** 2).sum(
-                        axis=2
-                    )
-                    codes[:, j] = d.argmin(axis=1)
-            out = {"vec_id": pdf["vec_id"], "code": list(codes)}
-            if cents is not None:
-                # IVF cell on the RAW vector (build_ivf trains unrotated)
-                cd = ((X[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-                out["cell"] = cd.argmin(axis=1).astype(np.int32)
-            yield pd.DataFrame(out)
-
-    fields = [
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("code", T.ArrayType(T.IntegerType())),
-    ]
-    if has_cells:
-        fields.append(T.StructField("cell", T.IntegerType()))
-    return batch.select("vec_id", "v").mapInPandas(
-        encode, schema=T.StructType(fields)
-    )
+from ..sources.ann_index import encode_with_meta, load_ann_index
 
 
 def ingest_vectors_available_now(
@@ -104,7 +46,6 @@ def ingest_vectors_available_now(
     import os
     import tempfile
 
-    from ..sources.ann_index import load_ann_index
     from . import (
         pinned_stream_partitions,
         run_id_for_checkpoint,

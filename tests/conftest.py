@@ -42,8 +42,9 @@ def duck():
 # call+setup totalled >= 4 s in the committed full-run duration audit,
 # 81 tests / ~20 of the 29 minutes) get the marker here, keeping a
 # <10-minute default profile.  FULL suite: `pytest tests/ -m ""`
-# (CI / round-end).  A stale id (renamed test) is simply unmatched —
-# the test then runs in the default profile, which fails safe.
+# (CI / round-end).  A stale id (renamed test) would be silently
+# unmatched, so tests/test_slow_registry.py fails on any entry whose
+# file::function does not exist.
 SLOW_NODE_IDS = {
     "tests/test_ann_ingest.py::test_search_sees_ingested_vectors",
     "tests/test_ann_ingest.py::test_streamed_ingest_matches_batch_encode",

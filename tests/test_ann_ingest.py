@@ -96,10 +96,8 @@ def test_sq8_streaming_ingest_matches_batch_codes(spark, tmp_path):
     from energy_consumption_forecasting_spark.functions.vectors import as_double
     from energy_consumption_forecasting_spark.sources.ann_index import (
         build_ann_index,
-        load_ann_index,
-    )
-    from energy_consumption_forecasting_spark.streaming.ann_ingest import (
         encode_with_meta,
+        load_ann_index,
     )
 
     e = (
@@ -166,3 +164,42 @@ def test_incremental_ingest_appends_new_files_once(spark, tmp_path):
     assert spark.read.parquet(f"{idx}/codes").count() == n2
     codes, _ = load_ann_index(spark, idx)
     assert codes.count() == n2
+
+
+def test_ingest_duplicate_ids_in_one_drain_keep_code_cell_pairs(spark, tmp_path):
+    """Two copies of one file in ONE drain: every vec_id lands exactly
+    once per copy, each row carrying the code and cell of its own
+    vector — repeated ids in a micro-batch must not multiply rows."""
+    import os
+    import shutil
+    from collections import Counter
+
+    e = _emb(spark)
+    idx = str(tmp_path / "idx")
+    build_ann_index(e, idx, n_cells=8)
+    base = Counter(
+        (r.vec_id, tuple(r.code), r.cell)
+        for r in spark.read.parquet(f"{idx}/codes").collect()
+    )
+
+    src = str(tmp_path / "vecs")
+    os.makedirs(src)
+    for name in ("a", "b"):
+        shutil.copy(f"{SF_SMALL}/embeddings.parquet", f"{src}/{name}.parquet")
+    ingest_vectors_available_now(spark, idx, src)
+
+    got = Counter(
+        (r.vec_id, tuple(r.code), r.cell)
+        for r in spark.read.parquet(f"{idx}/codes").collect()
+    )
+    assert got == Counter({key: 3 for key in base})
+
+
+def test_build_rejects_more_cells_than_the_fit_sample(spark, tmp_path):
+    import pytest
+
+    from energy_consumption_forecasting_spark.operators.ann import FIT_SAMPLE
+
+    with pytest.raises(ValueError, match="n_cells"):
+        build_ann_index(_emb(spark), str(tmp_path / "idx"),
+                        n_cells=FIT_SAMPLE + 1)

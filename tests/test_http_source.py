@@ -13,13 +13,14 @@ import pytest
 
 from pyspark.sql import types as T
 
+from energy_consumption_forecasting_spark.queries._util import STAGE_DIR
 from energy_consumption_forecasting_spark.sources.csv_source import (
     fetch_http_to_stage,
     read_csv,
 )
 
-FIXTURE_DIR = "/root/repo/.stage/s2_csv"  # staged by queries.sources_gate
-STAGE_DIR = "/root/repo/.stage/s1_http"
+FIXTURE_DIR = os.path.join(STAGE_DIR, "s2_csv")  # staged by queries.sources_gate
+HTTP_STAGE_DIR = os.path.join(STAGE_DIR, "s1_http")
 
 
 @pytest.fixture(scope="module")
@@ -38,11 +39,11 @@ def http_url():
 
 
 def test_http_fetch_then_scan_matches_local_read(spark, http_url):
-    shutil.rmtree(STAGE_DIR, ignore_errors=True)
+    shutil.rmtree(HTTP_STAGE_DIR, ignore_errors=True)
     files = sorted(os.listdir(FIXTURE_DIR))
     assert files, "sources_gate fixtures missing"
     staged = fetch_http_to_stage(
-        spark, [f"{http_url}/{f}" for f in files], STAGE_DIR
+        spark, [f"{http_url}/{f}" for f in files], HTTP_STAGE_DIR
     )
     assert sorted(os.path.basename(p) for p in staged) == files
     schema = T.StructType(
@@ -54,7 +55,7 @@ def test_http_fetch_then_scan_matches_local_read(spark, http_url):
         ]
     )
     via_http = read_csv(
-        spark, f"{STAGE_DIR}/*.csv", schema, header=True, skip_rows=2
+        spark, f"{HTTP_STAGE_DIR}/*.csv", schema, header=True, skip_rows=2
     )
     direct = read_csv(
         spark, f"{FIXTURE_DIR}/*.csv", schema, header=True, skip_rows=2
@@ -67,9 +68,9 @@ def test_http_fetch_then_scan_matches_local_read(spark, http_url):
 def test_http_fetch_idempotent(spark, http_url):
     files = sorted(os.listdir(FIXTURE_DIR))
     urls = [f"{http_url}/{files[0]}"]
-    first = fetch_http_to_stage(spark, urls, STAGE_DIR)
+    first = fetch_http_to_stage(spark, urls, HTTP_STAGE_DIR)
     mtime = os.path.getmtime(first[0])
-    again = fetch_http_to_stage(spark, urls, STAGE_DIR)
+    again = fetch_http_to_stage(spark, urls, HTTP_STAGE_DIR)
     assert again == first
     assert os.path.getmtime(first[0]) == mtime  # no re-download
 

@@ -121,23 +121,24 @@ def test_pq_ann_recall_vs_exact(spark):
     from pyspark.sql import functions as F
 
     from energy_consumption_forecasting_spark.operators.ann import (
-        pq_encode,
-        pq_topk,
-        train_pq_codebooks,
+        pq_encode_lazy,
+        pq_fit_frame,
+        pq_topk_table_lazy,
     )
 
     e = (
         spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     )
-    books = train_pq_codebooks(e, m=8, k=16)
-    encoded = pq_encode(e, books)
+    fit = pq_fit_frame(e, m=8, k=16)
+    encoded = pq_encode_lazy(e, fit, m=8)
 
     rows = sorted((r.vec_id, np.array(r.v)) for r in e.collect())
     ids = np.array([r[0] for r in rows])
     X = np.stack([r[1] for r in rows])
     qn = 5
-    out = pq_topk(encoded, X[:qn], ids[:qn].tolist(), books, k_neighbors=5)
+    q = e.filter(F.col("vec_id").isin(ids[:qn].tolist()))
+    out = pq_topk_table_lazy(encoded, q, fit, k_neighbors=5)
     got = {}
     for r in out.collect():
         got.setdefault(r.query_id, []).append(r.vec_id)
@@ -156,32 +157,30 @@ def test_pq_ann_recall_vs_exact(spark):
 
 
 def test_ivfpq_retrieves_own_vector(spark):
-    import numpy as np
     from pyspark.sql import functions as F
 
     from energy_consumption_forecasting_spark.operators.ann import (
-        build_ivf,
-        ivfpq_topk,
-        pq_encode,
-        train_pq_codebooks,
+        ivf_assign_lazy,
+        ivf_fit_frame,
+        pq_encode_lazy,
+        pq_fit_frame,
+        pq_topk_table_lazy,
     )
 
     e = (
         spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     )
-    assigned, model = build_ivf(e, n_cells=8)
-    books = train_pq_codebooks(e, m=8, k=16)
-    encoded = pq_encode(e, books).join(assigned.select("vec_id", "cell"), "vec_id")
-    qrows = [(r.vec_id, np.array(r.v)) for r in e.filter(F.col("vec_id") < 3).collect()]
-    qids = [q[0] for q in qrows]
-    qmat = np.stack([q[1] for q in qrows])
-    cents = np.asarray(model.clusterCenters())
-    probe = {
-        int(qid): np.argsort(((cents - qmat[i]) ** 2).sum(axis=1))[:3].tolist()
-        for i, qid in enumerate(qids)
-    }
-    out = ivfpq_topk(encoded, qmat, qids, books, probe, k_neighbors=5)
+    ivf_fit = ivf_fit_frame(e, n_cells=8)
+    fit = pq_fit_frame(e, m=8, k=16)
+    encoded = pq_encode_lazy(e, fit, m=8).join(
+        ivf_assign_lazy(e, ivf_fit).select("vec_id", "cell"), "vec_id"
+    )
+    q = e.filter(F.col("vec_id") < 3)
+    qids = [r.vec_id for r in q.collect()]
+    out = pq_topk_table_lazy(
+        encoded, q, fit, k_neighbors=5, ivf_fit=ivf_fit, nprobe=3
+    )
     got = {}
     for r in out.collect():
         got.setdefault(r.query_id, []).append(r.vec_id)
@@ -198,21 +197,28 @@ def test_opq_rotation_orthogonal_and_lowers_error(spark):
     from pyspark.sql import functions as F
 
     from energy_consumption_forecasting_spark.operators.ann import (
-        train_opq_rotation,
-        train_pq_codebooks,
+        opq_fit_frame,
+        pq_fit_frame,
     )
 
     e = (
         spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     )
-    R, opq_books = train_opq_rotation(e, m=8, k=16, sample=512)
+    opq = opq_fit_frame(e, m=8, k=16, sample=512).first()
+    R = np.asarray(opq["rt"], dtype=np.float64).T  # rt holds R's columns
+    opq_books = np.asarray(opq["books"], dtype=np.float64)
     dim = R.shape[0]
     assert np.allclose(R @ R.T, np.eye(dim), atol=1e-8)
 
-    pq_books = train_pq_codebooks(e, m=8, k=16, sample=512)
+    pq_books = np.asarray(
+        pq_fit_frame(e, m=8, k=16, sample=512).first()["books"],
+        dtype=np.float64,
+    )
+    # the training sample both fits fold over: first 512 by vec_id
     X = np.asarray(
-        e.select("v").limit(512).toPandas()["v"].tolist(), dtype=np.float64
+        e.orderBy("vec_id").limit(512).toPandas()["v"].tolist(),
+        dtype=np.float64,
     )
 
     def quant_err(Xm, books):
@@ -289,7 +295,8 @@ def test_bpe_encode_respects_rank_order(spark):
 
 def test_ann_index_roundtrip(spark, tmp_path):
     """Persisted index (codes parquet + meta.json) answers identically
-    to the in-session build, and IVF codes are cell-partitioned."""
+    to the in-session lazy fits + pq_topk_table_lazy, and IVF codes
+    are cell-partitioned."""
     import os
 
     from pyspark.sql import functions as F
@@ -298,10 +305,11 @@ def test_ann_index_roundtrip(spark, tmp_path):
         as_double,
     )
     from energy_consumption_forecasting_spark.operators.ann import (
-        build_ivf,
-        pq_encode,
-        pq_topk_table,
-        train_pq_codebooks,
+        ivf_assign_lazy,
+        ivf_fit_frame,
+        pq_encode_lazy,
+        pq_fit_frame,
+        pq_topk_table_lazy,
     )
     from energy_consumption_forecasting_spark.sources.ann_index import (
         build_ann_index,
@@ -321,16 +329,15 @@ def test_ann_index_roundtrip(spark, tmp_path):
     }
 
     # same quantizers (deterministic seeds) built in-session
-    import numpy as np
-
-    books = train_pq_codebooks(e, m=8, k=16)
-    assigned, model = build_ivf(e, n_cells=8)
-    encoded = pq_encode(e, books).join(assigned.select("vec_id", "cell"), "vec_id")
-    cents = np.asarray(model.clusterCenters())
+    fit = pq_fit_frame(e, m=8, k=16)
+    ivf_fit = ivf_fit_frame(e, n_cells=8)
+    encoded = pq_encode_lazy(e, fit, m=8).join(
+        ivf_assign_lazy(e, ivf_fit).select("vec_id", "cell"), "vec_id"
+    )
     want = {
         (r["query_id"], r["rank"]): (r["vec_id"], round(r["adc_dist"], 9))
-        for r in pq_topk_table(
-            encoded, q, books, k_neighbors=4, centroids=cents
+        for r in pq_topk_table_lazy(
+            encoded, q, fit, k_neighbors=4, ivf_fit=ivf_fit
         ).collect()
     }
     assert got == want and len(got) == 12
@@ -344,7 +351,7 @@ def test_opq_plus_ivf_probes_raw_cells(spark, tmp_path):
     """OPQ + IVF together: IVF cells are assigned on RAW vectors at
     build time, so the coarse probe must use the UN-rotated query.
 
-    Regression for the bug where pq_topk_table rotated Q before the
+    Regression for the bug where the ADC kernel rotated Q before the
     probe: a corpus vector used as its own query then probed the wrong
     cell (~1/n_cells self-recall at nprobe=1). With raw probing, a
     corpus query's nearest raw cell IS its assigned cell, so the query
@@ -372,6 +379,107 @@ def test_opq_plus_ivf_probes_raw_cells(spark, tmp_path):
         F.col("query_id") == F.col("vec_id")
     ).count()
     assert self_hits >= 15  # >= 75% self-recall@4; the bug gives ~1/8
+
+
+def test_ann_index_meta_equals_fit_frames(spark, tmp_path):
+    """build_ann_index persists exactly the quantizers the lazy fit
+    frames collect on the same corpus — one quantizer implementation
+    for the index and the sim_* queries.  meta.json keeps R itself; the
+    OPQ frame's rt column holds R's columns.  The OPQ+IVF codes are the
+    lazy encoders' output: PQ codes on the rotated vector, IVF cells on
+    the RAW vector."""
+    import json
+
+    import numpy as np
+
+    from energy_consumption_forecasting_spark.functions.vectors import (
+        as_double,
+    )
+    from energy_consumption_forecasting_spark.operators.ann import (
+        ivf_assign_lazy,
+        ivf_fit_frame,
+        opq_fit_frame,
+        opq_rotate_lazy,
+        pq_encode_lazy,
+        pq_fit_frame,
+        sq8_fit_frame,
+    )
+    from energy_consumption_forecasting_spark.sources.ann_index import (
+        build_ann_index,
+    )
+
+    e = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet").select(
+        "vec_id", as_double("embedding").alias("v")
+    )
+
+    def meta_of(name, **kw):
+        idx = str(tmp_path / name)
+        build_ann_index(e, idx, **kw)
+        with open(f"{idx}/meta.json") as f:
+            return json.load(f)
+
+    pq = meta_of("pq", n_cells=8)
+    assert pq["codebooks"] == pq_fit_frame(e, m=8, k=16).first()["books"]
+    assert pq["centroids"] == ivf_fit_frame(e, n_cells=8).first()["centroids"]
+    assert (pq["kind"], pq["m"], pq["k"], pq["opq"], pq["n_cells"]) == (
+        "pq", 8, 16, False, 8,
+    )
+
+    opq = meta_of("opq", opq=True, n_cells=8)
+    opq_fit = opq_fit_frame(e, m=8, k=16)
+    fit = opq_fit.first()
+    assert opq["codebooks"] == fit["books"]
+    assert opq["rotation"] == np.asarray(fit["rt"]).T.tolist()
+    assert opq["centroids"] == pq["centroids"]
+    ivf_fit = ivf_fit_frame(e, n_cells=8)
+    want = pq_encode_lazy(
+        opq_rotate_lazy(e, opq_fit), opq_fit.select("books"), m=8
+    ).join(ivf_assign_lazy(e, ivf_fit).select("vec_id", "cell"), "vec_id")
+
+    def as_rows(df):
+        return {r["vec_id"]: (list(r["code"]), r["cell"]) for r in df.collect()}
+
+    got = as_rows(spark.read.parquet(str(tmp_path / "opq" / "codes")))
+    assert got == as_rows(want) and len(got) == e.count()
+
+    sq8 = meta_of("sq8", kind="sq8", n_cells=None)
+    ranges = sq8_fit_frame(e).first()
+    assert sq8["mins"] == ranges["mn"] and sq8["maxs"] == ranges["mx"]
+
+
+def test_committed_opq_ivf_index_searches_same_rows(spark):
+    """A PQ+OPQ+IVF index written to disk by the previous (eager)
+    implementation still loads and searches to the same
+    (query_id, rank, vec_id) rows it answered when written.  Pins the
+    meta.json/codes layout and the rotation orientation (meta holds R,
+    applied as x·R)."""
+    import json
+    import os
+
+    from energy_consumption_forecasting_spark.functions.vectors import (
+        as_double,
+    )
+    from energy_consumption_forecasting_spark.sources.ann_index import (
+        search_ann_index,
+    )
+
+    fixtures = os.path.join(os.path.dirname(__file__), "fixtures")
+    idx = os.path.join(fixtures, "ann_index_pq_opq_ivf")
+    with open(os.path.join(fixtures, "ann_index_pq_opq_ivf_search.json")) as f:
+        want = json.load(f)
+    e = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet").select(
+        "vec_id", as_double("embedding").alias("v")
+    )
+    q = e.filter(F.col("vec_id") < 20)
+    for nprobe, rows in want["rows_by_nprobe"].items():
+        got = sorted(
+            [r["query_id"], r["rank"], r["vec_id"]]
+            for r in search_ann_index(
+                spark, idx, q, k_neighbors=want["k_neighbors"],
+                nprobe=int(nprobe),
+            ).collect()
+        )
+        assert got == rows and len(got) == 80, f"nprobe={nprobe}"
 
 
 def test_substring_dedup_exact_spans(spark, tmp_path, monkeypatch):
@@ -481,18 +589,20 @@ def test_sq8_reconstruction_error_bounded(spark):
 
     from energy_consumption_forecasting_spark.functions.vectors import as_double
     from energy_consumption_forecasting_spark.operators.ann import (
-        sq8_encode,
-        sq8_reconstruct,
-        sq8_train,
+        _sq8_reconstruct_cols,
+        sq8_encode_lazy,
+        sq8_fit_frame,
     )
 
     e = (
         spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
         .select("vec_id", as_double("embedding").alias("v"))
     )
-    mins, maxs = sq8_train(e)
-    enc = sq8_encode(e, mins, maxs)
-    rec = enc.select("vec_id", sq8_reconstruct(F.col("code"), mins, maxs).alias("rv"))
+    fit = sq8_fit_frame(e)
+    ranges = fit.first()
+    mins, maxs = ranges["mn"], ranges["mx"]
+    enc = sq8_encode_lazy(e, fit)
+    rec = enc.select("vec_id", _sq8_reconstruct_cols(F.col("code")).alias("rv"))
     joined = e.join(rec, "vec_id").collect()
     assert joined
     step = np.array(maxs) - np.array(mins)

@@ -1024,9 +1024,9 @@ def test_rev_band_balance_guarded_across_sfs(spark):
 
 
 def test_lazy_ann_fits_match_eager_trainers(spark):
-    """r10 lazy fit frames: the SQ8 range frame must equal sq8_train's
-    exact aggregates; the IVF fit's HOF cell assignment must equal a
-    numpy argmin against its own collected centroids (pins the
+    """r10 lazy fit frames: the SQ8 range frame must equal numpy's
+    exact per-dimension min/max; the IVF fit's HOF cell assignment must
+    equal a numpy argmin against its own collected centroids (pins the
     first-index tie rule and the attached-column algebra); PQ HOF
     encode must equal a numpy re-encode with the same books."""
     import numpy as np
@@ -1041,17 +1041,19 @@ def test_lazy_ann_fits_match_eager_trainers(spark):
         pq_encode_lazy,
         pq_fit_frame,
         sq8_fit_frame,
-        sq8_train,
     )
     from energy_consumption_forecasting_spark.tables import load_table
 
     e = load_table(spark, SF_SMALL, "embeddings").select(
         "vec_id", as_double("embedding").alias("v")
     )
-    # SQ8: lazy frame == eager collected ranges, element-exact
-    mins, maxs = sq8_train(e)
+    vecs = {r["vec_id"]: np.asarray(r["v"]) for r in e.collect()}
+    # SQ8: lazy frame == numpy ranges over the collected vectors,
+    # element-exact
+    X = np.stack(list(vecs.values()))
     row = sq8_fit_frame(e).first()
-    assert row["mn"] == mins and row["mx"] == maxs
+    assert row["mn"] == X.min(axis=0).tolist()
+    assert row["mx"] == X.max(axis=0).tolist()
 
     # IVF: HOF argmin assignment == numpy argmin on the same centroids
     fit = ivf_fit_frame(e, n_cells=16)
@@ -1060,7 +1062,6 @@ def test_lazy_ann_fits_match_eager_trainers(spark):
         r["vec_id"]: r["cell"]
         for r in ivf_assign_lazy(e, fit).select("vec_id", "cell").collect()
     }
-    vecs = {r["vec_id"]: np.asarray(r["v"]) for r in e.collect()}
     for vid, v in vecs.items():
         want = int(((cents - v) ** 2).sum(axis=1).argmin())
         assert got[vid] == want, vid
