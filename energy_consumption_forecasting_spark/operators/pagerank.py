@@ -6,21 +6,27 @@ power iteration.  No GraphFrames dependency.
 
 Ranks are exact scaled int64s (``pagerank_exact``,
 ``pagerank_personalized_exact``), so any aggregation order — Spark
-partial aggregation, DuckDB single-threaded — yields identical
+partial aggregation, numpy, DuckDB single-threaded — yields identical
 integers and the cross-engine oracle can hash-compare values.
 
-Per-iteration plan: ONE join of the static deg-folded edge table with
-the rank table, then ONE aggregation on ``dst``.  ``prepare_rank_graph``
-builds the edge table once, persisted hash-partitioned on the loop's
-aggregation key, so consecutive rounds reuse its partitioning instead
-of re-shuffling the edges; ``localCheckpoint`` truncates the rank
-lineage every ``_CKPT_EVERY`` rounds.
+``prepare_rank_graph`` builds the static half once (degree table,
+counts, the deg-folded edge table ``we``) and picks one of three tiers
+from those counts and ``spark.sql.autoBroadcastJoinThreshold``:
 
-Scale: the rank table is (id, int64) — tiny relative to edges; the
-per-iteration cost is the contribution aggregation's shuffle of
-(dst, share) pairs, never the edge payload.  Past the broadcast budget
-the rank side joins by shuffled hash against the src-partitioned edge
-persist.
+* ``single_task`` — ``we`` fits the budget (24 bytes per edge): all
+  rounds run inside ONE ``mapInPandas`` task in int64 numpy over the
+  coalesced edge table.  The result is a lazy frame: building it runs
+  no job, executing it is one job.
+* ``broadcast`` — the rank table fits the budget (48 bytes per node):
+  per round, broadcast(ranks) ⋈ we → groupBy(dst).sum, with ``we``
+  persisted hash-partitioned on ``dst`` so a round has no exchange.
+* ``shuffled_hash`` — everything else: ``we`` is persisted on ``src``
+  and the rank side joins by shuffled hash against it, so only the
+  aggregation shuffles.
+
+The two Spark tiers run under ``aqe_disabled`` with a graph-sized loop
+width; ``localCheckpoint`` truncates the rank lineage every
+``_CKPT_EVERY`` rounds and once at the end.
 """
 
 from __future__ import annotations
@@ -29,6 +35,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..session import aqe_disabled, loop_shuffle_width
 
@@ -38,6 +45,10 @@ from ..session import aqe_disabled, loop_shuffle_width
 # per round was measured as pure scheduling floor at gate SF.
 _CKPT_EVERY = 5
 
+SINGLE_TASK = "single_task"
+BROADCAST = "broadcast"
+SHUFFLED_HASH = "shuffled_hash"
+
 
 @dataclass
 class PreparedRankGraph:
@@ -45,18 +56,20 @@ class PreparedRankGraph:
 
     ``we`` is the deg-folded edge table, persisted hash-partitioned on
     the iteration's aggregation key; ``deg`` the persisted (v, deg)
-    node table the setup derived it from.  The whole graph family
-    (global + personalized PageRank over the same edge set) rebuilds
-    this identical structure, so callers cache one PreparedRankGraph
-    per (session, edge source) and pass it in — the per-query cost is
-    then just the iteration loop (round-7 item 1: the bench session
-    rebuilt the same supply-graph edges for every family member)."""
+    node table the setup derived it from; ``tier`` the loop shape
+    (SINGLE_TASK, BROADCAST or SHUFFLED_HASH — module docstring).  The
+    whole graph family (global + personalized PageRank over the same
+    edge set) rebuilds this identical structure, so callers cache one
+    PreparedRankGraph per (session, edge source) and pass it in — the
+    per-query cost is then just the iteration (round-7 item 1: the
+    bench session rebuilt the same supply-graph edges for every family
+    member)."""
 
     we: DataFrame
     deg: DataFrame
     n: int
     n_edges: int
-    broadcastable: bool
+    tier: str
 
     def unpersist(self) -> None:
         self.we.unpersist()
@@ -69,10 +82,15 @@ def prepare_rank_graph(
     check_symmetry: bool = False,
 ) -> PreparedRankGraph:
     """One pass of setup for the exact PageRank tiers: degree table,
-    node/edge counts, and the deg-folded edge table persisted on the
-    loop's aggregation key (``dst`` while ranks broadcast, ``src``
-    past the broadcast budget — the sort-merge join then reuses the
-    layout and only the agg shuffles).
+    node/edge counts, the tier, and the deg-folded edge table persisted
+    on the loop's aggregation key (``dst``, or ``src`` on the
+    shuffled-hash tier — the join then reuses the layout and only the
+    agg shuffles).
+
+    The tier compares the session's broadcast budget
+    (``spark.sql.autoBroadcastJoinThreshold``, -1 = nothing fits) with
+    the counts: 24 bytes per edge for the single-task tier, 48 per node
+    for the broadcast tier.
 
     PRECONDITION: symmetric-style graph — every node has out- and
     in-degree >= 1 (true for any symmetrized edge set), the same
@@ -116,9 +134,19 @@ def prepare_rank_graph(
         if n == 0:
             raise ValueError("prepare_rank_graph: empty graph")
         n_edges = int(stats["n_edges"] or 0)
-        broadcastable = n * 48 < 64 << 20
+        budget = (
+            spark._jsparkSession.sessionState()
+            .conf()
+            .autoBroadcastJoinThreshold()
+        )
+        if n_edges * 24 < budget:
+            tier = SINGLE_TASK
+        elif n * 48 < budget:
+            tier = BROADCAST
+        else:
+            tier = SHUFFLED_HASH
         with loop_shuffle_width(spark, n_edges, rows_per_task) as iter_n:
-            part_key = "dst" if broadcastable else "src"
+            part_key = "src" if tier == SHUFFLED_HASH else "dst"
             we = (
                 e.join(deg.withColumnRenamed("v", "src"), "src")
                 .select("src", "dst", "deg")
@@ -129,7 +157,7 @@ def prepare_rank_graph(
             # stats job filled them) — a lazy we would recompute from
             # the raw source after the unpersist below
             we.count()
-        return PreparedRankGraph(we, deg, n, n_edges, broadcastable)
+        return PreparedRankGraph(we, deg, n, n_edges, tier)
     finally:
         # deg/we are materialized self-contained block sets; the edge
         # persist was only setup-local
@@ -160,11 +188,11 @@ def pagerank_exact(
       ``base = (3*scale) div (20*n)``          (damping 0.85 = 17/20)
 
     Any engine computing this recurrence — Spark partial aggregation in
-    any order, DuckDB single-threaded — produces IDENTICAL integers,
-    which is what makes a cross-engine value-hash oracle possible
-    (see queries/components.py::graph_pagerank's unrolled-CTE oracle).
-    The truncation error vs real PageRank is < n·iters ulps of
-    1/scale — invisible at scale=1e15.
+    any order, numpy, DuckDB single-threaded — produces IDENTICAL
+    integers, which is what makes a cross-engine value-hash oracle
+    possible (see queries/components.py::graph_pagerank's unrolled-CTE
+    oracle).  The truncation error vs real PageRank is < n·iters ulps
+    of 1/scale — invisible at scale=1e15.
 
     PRECONDITION (asserted): the graph is symmetric-style — every node
     has out-degree >= 1 and in-degree >= 1 (true for any symmetrized
@@ -172,24 +200,15 @@ def pagerank_exact(
     Overflow headroom: inflow <= scale, so damp_num*inflow <= 1.7e16
     << 2^63.
 
-    Scale shape (r4 rework — one shuffle layout reused by ALL rounds):
-    the deg-folded edge table persists hash-partitioned on the
-    iteration's AGGREGATION key — ``dst`` while the rank table is
-    broadcast-sized (the per-round plan is then broadcast-join →
-    partial agg → final agg with NO exchange at all), ``src`` once
-    ranks outgrow the broadcast budget (the sort-merge join then reuses
-    the persisted layout and only the agg shuffles).  Node metadata
-    (n, dangling, no-inflow, edge count) comes from ONE pass over the
-    edge table; ``localCheckpoint`` truncates the growing lineage each
-    round.
+    The loop runs on the tier ``prepare_rank_graph`` picked (module
+    docstring): one numpy task below the broadcast budget, else
+    per-round Spark joins against the persisted edge table.
 
     ``graph=`` (a :class:`PreparedRankGraph`, implies the symmetrized
     contract) skips the whole setup: the caller owns the persisted
     frames and their lifetime — the shared-edge-frame path the graph
-    family's queries use.  The loop itself runs under ``aqe_disabled``
-    (every round's plan is pinned already; adaptive re-planning was
-    measured as ~2x the loop's wall-clock at gate SF) and ends with an
-    eager checkpoint so ALL rounds execute inside the pinned confs."""
+    family's queries use.  With ``edges=`` the result is materialized
+    before the setup's persisted frames are released."""
     if graph is not None:
         return _power_iterate(
             graph, iters, scale, damp_num, damp_den, seed_pred=None, n_seeds=0
@@ -203,15 +222,25 @@ def pagerank_exact(
     # single stats collect — is provably redundant there and skipped
     # (wrong use shows up as rank mass leaking, which the sanity
     # tests pin).
-    e = edges.persist()
-    try:
-        g = prepare_rank_graph(e, check_symmetry=not symmetrized)
-    finally:
-        e.unpersist()
-    try:
-        return _power_iterate(
+    return _standalone(
+        edges,
+        not symmetrized,
+        lambda g: _power_iterate(
             g, iters, scale, damp_num, damp_den, seed_pred=None, n_seeds=0
-        )
+        ),
+    )
+
+
+def _standalone(edges: DataFrame, check_symmetry: bool, run) -> DataFrame:
+    """``run`` over a graph prepared for this one call.  The single-task
+    tier's lazy result is checkpointed before the setup frames are
+    unpersisted (the Spark tiers end in an eager checkpoint already)."""
+    g = prepare_rank_graph(edges, check_symmetry=check_symmetry)
+    try:
+        ranks = run(g)
+        if g.tier == SINGLE_TASK:
+            ranks = ranks.localCheckpoint(eager=True)
+        return ranks
     finally:
         g.unpersist()
 
@@ -225,22 +254,26 @@ def _power_iterate(
     seed_pred,
     n_seeds: int,
 ) -> DataFrame:
-    """The shared fixed-iteration loop of both exact tiers — global
+    """The shared fixed-iteration loop of both exact variants — global
     (``seed_pred is None``: uniform init + uniform teleport) and
     personalized (seed-restricted init + teleport).
 
-    Per round: broadcast(ranks) ⋈ we → groupBy(dst).sum — with ``we``
-    persisted partitioned on ``dst`` the whole round is exchange-free
-    while ranks fit the broadcast budget; past it the sort-merge join
-    reuses the src layout and only the agg shuffles.  Runs under
-    ``aqe_disabled`` + the graph-sized loop width (the round plans are
-    pinned; AQE re-planning per round was measured as ~2x the loop at
-    gate SF) and ends with an EAGER checkpoint so every round executes
-    inside those confs — without it the tail of the lazy chain would
-    run under the session's AQE at the caller's action time.
-    Checkpoint cadence _CKPT_EVERY (round-6 item 2): rank lineage is
-    linear, short lazy chains are safe, 10 chained barriers were pure
-    scheduling overhead."""
+    Single-task tier: :func:`_single_task_iterate`, lazy.  Spark tiers,
+    per round: broadcast(ranks) ⋈ we → groupBy(dst).sum — with ``we``
+    persisted partitioned on ``dst`` the whole round is exchange-free;
+    on the shuffled-hash tier the join reuses the src layout and only
+    the agg shuffles.  Runs under ``aqe_disabled`` + the graph-sized
+    loop width (the round plans are pinned; AQE re-planning per round
+    was measured as ~2x the loop at gate SF) and ends with an EAGER
+    checkpoint so every round executes inside those confs — without it
+    the tail of the lazy chain would run under the session's AQE at
+    the caller's action time.  Checkpoint cadence _CKPT_EVERY (round-6
+    item 2): rank lineage is linear, short lazy chains are safe, 10
+    chained barriers were pure scheduling overhead."""
+    if graph.tier == SINGLE_TASK:
+        return _single_task_iterate(
+            graph, iters, scale, damp_num, damp_den, seed_pred, n_seeds
+        )
     spark = graph.we.sparkSession
     n = graph.n
     if seed_pred is None:
@@ -261,7 +294,7 @@ def _power_iterate(
         ranks = graph.deg.select("v", init.cast("long").alias("r"))
         for it in range(iters):
             rank_side = ranks.withColumnRenamed("v", "src")
-            if graph.broadcastable:
+            if graph.tier == BROADCAST:
                 rank_side = F.broadcast(rank_side)
             else:
                 # Past the broadcast budget the planner defaults to a
@@ -292,6 +325,79 @@ def _power_iterate(
     return ranks.select("v", F.col("r").alias("rank_scaled"))
 
 
+def _single_task_iterate(
+    graph: PreparedRankGraph,
+    iters: int,
+    scale: int,
+    damp_num: int,
+    damp_den: int,
+    seed_pred,
+    n_seeds: int,
+) -> DataFrame:
+    """All ``iters`` rounds of the Spark tiers' recurrence in ONE
+    mapInPandas task over the coalesced edge table, in int64 numpy.
+
+    Every operand is a non-negative int64, so numpy's ``//`` equals
+    Spark's ``div`` and the sums are exact: the ranks are bit-identical
+    to the Spark tiers'.  The inflow is a segmented ``np.add.reduceat``
+    over the dst-sorted edges.  ``live`` replays the Spark tiers' node
+    set — the src nodes before round 1, after it the dst of edges
+    whose src was live — which only matters off the symmetric
+    contract.  Seed flags come from ``seed_pred`` over both endpoint
+    columns, since an id may appear on one side only."""
+    n_s = graph.n if seed_pred is None else n_seeds
+    base_seed = (damp_den - damp_num) * scale // (damp_den * n_s)
+    init_seed = scale // n_s
+    cols = [F.col("src"), F.col("dst"), F.col("deg")]
+    if seed_pred is not None:
+        cols += [
+            F.coalesce(seed_pred(F.col(c)), F.lit(False)).alias(f"seed_{c}")
+            for c in ("src", "dst")
+        ]
+
+    def kernel(batches):
+        import numpy as np
+        import pandas as pd
+
+        pdf = pd.concat(list(batches), ignore_index=True)
+        m = len(pdf)
+        ids, idx = np.unique(
+            np.concatenate([pdf["src"].to_numpy(), pdf["dst"].to_numpy()]),
+            return_inverse=True,
+        )
+        order = np.argsort(idx[m:], kind="stable")
+        src, dst = idx[:m][order], idx[m:][order]
+        deg = pdf["deg"].to_numpy(np.int64)[order]
+        starts = np.flatnonzero(np.diff(dst, prepend=-1))
+        tgt = dst[starts]
+        seed = np.ones(len(ids), dtype=bool)
+        if seed_pred is not None:
+            seed[src] = pdf["seed_src"].to_numpy(bool)[order]
+            seed[dst] = pdf["seed_dst"].to_numpy(bool)[order]
+        base = np.where(seed, base_seed, 0).astype(np.int64)
+        live = np.zeros(len(ids), dtype=bool)
+        live[src] = True
+        r = np.where(live & seed, init_seed, 0).astype(np.int64)
+        for _ in range(iters):
+            inflow = np.add.reduceat(r[src] // deg, starts)
+            nxt = np.zeros(len(ids), dtype=bool)
+            nxt[dst[live[src]]] = True
+            live = nxt
+            r = np.zeros(len(ids), dtype=np.int64)
+            r[tgt] = base[tgt] + (damp_num * inflow) // damp_den
+            r[~live] = 0
+        keep = np.flatnonzero(live)
+        yield pd.DataFrame({"v": ids[keep], "rank_scaled": r[keep]})
+
+    schema = T.StructType(
+        [
+            T.StructField("v", graph.we.schema["dst"].dataType),
+            T.StructField("rank_scaled", T.LongType()),
+        ]
+    )
+    return graph.we.select(*cols).coalesce(1).mapInPandas(kernel, schema)
+
+
 def pagerank_personalized_exact(
     edges: DataFrame | None = None,
     seed_pred=None,
@@ -313,13 +419,11 @@ def pagerank_personalized_exact(
     'recommendation from these nodes' form of PageRank).  Every op is
     order-independent integer arithmetic → cross-engine hash-checkable
     like the global variant.  ``seed_pred`` is a Column predicate over
-    the node id column ``v``; ``n_seeds`` must be |S ∩ nodes| (the
-    caller counts it — it is also the oracle's ns).  Same loop shape
-    as pagerank_exact: edges persisted once partitioned on the
-    aggregation key, broadcast rank side, localCheckpoint per round.
-    Requires a symmetrized edge set (no dangling mass).  ``graph=``
-    shares a caller-owned :class:`PreparedRankGraph` exactly as in
-    :func:`pagerank_exact`."""
+    a node id column; ``n_seeds`` must be |S ∩ nodes| (the caller
+    counts it — it is also the oracle's ns).  Same tiers and loop as
+    pagerank_exact.  Requires a symmetrized edge set (no dangling
+    mass).  ``graph=`` shares a caller-owned :class:`PreparedRankGraph`
+    exactly as in :func:`pagerank_exact`."""
     if n_seeds <= 0:
         raise ValueError("personalized pagerank needs a non-empty seed set")
     if graph is not None:
@@ -328,14 +432,10 @@ def pagerank_personalized_exact(
         )
     if edges is None:
         raise ValueError("pagerank_personalized_exact: pass edges= or graph=")
-    e = edges.persist()
-    try:
-        g = prepare_rank_graph(e)
-    finally:
-        e.unpersist()
-    try:
-        return _power_iterate(
+    return _standalone(
+        edges,
+        False,
+        lambda g: _power_iterate(
             g, iters, scale, damp_num, damp_den, seed_pred, n_seeds
-        )
-    finally:
-        g.unpersist()
+        ),
+    )

@@ -324,11 +324,11 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     node classes).
 
     Hash-checked cross-engine since round 4: runs the EXACT scaled-
-    integer tier (operators/pagerank.py::pagerank_exact — int64 floor-
-    division recurrence, order-independent), against a 10-iteration
-    unrolled-CTE DuckDB oracle computing the same integers.  The float
-    operator keeps its driver-side reference test in
-    tests/test_pagerank.py.
+    integer recurrence (operators/pagerank.py::pagerank_exact — int64
+    floor-division, order-independent), against a 10-iteration
+    unrolled-CTE DuckDB oracle computing the same integers.  Below the
+    broadcast budget the whole iteration is one numpy task, so once
+    the shared graph is cached, construction runs no job.
 
     Static setup (integer node ids, symmetrized edges, deg-folded edge
     table — see _supply_edges) comes from the session-shared
@@ -745,15 +745,18 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     half (deg-folded edge table + node stats) comes from the
     session-shared _supply_rank_graph cache it shares with
     graph_pagerank; the seed count is a fast filter over the cached
-    (node-sized) degree table."""
+    (node-sized) degree table, one job with AQE off (AQE submits the
+    count's shuffle stage as a job of its own)."""
     from ..operators.pagerank import pagerank_personalized_exact
+    from ..session import aqe_disabled
 
     g = _supply_rank_graph(spark, sf_dir)
 
     def seed_pred(v):
         return (v % 2 == 1) & (v < 2 * _PPR_SEED_MAX)
 
-    n_seeds = g.deg.filter(seed_pred(F.col("v"))).count()
+    with aqe_disabled(spark):
+        n_seeds = g.deg.filter(seed_pred(F.col("v"))).count()
     ranks = pagerank_personalized_exact(
         seed_pred=seed_pred, n_seeds=n_seeds, graph=g
     )

@@ -40,9 +40,13 @@ SF = "/root/testdata/sf0.001"
 # FIT      — model training or a hash-pinned evaluation gate: the fit
 #            loop (GBT rounds, EM steps, k-means iterations, BO trials,
 #            index builds) must execute to produce the result frame.
-# ITER     — iterative convergence on data (pagerank, label propagation,
-#            k-core, connected components): per-round localCheckpoint
-#            lineage truncation executes rounds at construction.
+# ITER     — iterative convergence on data (label propagation, k-core,
+#            connected components): per-round localCheckpoint lineage
+#            truncation executes rounds at construction.
+# SETUP    — the first construction in a session builds a session-shared
+#            persisted structure (queries/_util.shared_frame) and runs
+#            its stats and materialization jobs; later constructions
+#            reuse it.
 # RANK     — two-pass distributed rank / prefix sum: the documented
 #            trade of one counting job for never single-partitioning an
 #            unbounded window (operators/ranking.py module docstring).
@@ -162,9 +166,15 @@ EXEMPT: dict[str, str] = {
     # sim_mmr_rerank: un-exempted r8 — candidate pool + pair sims are
     # shared_persist'd session frames (registration is job-free; the
     # explicit-hint broadcast fires at first action, not at .rdd).
+    # --- first-call shared-graph build ------------------------------------
+    # The iteration itself is lazy below the broadcast budget (one numpy
+    # task, operators/pagerank.py), so only the shared PreparedRankGraph
+    # build runs jobs — plus, for the personalized variant, its seed
+    # count().  test_graph_pagerank_steady_construction_launches_no_jobs
+    # pins the steady state.
+    "graph_pagerank": "SETUP",
+    "graph_personalized_pagerank": "SETUP",
     # --- iterative convergence on data ------------------------------------
-    "graph_pagerank": "ITER",
-    "graph_personalized_pagerank": "ITER",
     "graph_modularity": "ITER",
     "dedup_connected_components": "ITER",
     # dedup_lsh_quality(_hi): un-exempted r9 — the three TP/FN/FP
@@ -225,6 +235,19 @@ def test_non_exempt_constructions_launch_zero_jobs(spark):
         "query construction launched Spark jobs (add an in-plan lazy "
         f"construct, or exempt with a category): {offenders}"
     )
+
+
+def test_graph_pagerank_steady_construction_launches_no_jobs(spark):
+    """Once the session-shared rank graph is cached, building
+    graph_pagerank is pure: the power iteration is one lazy numpy task
+    below the broadcast budget (sf0.001 is far below it), not per-round
+    broadcast jobs and checkpoints."""
+    qs, _ = load_all()
+    qs["graph_pagerank"](spark, SF)  # fills the shared graph cache
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.numTotalJobs()
+    qs["graph_pagerank"](spark, SF)
+    assert dag.numTotalJobs() == before
 
 
 def test_table_scan_construction_is_pure(spark):
