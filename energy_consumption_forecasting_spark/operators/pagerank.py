@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..session import aqe_disabled, loop_shuffle_width
+from ..session import aqe_disabled, broadcast_budget, loop_shuffle_width
 
 # Lineage-truncation cadence for the fixed-iteration loops: one eager
 # localCheckpoint per _CKPT_EVERY rounds.  Rank lineage is linear (one
@@ -134,11 +134,7 @@ def prepare_rank_graph(
         if n == 0:
             raise ValueError("prepare_rank_graph: empty graph")
         n_edges = int(stats["n_edges"] or 0)
-        budget = (
-            spark._jsparkSession.sessionState()
-            .conf()
-            .autoBroadcastJoinThreshold()
-        )
+        budget = broadcast_budget(spark)
         if n_edges * 24 < budget:
             tier = SINGLE_TASK
         elif n * 48 < budget:

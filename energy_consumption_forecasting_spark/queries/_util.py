@@ -7,7 +7,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from ..session import ensure_utc
-from ..tables import load_table, scan_is_narrow
+from ..tables import load_table, scan_is_narrow, table_path
 
 # Gate fixtures are staged under ``.stage`` at the repository root, next
 # to the package directory.
@@ -44,7 +44,7 @@ def tbl(
     if spread is None:
         return df
     target = spark.sparkContext.defaultParallelism
-    if not scan_is_narrow(f"{sf_dir.rstrip('/')}/{name}.parquet", target):
+    if not scan_is_narrow(table_path(sf_dir, name), target):
         return df
     keys = [spread] if isinstance(spread, (str, Column)) else spread
     return df.repartition(target, *keys)

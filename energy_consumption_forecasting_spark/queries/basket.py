@@ -20,6 +20,15 @@ identically — no accumulation-order sensitivity anywhere.
   drop pairs that could never qualify.
 * Rule scoring joins the pair table to the item-count table twice;
   both sides of those joins are item-dimension-sized → broadcast.
+* Below the session's broadcast budget the whole pair count runs as
+  ONE int64 numpy task instead (``pair_counts_from_lines``): when the
+  line table's footer row count times 16 bytes (one (order, part)
+  int64 pair) is under ``spark.sql.autoBroadcastJoinThreshold``, the
+  five-job Spark plan above is pure scheduling and shuffle overhead
+  for a table that fits one task.  The rule is read from the parquet
+  footers and the session conf while the plan is built, so it runs no
+  job; at 100 TB the table is far past any budget and the Spark plan
+  is the one that runs.
 """
 
 from __future__ import annotations
@@ -27,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import broadcast_budget
+from ..tables import footer_row_count, table_path
 from . import query
 from ._util import tbl
 
@@ -35,6 +46,10 @@ _MINSUP = 2  # pair must co-occur in >= 2 baskets
 # pair-key packing bound (r11): two non-negative int keys < 2^31 pack
 # exactly into one int64 as p1*2^31 + p2 (see pair_counts_from_lines)
 _PACK_LIM = 1 << 31
+_PACK_ERROR = "basket pair key < 0 or >= 2^31: widen the pair packing"
+
+# bytes one line takes in the single-task tier: an (order, part) int64 pair
+_LINE_BYTES = 16
 
 _ITEMS_SQL = """
 items AS (
@@ -79,16 +94,144 @@ def _item_counts(lines: DataFrame) -> DataFrame:
     )
 
 
-def pair_counts_from_lines(
-    lines: DataFrame, item_counts: DataFrame | None = None
+def single_task_fits(n_lines: int | None, budget: int) -> bool:
+    """The tier rule of :func:`pair_counts_from_lines`: one numpy task
+    when the line table's (order, part) int64 pairs fit the broadcast
+    budget.  An unknown line count, or a budget of -1, never fits."""
+    return n_lines is not None and n_lines * _LINE_BYTES < budget
+
+
+def _keep_frequent(orders, parts):
+    """The a-priori prune in numpy: keep the lines whose item occurs on
+    at least _MINSUP of the given lines."""
+    import numpy as np
+
+    _, inv, cnt = np.unique(parts, return_inverse=True, return_counts=True)
+    keep = cnt[inv] >= _MINSUP
+    return orders[keep], parts[keep]
+
+
+def _merge_counts(runs):
+    """Sum (distinct keys, counts) runs into one run of distinct keys."""
+    import numpy as np
+
+    runs = [r for r in runs if len(r[0])]
+    if len(runs) < 2:
+        empty = (np.empty(0, np.int64), np.empty(0, np.int64))
+        return runs[0] if runs else empty
+    keys = np.concatenate([k for k, _ in runs])
+    counts = np.concatenate([c for _, c in runs])
+    order = np.argsort(keys)
+    keys, counts = keys[order], counts[order]
+    first = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
+    return keys[first], np.add.reduceat(counts, first)
+
+
+def count_pairs_np(orders, parts, line_prune: bool, chunk: int):
+    """Exact frequent-pair counts of non-null int64 (order, part) lines
+    in numpy — the single-task tier's kernel; returns (p1, p2, n)
+    arrays with p1 < p2 and n >= _MINSUP.
+
+    Forms exactly the pairs the Spark tier forms: the same a-priori
+    prune (raw line counts under ``line_prune``, distinct baskets
+    otherwise), then (order, part) deduped as ``collect_set`` does,
+    lexsorted, and each element paired as p2 with the earlier elements
+    of its basket as p1.  Pairs are enumerated by one flat index, in
+    chunks of at most ``chunk`` pairs, so a basket larger than a chunk
+    is split by element ranges; each chunk is packed as
+    p1 * 2^31 + p2 (raising the Spark tier's message on an id out of
+    range) and counted, and the chunk counts merge whenever the
+    unmerged runs outgrow the merged one.  Memory is bounded by the
+    distinct pairs plus a few chunks, never by all C(k,2) at once."""
+    import numpy as np
+
+    if line_prune:
+        orders, parts = _keep_frequent(orders, parts)
+    order = np.lexsort((parts, orders))
+    orders, parts = orders[order], parts[order]
+    new = np.ones(len(orders), dtype=bool)
+    new[1:] = (orders[1:] != orders[:-1]) | (parts[1:] != parts[:-1])
+    orders, parts = orders[new], parts[new]
+    if not line_prune:
+        orders, parts = _keep_frequent(orders, parts)
+    pos = np.arange(len(orders))
+    first = np.ones(len(orders), dtype=bool)
+    first[1:] = orders[1:] != orders[:-1]
+    # rank in the basket = the number of pairs the element closes as p2;
+    # pairs end[j] - rank[j] .. end[j] - 1 belong to element j
+    rank = pos - np.maximum.accumulate(np.where(first, pos, 0))
+    end = np.cumsum(rank)
+    total = int(end[-1]) if len(end) else 0
+    merged = _merge_counts([])
+    pending: list = []
+    for lo in range(0, total, chunk):
+        q = np.arange(lo, min(lo + chunk, total), dtype=np.int64)
+        j = np.searchsorted(end, q, side="right")
+        p1, p2 = parts[j + q - end[j]], parts[j]
+        if p1.min() < 0 or p2.max() >= _PACK_LIM:
+            raise ValueError(_PACK_ERROR)
+        pending.append(np.unique(p1 * _PACK_LIM + p2, return_counts=True))
+        if sum(len(k) for k, _ in pending) > max(chunk, len(merged[0])):
+            merged, pending = _merge_counts([merged, *pending]), []
+    keys, n = _merge_counts([merged, *pending])
+    keep = n >= _MINSUP
+    keys, n = keys[keep], n[keep]
+    return keys // _PACK_LIM, keys % _PACK_LIM, n
+
+
+def _single_task_pair_counts(
+    lines: DataFrame, line_prune: bool, budget: int
 ) -> DataFrame:
-    """One shuffle, not a self-join: baskets collapse to a sorted item
-    array (groupBy on the basket key — the distinct is folded into the
-    same shuffle via collect_set), pairs explode ROW-LOCALLY from the
-    array (C(k,2) with k <= basket size), then one hash agg counts
-    them.  The a-priori prune (items in >= _MINSUP baskets — lossless
-    for pair support >= _MINSUP) drops infrequent items before the
-    basket collapse so the array stays minimal.
+    """:func:`count_pairs_np` over the whole line table in ONE
+    mapInPandas task, chunked at ``budget`` bytes of packed keys.
+    Building it runs no job; executing it is one job."""
+    chunk = max(1, budget // 8)
+
+    def kernel(batches):
+        import numpy as np
+        import pandas as pd
+
+        cols = ("l_orderkey", "l_partkey")
+        empty = pd.DataFrame({c: np.empty(0, np.int64) for c in cols})
+        pdf = pd.concat([empty, *batches], ignore_index=True)
+        p1, p2, n = count_pairs_np(
+            *(pdf[c].to_numpy(np.int64) for c in cols), line_prune, chunk
+        )
+        yield pd.DataFrame({"p1": p1, "p2": p2, "n": n})
+
+    return lines.coalesce(1).mapInPandas(kernel, "p1 long, p2 long, n long")
+
+
+def pair_counts_from_lines(
+    lines: DataFrame,
+    item_counts: DataFrame | None = None,
+    n_lines: int | None = None,
+) -> DataFrame:
+    """Frequent item pairs (p1 < p2, support n >= _MINSUP) of the
+    (l_orderkey, l_partkey) lines, with lines whose order or part is
+    null dropped first (the oracle's equi-join never pairs them).
+
+    Two tiers, chosen once while the plan is built
+    (:func:`single_task_fits`): when ``n_lines`` — the exact row count
+    of ``lines``, read from the parquet footers by the queries — times
+    16 bytes is under the session's broadcast budget
+    (``session.broadcast_budget``, -1 = nothing fits), one numpy task
+    counts every pair (:func:`count_pairs_np`); otherwise, and whenever
+    ``n_lines`` is None (a frame of unknown size), the Spark plan below
+    runs.  Counts are exact integers, so the tiers give identical rows;
+    both form the same pairs, so both fail fast on the same ids.
+
+    ``item_counts``, when given, must be the per-item distinct-basket
+    counts of ``lines`` (``_item_counts``); it replaces the raw line
+    count in the prune, and the single-task tier recomputes it in numpy.
+
+    Spark tier — one shuffle, not a self-join: baskets collapse to a
+    sorted item array (groupBy on the basket key — the distinct is
+    folded into the same shuffle via collect_set), pairs explode
+    ROW-LOCALLY from the array (C(k,2) with k <= basket size), then one
+    hash agg counts them.  The a-priori prune (items in >= _MINSUP
+    baskets — lossless for pair support >= _MINSUP) drops infrequent
+    items before the basket collapse so the array stays minimal.
 
     MEGA-BASKET GUARD (round-4 VERDICT item 5, r10 redesign): a single
     pathological basket with 10⁴+ frequent items would materialize
@@ -114,6 +257,13 @@ def pair_counts_from_lines(
     ``n >= {minsup}`` support filter), and the two-phase distinct
     aggregation (measured ~30 s of executor time at sf1, an extra
     30 MB exchange) collapses to one partially-aggregated pass."""
+    lines = lines.select("l_orderkey", "l_partkey").where(
+        F.col("l_orderkey").isNotNull() & F.col("l_partkey").isNotNull()
+    )
+    if n_lines is not None:
+        budget = broadcast_budget(lines.sparkSession)
+        if single_task_fits(n_lines, budget):
+            return _single_task_pair_counts(lines, item_counts is None, budget)
     if item_counts is None:
         item_counts = lines.groupBy("l_partkey").agg(
             F.count("*").alias("n_item")
@@ -151,11 +301,7 @@ def pair_counts_from_lines(
             (F.col("p1") >= 0) & (F.col("p2") < F.lit(_PACK_LIM)),
             F.col("p1") * F.lit(_PACK_LIM) + F.col("p2"),
         )
-        .otherwise(
-            F.raise_error(
-                F.lit("basket pair key < 0 or >= 2^31: widen the pair packing")
-            ).cast("long")
-        )
+        .otherwise(F.raise_error(F.lit(_PACK_ERROR)).cast("long"))
         .alias("pk")
     )
     return (
@@ -174,7 +320,11 @@ def _pair_counts(
     spark: SparkSession, sf_dir: str, item_counts: DataFrame | None = None
 ) -> DataFrame:
     lines = tbl(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    return pair_counts_from_lines(lines, item_counts=item_counts)
+    return pair_counts_from_lines(
+        lines,
+        item_counts=item_counts,
+        n_lines=footer_row_count(table_path(sf_dir, "lineitem")),
+    )
 
 
 @query(
@@ -188,9 +338,9 @@ def _pair_counts(
 )
 def a_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequent item pairs: parts co-occurring in >= 2 orders.  One
-    basket-key groupBy + row-local pair explode + one hash agg; the
-    a-priori item prune keeps the candidate set sub-quadratic (module
-    docstring)."""
+    numpy task below the broadcast budget, else one basket-key groupBy
+    + row-local pair explode + one hash agg; the a-priori item prune
+    keeps the candidate set sub-quadratic (module docstring)."""
     return _pair_counts(spark, sf_dir).select(
         F.col("p1").cast("long"),
         F.col("p2").cast("long"),
@@ -399,7 +549,11 @@ def a_basket_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     prune, one hash agg counts them.  Still exactly one shuffle of the
     line table; the oracle's 3-way self-join is the shape this plan
     deliberately avoids."""
-    lines = tbl(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    lines = (
+        tbl(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_partkey")
+        .where(F.col("l_orderkey").isNotNull() & F.col("l_partkey").isNotNull())
+    )
     # r10: superset prune on plain count(*) — a raw line count is >=
     # the distinct-basket count, so the kept-item set is a SUPERSET of
     # the exact prune's and spuriously kept items' triples still die

@@ -84,6 +84,14 @@ def ensure_utc(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def broadcast_budget(spark: SparkSession) -> int:
+    """The session's ``spark.sql.autoBroadcastJoinThreshold`` in bytes,
+    as the planner reads it (size suffixes resolved); -1 means nothing
+    fits.  Operators compare it with a frame's exact size to choose a
+    single-task tier while the plan is built, without running a job."""
+    return spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+
+
 @contextmanager
 def loop_shuffle_width(
     spark: SparkSession, n_rows: int, rows_per_task: int, floor: int = 4

@@ -148,24 +148,20 @@ def load_events(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-def scan_is_narrow(path: str, target: int) -> bool:
-    """Whether a parquet scan of ``path`` runs on fewer than ``target``
-    tasks, read from the footers alone.
+def _part_footers(path: str):
+    """The footer probe behind ``scan_is_narrow`` and
+    ``footer_row_count``: a lazy iterator over the parquet footer
+    metadata of each part file of ``path``, read on the driver, or
+    None when the path cannot be probed.
 
-    Spark splits a parquet file by byte range, but every row group is
-    read by the one split that holds its midpoint, so the row-group
-    count bounds the scan's useful parallelism whatever the split
-    size.  The answer is True only for a local path (no scheme, or
-    ``file:``) whose part files list flat and hold fewer than
-    ``target`` row groups in total; footer reads stop once the count
-    reaches ``target``.  Remote schemes, nested or Hive-partitioned
-    directories and wide files all answer False, and callers then
-    leave the scan as Spark splits it."""
+    Only a local path (no scheme, or ``file:``) whose part files list
+    flat is probed.  Remote schemes, nested or Hive-partitioned
+    directories and missing paths give None."""
     import pyarrow.parquet as pq
 
     url = urlparse(path)
     if url.scheme not in ("", "file"):
-        return False
+        return None
     local = url.path if url.scheme else path
     if os.path.isdir(local):
         entries = [
@@ -174,23 +170,56 @@ def scan_is_narrow(path: str, target: int) -> bool:
             if not e.startswith(("_", "."))
         ]
         if not entries or any(os.path.isdir(e) for e in entries):
-            return False
+            return None
     elif os.path.isfile(local):
         entries = [local]
     else:
+        return None
+    return (pq.read_metadata(f) for f in entries)
+
+
+def scan_is_narrow(path: str, target: int) -> bool:
+    """Whether a parquet scan of ``path`` runs on fewer than ``target``
+    tasks, read from the footers alone.
+
+    Spark splits a parquet file by byte range, but every row group is
+    read by the one split that holds its midpoint, so the row-group
+    count bounds the scan's useful parallelism whatever the split
+    size.  The answer is True only for a path ``_part_footers`` can
+    probe whose part files hold fewer than ``target`` row groups in
+    total; footer reads stop once the count reaches ``target``.
+    Unprobeable paths and wide files answer False, and callers then
+    leave the scan as Spark splits it."""
+    footers = _part_footers(path)
+    if footers is None:
         return False
     groups = 0
-    for f in entries:
-        groups += pq.read_metadata(f).num_row_groups
+    for meta in footers:
+        groups += meta.num_row_groups
         if groups >= target:
             return False
     return True
 
 
+def footer_row_count(path: str) -> int | None:
+    """Exact row count of a parquet table, summed from the footers of
+    its part files on the driver (no job); None when ``_part_footers``
+    cannot probe the path."""
+    footers = _part_footers(path)
+    if footers is None:
+        return None
+    return sum(meta.num_rows for meta in footers)
+
+
+def table_path(sf_dir: str, name: str) -> str:
+    """Parquet path of testdata table ``name`` under ``sf_dir``."""
+    return f"{sf_dir.rstrip('/')}/{name}.parquet"
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
+    path = table_path(sf_dir, name)
     if name == "events":
         return load_events(spark, path)
     return _read_parquet(spark, path, _footer_spark_schema(path))

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -16,6 +17,61 @@ def spark():
 
     s = get_spark("pytest", extra_conf={"spark.sql.shuffle.partitions": "8"})
     yield s
+
+
+@contextmanager
+def pinned_conf(spark, key: str, value: str):
+    """Run the block with session conf ``key`` set to ``value``,
+    restoring the session value after."""
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def pinned_budget(spark, budget: int):
+    """``pinned_conf`` for the broadcast budget, in bytes.  Tier rules
+    read the budget while the plan is built, so build the frame inside
+    the block and run it after."""
+    return pinned_conf(spark, "spark.sql.autoBroadcastJoinThreshold", str(budget))
+
+
+def lines_frame(spark, rows):
+    """(l_orderkey, l_partkey) long lines, None for null, as a local
+    relation: built from pandas through Arrow, so unlike a frame from a
+    Python list it needs no Python worker per partition to scan."""
+    import pandas as pd
+
+    if not rows:  # an empty pandas frame takes the slow path
+        return spark.range(0).selectExpr("id AS l_orderkey", "id AS l_partkey")
+    cols = ("l_orderkey", "l_partkey")
+    pdf = pd.DataFrame(
+        {c: pd.array([r[i] for r in rows], dtype="Int64") for i, c in enumerate(cols)}
+    )
+    return spark.createDataFrame(pdf, "l_orderkey long, l_partkey long")
+
+
+def pair_counts_both_tiers(spark, lines, n_lines: int, **kw):
+    """``basket.pair_counts_from_lines(lines, n_lines=n_lines, **kw)``
+    built twice: under a budget one byte inside the single-task rule,
+    then exactly at its boundary (the Spark tier).  Returns the two
+    frames in that order, after checking each took its tier."""
+    from energy_consumption_forecasting_spark.queries.basket import (
+        pair_counts_from_lines,
+    )
+
+    frames = []
+    for budget in (n_lines * 16 + 1, n_lines * 16):
+        with pinned_budget(spark, budget):
+            frames.append(pair_counts_from_lines(lines, n_lines=n_lines, **kw))
+    tiers = [
+        "MapInPandas" in df._jdf.queryExecution().analyzed().toString()
+        for df in frames
+    ]
+    assert tiers == [True, False]
+    return frames
 
 
 @pytest.fixture(scope="session")
@@ -98,6 +154,7 @@ SLOW_NODE_IDS = {
     "tests/test_pipeline_ops.py::test_substring_dedup_exact_spans",
     "tests/test_plan_contracts.py::test_calendar_bounded_window_contract_all_queries",
     "tests/test_properties.py::test_basket_pair_explode_property",
+    "tests/test_properties.py::test_basket_pair_count_tiers_property",
     "tests/test_properties.py::test_bounded_gap_fill_property",
     "tests/test_properties.py::test_bpe_merge_fold_tiers_agree",
     "tests/test_properties.py::test_bucket_rank_matches_range_rank",

@@ -250,6 +250,23 @@ def test_graph_pagerank_steady_construction_launches_no_jobs(spark):
     assert dag.numTotalJobs() == before
 
 
+def test_basket_queries_construction_launches_no_jobs(spark):
+    """The basket pair tier is chosen from the parquet footers and the
+    session conf, not from a count: building the three pair-count
+    queries runs no job on either tier (SF fits the single-task rule;
+    a budget of -1 forces the Spark tier)."""
+    from tests.conftest import pinned_budget
+
+    qs, _ = load_all()
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    for budget in (64 << 20, -1):
+        for name in ("a_basket_pairs", "a_assoc_rules", "a_item_item_cf"):
+            before = dag.numTotalJobs()
+            with pinned_budget(spark, budget):
+                qs[name](spark, SF)
+            assert dag.numTotalJobs() == before, f"{name} at budget {budget}"
+
+
 def test_table_scan_construction_is_pure(spark):
     """The root cause of round-5's universal eagerness: spark.read
     .parquet's schema-inference job.  load_table must supply the

@@ -10,17 +10,32 @@ import re
 
 import pytest
 
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, pinned_budget, pinned_conf
 
 
-def _plan(spark, name: str) -> str:
+def _plan(spark, name: str, budget: int | None = None) -> str:
+    """explain("formatted") of a query built at SF_SMALL, with the
+    broadcast budget pinned to ``budget`` bytes while it is built."""
     from energy_consumption_forecasting_spark.queries import load_all
 
     qs, _ = load_all()
+    pin = contextlib.nullcontext() if budget is None else pinned_budget(spark, budget)
+    with pin:
+        df = qs[name](spark, SF_SMALL)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        qs[name](spark, SF_SMALL).explain("formatted")
+        df.explain("formatted")
     return buf.getvalue()
+
+
+def _lineitem_bytes() -> int:
+    """The basket single-task rule's size of SF_SMALL's line table."""
+    from energy_consumption_forecasting_spark.tables import (
+        footer_row_count,
+        table_path,
+    )
+
+    return footer_row_count(table_path(SF_SMALL, "lineitem")) * 16
 
 
 # Queries whose plans must never contain a cartesian/BNL shape: the
@@ -74,15 +89,41 @@ def test_broadcast_dim_join_stays_broadcast(spark):
 
 
 def test_basket_pairs_single_shuffle_no_selfjoin(spark):
-    """a_basket_pairs must stay the array-explode shape: the only join
-    is the broadcast a-priori prune — any SortMergeJoin means the
-    basket self-join crept back (two shuffles of the line table)."""
-    plan = _plan(spark, "a_basket_pairs")
+    """a_basket_pairs' Spark tier must stay the array-explode shape: the
+    only join is the broadcast a-priori prune — any SortMergeJoin means
+    the basket self-join crept back (two shuffles of the line table).
+    SF_SMALL fits the single-task rule, so the budget is pinned at the
+    rule's boundary to build the Spark tier."""
+    plan = _plan(spark, "a_basket_pairs", budget=_lineitem_bytes())
+    assert "MapInPandas" not in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "SortMergeJoin" not in plan, "basket self-join regressed"
     assert "BroadcastHashJoin" in plan  # the a-priori prune
     assert "Generate" in plan  # the row-local pair explode
+
+
+@pytest.mark.parametrize(
+    "name", ["a_basket_pairs", "a_assoc_rules", "a_item_item_cf"]
+)
+def test_basket_pairs_single_task_shape(spark, name):
+    """Below the broadcast budget the pair count is ONE task: the
+    (l_orderkey, l_partkey) scan coalesced to one partition feeding one
+    MapInPandas, and no sort-merge join anywhere.  a_basket_pairs has no
+    join at all; the rule queries keep their item-count broadcasts and
+    a_assoc_rules its 1-row total cross join."""
+    plan = _plan(spark, name, budget=_lineitem_bytes() + 1)
+    assert plan.count("MapInPandas (") == 1
+    assert re.search(r"MapInPandas \(\d+\)\n[\s:]*\+- Coalesce \(\d+\)", plan)
+    assert re.search(
+        r"\(\d+\) Coalesce\nInput \[2\]: \[l_orderkey#\d+L, l_partkey#\d+L\]"
+        r"\nArguments: 1\n",
+        plan,
+    )
+    assert "SortMergeJoin" not in plan, "basket self-join regressed"
+    if name == "a_basket_pairs":
+        assert "Join" not in plan
+        assert "CartesianProduct" not in plan
 
 
 def test_markov_window_partitions_by_user(spark):
@@ -232,16 +273,6 @@ def _spread_widths(df) -> list[int]:
     return [int(n) for n in _SPREAD_RE.findall(buf.getvalue())]
 
 
-@contextlib.contextmanager
-def _conf(spark, key: str, value: str):
-    old = spark.conf.get(key)
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
-
-
 def _write_docs(path: str, n_rows: int, row_group_size: int, text_bytes: int = 8):
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -286,6 +317,25 @@ def test_tbl_spread_skipped_on_many_files(spark, tmp_path):
     assert _spread_widths(docs) == []
 
 
+def test_footer_row_count_sums_part_files_and_skips_unprobeable(tmp_path):
+    """The row count the basket tier rule reads comes from the same
+    footer probe as the spread: flat local part files are summed, and
+    nested, remote or missing paths give None."""
+    from energy_consumption_forecasting_spark.tables import footer_row_count
+
+    table_dir = tmp_path / "documents.parquet"
+    table_dir.mkdir()
+    (table_dir / "_SUCCESS").write_text("")
+    for i in range(3):
+        _write_docs(str(table_dir / f"part-{i:05d}.parquet"), 5 + i, 2)
+    assert footer_row_count(str(table_dir)) == 18
+    assert footer_row_count(f"file://{table_dir}") == 18
+    (table_dir / "nested").mkdir()
+    assert footer_row_count(str(table_dir)) is None
+    assert footer_row_count("s3a://bucket/sf1/lineitem.parquet") is None
+    assert footer_row_count(str(tmp_path / "missing.parquet")) is None
+
+
 def test_tbl_spread_skipped_on_remote_path_without_local_io(spark, monkeypatch):
     import os
 
@@ -320,7 +370,7 @@ def test_tbl_spread_kept_on_row_group_larger_than_split(spark, tmp_path):
 
     target = spark.sparkContext.defaultParallelism
     _write_docs(str(tmp_path / "documents.parquet"), 64, 64, text_bytes=16 << 10)
-    with _conf(spark, "spark.sql.files.maxPartitionBytes", "16k"):
+    with pinned_conf(spark, "spark.sql.files.maxPartitionBytes", "16k"):
         raw = load_table(spark, str(tmp_path), "documents")
         assert raw.rdd.getNumPartitions() >= target
         docs = tbl(spark, str(tmp_path), "documents", spread="doc_id")
@@ -330,7 +380,7 @@ def test_tbl_spread_kept_on_row_group_larger_than_split(spark, tmp_path):
 def test_tbl_loads_with_spark_size_string_conf(spark):
     from energy_consumption_forecasting_spark.queries._util import tbl
 
-    with _conf(spark, "spark.sql.files.maxPartitionBytes", "128mb"):
+    with pinned_conf(spark, "spark.sql.files.maxPartitionBytes", "128mb"):
         docs = tbl(spark, SF_SMALL, "documents", spread="doc_id")
         assert docs.count() > 0
     assert _spread_widths(docs) == [spark.sparkContext.defaultParallelism]

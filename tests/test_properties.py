@@ -577,33 +577,41 @@ def test_markov_update_seal_equals_batch(events, cut_sizes, delay):
 
 
 # --- basket pair explode vs brute-force combinations ----------------------------
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=9),   # basket id
-            st.integers(min_value=0, max_value=15),  # item
-        ),
-        min_size=0,
-        max_size=50,
-    )
+_BASKET_LINES = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=9),   # basket id
+        st.integers(min_value=0, max_value=15),  # item
+    ),
+    min_size=0,
+    max_size=50,
 )
+
+
+def _basket_pair_ref(lines):
+    """Brute-force per-basket item-pair counts, with no minsup filter; a
+    line with a null basket id or item joins no basket."""
+    from itertools import combinations
+
+    ref = {}
+    baskets = {}
+    for b, it in lines:
+        if b is not None and it is not None:
+            baskets.setdefault(b, set()).add(it)
+    for items in baskets.values():
+        for p1, p2 in combinations(sorted(items), 2):
+            ref[(p1, p2)] = ref.get((p1, p2), 0) + 1
+    return ref
+
+
+@given(_BASKET_LINES)
 @SET
 def test_basket_pair_explode_property(spark, lines):
     """The row-local array pair explode in queries/basket.py must equal
     brute-force per-basket combinations (incl. duplicate lines, empty
     and singleton baskets) with NO minsup filtering applied."""
-    from itertools import combinations
-
     import pyspark.sql.functions as F
 
-    ref = {}
-    baskets = {}
-    for b, it in lines:
-        baskets.setdefault(b, set()).add(it)
-    for items in baskets.values():
-        for p1, p2 in combinations(sorted(items), 2):
-            ref[(p1, p2)] = ref.get((p1, p2), 0) + 1
-
+    ref = _basket_pair_ref(lines)
     df = spark.createDataFrame(
         lines or [(0, 0)], "l_orderkey long, l_partkey long"
     )
@@ -621,6 +629,48 @@ def test_basket_pair_explode_property(spark, lines):
         .collect()
     }
     assert got == ref
+
+
+@given(_BASKET_LINES, st.booleans(), st.integers(min_value=1, max_value=8))
+@settings(max_examples=200, deadline=None)
+def test_count_pairs_np_property(lines, line_prune, chunk):
+    """The single-task tier's numpy kernel, counting in chunks of 1-8
+    pairs (so baskets split across chunks), equals the brute-force
+    reference with the minsup filter, under either a-priori prune."""
+    import numpy as np
+
+    from energy_consumption_forecasting_spark.queries.basket import (
+        _MINSUP,
+        count_pairs_np,
+    )
+
+    want = {k: n for k, n in _basket_pair_ref(lines).items() if n >= _MINSUP}
+    orders = np.array([b for b, _ in lines], dtype=np.int64)
+    parts = np.array([it for _, it in lines], dtype=np.int64)
+    p1, p2, n = count_pairs_np(orders, parts, line_prune, chunk)
+    assert dict(zip(zip(p1.tolist(), p2.tolist()), n.tolist())) == want
+
+
+def _sometimes_null(hi):
+    return st.integers(min_value=-1, max_value=hi).map(lambda v: None if v < 0 else v)
+
+
+@given(
+    st.lists(
+        st.tuples(_sometimes_null(9), _sometimes_null(15)), min_size=0, max_size=50
+    )
+)
+@SET
+def test_basket_pair_count_tiers_property(spark, lines):
+    """pair_counts_from_lines on both tiers (budget pinned one byte
+    inside and at the single-task rule) equals the brute-force
+    reference with the minsup filter, null keys included."""
+    from energy_consumption_forecasting_spark.queries.basket import _MINSUP
+    from tests.conftest import lines_frame, pair_counts_both_tiers
+
+    want = {k: n for k, n in _basket_pair_ref(lines).items() if n >= _MINSUP}
+    for out in pair_counts_both_tiers(spark, lines_frame(spark, lines), len(lines)):
+        assert {(r["p1"], r["p2"]): r["n"] for r in out.collect()} == want
 
 
 # --- gaps-and-islands ops vs pure-python references ------------------------------

@@ -364,41 +364,36 @@ def test_mega_basket_pairs_lossless_and_bounded(spark):
     (C(k,2) ≈ 2M pairs) must stream through the pipelined pair
     expansion in bounded time with counts identical to the dense
     formula, and a 100-item basket must produce exactly the dense pair
-    set — no size threshold, one plan for every basket shape."""
+    set — no size threshold, one plan for every basket shape.  Both
+    tiers run each case; the single-task tier's budget (one byte inside
+    its rule) is 8,000 packed pairs, so it counts the 4M pairs in 500
+    chunks, splitting each basket by element ranges."""
     import time
 
     from pyspark.sql import functions as F
 
-    from energy_consumption_forecasting_spark.queries.basket import (
-        pair_counts_from_lines,
-    )
+    from tests.conftest import lines_frame, pair_counts_both_tiers
 
     # two identical mega-baskets (pair support 2 satisfies minsup;
     # every item appears in 2 baskets so the a-priori prune keeps all)
     k = 2000
-    lines = spark.createDataFrame(
-        [(b, i) for b in (1, 2) for i in range(k)],
-        "l_orderkey long, l_partkey long",
-    )
-    t0 = time.time()
-    out = pair_counts_from_lines(lines)
-    n_pairs = out.count()
-    assert n_pairs == k * (k - 1) // 2
-    assert time.time() - t0 < 120
-    sample = out.filter((F.col("p1") == 0) & (F.col("p2").isin(1, 63, 64, 1999))).collect()
-    assert {r["n"] for r in sample} == {2} and len(sample) == 4
+    lines = lines_frame(spark, [(b, i) for b in (1, 2) for i in range(k)])
+    for out in pair_counts_both_tiers(spark, lines, 2 * k):
+        t0 = time.time()
+        n_pairs = out.count()
+        assert n_pairs == k * (k - 1) // 2
+        assert time.time() - t0 < 120
+        sample = out.filter(
+            (F.col("p1") == 0) & (F.col("p2").isin(1, 63, 64, 1999))
+        ).collect()
+        assert {r["n"] for r in sample} == {2} and len(sample) == 4
 
     # 100-item basket: compare against the dense pair set
     k2 = 100
-    lines2 = spark.createDataFrame(
-        [(b, i) for b in (1, 2) for i in range(k2)],
-        "l_orderkey long, l_partkey long",
-    )
-    got = {
-        (r["p1"], r["p2"], r["n"]) for r in pair_counts_from_lines(lines2).collect()
-    }
+    lines2 = lines_frame(spark, [(b, i) for b in (1, 2) for i in range(k2)])
     want = {(a, b, 2) for a in range(k2) for b in range(a + 1, k2)}
-    assert got == want
+    for out in pair_counts_both_tiers(spark, lines2, 2 * k2):
+        assert {(r["p1"], r["p2"], r["n"]) for r in out.collect()} == want
 
 
 def test_basket_pair_pack_rejects_negative_ids(spark):
@@ -419,6 +414,19 @@ def test_basket_pair_pack_rejects_negative_ids(spark):
         pair_counts_from_lines(lines).collect()
 
 
+def test_basket_pair_pack_rejects_ids_at_2_31(spark):
+    """The pack's upper bound: an item id of exactly 2^31 would wrap
+    into the next p1; both tiers must fail fast instead."""
+    import pytest
+
+    from tests.conftest import lines_frame, pair_counts_both_tiers
+
+    rows = [(b, i) for b in (1, 2) for i in (5, 2**31)]
+    for out in pair_counts_both_tiers(spark, lines_frame(spark, rows), len(rows)):
+        with pytest.raises(Exception, match=r"basket pair key < 0 or >= 2\^31"):
+            out.collect()
+
+
 def test_doc_pair_pack_rejects_negative_ids(spark):
     import pytest
 
@@ -428,6 +436,18 @@ def test_doc_pair_pack_rejects_negative_ids(spark):
 
     members = spark.createDataFrame([([-3, 5],)], "docs array<long>")
     with pytest.raises(Exception, match="doc pair key < 0"):
+        _packed_pairs_from_members(members).collect()
+
+
+def test_doc_pair_pack_rejects_ids_at_2_31(spark):
+    import pytest
+
+    from energy_consumption_forecasting_spark.queries.dedup import (
+        _packed_pairs_from_members,
+    )
+
+    members = spark.createDataFrame([([5, 2**31],)], "docs array<long>")
+    with pytest.raises(Exception, match=r"doc pair key < 0 or >= 2\^31"):
         _packed_pairs_from_members(members).collect()
 
 
