@@ -16,7 +16,7 @@ from ..operators.multimodal import (
     sample_frames,
 )
 from ..operators.spatial import filter_in_polygon
-from ._util import tbl
+from ._util import STAGE_DIR, tbl
 
 # Diamond (rhombus) test polygon over the events (value, user_id) plane.
 # Chosen so containment has the closed form |x−cx|/a + |y−cy|/b < 1,
@@ -451,7 +451,9 @@ def stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.incremental_rollup import run_incremental_rollup
 
     ensure_utc(spark)
-    table = f"/root/repo/.stage/incr_rollup/{os.path.basename(sf_dir.rstrip('/'))}"
+    table = os.path.join(
+        STAGE_DIR, "incr_rollup", os.path.basename(sf_dir.rstrip("/"))
+    )
     shutil.rmtree(table, ignore_errors=True)
     out = run_incremental_rollup(spark, sf_dir.rstrip("/"), table)
     return out.select("d", "event_type", "n", "sum_cents")
@@ -880,7 +882,9 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.upsert_stream import run_cdc_upsert_available_now
 
     ensure_utc(spark)
-    table = f"/root/repo/.stage/cdc_upsert/{os.path.basename(sf_dir.rstrip('/'))}"
+    table = os.path.join(
+        STAGE_DIR, "cdc_upsert", os.path.basename(sf_dir.rstrip("/"))
+    )
     shutil.rmtree(table, ignore_errors=True)
     return run_cdc_upsert_available_now(spark, sf_dir.rstrip("/"), table)
 

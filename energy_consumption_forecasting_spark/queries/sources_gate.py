@@ -699,11 +699,10 @@ def s19_stream_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Completes the Python DataSource quartet: reader (s12), stream
     reader (s16), batch writer (s18), stream writer (here)."""
     import shutil
-    import tempfile
 
     from ..session import ensure_utc
     from ..sources.jsonl_sink_datasource import JsonlSinkDataSource
-    from ..streaming import pinned_stream_partitions
+    from ..streaming import _available_now
     from ..streaming.source import events_stream
 
     ensure_utc(spark)
@@ -715,20 +714,11 @@ def s19_stream_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = events_stream(spark, sf_dir.rstrip("/"), "events.parquet").select(
         "event_id", "event_type", "value"
     )
-    ckpt = tempfile.mkdtemp(prefix="ecf_s19_ckpt_")
-    try:
-        with pinned_stream_partitions(spark):
-            q = (
-                src.writeStream.format("ecf_jsonl")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        # result reads the jsonl dir, never the checkpoint
-        shutil.rmtree(ckpt, ignore_errors=True)
+    # the result reads the jsonl dir, never the checkpoint
+    with _available_now(
+        src, lambda w, _: w.format("ecf_jsonl").option("path", out)
+    ):
+        pass
     schema = T.StructType(
         [
             T.StructField("event_id", T.LongType()),

@@ -3,6 +3,11 @@
 The reference is batch-only (six-month EIA files re-downloaded
 wholesale, ETL.py:56-77); these operators are the streaming-native form
 of its hourly→daily rollup, plus stateful custom aggregation.
+
+Every stream runs to completion through one availableNow runner
+(``_available_now``); gate drains read a memory sink
+(``drain_available_now``), and every exactly-once sink is one
+``step(batch, key)`` folded by ``fold_available_now``.
 """
 
 from __future__ import annotations
@@ -67,6 +72,44 @@ def rocksdb_state_store(spark):
             spark.conf.set(key, prev)
 
 
+@contextlib.contextmanager
+def _available_now(
+    stream_df,
+    sink,
+    checkpoint_dir: str | None = None,
+    partitions: int | None = None,
+):
+    """Run ``sink(stream_df.writeStream, ckpt)`` to completion under an
+    availableNow trigger, then yield the checkpoint path.
+
+    The one place a stream is started: the state width (``partitions``,
+    default ``STREAM_STATE_PARTITIONS``) is pinned at start
+    (``pinned_stream_partitions``), and a checkpoint this runner
+    made is a tempdir removed when the ``with`` block exits, so a
+    caller may still read it (state-store tails) inside the block.  A
+    caller-supplied ``checkpoint_dir`` is the caller's and is kept
+    (resume contract)."""
+    import shutil
+    import tempfile
+
+    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="ecf_stream_ckpt_")
+    try:
+        with pinned_stream_partitions(
+            stream_df.sparkSession, partitions or STREAM_STATE_PARTITIONS
+        ):
+            (
+                sink(stream_df.writeStream, ckpt)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
+        yield ckpt
+    finally:
+        if checkpoint_dir is None:
+            shutil.rmtree(ckpt, ignore_errors=True)
+
+
 def drain_available_now(
     stream_df,
     sink_prefix: str,
@@ -86,10 +129,8 @@ def drain_available_now(
     enrichment, heavy hitters, markov, cusum, ohlc, minhash dedup) —
     complete-mode memory sinks re-emit the whole result per trigger
     and hold it on the driver, fine for bounded aggregates, wrong for
-    unbounded keyspaces; production paths route through the
-    foreachBatch merges instead (incremental_rollup.py)."""
-    import shutil
-    import tempfile
+    unbounded keyspaces; production paths fold through
+    ``fold_available_now`` instead (incremental_rollup.py)."""
     import uuid
 
     # ``partitions``: state-store instance count for this drain.  Each
@@ -101,50 +142,83 @@ def drain_available_now(
     # ~0.7 s of pure store open/commit per batch).  Unbounded-keyspace
     # gates keep STREAM_STATE_PARTITIONS.
     spark = stream_df.sparkSession
-    sink = f"{sink_prefix}_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ecf_stream_ckpt_")
+    name = f"{sink_prefix}_{uuid.uuid4().hex[:8]}"
     try:
-        with pinned_stream_partitions(
-            spark, partitions or STREAM_STATE_PARTITIONS
-        ):
-            q = (
-                stream_df.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode(output_mode)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        out = spark.table(sink)
-        if finish is not None:
-            out = finish(out, ckpt)
-        return out.localCheckpoint(eager=True)
+        with _available_now(
+            stream_df,
+            lambda w, _: w.format("memory").queryName(name).outputMode(output_mode),
+            partitions=partitions,
+        ) as ckpt:
+            out = spark.table(name)
+            if finish is not None:
+                out = finish(out, ckpt)
+            return out.localCheckpoint(eager=True)
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        spark.catalog.dropTempView(sink)
+        spark.catalog.dropTempView(name)
+
+
+def fold_available_now(
+    stream_df, state_dir: str, step, checkpoint_dir: str | None = None
+) -> None:
+    """Drain ``stream_df`` through foreachBatch, applying each
+    micro-batch to the state under ``state_dir`` exactly once.
+
+    ``step(batch, key)`` applies one batch's effect; a step that
+    commits a snapshot tags it with ``txn_note(key)``.  foreachBatch
+    side effects are AT-LEAST-ONCE (a crash between the sink commit
+    and the offset commit replays the batch id on restart), so the
+    fold skips keys ``txn_seen`` reports and records each key with
+    ``txn_record`` after its step.  The key pairs the batch id with
+    the CHECKPOINT lineage — batch ids restart at 0 under a fresh
+    checkpoint, so a bare id would dedupe away genuinely new data.
+    Pass a PERSISTENT ``checkpoint_dir`` for incremental semantics
+    across calls; the default ephemeral checkpoint is the gate/one-shot
+    form."""
+
+    def sink(writer, ckpt):
+        run_id = run_id_for_checkpoint(ckpt)
+
+        def apply(batch, batch_id: int) -> None:
+            key = f"{run_id}/{batch_id}"
+            # module globals, looked up per batch: crash-injection
+            # tests patch them on this module
+            if txn_seen(state_dir, key):
+                return
+            step(batch, key)
+            txn_record(state_dir, key)
+
+        return writer.foreachBatch(apply)
+
+    with _available_now(stream_df, sink, checkpoint_dir):
+        pass
+
+
+def txn_note(key: str) -> str:
+    """The snapshot-manifest note a fold step tags its commit with."""
+    return f"txn {key}"
 
 
 def txn_seen(state_dir: str, key: str) -> bool:
-    """True iff ``txn_record(state_dir, key)`` already ran.
+    """True iff the fold already applied ``key`` to ``state_dir``: the
+    txn log records it OR a snapshot manifest note carries it.
 
-    The foreachBatch exactly-once guard: Spark's sink side effects are
-    at-least-once (a crash between the sink commit and the offset
-    commit replays the batch), so idempotent sinks record
-    ``"<run_id>/<batch_id>"`` here before finishing.  The key MUST be
-    scoped by a run/lineage id derived from the CHECKPOINT location —
-    a bare batch_id restarts at 0 with every fresh checkpoint and
-    would dedupe AWAY genuinely new data (round-4 review finding).
-    The log lives in its own file, so snapshot retention (vacuum)
-    cannot erase it."""
+    The snapshot commit is atomic and lands BEFORE the log append, so
+    a crash in between leaves the note as the evidence; the log exists
+    because ``vacuum()`` rewrites the manifest and must not erase txn
+    history (the log lives in its own file).  A directory with no
+    manifest (the ANN index) reads as no notes."""
     import json
     import os
 
+    from ..sources.versioned import snapshots
+
     p = os.path.join(state_dir, "_txn.json")
-    if not os.path.exists(p):
-        return False
-    with open(p) as f:
-        return key in json.load(f)
+    if os.path.exists(p):
+        with open(p) as f:
+            if key in json.load(f):
+                return True
+    note = txn_note(key)
+    return any(e["note"] == note for e in snapshots(state_dir))
 
 
 def txn_record(state_dir: str, key: str) -> None:
@@ -169,9 +243,19 @@ def txn_record(state_dir: str, key: str) -> None:
 def run_id_for_checkpoint(checkpoint_dir: str) -> str:
     """Stable lineage id for a checkpoint location: batch ids are only
     unique WITHIN one checkpoint's lineage, so txn keys pair this with
-    the batch id."""
-    import hashlib
+    the batch id.
 
+    Spark resolves ``ckpt``, ``./ckpt`` and ``/abs/ckpt`` to one
+    checkpoint and replays its uncommitted batch under any of them, so
+    a local path is hashed in its canonical form (``realpath``); a
+    canonical absolute path keeps the id it always had.  A URI
+    (``scheme:...``) is hashed as written."""
+    import hashlib
+    import os
+    import re
+
+    if not re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", checkpoint_dir):
+        checkpoint_dir = os.path.realpath(checkpoint_dir)
     return hashlib.sha1(
         checkpoint_dir.rstrip("/").encode()
     ).hexdigest()[:12]

@@ -43,15 +43,12 @@ def ingest_vectors_available_now(
     Pass a PERSISTENT ``checkpoint_dir`` for incremental ingest across
     calls (only new files encode; crash-replayed batches are skipped);
     the default ephemeral checkpoint is the one-shot form."""
+    import glob as globmod
     import os
+    import shutil
     import tempfile
 
-    from . import (
-        pinned_stream_partitions,
-        run_id_for_checkpoint,
-        txn_record,
-        txn_seen,
-    )
+    from . import fold_available_now, run_id_for_checkpoint
     from .source import stream_source
 
     _, meta = load_ann_index(spark, index_dir)
@@ -64,43 +61,29 @@ def ingest_vectors_available_now(
         "vec_id", F.col(vec_col).cast("array<double>").alias("v")
     )
 
-    own_ckpt = checkpoint_dir is None
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="ecf_annin_ckpt_")
-    run_id = run_id_for_checkpoint(ckpt)
-
     # sweep stage dirs orphaned by crashed earlier attempts of THIS
     # lineage only — a concurrent ingest with its own checkpoint may
     # have a live stage under the same index_dir, and sweeping it
-    # would silently drop that run's batch
-    import glob as _globmod
-    import shutil as _shutil
+    # would silently drop that run's batch.  An ephemeral checkpoint
+    # is a fresh lineage, which has no orphans.
+    if checkpoint_dir is not None:
+        lineage = run_id_for_checkpoint(checkpoint_dir)
+        for orphan in globmod.glob(
+            os.path.join(index_dir, f"_stage_{lineage}_*")
+        ):
+            shutil.rmtree(orphan, ignore_errors=True)
 
-    for orphan in _globmod.glob(
-        os.path.join(index_dir, f"_stage_{run_id}_*")
-    ):
-        _shutil.rmtree(orphan, ignore_errors=True)
-
-    def append(batch: DataFrame, batch_id: int) -> None:
-        # foreachBatch side effects are AT-LEAST-ONCE: a crashed batch
-        # replays with the same batch_id, and a plain mode("append")
-        # would duplicate every replayed vector.  Exactly-once recipe:
-        # (1) skip keys the txn log records — keys are scoped by the
-        # CHECKPOINT lineage (a bare batch_id restarts at 0 under a
-        # fresh checkpoint and would dedupe away genuinely new data);
-        # (2) stage the batch INSIDE index_dir (same filesystem, so
-        # os.replace stays an atomic rename — /tmp may be a different
-        # mount), sweep any files a half-finished earlier attempt
-        # left, then move the parts in under DETERMINISTIC
-        # run/batch-prefixed names — after any COMPLETED attempt the
-        # codes dir holds exactly that attempt's files; (3) record the
-        # key.  A crash between (2) and (3) just makes the replay redo
-        # the idempotent sweep+move.
-        import glob as globmod
-        import shutil
-
-        key = f"{run_id}/{batch_id}"
-        if txn_seen(index_dir, key):
-            return
+    def append(batch: DataFrame, key: str) -> None:
+        # A plain mode("append") would duplicate every replayed
+        # vector, so the step is idempotent on its own: (1) stage the
+        # batch INSIDE index_dir (same filesystem, so os.replace stays
+        # an atomic rename — /tmp may be a different mount), (2) sweep
+        # any files a half-finished earlier attempt left, then move
+        # the parts in under DETERMINISTIC key-prefixed names — after
+        # any COMPLETED attempt the codes dir holds exactly that
+        # attempt's files.  A crash before the fold records the key
+        # just makes the replay redo the idempotent sweep+move.
+        run_id, batch_id = key.split("/")
         encoded = encode_with_meta(batch, meta)
         stage = tempfile.mkdtemp(
             dir=index_dir, prefix=f"_stage_{run_id}_{batch_id}_"
@@ -127,18 +110,5 @@ def ingest_vectors_available_now(
                     os.path.join(dst_dir, f"{prefix}part-{i:05d}.parquet"),
                 )
         shutil.rmtree(stage, ignore_errors=True)
-        txn_record(index_dir, key)
 
-    try:
-        with pinned_stream_partitions(spark):
-            q = (
-                stream.writeStream.foreachBatch(append)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        # the index lives under index_dir, never the checkpoint
-        if own_ckpt:
-            _shutil.rmtree(ckpt, ignore_errors=True)
+    fold_available_now(stream, index_dir, append, checkpoint_dir)

@@ -22,13 +22,10 @@ snapshot commit writes only the new state version.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.versioned import commit_snapshot, read_snapshot, snapshots, versions
+from ..sources.versioned import commit_snapshot, read_snapshot, versions
 from .source import events_stream
 
 _STATE_COLS = ("d", "event_type", "n", "sum_cents")
@@ -76,60 +73,20 @@ def run_incremental_rollup(
     across calls (new files fold as new batches; a crash-replayed
     batch is skipped by the txn guard).  The default ephemeral
     checkpoint is the gate/one-shot form."""
-    from . import (
-        pinned_stream_partitions,
-        run_id_for_checkpoint,
-        txn_record,
-        txn_seen,
-    )
+    from . import fold_available_now, txn_note
 
-    own_ckpt = checkpoint_dir is None
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="ecf_incr_ckpt_")
-    run_id = run_id_for_checkpoint(ckpt)
     stream = events_stream(
         spark, events_dir, glob, maxFilesPerTrigger=max_files_per_trigger
     )
 
-    def upsert(batch: DataFrame, batch_id: int) -> None:
-        # foreachBatch side effects are AT-LEAST-ONCE: a crash between
-        # the sink commit and the offset commit replays this batch id
-        # on restart.  The txn log (separate from the vacuumable
-        # snapshot manifest) skips the replayed fold; the key is
-        # scoped by the CHECKPOINT lineage — batch ids restart at 0
-        # under a fresh checkpoint, so a bare id would dedupe away
-        # genuinely new data.
-        key = f"{run_id}/{batch_id}"
-        # seen = txn log OR a manifest note carrying the key: the
-        # snapshot commit is atomic and lands BEFORE the log append,
-        # so a crash in between leaves the note as the evidence — the
-        # log exists only because vacuum() rewrites the manifest and
-        # must not erase txn history.
-        if txn_seen(table_dir, key) or any(
-            e["note"] == f"txn {key}" for e in snapshots(table_dir)
-        ):
-            return
+    def upsert(batch: DataFrame, key: str) -> None:
         delta = _batch_state(batch)
         prior = (
             read_snapshot(batch.sparkSession, table_dir)
             if versions(table_dir)
             else None
         )
-        merged = _merge(prior, delta)
-        commit_snapshot(merged, table_dir, note=f"txn {key}")
-        txn_record(table_dir, key)
+        commit_snapshot(_merge(prior, delta), table_dir, note=txn_note(key))
 
-    try:
-        with pinned_stream_partitions(spark):
-            q = (
-                stream.writeStream.foreachBatch(upsert)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        # the returned snapshot reads table_dir, never the checkpoint;
-        # a caller-supplied checkpoint is the caller's (resume contract)
-        if own_ckpt:
-            shutil.rmtree(ckpt, ignore_errors=True)
+    fold_available_now(stream, table_dir, upsert, checkpoint_dir)
     return read_snapshot(spark, table_dir)

@@ -13,13 +13,10 @@ source regardless of stream rate); each batch's delta is itself
 pre-truncated by the batch operator's spill-safe window rank before
 the merge, so no unbounded buffer exists anywhere.  Snapshot-versioned
 state + lineage-scoped txn keys give exactly-once folds under replay
-(same recipe as incremental_rollup.py).
+(``streaming.fold_available_now``, shared by every exactly-once sink).
 """
 
 from __future__ import annotations
-
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -27,7 +24,6 @@ from pyspark.sql import functions as F
 from ..sources.versioned import (
     commit_snapshot,
     read_snapshot,
-    snapshots,
     vacuum,
     versions,
 )
@@ -109,48 +105,22 @@ def run_source_cap_available_now(
 ) -> DataFrame:
     """Drain the directory, folding each batch's top-k into versioned
     state; returns (source, keep_rank, doc_id) like the batch op."""
-    from . import (
-        pinned_stream_partitions,
-        run_id_for_checkpoint,
-        txn_record,
-        txn_seen,
-    )
+    from . import fold_available_now, txn_note
 
-    own_ckpt = checkpoint_dir is None
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="ecf_srccap_ckpt_")
-    run_id = run_id_for_checkpoint(ckpt)
     stream = docs_stream(
         spark, docs_dir, glob, maxFilesPerTrigger=max_files_per_trigger
     )
 
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        key = f"{run_id}/{batch_id}"
-        if txn_seen(table_dir, key) or any(
-            e["note"] == f"txn {key}" for e in snapshots(table_dir)
-        ):
-            return
+    def fold(batch: DataFrame, key: str) -> None:
         delta = _batch_topk(batch)
         prior = (
             read_snapshot(batch.sparkSession, table_dir)
             if versions(table_dir)
             else None
         )
-        commit_snapshot(_merge(prior, delta), table_dir, note=f"txn {key}")
-        txn_record(table_dir, key)
+        commit_snapshot(_merge(prior, delta), table_dir, note=txn_note(key))
 
-    try:
-        with pinned_stream_partitions(spark):
-            q = (
-                stream.writeStream.foreachBatch(fold)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        # the returned snapshot reads table_dir, never the checkpoint
-        if own_ckpt:
-            shutil.rmtree(ckpt, ignore_errors=True)
+    fold_available_now(stream, table_dir, fold, checkpoint_dir)
 
     if not versions(table_dir):
         # zero batches drained (empty source): the batch op returns an

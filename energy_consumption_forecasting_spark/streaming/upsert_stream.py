@@ -1,6 +1,6 @@
 """Streaming CDC apply: per-key latest state upserted into the
 versioned store via merge-on-read UPSERT — the capstone composition of
-the exactly-once foreachBatch recipe (lineage-scoped txn keys) and
+the exactly-once fold (``streaming.fold_available_now``) and
 sources/versioned.py::merge_upsert.
 
 Each micro-batch reduces to its latest row per key (deterministic
@@ -18,9 +18,6 @@ TABLE is the state — bounded by key cardinality, not stream length.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -28,7 +25,6 @@ from ..sources.versioned import (
     commit_snapshot,
     merge_upsert,
     read_snapshot,
-    snapshots,
     versions,
 )
 from .source import events_stream
@@ -65,49 +61,20 @@ def run_cdc_upsert_available_now(
 ) -> DataFrame:
     """Drain the (static) directory applying one upsert per micro-batch;
     returns the final table state."""
-    from . import (
-        pinned_stream_partitions,
-        run_id_for_checkpoint,
-        txn_record,
-        txn_seen,
-    )
+    from . import fold_available_now, txn_note
 
-    own_ckpt = checkpoint_dir is None
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="ecf_cdc_ckpt_")
-    run_id = run_id_for_checkpoint(ckpt)
     stream = events_stream(
         spark, events_dir, glob, maxFilesPerTrigger=max_files_per_trigger
     )
 
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        key = f"{run_id}/{batch_id}"
-        if txn_seen(table_dir, key) or any(
-            e["note"] == f"txn {key}" for e in snapshots(table_dir)
-        ):
-            return
+    def apply(batch: DataFrame, key: str) -> None:
         latest = _batch_latest(batch)
         if versions(table_dir):
             merge_upsert(
-                spark, table_dir, latest, ["user_id"], note=f"txn {key}"
+                spark, table_dir, latest, ["user_id"], note=txn_note(key)
             )
         else:
-            commit_snapshot(latest, table_dir, note=f"txn {key}")
-        txn_record(table_dir, key)
+            commit_snapshot(latest, table_dir, note=txn_note(key))
 
-    try:
-        with pinned_stream_partitions(spark):
-            q = (
-                stream.writeStream.foreachBatch(apply)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        # The returned snapshot reads only table_dir, never the
-        # checkpoint — reclaim a self-created tempdir so repeated
-        # invocations don't leak one per call.  Caller-supplied
-        # checkpoint dirs are the caller's (resume contract).
-        if own_ckpt:
-            shutil.rmtree(ckpt, ignore_errors=True)
+    fold_available_now(stream, table_dir, apply, checkpoint_dir)
     return read_snapshot(spark, table_dir)

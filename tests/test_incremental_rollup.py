@@ -162,3 +162,29 @@ def test_txn_guard_skips_replayed_key(tmp_path):
     assert not txn_seen(d, f"{r2}/0")  # fresh lineage, same batch id
     txn_record(d, f"{r1}/0")  # idempotent
     assert txn_seen(d, f"{r1}/0")
+
+
+def test_run_id_names_the_checkpoint_not_its_spelling(tmp_path, monkeypatch):
+    """Spark resolves every spelling of a local checkpoint to one
+    offsets log and replays its uncommitted batch under any of them, so
+    the lineage id must not change with the spelling.  A canonical
+    absolute path keeps the id it had before paths were canonicalized
+    (existing persisted checkpoints keep their keys), and a URI is
+    hashed as written."""
+    import hashlib
+    import os
+
+    from energy_consumption_forecasting_spark.streaming import (
+        run_id_for_checkpoint,
+    )
+
+    def sha(path):
+        return hashlib.sha1(path.encode()).hexdigest()[:12]
+
+    (tmp_path / "ckpt").mkdir()
+    monkeypatch.chdir(tmp_path)
+    canonical = os.path.realpath(tmp_path / "ckpt")
+    spellings = ["ckpt", "./ckpt", "ckpt/", "sub/../ckpt", canonical, canonical + "/"]
+    assert {run_id_for_checkpoint(p) for p in spellings} == {sha(canonical)}
+    assert run_id_for_checkpoint("other") != sha(canonical)
+    assert run_id_for_checkpoint("s3a://bucket/ckpt/") == sha("s3a://bucket/ckpt")

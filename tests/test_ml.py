@@ -1,4 +1,4 @@
-"""ML module tests: scalers, CV, metrics, forecasters, clustering, BO."""
+"""ML module tests: scaling queries, CV, metrics, forecasters, clustering, BO."""
 
 from __future__ import annotations
 
@@ -22,7 +22,11 @@ from energy_consumption_forecasting_spark.ml.clustering import (
     kmedoids_from_distances,
 )
 from energy_consumption_forecasting_spark.ml.decomposition import _np_decompose
-from energy_consumption_forecasting_spark.ml.scaling import minmax_scale, standard_scale
+from energy_consumption_forecasting_spark.queries.ml_queries import (
+    m1_minmax_scale,
+    m2_standard_scale,
+)
+from tests.conftest import SF_SMALL
 
 
 @pytest.fixture(scope="module")
@@ -34,15 +38,15 @@ def series_df(spark):
     return spark.createDataFrame(rows, "d date, y double")
 
 
-def test_minmax_scale(spark, series_df):
-    out = minmax_scale(series_df, ["y"]).select("y_mm").collect()
-    vals = [r["y_mm"] for r in out]
+def test_minmax_scale(spark):
+    out = m1_minmax_scale(spark, SF_SMALL).collect()
+    vals = [r["acctbal_mm"] for r in out]
     assert min(vals) == 0.0 and max(vals) == 1.0
 
 
-def test_standard_scale(spark, series_df):
-    out = standard_scale(series_df, ["y"]).select("y_z").collect()
-    vals = np.array([r["y_z"] for r in out])
+def test_standard_scale(spark):
+    out = m2_standard_scale(spark, SF_SMALL).collect()
+    vals = np.array([r["acctbal_z"] for r in out])
     assert abs(vals.mean()) < 1e-9
     assert abs(vals.std(ddof=1) - 1.0) < 1e-9
 

@@ -3,8 +3,8 @@
 Every import-gated branch in the package has a test HERE marked
 ``optional_deps``; run ``pytest -m optional_deps`` to see exactly which
 gated branches execute in the current environment.  In this container
-all four libraries are absent, so these tests SKIP with a visible
-reason — the moment torch / statsmodels / pywt / protobuf appears, the
+all three libraries are absent, so these tests SKIP with a visible
+reason — the moment torch / statsmodels / pywt appears, the
 corresponding branch runs and its numeric claim is checked.  Until
 then the claims are covered library-free: the LSTM by finite-difference
 gradient checks (test_lstm_numpy.py), ARIMA by the exact-MLE Kalman
@@ -115,19 +115,3 @@ def test_pywt_db4_parity():
         ca2, cd2 = db4_dwt(y)
         assert np.allclose(ca, ca2, atol=1e-10)
         assert np.allclose(cd, cd2, atol=1e-10)
-
-
-@pytest.mark.optional_deps
-def test_protobuf_transform_with_state():
-    """transformWithStateInPandas needs google.protobuf in the worker;
-    the full comparison test lives in test_stateful_v2.py — this row
-    keeps the gate visible in the optional-deps profile."""
-    import importlib.util
-
-    try:
-        has = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        has = False
-    if not has:
-        pytest.skip("protobuf absent: transformWithState branch not executable")
-    import energy_consumption_forecasting_spark.streaming.stateful_v2  # noqa: F401

@@ -836,10 +836,14 @@ def daily_series(draw):
 @SET
 @given(daily_series())
 def test_theil_sen_matches_reference(spark, vals):
+    import pandas as pd
     from pyspark.sql import Window
 
+    # built from pandas through Arrow (a local relation), so the
+    # non-equi self-join needs no Python worker per partition
     idx = spark.createDataFrame(
-        list(enumerate(vals)), "t long, vc long"
+        pd.DataFrame({"t": range(len(vals)), "vc": vals}, dtype="int64"),
+        "t long, vc long",
     )
     a = idx.select(F.col("t").alias("ta"), F.col("vc").alias("va"))
     slopes = idx.join(a, F.col("t") > F.col("ta")).select(

@@ -217,27 +217,6 @@ def test_geohash_join_pairs_share_cell(spark):
         assert r.d2_q >= 0
 
 
-# --- runtime bloom-filter join reduction --------------------------------------------
-def test_runtime_bloom_filter_injected(spark):
-    import pyspark.sql.functions as F
-
-    from energy_consumption_forecasting_spark.operators.runtime_filters import (
-        forced_runtime_bloom,
-    )
-
-    li = spark.read.parquet(f"{SF_SMALL}/lineitem.parquet")
-    pt = spark.read.parquet(f"{SF_SMALL}/part.parquet").filter(F.col("p_size") == 7)
-    with forced_runtime_bloom(spark):
-        j = li.join(pt, li.l_partkey == pt.p_partkey).groupBy("p_brand").count()
-        plan = j._jdf.queryExecution().optimizedPlan().toString()
-        assert "might_contain" in plan and "bloom_filter_agg" in plan
-        # the filter lands on the FACT side, upstream of its join input
-        expected = j.count()
-    # equivalence: the bloom filter only prunes, never changes results
-    plain = li.join(pt, li.l_partkey == pt.p_partkey).groupBy("p_brand").count()
-    assert expected == plain.count()
-
-
 # --- AQE skew-join split ------------------------------------------------------------
 def test_aqe_splits_skewed_join_partition(spark):
     import pyspark.sql.functions as F

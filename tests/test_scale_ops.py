@@ -1,5 +1,6 @@
-"""Scale-technique tests: salted aggregation/join correctness and the
-bucketed-join no-exchange plan property."""
+"""Scale-technique tests: the bucketed-join no-exchange plan property,
+partition pruning, and the bounded forms of the scale-critical
+operators."""
 
 from __future__ import annotations
 
@@ -9,44 +10,16 @@ import contextlib
 import pytest
 from pyspark.sql import functions as F
 
-from energy_consumption_forecasting_spark.operators.skew import (
-    salted_join,
-    salted_sum,
-    write_bucketed,
-)
 from tests.conftest import SF_SMALL
 
 
-def test_salted_sum_equals_plain(spark):
-    df = spark.read.parquet(f"{SF_SMALL}/lineitem.parquet")
-    plain = {
-        r["l_returnflag"]: r["s"]
-        for r in df.groupBy("l_returnflag")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("s"))
-        .collect()
-    }
-    salted = {
-        r["l_returnflag"]: r["sum_q"]
-        for r in salted_sum(
-            df.withColumn("q", F.col("l_quantity").cast("decimal(18,2)")),
-            ["l_returnflag"],
-            "q",
-            out_col="sum_q",
-        ).collect()
-    }
-    assert plain == salted
-
-
-def test_salted_join_equals_plain(spark):
-    li = spark.read.parquet(f"{SF_SMALL}/lineitem.parquet").select(
-        F.col("l_partkey").alias("k"), "l_quantity"
+def _write_bucketed(df, name: str, bucket_col: str, n_buckets: int) -> None:
+    (
+        df.write.mode("overwrite")
+        .bucketBy(n_buckets, bucket_col)
+        .sortBy(bucket_col)
+        .saveAsTable(name)
     )
-    parts = spark.read.parquet(f"{SF_SMALL}/part.parquet").select(
-        F.col("p_partkey").alias("k"), "p_name"
-    )
-    plain = li.join(parts, "k").count()
-    salted = salted_join(li, parts, "k").count()
-    assert plain == salted
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path):
@@ -58,8 +31,8 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     orders = spark.read.parquet(f"{SF_SMALL}/orders.parquet").select(
         "o_orderkey", "o_totalprice"
     )
-    write_bucketed(li, "li_b", "l_orderkey", n_buckets=4)
-    write_bucketed(
+    _write_bucketed(li, "li_b", "l_orderkey", n_buckets=4)
+    _write_bucketed(
         orders.withColumnRenamed("o_orderkey", "l_orderkey"), "ord_b", "l_orderkey", 4
     )
     a = spark.table("li_b")

@@ -144,49 +144,6 @@ def test_streaming_rollup_equals_batch(spark):
     assert stream_res == batch_res
 
 
-def test_stateful_user_stats_matches_batch(spark):
-    """applyInPandasWithState running stats == batch groupBy on a static
-    drain (update mode emits one final row per user per batch)."""
-    import tempfile, uuid
-
-    from energy_consumption_forecasting_spark.session import ensure_utc
-    from energy_consumption_forecasting_spark.streaming.source import (
-        events_stream,
-    )
-    from energy_consumption_forecasting_spark.streaming.stateful import (
-        user_running_stats,
-    )
-    from energy_consumption_forecasting_spark.tables import load_table
-
-    ensure_utc(spark)
-    stream = events_stream(spark, SF_SMALL, "events.parquet")
-    sink = f"ustats_{uuid.uuid4().hex[:8]}"
-    q = (
-        user_running_stats(stream)
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ecf_state_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        r["user_id"]: (r["n_events"], r["total_value"])
-        for r in spark.table(sink).collect()
-    }
-    batch = (
-        load_table(spark, SF_SMALL, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n"),
-            (F.sum(F.col("value").cast("decimal(18,2)")).cast("double")).alias("tot"),
-        )
-    )
-    want = {r["user_id"]: (r["n"], r["tot"]) for r in batch.collect()}
-    assert got == want
-
-
 def test_csv_skip_rows_per_file(spark, tmp_path):
     """Each globbed file drops ITS OWN preamble (r1 bug: a single global
     drop kept every later file's preamble as garbage data rows)."""
