@@ -34,18 +34,17 @@ def naive_ar_cv_mae(
     value_col: str,
     p: int = 7,
     n_folds: int = 5,
-    bounded: bool = True,
 ) -> float:
     """Shared cheap objective: blocked-CV MAE of a trailing-mean AR(p)
     baseline — every fold evaluation is a window aggregate.
 
-    ``bounded=True`` by default: the documented domain is
-    calendar-bounded daily aggregates (the m16/m17 gates and queries
-    all pass one), matching the m12 gate's treatment — the eager
+    The folds use ``label_folds``' bounded window form: the documented
+    domain is calendar-bounded daily aggregates (the m16/m17 gates and
+    queries all pass one), matching the m12 gate's treatment — the
     two-pass rank would pay a repartitionByRange + counting job per CV
     evaluation inside ablation/sensitivity loops for nothing."""
     scores = []
-    for train, val in folds(df, [time_col], n_folds=n_folds, bounded=bounded):
+    for train, val in folds(df, [time_col], n_folds=n_folds, bounded=True):
         fold = train.withColumn("__role", F.lit("t")).unionByName(
             val.withColumn("__role", F.lit("v"))
         )

@@ -1,18 +1,27 @@
-"""Blocked time-series cross-validation — SURVEY §2.7 M12 / §2.5 W7.
+"""Blocked time-series cross-validation and the positional train/test
+split — SURVEY §2.7 M12 / §2.5 W6-W7.
 
 Reference: BlockingTimeSeriesSplit (utils.py:8-23) — 5 contiguous equal
-blocks over time order, last 20 % of each block is validation.
+blocks over time order, last 20 % of each block is validation — and the
+positional 85/15 split (xgb.ipynb:532-533).
+
+Each operation is a LABELLED frame plus a thin filter view:
+``label_folds`` (``fold``, ``role``) backs ``folds``, and
+``label_split`` (``split``) backs ``train_test_split``; the registered
+w6/w7 queries are the labelled frames themselves.
 
 Scale contract (round-6 VERDICT item 4): the DEFAULT path is the
-two-pass distributed rank (operators/ranking.py) — an importable
-library function must never single-partition a raw 100-TB frame the
-way a bare ``Window.orderBy`` does.  Callers whose input is already a
-bounded-cardinality frame (a calendar/daily aggregate — e.g. the m12
-gate) may pass ``bounded=True`` for the one-shuffle window form, and
-callers with a monotone coarse key over the order (months, hash-range
-prefixes) may pass ``bucket=`` for the ZERO-driver-action lazy rank.
+two-pass distributed rank (``operators/ranking.global_row_number``) —
+an importable library function must never single-partition a raw
+100-TB frame the way a bare ``Window.orderBy`` does.  Callers with a
+monotone coarse key over the order (months, hash-range prefixes) pass
+``bucket=`` for the lazy rank that runs no Spark job
+(``global_row_number_lazy``).  ``label_folds`` callers whose input is
+already a bounded-cardinality frame (a calendar/daily aggregate — e.g.
+the m12 gate) may pass ``bounded=True`` for the one-shuffle window
+form.
 
-Both paths produce bit-identical assignments: the fold boundary is
+All paths produce bit-identical assignments: the fold boundary is
 exact integer ntile algebra (``ntile_expr``) and the val cutoff uses
 the same ``pos > (1 - val_frac) * fold_size`` float comparison the
 window form evaluates — pinned by tests/test_ml.py.
@@ -28,6 +37,26 @@ from collections.abc import Iterator
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..operators.ranking import (
+    global_row_number,
+    global_row_number_lazy,
+    ntile_expr,
+)
+
+
+def _ranked(
+    df: DataFrame, order_cols: list[str], bucket: Column | None
+) -> DataFrame:
+    """``df`` plus ``__rn`` (global 1-based rank over ``order_cols``)
+    and ``__n`` (row count): the lazy bucket rank when ``bucket`` is
+    given, else the generic two-pass rank."""
+    if bucket is not None:
+        return global_row_number_lazy(
+            df, order_cols, bucket, rn_col="__rn", total_col="__n"
+        )
+    ranked, total = global_row_number(df, order_cols, rn_col="__rn")
+    return ranked.withColumn("__n", F.lit(total).cast("long"))
 
 
 def _label_folds_bounded(
@@ -66,19 +95,7 @@ def label_folds(
     already bounded aggregates."""
     if bounded:
         return _label_folds_bounded(df, order_cols, n_folds, val_frac)
-    from ..operators.ranking import (
-        global_row_number,
-        global_row_number_lazy,
-        ntile_expr,
-    )
-
-    if bucket is not None:
-        ranked = global_row_number_lazy(
-            df, order_cols, bucket, rn_col="__rn", total_col="__n"
-        )
-    else:
-        ranked_df, total = global_row_number(df, order_cols, rn_col="__rn")
-        ranked = ranked_df.withColumn("__n", F.lit(total).cast("long"))
+    ranked = _ranked(df, order_cols, bucket)
     # exact integer fold algebra: the first n % k folds hold
     # ceil(n/k) rows — identical to the window ntile's assignment
     base = F.expr(f"__n div {n_folds}")
@@ -115,46 +132,35 @@ def folds(
         )
 
 
+def label_split(
+    df: DataFrame,
+    order_cols: list[str],
+    train_frac: float = 0.85,
+    bucket: Column | None = None,
+) -> DataFrame:
+    """Add ``split`` ('train'|'test'): the first ``ceil(train_frac·n)``
+    rows in order are train — the same double→ceil arithmetic as SQL's
+    ``CEIL(0.85 * COUNT(*))``, evaluated as a column, so the lazy
+    bucket path needs no count job."""
+    ranked = _ranked(df, order_cols, bucket)
+    return ranked.withColumn(
+        "split",
+        F.when(F.col("__rn") <= F.ceil(train_frac * F.col("__n")), "train")
+        .otherwise("test"),
+    ).drop("__rn", "__n")
+
+
 def train_test_split(
     df: DataFrame,
     order_cols: list[str],
     train_frac: float = 0.85,
-    bounded: bool = False,
     bucket: Column | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Positional split (reference iloc[:85%] — xgb.ipynb:532-533).
-
-    Same scale contract as ``label_folds``: distributed rank by
-    default; ``bucket=`` for the zero-action lazy rank (the registered
-    w6 gate's shape); ``bounded=True`` for bounded aggregates."""
-    if bounded:
-        w = Window.orderBy(*order_cols)
-        labeled = df.withColumn(
-            "__is_train",
-            F.row_number().over(w)
-            <= F.ceil(train_frac * F.count("*").over(Window.partitionBy())),
-        )
-    else:
-        from ..operators.ranking import (
-            global_row_number,
-            global_row_number_lazy,
-        )
-
-        if bucket is not None:
-            labeled = global_row_number_lazy(
-                df, order_cols, bucket, rn_col="__rn", total_col="__n"
-            ).withColumn(
-                "__is_train",
-                F.col("__rn") <= F.ceil(train_frac * F.col("__n")),
-            )
-        else:
-            ranked, total = global_row_number(df, order_cols, rn_col="__rn")
-            labeled = ranked.withColumn(
-                "__is_train",
-                F.col("__rn") <= F.ceil(train_frac * F.lit(total)),
-            )
-        labeled = labeled.drop("__rn", "__n")
+    """Positional split (reference iloc[:85%] — xgb.ipynb:532-533):
+    ``(train, test)`` filters over ``label_split``."""
+    labeled = label_split(df, order_cols, train_frac, bucket)
+    is_train = F.col("split") == "train"
     return (
-        labeled.filter(F.col("__is_train")).drop("__is_train"),
-        labeled.filter(~F.col("__is_train")).drop("__is_train"),
+        labeled.filter(is_train).drop("split"),
+        labeled.filter(~is_train).drop("split"),
     )

@@ -1,21 +1,29 @@
-"""Distributed global ordering — two-pass rank without the
+"""Distributed global ordering — rank and running sum without the
 single-partition ``Window.orderBy`` scale-killer.
 
 ``Window.orderBy(...)`` with no ``partitionBy`` moves the WHOLE table to
 one partition ("WindowExec: No Partition Defined") — a single-task sort
-at 100 TB.  The classic distributed alternative (this module):
+at 100 TB.  This module is the one toolkit for global order, one
+implementation per operation:
 
-1. ``repartitionByRange`` on the order key — a range shuffle; every
-   partition holds a contiguous, non-overlapping key range and sorts
-   locally in parallel.
-2. per-partition ``row_number`` keyed by ``spark_partition_id()``.
-3. global offset for partition *i* = total rows in partitions < i — a
-   per-partition count (one tiny job, ≤ #partitions rows collected)
-   broadcast-joined back.
+* :func:`global_row_number` — the generic two-pass rank for ANY order
+  key: ``repartitionByRange`` on the key (contiguous, non-overlapping
+  key ranges sorted locally in parallel), a per-partition count (one
+  tiny job, ≤ #partitions rows collected), and exclusive partition
+  offsets broadcast-joined back, so rank = offset + local rank.
+* :func:`global_row_number_lazy` — the same rank with ZERO Spark
+  actions, for orders that carry a monotone coarse ``bucket`` key
+  (months, hash-range prefixes): offsets key on data values and ride
+  the plan as a bucket-sized aggregate subtree.
+* :func:`global_prefix_sum_lazy` — exact running sums of one or more
+  integral values over such a bucketed order, same lazy shape.
+* :func:`lag_by_rank` and :func:`ntile_expr` — positional lags and the
+  exact ``ntile`` fold algebra as joins / column expressions of a
+  global rank.
 
-The global rank is exact (``offset + local rank``) for any total order;
-ties never straddle a range boundary when the order key is made unique
-with a tiebreaker column, which every caller here does.
+Ranks are exact for any total order; ties never straddle a range
+boundary when the order key is made unique with a tiebreaker column,
+which every caller here does.
 
 Reference parity: the pandas ``sort_values``/``reset_index`` idiom
 (ETL.py:90,219,311) assumes one in-memory frame; this is its
@@ -29,9 +37,10 @@ from pyspark.sql import functions as F
 
 _PID = "__rank_pid"
 _OFF = "__rank_off"
+_BKT = "__rank_bkt"
 
 # Materialization rule: the range-shuffled intermediate is
-# ``localCheckpoint(eager=True)``, NOT ``persist()``.  The offsets are
+# ``localCheckpoint``ed, NOT ``persist()``ed.  The offsets are
 # collected from one physical partitioning; if a persisted intermediate
 # is ever evicted and recomputed (or AQE re-plans the exchange), the
 # recomputed partition ids can disagree with the collected offsets and
@@ -40,69 +49,26 @@ _OFF = "__rank_off"
 # checkpoint freezes the partitioning for the DataFrame's lifetime, and
 # its blocks are freed by the ContextCleaner when the plan is GC'd, so
 # repeated rank calls don't accumulate storage the way r2's persist
-# leak did.
-
-
-_BKT = "__rank_bkt"
+# leak did.  The lazy forms key offsets on bucket VALUES, which cannot
+# drift, so they need no checkpoint.
 
 
 def global_row_number(
     df: DataFrame,
     order_cols: list[str | Column],
     rn_col: str = "rn",
-    num_partitions: int | None = None,
-    bucket: Column | None = None,
 ) -> tuple[DataFrame, int]:
     """Attach an exact global 1-based ``rn_col`` ordered by ``order_cols``
     (ascending); returns ``(ranked_df, total_rows)``.
 
     Triggers one counting job (the two-pass trade: a #partitions-sized
-    collect instead of a whole-table single-task sort).  The ranked
-    intermediate is persisted so the count pass and the ranked output
-    share the range shuffle.
-
-    ``bucket`` (optional, the r4 fast path): a NON-NULL expression that
-    is MONOTONE NON-DECREASING in the order key (e.g. year*100+month of
-    a leading date column) with modest cardinality.  A NULL bucket is
-    rejected loudly (the offsets join would silently drop those rows);
-    wrap nullable keys in ``coalesce`` or use the generic path.  When
-    given, the
-    partition-offset bookkeeping keys on DATA VALUES instead of
-    physical partition ids: per-bucket counts → exclusive offsets →
-    ``row_number`` within each bucket.  That removes BOTH costs of the
-    generic path — the ``repartitionByRange`` sampling pass over the
-    input and the checkpoint that freezes partition ids (bucket values
-    cannot drift under AQE re-planning or block eviction, so no
-    checkpoint is needed).  Two passes over the input, one hash
-    shuffle, zero sampling jobs."""
+    collect instead of a whole-table single-task sort).  The counting
+    job also materializes the checkpoint, so the count pass and the
+    ranked output share the range shuffle.  Orders with a monotone
+    coarse bucket key should use :func:`global_row_number_lazy`, which
+    needs neither the sampling pass nor the job."""
     spark = df.sparkSession
-    if bucket is not None:
-        tagged = df.withColumn(_BKT, bucket)
-        cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-        raw = tagged.groupBy(_BKT).agg(F.count("*").alias("cnt")).collect()
-        if any(r[_BKT] is None for r in raw):
-            raise ValueError(
-                "global_row_number: bucket expression produced NULL — the "
-                "offsets join would drop those rows; coalesce the bucket "
-                "or use the generic range-shuffle path"
-            )
-        counts = sorted((r[_BKT], r["cnt"]) for r in raw)
-        offsets, acc = [], 0
-        for b, cnt in counts:
-            offsets.append((b, acc))
-            acc += cnt
-        total = acc
-        off_df = F.broadcast(
-            spark.createDataFrame(offsets or [(0, 0)], [_BKT, _OFF])
-        )
-        w = Window.partitionBy(_BKT).orderBy(*cols)
-        ranked = (
-            tagged.join(off_df, _BKT)
-            .withColumn(rn_col, (F.row_number().over(w) + F.col(_OFF)).cast("long"))
-            .drop(_BKT, _OFF)
-        )
-        return ranked, total
-    parts = num_partitions or spark.sparkContext.defaultParallelism
+    parts = spark.sparkContext.defaultParallelism
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     ranged = (
         df.repartitionByRange(parts, *cols)
@@ -151,104 +117,6 @@ def lag_by_rank(
         )
         out = out.join(shifted, rn_col, "inner")
     return out
-
-
-def global_prefix_sum(
-    df: DataFrame,
-    order_cols: list[str | Column],
-    value_col: str,
-    cum_col: str = "cum",
-    num_partitions: int | None = None,
-    bucket: Column | None = None,
-) -> tuple[DataFrame, int]:
-    """Exact global running sum of ``value_col`` (inclusive) over the
-    total order ``order_cols`` — the prefix-sum twin of
-    ``global_row_number``, same two-pass shape:
-
-    1. range-shuffle on the order key (contiguous key ranges),
-    2. per-partition PARTIAL sums (one tiny job, ≤ #partitions rows),
-    3. exclusive offsets broadcast back; within-partition running sum
-       + offset = exact global prefix.
-
-    Works for any associative integer sum; callers keep ``value_col``
-    integral (cents / token counts) so the prefix is exact.  Returns
-    ``(df_with_cum, grand_total)``.
-
-    ``bucket``: same monotone-bucket fast path as ``global_row_number``
-    — data-keyed offsets, no sampling pass, no checkpoint."""
-    spark = df.sparkSession
-    if bucket is not None:
-        tagged = df.withColumn(_BKT, bucket)
-        cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-        raw = (
-            tagged.groupBy(_BKT)
-            .agg(F.sum(value_col).cast("long").alias("s"))
-            .collect()
-        )
-        if any(r[_BKT] is None for r in raw):
-            raise ValueError(
-                "global_prefix_sum: bucket expression produced NULL — the "
-                "offsets join would drop those rows; coalesce the bucket "
-                "or use the generic range-shuffle path"
-            )
-        partials = sorted((r[_BKT], r["s"]) for r in raw)
-        offsets, acc = [], 0
-        for b, s in partials:
-            offsets.append((b, acc))
-            acc += int(s or 0)
-        total = acc
-        off_df = F.broadcast(
-            spark.createDataFrame(offsets or [(0, 0)], [_BKT, _OFF])
-        )
-        w = (
-            Window.partitionBy(_BKT)
-            .orderBy(*cols)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        out = (
-            tagged.join(off_df, _BKT)
-            .withColumn(
-                cum_col,
-                (F.sum(F.col(value_col)).over(w) + F.col(_OFF)).cast("long"),
-            )
-            .drop(_BKT, _OFF)
-        )
-        return out, total
-    parts = num_partitions or spark.sparkContext.defaultParallelism
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    ranged = (
-        df.repartitionByRange(parts, *cols)
-        .withColumn(_PID, F.spark_partition_id())
-        .localCheckpoint(eager=False)
-    )
-    partials = sorted(
-        (r[_PID], r["s"])
-        for r in ranged.groupBy(_PID)
-        .agg(F.sum(value_col).cast("long").alias("s"))
-        .collect()
-    )
-    offsets, acc = [], 0
-    for pid, s in partials:
-        offsets.append((pid, acc))
-        acc += int(s or 0)
-    total = acc
-    off_df = F.broadcast(
-        spark.createDataFrame(offsets or [(0, 0)], f"{_PID} int, {_OFF} long")
-    )
-    w = (
-        Window.partitionBy(_PID)
-        .orderBy(*cols)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    out = (
-        ranged.join(off_df, _PID)
-        .withColumn(
-            cum_col,
-            (F.sum(F.col(value_col)).over(w) + F.col(_OFF)).cast("long"),
-        )
-        .drop(_PID, _OFF)
-    )
-    return out, total
 
 
 def global_row_number_lazy(
@@ -318,61 +186,6 @@ def global_row_number_lazy(
     )
 
 
-def global_prefix_sums_lazy(
-    df: DataFrame,
-    order_cols: list[str | Column],
-    value_cols: list[str],
-    bucket: Column,
-    cum_cols: list[str],
-    broadcast_offsets: bool = True,
-) -> DataFrame:
-    """Multi-value :func:`global_prefix_sum_lazy`: N exact running sums
-    over ONE order in ONE pass — one per-bucket partials aggregate, one
-    offsets window, one data window (r10, guide §2.4: two chained
-    single-value prefix sums re-derive their shared input per pass;
-    fusing them halves the aggregate/window work and the offsets
-    subtree).  Same bucket/NULL/broadcast contracts as the single-value
-    form."""
-    if len(value_cols) != len(cum_cols):
-        raise ValueError("value_cols and cum_cols must pair up")
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    tagged = df.withColumn(_BKT, bucket)
-    partials = tagged.groupBy(_BKT).agg(
-        *[
-            F.sum(F.col(v)).cast("long").alias(f"__s_{i}")
-            for i, v in enumerate(value_cols)
-        ]
-    )
-    w_prior = Window.orderBy(_BKT).rowsBetween(Window.unboundedPreceding, -1)
-    off_names = [f"{_OFF}_{i}" for i in range(len(value_cols))]
-    offs = partials.select(
-        F.col(_BKT),
-        *[
-            F.coalesce(F.sum(f"__s_{i}").over(w_prior), F.lit(0)).alias(o)
-            for i, o in enumerate(off_names)
-        ],
-    )
-    guarded_off0 = F.coalesce(
-        F.col(off_names[0]),
-        F.raise_error(
-            F.lit("global_prefix_sums_lazy: bucket expression produced NULL")
-        ).cast("long"),
-    )
-    w_local = (
-        Window.partitionBy(_BKT)
-        .orderBy(*cols)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    offs_side = F.broadcast(offs) if broadcast_offsets else offs
-    out = tagged.join(offs_side, _BKT, "left")
-    for i, (v, c) in enumerate(zip(value_cols, cum_cols)):
-        off = guarded_off0 if i == 0 else F.col(off_names[i])
-        out = out.withColumn(
-            c, (F.sum(F.col(v)).over(w_local) + off).cast("long")
-        )
-    return out.drop(_BKT, *off_names)
-
-
 def ntile_expr(rn_name: str, n_name: str, k: int):
     """Exact ``ntile(k)`` as a column expression of a global rank and
     total-count column (both attachable action-free by
@@ -396,49 +209,62 @@ def ntile_expr(rn_name: str, n_name: str, k: int):
 def global_prefix_sum_lazy(
     df: DataFrame,
     order_cols: list[str | Column],
-    value_col: str,
+    value_cols: list[str],
     bucket: Column,
-    cum_col: str = "cum",
+    cum_cols: list[str],
     total_col: str | None = None,
-    broadcast_offsets: bool = True,
 ) -> DataFrame:
-    """The prefix-sum twin of :func:`global_row_number_lazy` — ZERO
-    driver actions: per-bucket partial sums, exclusive offsets, and
-    (optionally) the grand total are a bucket-cardinality aggregate
-    SUBTREE broadcast back into the main pass, so the whole running
-    sum is one lazy plan.
+    """Exact inclusive running sums of ``value_cols`` over the total
+    order ``order_cols``, one per ``cum_cols`` name, with ZERO Spark
+    actions: per-bucket partial sums, exclusive offsets and (as
+    ``total_col``) the grand total of ``value_cols[0]`` are a
+    bucket-cardinality aggregate SUBTREE broadcast back into the main
+    pass.  N values share one partials aggregate, one offsets window
+    and one data window (r10, guide §2.4: chained single-value prefix
+    sums re-derive their shared input per pass).  Values are summed as
+    longs, so callers keep them integral (cents, token counts) and the
+    prefix stays exact.
 
     ``bucket`` must be a MONOTONE coarse function of ``order_cols``
-    with bounded cardinality AND roughly even load.  Calendar keys over
+    with bounded cardinality and roughly even load.  Calendar keys over
     a date order qualify, and so do FIXED-WIDTH bands over a bounded,
     size-invariant value RANGE (the ``_rev_cum_lazy`` 2^24 revenue
     bands: band count is range/width regardless of N, and no band
     dominates — assert that with a scaling probe when adopting one).
-    What does NOT qualify is log2/coarse banding over a CONCENTRATED
-    value distribution, where most rows land in one band and its window
-    degenerates to a single task — there, use the eager two-pass
-    ``global_prefix_sum``, whose repartitionByRange samples balanced
-    quantiles.  The offsets window is the sanctioned single-partition
-    window over the per-bucket SUMS, never the data.  NULL buckets
-    trip ``raise_error`` lazily like the row-number twin."""
+    Limit: the within-bucket running sum is one window task per
+    bucket, so a bucket holding most of the rows (log2/coarse banding
+    over a CONCENTRATED value distribution) runs as a single task; this
+    toolkit has no sampled-quantile prefix sum for such orders.  The
+    offsets window is the sanctioned single-partition window over the
+    per-bucket SUMS, never the data.  NULL buckets trip ``raise_error``
+    lazily like :func:`global_row_number_lazy`."""
+    if len(value_cols) != len(cum_cols):
+        raise ValueError("value_cols and cum_cols must pair up")
+    # the first value's internals keep the unsuffixed names
+    sfx = ["" if i == 0 else f"_{i}" for i in range(len(value_cols))]
+    sum_names = [f"__s{s}" for s in sfx]
+    off_names = [f"{_OFF}{s}" for s in sfx]
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     tagged = df.withColumn(_BKT, bucket)
     partials = tagged.groupBy(_BKT).agg(
-        F.sum(F.col(value_col)).cast("long").alias("__s")
+        *[
+            F.sum(F.col(v)).cast("long").alias(s)
+            for v, s in zip(value_cols, sum_names)
+        ]
     )
     w_prior = Window.orderBy(_BKT).rowsBetween(Window.unboundedPreceding, -1)
     w_total = Window.orderBy(_BKT).rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
-    off_cols = [
-        F.col(_BKT),
-        F.coalesce(F.sum("__s").over(w_prior), F.lit(0)).alias(_OFF),
+    off_cols = [F.col(_BKT)] + [
+        F.coalesce(F.sum(s).over(w_prior), F.lit(0)).alias(o)
+        for s, o in zip(sum_names, off_names)
     ]
     if total_col is not None:
-        off_cols.append(F.sum("__s").over(w_total).alias(total_col))
+        off_cols.append(F.sum(sum_names[0]).over(w_total).alias(total_col))
     offs = partials.select(*off_cols)
     guarded_off = F.coalesce(
-        F.col(_OFF),
+        F.col(off_names[0]),
         F.raise_error(
             F.lit("global_prefix_sum_lazy: bucket expression produced NULL")
         ).cast("long"),
@@ -448,17 +274,10 @@ def global_prefix_sum_lazy(
         .orderBy(*cols)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    # broadcast_offsets=False: same escape hatch as the row-number
-    # twin — preparing a lazy-checkpointed plan holding the explicit
-    # hint submits the broadcast future at .rdd construction.
-    offs_side = F.broadcast(offs) if broadcast_offsets else offs
-    return (
-        tagged.join(offs_side, _BKT, "left")
-        .withColumn(
-            cum_col,
-            (F.sum(F.col(value_col)).over(w_local) + guarded_off).cast(
-                "long"
-            ),
+    out = tagged.join(F.broadcast(offs), _BKT, "left")
+    for i, (v, c) in enumerate(zip(value_cols, cum_cols)):
+        off = guarded_off if i == 0 else F.col(off_names[i])
+        out = out.withColumn(
+            c, (F.sum(F.col(v)).over(w_local) + off).cast("long")
         )
-        .drop(_BKT, _OFF)
-    )
+    return out.drop(_BKT, *off_names)

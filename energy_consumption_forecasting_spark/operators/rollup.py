@@ -22,7 +22,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-STAGE = "/root/repo/.stage/rollup"
+from ..queries._util import STAGE_DIR
+
+STAGE = os.path.join(STAGE_DIR, "rollup")
 
 
 def daily_state(lineitem: DataFrame) -> DataFrame:

@@ -422,9 +422,9 @@ def _rev_cum_lazy(rev: DataFrame) -> DataFrame:
     return global_prefix_sum_lazy(
         rev,
         [F.col("rev_e4").desc(), F.col("p")],
-        "rev_e4",
+        ["rev_e4"],
         bucket=-F.expr(f"rev_e4 div {_REV_BAND_E4}"),
-        cum_col="cum",
+        cum_cols=["cum"],
         total_col="total",
     )
 

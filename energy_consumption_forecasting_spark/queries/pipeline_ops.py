@@ -837,8 +837,8 @@ def pipeline_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     cum = global_prefix_sum_lazy(
         toks,
         ["doc_id"],
-        "n_tokens",
-        cum_col="cum",
+        ["n_tokens"],
+        cum_cols=["cum"],
         # doc_id div is monotone: bucket offsets, no sampling pass
         bucket=F.expr("doc_id div 8192"),
     )

@@ -24,9 +24,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import query
-from ._util import tbl
+from ._util import STAGE_DIR, tbl
 
-SINK_DIR = "/root/repo/.stage/s7_partitioned"
+SINK_DIR = f"{STAGE_DIR}/s7_partitioned"
 
 
 def write_partitioned(
@@ -174,7 +174,7 @@ def s13_manifest_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- snapshot time-travel diff ------------------------------------------------------
-DIFF_DIR = "/root/repo/.stage/s15_snapdiff"
+DIFF_DIR = f"{STAGE_DIR}/s15_snapdiff"
 
 
 @query(
@@ -251,7 +251,7 @@ def s15_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- S21: merge-on-read deletion vectors --------------------------------------------
-DV_DIR = "/root/repo/.stage/s21_deletion_vectors"
+DV_DIR = f"{STAGE_DIR}/s21_deletion_vectors"
 
 
 @query(
@@ -332,7 +332,7 @@ def s22_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.versioned import commit_snapshot, merge_upsert, read_snapshot
 
     name = os.path.basename(sf_dir.rstrip("/"))
-    table = f"/root/repo/.stage/s22_upsert/{name}"
+    table = f"{STAGE_DIR}/s22_upsert/{name}"
     shutil.rmtree(table, ignore_errors=True)
     base = tbl(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("k"),

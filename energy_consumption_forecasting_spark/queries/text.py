@@ -1055,8 +1055,8 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_words(doc) is a vocabulary-sized re-group by that first doc —
     identical integers, no corpus-sized join exchange.  The two
     chained prefix sums fuse into ONE pass
-    (``global_prefix_sums_lazy``)."""
-    from ..operators.ranking import global_prefix_sums_lazy
+    (``global_prefix_sum_lazy`` with two values)."""
+    from ..operators.ranking import global_prefix_sum_lazy
 
     docs = tbl(spark, sf_dir, "documents", spread="doc_id").select(
         "doc_id", "text"
@@ -1099,7 +1099,7 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(shared_plan)
     )
     bkt = F.expr("doc_id div 8192")
-    with_both = global_prefix_sums_lazy(
+    with_both = global_prefix_sum_lazy(
         perdoc,
         ["doc_id"],
         ["n_tokens", "new_words"],

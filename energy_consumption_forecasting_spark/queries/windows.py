@@ -3,14 +3,15 @@
 Every window names an explicit partition key and a deterministic total
 order (unique tiebreaker column) — pandas' implicit row order does not
 exist on a distributed engine.  Per-key windows (``partitionBy(user_id)``)
-scale horizontally; the few global-order windows (train/test split, CV
-folds) operate on already-aggregated, calendar-bounded series, so the
-single-partition sort is over thousands of rows, not billions, at any SF.
+scale horizontally.  Global order over a raw fact table (the W3 rank,
+the W6 train/test split, the W7 CV folds) goes through
+``operators/ranking.py`` and ``ml/cv.py``, never a single-partition
+``Window.orderBy``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import query
@@ -93,6 +94,12 @@ def w2_unbounded_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.select("event_id", F.coalesce("v", ff, bf).alias("filled"))
 
 
+def _order_month() -> Column:
+    """Year-month of the order date — monotone in the (date, key) order,
+    so it is the lazy-rank bucket of W3/W6/W7."""
+    return (F.year("o_orderdate") * 100 + F.month("o_orderdate")).cast("long")
+
+
 # --- W3: global time sort (ETL.py:90,219,311) -----------------------------------
 @query(
     "w3_time_sort_rank",
@@ -113,7 +120,7 @@ def w3_time_sort_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = global_row_number_lazy(
         tbl(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate"),
         ["o_orderdate", "o_orderkey"],
-        bucket=(F.year("o_orderdate") * 100 + F.month("o_orderdate")).cast("long"),
+        bucket=_order_month(),
     )
     return ranked.select("o_orderkey", "rn")
 
@@ -130,24 +137,17 @@ def w3_time_sort_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def w6_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Positional 85/15 split on a raw fact table: distributed rank +
-    a literal boundary (ceil(0.85·n) computed from the rank pass's total
-    — same double→ceil arithmetic as the oracle's CEIL(0.85*COUNT(*)))."""
-    from ..operators.ranking import global_row_number_lazy
+    """Positional 85/15 split on a raw fact table: ``ml/cv.label_split``
+    on the lazy bucket rank (year-month of the order date is monotone in
+    the (date, key) order), so the ceil(0.85·n) boundary is a column and
+    no count job runs."""
+    from ..ml.cv import label_split
 
-    ranked = global_row_number_lazy(
+    return label_split(
         tbl(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate"),
         ["o_orderdate", "o_orderkey"],
-        bucket=(F.year("o_orderdate") * 100 + F.month("o_orderdate")).cast("long"),
-        total_col="__n",
-    )
-    # ceil(0.85*n) as a COLUMN (same double->ceil arithmetic as the
-    # oracle's CEIL(0.85*COUNT(*))): no driver-side count job at all
-    thr = F.ceil(0.85 * F.col("__n"))
-    return ranked.select(
-        "o_orderkey",
-        F.when(F.col("rn") <= thr, "train").otherwise("test").alias("split"),
-    )
+        bucket=_order_month(),
+    ).select("o_orderkey", "split")
 
 
 # --- W7: blocked time-series CV folds (utils.py:8-23) -----------------------------
@@ -171,46 +171,18 @@ def w7_blocked_cv_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5 contiguous blocks over time order; last 20% of each block is the
     validation tail (reference utils.py:8-23 BlockingTimeSeriesSplit).
 
-    Scale shape: ONE two-pass distributed rank (operators/ranking.py)
-    on the MONOTONE-BUCKET fast path — year-month of the order date is
-    monotone in the (date, key) order, so offsets key on data values
-    (no range-shuffle sampling pass, no checkpoint, AQE/eviction-proof);
-    the ntile fold, within-fold position, and fold size all derive from
-    the global rank via literal boundaries (standard ntile split: first
-    n%k folds get ⌈n/k⌉ rows) — no single-partition window and no
-    5-giant-partition window either."""
-    from ..operators.ranking import global_row_number_lazy
+    ``ml/cv.label_folds`` on the lazy bucket rank: the ntile fold,
+    within-fold position and fold size all derive from the global rank
+    by integer algebra — no single-partition window, no count job."""
+    from ..ml.cv import label_folds
 
-    k = 5
-    orders = tbl(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    ranked = global_row_number_lazy(
-        orders,
+    return label_folds(
+        tbl(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate"),
         ["o_orderdate", "o_orderkey"],
-        bucket=(F.year("o_orderdate") * 100 + F.month("o_orderdate")).cast("long"),
-        total_col="__n",
-    )
-    # ntile(k) boundaries as COLUMN expressions of (rn, n): the first
-    # n%k folds hold ceil(n/k) rows.  All integer algebra (ceil(a/b) =
-    # (a+b-1) div b), so there is no float boundary to disagree with
-    # the oracle's ntile, and no driver-side count job at all.
-    from ..operators.ranking import ntile_expr
-
-    szf = F.expr(f"__n div {k}")
-    big = F.col("__n") % k
-    fold = ntile_expr("rn", "__n", k)
-    start = (
-        F.least(fold - 1, big) * (szf + 1)
-        + F.greatest(fold - 1 - big, F.lit(0)) * szf
-    )
-    size = szf + F.when(fold <= big, 1).otherwise(0)
-    rank_in_fold = F.col("rn") - start
-    return ranked.select(
-        "o_orderkey",
-        fold.cast("int").alias("fold"),
-        F.when(rank_in_fold > 0.8 * size, "val")
-        .otherwise("train")
-        .alias("role"),
-    )
+        n_folds=5,
+        val_frac=0.2,
+        bucket=_order_month(),
+    ).select("o_orderkey", "fold", "role")
 
 
 _DAILY_DEMAND_SQL = """

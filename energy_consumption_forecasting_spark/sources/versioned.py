@@ -40,11 +40,22 @@ def _read_manifest(table_dir: str) -> list[dict]:
         return json.load(f)
 
 
-def commit_snapshot(df: DataFrame, table_dir: str, note: str = "") -> int:
-    """Write ``df`` as the next version of the table; returns the new
-    version number.  Data lands under ``v=<n>/`` first; the manifest is
-    swapped in atomically afterwards, so concurrent readers either see
-    the old table or the complete new one."""
+def _publish(table_dir: str, manifest: list[dict]) -> None:
+    """Atomically replace the manifest: write a temp file, then
+    ``os.replace`` it over the live one, so a reader sees either the old
+    manifest or the complete new one."""
+    tmp = _manifest_path(table_dir) + f".tmp.{os.getpid()}"
+    with open(tmp, "w") as f:
+        json.dump(manifest, f, indent=1)
+    os.replace(tmp, _manifest_path(table_dir))
+
+
+def _commit(
+    df: DataFrame, table_dir: str, note: str, stats_cols: list[str] | None
+) -> int:
+    """Write ``df`` under ``v=<n>/`` and publish its manifest entry ONCE
+    — with the per-file footer stats already in it when ``stats_cols``
+    is given, so no reader ever sees the version without them."""
     os.makedirs(table_dir, exist_ok=True)
     manifest = _read_manifest(table_dir)
     version = (manifest[-1]["version"] + 1) if manifest else 1
@@ -56,11 +67,32 @@ def commit_snapshot(df: DataFrame, table_dir: str, note: str = "") -> int:
         "committed_at": time.time(),
         "note": note,
     }
-    tmp = _manifest_path(table_dir) + f".tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(manifest + [entry], f, indent=1)
-    os.replace(tmp, _manifest_path(table_dir))
+    if stats_cols is not None:
+        entry["files"] = _file_stats(data_dir, stats_cols)
+    _publish(table_dir, manifest + [entry])
     return version
+
+
+def commit_snapshot(df: DataFrame, table_dir: str, note: str = "") -> int:
+    """Write ``df`` as the next version of the table; returns the new
+    version number.  Data lands under ``v=<n>/`` first; the manifest is
+    swapped in atomically afterwards, so concurrent readers either see
+    the old table or the complete new one."""
+    return _commit(df, table_dir, note, None)
+
+
+def _resolve(table_dir: str, version: int | None) -> dict:
+    """The manifest entry of ``version`` (``None`` → latest)."""
+    manifest = _read_manifest(table_dir)
+    if not manifest:
+        raise FileNotFoundError(f"no committed snapshots under {table_dir}")
+    if version is None:
+        return manifest[-1]
+    matches = [e for e in manifest if e["version"] == version]
+    if not matches:
+        known = [e["version"] for e in manifest]
+        raise ValueError(f"version {version} not in {known}")
+    return matches[0]
 
 
 def read_snapshot(
@@ -72,17 +104,7 @@ def read_snapshot(
     (``delete_where``), the deleted (file, row) positions are
     anti-joined out at read time — the Iceberg v2 / Delta
     deletion-vector pattern, so a DELETE never rewrites data files."""
-    manifest = _read_manifest(table_dir)
-    if not manifest:
-        raise FileNotFoundError(f"no committed snapshots under {table_dir}")
-    if version is None:
-        entry = manifest[-1]
-    else:
-        matches = [e for e in manifest if e["version"] == version]
-        if not matches:
-            known = [e["version"] for e in manifest]
-            raise ValueError(f"version {version} not in {known}")
-        entry = matches[0]
+    entry = _resolve(table_dir, version)
     paths = [os.path.join(table_dir, d) for d in _entry_dirs(entry)]
     df = spark.read.parquet(*paths)
     dels = entry.get("deletes") or []
@@ -180,10 +202,7 @@ def delete_where(
         "note": note,
         "deletes": prior + [dv_dir],
     }
-    tmp = _manifest_path(table_dir) + f".tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(manifest + [entry], f, indent=1)
-    os.replace(tmp, _manifest_path(table_dir))
+    _publish(table_dir, manifest + [entry])
     return version
 
 
@@ -266,10 +285,7 @@ def merge_upsert(
         "note": note,
         "deletes": prior + [dv_dir],
     }
-    tmp = _manifest_path(table_dir) + f".tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(manifest + [entry], f, indent=1)
-    os.replace(tmp, _manifest_path(table_dir))
+    _publish(table_dir, manifest + [entry])
     return version
 
 
@@ -301,10 +317,7 @@ def vacuum(table_dir: str, keep_last: int = 2) -> list[int]:
     if len(manifest) <= keep_last:
         return []
     dropped, kept = manifest[:-keep_last], manifest[-keep_last:]
-    tmp = _manifest_path(table_dir) + f".tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(kept, f, indent=1)
-    os.replace(tmp, _manifest_path(table_dir))
+    _publish(table_dir, kept)
     # Delete-versions SHARE their base version's data directory and
     # their delete files may still be referenced by newer versions —
     # only remove directories no surviving entry references.
@@ -380,15 +393,7 @@ def commit_snapshot_with_stats(
     clustered = df.repartitionByRange(cluster_files, *stats_cols[:1]).sortWithinPartitions(
         *stats_cols[:1]
     )
-    version = commit_snapshot(clustered, table_dir, note=note)
-    manifest = _read_manifest(table_dir)
-    entry = next(e for e in manifest if e["version"] == version)
-    entry["files"] = _file_stats(os.path.join(table_dir, entry["dir"]), stats_cols)
-    tmp = _manifest_path(table_dir) + f".tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1)
-    os.replace(tmp, _manifest_path(table_dir))
-    return version
+    return _commit(clustered, table_dir, note, stats_cols)
 
 
 def read_snapshot_pruned(
@@ -405,12 +410,7 @@ def read_snapshot_pruned(
     correctly).  Returns (df, files_read, files_total); the caller still
     applies the row-level filter — skipping is a superset guarantee,
     exactly like Iceberg manifest pruning."""
-    manifest = _read_manifest(table_dir)
-    if not manifest:
-        raise FileNotFoundError(f"no committed snapshots under {table_dir}")
-    entry = manifest[-1] if version is None else next(
-        e for e in manifest if e["version"] == version
-    )
+    entry = _resolve(table_dir, version)
     files = entry.get("files") or []
     if not files:
         raise ValueError("snapshot has no manifest stats; use read_snapshot")

@@ -7,7 +7,9 @@ from contextlib import contextmanager
 import pytest
 
 # the checkout this conftest belongs to, wherever it is
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TOOLS_DIR = os.path.join(REPO, "tools")
+sys.path.insert(0, REPO)
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"

@@ -26,7 +26,7 @@ from energy_consumption_forecasting_spark.queries.ml_queries import (
     m1_minmax_scale,
     m2_standard_scale,
 )
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, TOOLS_DIR
 
 
 @pytest.fixture(scope="module")
@@ -247,7 +247,7 @@ def test_label_folds_raw_frame_never_single_partitions(spark):
     hard guard does."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS_DIR)
     from plan_audit import audit_unpartitioned_windows
 
     raw = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")

@@ -10,7 +10,7 @@ import re
 
 import pytest
 
-from tests.conftest import SF_SMALL, pinned_budget, pinned_conf
+from tests.conftest import SF_SMALL, TOOLS_DIR, pinned_budget, pinned_conf
 
 
 def _plan(spark, name: str, budget: int | None = None) -> str:
@@ -141,7 +141,7 @@ def test_unpartitioned_window_guard(spark):
     raw table, tolerated above an Aggregate or a literal frame."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS_DIR)
     from plan_audit import audit_unpartitioned_windows
 
     from pyspark.sql import Window
@@ -180,7 +180,7 @@ def test_unpartitioned_window_guard_rdd_leaf_attribution(spark):
     window over it."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS_DIR)
     from plan_audit import audit_unpartitioned_windows
 
     from pyspark.sql import Window
@@ -230,7 +230,7 @@ def test_calendar_bounded_window_contract_all_queries(spark):
     any of these windows at a raw fact table and this fails."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS_DIR)
     from plan_audit import audit_unpartitioned_windows
 
     from energy_consumption_forecasting_spark.queries import load_all

@@ -267,18 +267,25 @@ def test_two_pass_rank_property(spark, rows):
     )
 )
 def test_global_prefix_sum_property(spark, rows):
-    """operators/ranking.global_prefix_sum must equal a single-partition
+    """operators/ranking.global_prefix_sum_lazy must equal a Python
     running sum over the same total order, on any data (ties, skew)."""
     from energy_consumption_forecasting_spark.operators.ranking import (
-        global_prefix_sum,
+        global_prefix_sum_lazy,
     )
 
     df = spark.createDataFrame(
         [(i, k, v) for i, (k, v) in enumerate(rows)], "uid long, k long, v long"
     ).repartition(7)
-    summed, total = global_prefix_sum(df, ["k", "uid"], "v", cum_col="cum")
-    assert total == sum(v for _, v in rows)
-    got = {(r.k, r.uid): r.cum for r in summed.collect()}
+    summed = global_prefix_sum_lazy(
+        df,
+        ["k", "uid"],
+        ["v"],
+        bucket=F.expr("k div 8"),
+        cum_cols=["cum"],
+        total_col="total",
+    ).collect()
+    assert {r.total for r in summed} == {sum(v for _, v in rows)}
+    got = {(r.k, r.uid): r.cum for r in summed}
     acc = 0
     for i, (k, v) in sorted(enumerate(rows), key=lambda t: (t[1][0], t[0])):
         acc += v
@@ -286,13 +293,15 @@ def test_global_prefix_sum_property(spark, rows):
 
 
 def test_bucket_rank_matches_range_rank(spark):
-    """The monotone-bucket fast path produces the identical global rank
-    and prefix sum as the generic range-shuffle path."""
+    """The monotone-bucket lazy path produces the identical global rank
+    as the generic range-shuffle path, and its prefix sum equals a
+    Python running sum."""
     from pyspark.sql import functions as F
 
     from energy_consumption_forecasting_spark.operators.ranking import (
-        global_prefix_sum,
+        global_prefix_sum_lazy,
         global_row_number,
+        global_row_number_lazy,
     )
 
     # k must be UNIQUE: 37 is invertible mod the prime 5003 and
@@ -304,10 +313,11 @@ def test_bucket_rank_matches_range_rank(spark):
         (F.col("id") % 13).cast("long").alias("v"),
     )
     base, n0 = global_row_number(df, ["k"], rn_col="rn")
-    fast, n1 = global_row_number(
-        df, ["k"], rn_col="rn", bucket=F.expr("k div 256")
+    fast = global_row_number_lazy(
+        df, ["k"], bucket=F.expr("k div 256"), rn_col="rn", total_col="n"
     )
-    assert n0 == n1 == 5000
+    assert n0 == 5000
+    assert {r.n for r in fast.select("n").distinct().collect()} == {5000}
     assert (
         base.select("k", "rn")
         .exceptAll(fast.select("k", "rn"))
@@ -315,38 +325,27 @@ def test_bucket_rank_matches_range_rank(spark):
         == 0
     )
 
-    c0, t0 = global_prefix_sum(df, ["k"], "v", cum_col="c")
-    c1, t1 = global_prefix_sum(
-        df, ["k"], "v", cum_col="c", bucket=F.expr("k div 256")
-    )
-    assert t0 == t1
-    assert c0.select("k", "c").exceptAll(c1.select("k", "c")).count() == 0
-
-
-def test_bucket_rank_rejects_null_bucket(spark):
-    """A NULL bucket would be silently dropped by the offsets join, so
-    the fast path must refuse it loudly."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from energy_consumption_forecasting_spark.operators.ranking import (
-        global_prefix_sum,
-        global_row_number,
-    )
-
-    df = spark.range(0, 10).select(
-        F.when(F.col("id") < 5, F.col("id")).alias("k"),
-        F.lit(1).cast("long").alias("v"),
-    )
-    with pytest.raises(ValueError, match="NULL"):
-        global_row_number(df, ["k"], bucket=F.col("k") % 2).collect()  # type: ignore[union-attr]
-    with pytest.raises(ValueError, match="NULL"):
-        global_prefix_sum(df, ["k"], "v", bucket=F.col("k") % 2)
+    c1 = global_prefix_sum_lazy(
+        df,
+        ["k"],
+        ["v"],
+        bucket=F.expr("k div 256"),
+        cum_cols=["c"],
+        total_col="t",
+    ).collect()
+    want, acc = {}, 0
+    for i in sorted(range(5000), key=lambda i: i * 37 % 5003):
+        acc += i % 13
+        want[i * 37 % 5003] = acc
+    assert {r.k: r.c for r in c1} == want
+    assert {r.t for r in c1} == {acc}
 
 
 def test_lazy_bucket_rank_matches_eager(spark):
-    """global_row_number_lazy == the eager bucket path: same ranks, and
-    the total column equals the driver-side total."""
+    """global_row_number_lazy == the generic two-pass rank and a
+    single-partition ``orderBy`` rank, and the total column equals the
+    counted total."""
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from energy_consumption_forecasting_spark.operators.ranking import (
@@ -357,15 +356,15 @@ def test_lazy_bucket_rank_matches_eager(spark):
     df = spark.range(0, 5000).select(
         (F.col("id") * 37 % 5003).alias("k"),
     )
-    eager, n = global_row_number(
-        df, ["k"], rn_col="rn", bucket=F.expr("k div 256")
-    )
+    eager, n = global_row_number(df, ["k"], rn_col="rn")
     lazy = global_row_number_lazy(
         df, ["k"], bucket=F.expr("k div 256"), rn_col="rn", total_col="nt"
     )
     assert (
         eager.select("k", "rn").exceptAll(lazy.select("k", "rn")).count() == 0
     )
+    single = df.select("k", F.row_number().over(Window.orderBy("k")).alias("rn"))
+    assert single.exceptAll(lazy.select("k", "rn")).count() == 0
     totals = lazy.select("nt").distinct().collect()
     assert len(totals) == 1 and totals[0].nt == n == 5000
 
@@ -910,31 +909,31 @@ def test_ks_statistic_matches_reference(spark, samples):
 
 def test_global_prefix_sum_lazy_matches_eager_and_guards_nulls(spark):
     """The zero-action lazy prefix sum (round-6) must produce the exact
-    running totals of the two-pass eager form under a monotone bucket,
+    running totals of a Python running sum under a monotone bucket,
     launch no jobs at construction, and trip raise_error on NULL
     buckets instead of silently dropping rows."""
     import pytest
     from pyspark.sql import functions as F
 
     from energy_consumption_forecasting_spark.operators.ranking import (
-        global_prefix_sum,
         global_prefix_sum_lazy,
     )
 
-    df = spark.createDataFrame(
-        [(i, (i * 37) % 101 + 1) for i in range(500)], "k int, v int"
-    )
-    eager, total = global_prefix_sum(df, ["k"], "v", cum_col="cum")
-    want = {r["k"]: r["cum"] for r in eager.collect()}
+    vals = [(i * 37) % 101 + 1 for i in range(500)]
+    df = spark.createDataFrame(list(enumerate(vals)), "k int, v int")
+    want, total = {}, 0
+    for k, v in enumerate(vals):
+        total += v
+        want[k] = total
 
     dag = spark.sparkContext._jsc.sc().dagScheduler()
     before = dag.numTotalJobs()
     lazy = global_prefix_sum_lazy(
         df,
         ["k"],
-        "v",
+        ["v"],
         bucket=F.expr("k div 64"),
-        cum_col="cum",
+        cum_cols=["cum"],
         total_col="tot",
     )
     assert dag.numTotalJobs() == before, "lazy prefix sum ran a job"
@@ -945,23 +944,22 @@ def test_global_prefix_sum_lazy_matches_eager_and_guards_nulls(spark):
     bad = global_prefix_sum_lazy(
         df.withColumn("b", F.when(F.col("k") < 499, F.expr("k div 64"))),
         ["k"],
-        "v",
+        ["v"],
         bucket=F.col("b"),
-        cum_col="cum",
+        cum_cols=["cum"],
     )
     with pytest.raises(Exception, match="bucket expression produced NULL"):
         bad.collect()
 
 
 def test_global_prefix_sums_lazy_matches_chained_singles(spark):
-    """The fused multi-value lazy prefix sum (r10) must equal two
-    chained single-value lazy prefix sums value-for-value, and stay
-    zero-job at construction."""
+    """One two-value lazy prefix sum (r10 fusion) must equal two
+    chained single-value calls value-for-value, and stay zero-job at
+    construction."""
     from pyspark.sql import functions as F
 
     from energy_consumption_forecasting_spark.operators.ranking import (
         global_prefix_sum_lazy,
-        global_prefix_sums_lazy,
     )
 
     df = spark.createDataFrame(
@@ -970,17 +968,17 @@ def test_global_prefix_sums_lazy_matches_chained_singles(spark):
     )
     bkt = F.expr("k div 64")
     chained = global_prefix_sum_lazy(
-        global_prefix_sum_lazy(df, ["k"], "v", bucket=bkt, cum_col="cv"),
+        global_prefix_sum_lazy(df, ["k"], ["v"], bucket=bkt, cum_cols=["cv"]),
         ["k"],
-        "w",
+        ["w"],
         bucket=bkt,
-        cum_col="cw",
+        cum_cols=["cw"],
     )
     want = {r["k"]: (r["cv"], r["cw"]) for r in chained.collect()}
 
     dag = spark.sparkContext._jsc.sc().dagScheduler()
     before = dag.numTotalJobs()
-    fused = global_prefix_sums_lazy(
+    fused = global_prefix_sum_lazy(
         df, ["k"], ["v", "w"], bucket=bkt, cum_cols=["cv", "cw"]
     )
     assert dag.numTotalJobs() == before, "fused prefix sums ran a job"

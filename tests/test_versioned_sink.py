@@ -325,3 +325,40 @@ def test_merge_upsert_rejects_duplicate_update_keys(spark):
     )
     with pytest.raises(ValueError, match="multiple rows for key"):
         merge_upsert(spark, table, dup_null, ["k"])
+
+
+def test_stats_commit_failure_publishes_no_version(spark, tmp_path, monkeypatch):
+    """commit_snapshot_with_stats publishes its manifest entry once,
+    stats included: a failure while reading the footers leaves the
+    table's versions unchanged instead of exposing a version that has
+    no stats."""
+    from energy_consumption_forecasting_spark.sources import versioned
+
+    table = str(tmp_path / "stats_fail")
+    commit_snapshot(spark.range(3).withColumnRenamed("id", "k"), table)
+
+    def fail(*_args, **_kw):
+        raise OSError("footer read failed")
+
+    monkeypatch.setattr(versioned, "_file_stats", fail)
+    with pytest.raises(OSError, match="footer read failed"):
+        versioned.commit_snapshot_with_stats(
+            spark.range(6).withColumnRenamed("id", "k"),
+            table,
+            stats_cols=["k"],
+            cluster_files=2,
+        )
+    assert versions(table) == [1]
+
+
+def test_pruned_read_unknown_version_raises_value_error(spark, tmp_path):
+    """read_snapshot_pruned resolves versions like read_snapshot: an
+    unknown version is a ValueError naming the known ones."""
+    from energy_consumption_forecasting_spark.sources.versioned import (
+        read_snapshot_pruned,
+    )
+
+    table = str(tmp_path / "pruned_unknown")
+    commit_snapshot(spark.range(4).withColumnRenamed("id", "k"), table)
+    with pytest.raises(ValueError, match=r"version 9 not in \[1\]"):
+        read_snapshot_pruned(spark, table, "k", 0, 1, version=9)

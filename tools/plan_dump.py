@@ -2,6 +2,10 @@
 plan evidence for before/after snapshots from any git state,
 independent of host load.
 
+Exchange ``[plan_id=N]`` values come from a process-global counter, so
+they differ between runs of the same code; every dump writes them
+masked as ``plan_id=N`` so two dumps compare byte for byte.
+
 Usage:
     python tools/plan_dump.py --tag before [--sf DIR] [--out DIR] q1 q2 ...
 """
@@ -10,11 +14,19 @@ from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tools"))
+
+_PLAN_ID = re.compile(r"plan_id=\d+")
+
+
+def mask_plan_ids(plan: str) -> str:
+    """Replace every run-dependent ``plan_id=<digits>`` with ``plan_id=N``."""
+    return _PLAN_ID.sub("plan_id=N", plan)
 
 
 def main() -> int:
@@ -38,7 +50,7 @@ def main() -> int:
         )
         path = os.path.join(args.out, f"{name}_{args.tag}.txt")
         with open(path, "w") as f:
-            f.write(plan)
+            f.write(mask_plan_ids(plan))
         print(f"wrote {path}")
     return 0
 
