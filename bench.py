@@ -1,7 +1,8 @@
 """Headline benchmark: runs the flagship queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ..., "master": ...,
+"default_parallelism": ...}.
 
 Execution is measured with the noop sink (full plan runs, no driver
 collect) after a warm-up pass of the session.
@@ -306,6 +307,8 @@ def main() -> None:
                 "loadavg_per_pass": loadavg,
                 "reps": reps,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+                "master": spark.sparkContext.master,
+                "default_parallelism": spark.sparkContext.defaultParallelism,
             }
         )
     )

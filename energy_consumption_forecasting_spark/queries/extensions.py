@@ -727,14 +727,14 @@ def stream_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_utc(spark)
     state_dir = tempfile.mkdtemp(prefix="ecf_srccap_state_")
     try:
-        # materialize (kept set: sources × cap rows) so the ephemeral
+        # the drain's result never reads state_dir, so the ephemeral
         # state table can be reclaimed before returning
         return run_source_cap_available_now(
             spark,
             sf_dir.rstrip("/"),
             state_dir,
             glob="documents.parquet",
-        ).localCheckpoint(eager=True)
+        )
     finally:
         shutil.rmtree(state_dir, ignore_errors=True)
 

@@ -940,7 +940,24 @@ def pipeline_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- per-source frequency capping --------------------------------------------------
 SOURCE_CAP = 15  # max documents retained per source/domain
-_CAP_SALTS = 8  # sub-buckets per source in the partial top-k pass
+
+# The per-source top-k of ``pipeline_source_cap`` and of the stream
+# fold's batch delta (streaming/source_cap_stream.py), over a frame
+# ``{docs}`` with (source, doc_id, text): one row per kept document
+# with its content-hash key ``k`` and its ``keep_rank``.
+TOPK_SQL = f"""
+    SELECT source, doc_id, k, keep_rank FROM (
+      SELECT source, doc_id, k,
+             CAST(row_number() OVER (PARTITION BY source ORDER BY k) AS INT)
+               AS keep_rank
+      FROM (
+        SELECT source, doc_id,
+               md5(COALESCE(text, '')) || '-'
+                 || lpad(CAST(doc_id AS STRING), 12, '0') AS k
+        FROM {{docs}}
+      )
+    ) WHERE keep_rank <= {SOURCE_CAP}
+    """
 
 
 SOURCE_CAP_ORACLE = f"""
@@ -968,41 +985,18 @@ def pipeline_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     web-corpus pipeline applies before mixing (over-crawled domains
     would otherwise dominate the token budget).
 
-    Plan — skew-spread two-level top-k: level 1 ranks inside
-    (source, salt) sub-buckets and keeps only the {SOURCE_CAP}
-    smallest keys, so a mega-domain's sort is spread across
-    ``_CAP_SALTS`` tasks and each is a SORT-based window (spills to
-    disk under pressure — unlike a collect_list aggregate, which
-    buffers every key in memory before any truncation); level 2 ranks
-    the survivors per source over at most salts × cap rows — a
-    provably tiny partition.  The sort key is md5(text) ‖ zero-padded
-    doc_id (NULL text coalesces to '' on both engines so no row can
-    vanish from one side only).  Exactness: the global top-cap keys
-    each rank ≤ cap within their own sub-bucket, so level 1 never
-    discards a winner."""
-    from pyspark.sql import Window
-
-    docs = tbl(spark, sf_dir, "documents").select(
-        "source",
-        "doc_id",
-        F.concat(
-            F.md5(F.coalesce(F.col("text"), F.lit(""))),
-            F.lit("-"),
-            F.lpad(F.col("doc_id").cast("string"), 12, "0"),
-        ).alias("k"),
-        F.pmod(F.xxhash64("doc_id"), F.lit(_CAP_SALTS)).alias("salt"),
-    )
-    w1 = Window.partitionBy("source", "salt").orderBy("k")
-    pruned = (
-        docs.withColumn("__r1", F.row_number().over(w1))
-        .filter(F.col("__r1") <= SOURCE_CAP)
-    )
-    w2 = Window.partitionBy("source").orderBy("k")
-    return (
-        pruned.withColumn("keep_rank", F.row_number().over(w2).cast("int"))
-        .filter(F.col("keep_rank") <= SOURCE_CAP)
-        .select("source", "keep_rank", "doc_id")
-    )
+    Plan — one ``row_number() OVER (PARTITION BY source ORDER BY k)
+    <= cap`` window (``TOPK_SQL``, shared with the stream fold).  The
+    planner turns the rank filter into a ``WindowGroupLimit``: its
+    Partial half runs in every map task below the one exchange and
+    keeps at most cap rows per source there, so a mega-domain ships
+    at most tasks × cap rows, and the Final half ranks a provably tiny
+    partition.  Both halves are sort-based (they spill under pressure,
+    unlike a collect_list aggregate that buffers every key).  The sort
+    key is md5(text) ‖ zero-padded doc_id (NULL text coalesces to ''
+    on both engines so no row can vanish from one side only)."""
+    docs = tbl(spark, sf_dir, "documents")
+    return spark.sql(TOPK_SQL, docs=docs).select("source", "keep_rank", "doc_id")
 
 
 # --- chunking as a Python UDTF (the §2.8 table-function surface, gated) ---------------

@@ -105,12 +105,10 @@ def read_snapshot(
     anti-joined out at read time — the Iceberg v2 / Delta
     deletion-vector pattern, so a DELETE never rewrites data files."""
     entry = _resolve(table_dir, version)
-    paths = [os.path.join(table_dir, d) for d in _entry_dirs(entry)]
-    df = spark.read.parquet(*paths)
-    dels = entry.get("deletes") or []
-    if not dels:
-        return df
-    return _apply_deletes(spark, table_dir, df, dels)
+    if not entry.get("deletes"):
+        paths = [os.path.join(table_dir, d) for d in _entry_dirs(entry)]
+        return spark.read.parquet(*paths)
+    return _live_rows(spark, table_dir, entry).drop("__dv_file", "__dv_pos")
 
 
 def _entry_dirs(entry: dict) -> list[str]:
@@ -133,21 +131,23 @@ def _with_positions(df: DataFrame) -> DataFrame:
     )
 
 
-def _apply_deletes(
-    spark: SparkSession, table_dir: str, df: DataFrame, dels: list[str]
-) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    dv = spark.read.parquet(*[os.path.join(table_dir, d) for d in dels])
-    tagged = _with_positions(df)
-    return (
-        tagged.join(
-            dv,
-            (tagged["__dv_file"] == dv["file_path"])
-            & (tagged["__dv_pos"] == dv["pos"]),
-            "left_anti",
+def _live_rows(spark: SparkSession, table_dir: str, entry: dict) -> DataFrame:
+    """The live rows of snapshot ``entry`` with their positions
+    (``_with_positions``): its data directories' rows, anti-joined
+    against every position-delete file the snapshot carries."""
+    raw = _with_positions(
+        spark.read.parquet(
+            *[os.path.join(table_dir, d) for d in _entry_dirs(entry)]
         )
-        .drop("__dv_file", "__dv_pos")
+    )
+    dels = entry.get("deletes") or []
+    if not dels:
+        return raw
+    dv = spark.read.parquet(*[os.path.join(table_dir, d) for d in dels])
+    return raw.join(
+        dv,
+        (raw["__dv_file"] == dv["file_path"]) & (raw["__dv_pos"] == dv["pos"]),
+        "left_anti",
     )
 
 
@@ -175,19 +175,7 @@ def delete_where(
         raise FileNotFoundError(f"no committed snapshots under {table_dir}")
     last = manifest[-1]
     prior = last.get("deletes") or []
-    raw = _with_positions(
-        spark.read.parquet(
-            *[os.path.join(table_dir, d) for d in _entry_dirs(last)]
-        )
-    )
-    if prior:
-        dv = spark.read.parquet(*[os.path.join(table_dir, d) for d in prior])
-        raw = raw.join(
-            dv,
-            (raw["__dv_file"] == dv["file_path"])
-            & (raw["__dv_pos"] == dv["pos"]),
-            "left_anti",
-        )
+    raw = _live_rows(spark, table_dir, last)
     new_dels = raw.filter(predicate).select(
         F.col("__dv_file").alias("file_path"), F.col("__dv_pos").alias("pos")
     )
@@ -233,19 +221,7 @@ def merge_upsert(
         raise FileNotFoundError(f"no committed snapshots under {table_dir}")
     last = manifest[-1]
     prior = last.get("deletes") or []
-    raw = _with_positions(
-        spark.read.parquet(
-            *[os.path.join(table_dir, d) for d in _entry_dirs(last)]
-        )
-    )
-    if prior:
-        dv = spark.read.parquet(*[os.path.join(table_dir, d) for d in prior])
-        raw = raw.join(
-            dv,
-            (raw["__dv_file"] == dv["file_path"])
-            & (raw["__dv_pos"] == dv["pos"]),
-            "left_anti",
-        )
+    raw = _live_rows(spark, table_dir, last)
     # MERGE INTO semantics: multiple source rows matching one target key
     # is an error (ANSI "multiple matches"), and silently appending both
     # would land duplicate rows since the append side is written as-is.

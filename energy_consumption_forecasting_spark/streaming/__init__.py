@@ -82,21 +82,33 @@ def _available_now(
     """Run ``sink(stream_df.writeStream, ckpt)`` to completion under an
     availableNow trigger, then yield the checkpoint path.
 
-    The one place a stream is started: the state width (``partitions``,
-    default ``STREAM_STATE_PARTITIONS``) is pinned at start
-    (``pinned_stream_partitions``), and a checkpoint this runner
+    The one place a stream is started: the state width is pinned at
+    start (``pinned_stream_partitions``), and a checkpoint this runner
     made is a tempdir removed when the ``with`` block exits, so a
     caller may still read it (state-store tails) inside the block.  A
     caller-supplied ``checkpoint_dir`` is the caller's and is kept
-    (resume contract)."""
+    (resume contract).
+
+    Width: an explicit ``partitions`` wins.  Otherwise a checkpoint
+    this runner makes is sized to the host,
+    ``min(defaultParallelism, STREAM_STATE_PARTITIONS)`` — it never
+    outlives the drain, so no later run meets a different width, and
+    each stateful operator opens and commits one store per partition
+    per micro-batch, so stores beyond the task slots are pure fixed
+    cost.  A caller-supplied checkpoint keeps
+    ``STREAM_STATE_PARTITIONS``: Spark bakes the width into a durable
+    checkpoint at its first start, so it must not follow the host."""
     import shutil
     import tempfile
 
+    spark = stream_df.sparkSession
+    if partitions is None:
+        partitions = STREAM_STATE_PARTITIONS
+        if checkpoint_dir is None:
+            partitions = min(spark.sparkContext.defaultParallelism, partitions)
     ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="ecf_stream_ckpt_")
     try:
-        with pinned_stream_partitions(
-            stream_df.sparkSession, partitions or STREAM_STATE_PARTITIONS
-        ):
+        with pinned_stream_partitions(spark, partitions):
             (
                 sink(stream_df.writeStream, ckpt)
                 .option("checkpointLocation", ckpt)
@@ -140,7 +152,7 @@ def drain_available_now(
     # matching small width — a cardinality-derived constant, valid at
     # any corpus scale (r10: the w18 drain's 32 near-empty stores were
     # ~0.7 s of pure store open/commit per batch).  Unbounded-keyspace
-    # gates keep STREAM_STATE_PARTITIONS.
+    # gates keep the runner's host-sized default.
     spark = stream_df.sparkSession
     name = f"{sink_prefix}_{uuid.uuid4().hex[:8]}"
     try:

@@ -18,47 +18,35 @@ state + lineage-scoped txn keys give exactly-once folds under replay
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import os
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# one source of truth with the batch operator
+from ..queries.pipeline_ops import SOURCE_CAP, TOPK_SQL
 from ..sources.versioned import (
     commit_snapshot,
     read_snapshot,
+    snapshots,
     vacuum,
     versions,
 )
 from .source import docs_stream
 
-from ..queries.pipeline_ops import SOURCE_CAP, _CAP_SALTS as _SALTS  # noqa: E501  shared with the batch operator — one source of truth
+_RESULT_SCHEMA = "source string, keep_rank int, doc_id long"
 
 
 def _batch_topk(batch: DataFrame) -> DataFrame:
-    """(source, ks array<string>) — the batch's own cap-smallest keys,
-    via the same two-level window rank as the batch operator."""
-    docs = batch.select(
-        "source",
-        "doc_id",
-        F.concat(
-            F.md5(F.coalesce(F.col("text"), F.lit(""))),
-            F.lit("-"),
-            F.lpad(F.col("doc_id").cast("string"), 12, "0"),
-        ).alias("k"),
-        F.pmod(F.xxhash64("doc_id"), F.lit(_SALTS)).alias("salt"),
-    )
-    w1 = Window.partitionBy("source", "salt").orderBy("k")
-    pruned = docs.withColumn("__r1", F.row_number().over(w1)).filter(
-        F.col("__r1") <= SOURCE_CAP
-    )
+    """(source, ks array<struct<k, doc_id>>) — the batch's own
+    cap-smallest keys, via the batch operator's window top-k."""
+    top = batch.sparkSession.sql(TOPK_SQL, docs=batch)
     # state carries (k, doc_id) STRUCTS: sorting/dedup still key on k
     # (struct order is field-by-field and k embeds doc_id uniquely),
     # and the exact doc_id rides along — re-parsing it out of the
     # string breaks for negative or >= 1e12 ids.
-    return pruned.groupBy("source").agg(
-        F.slice(
-            F.array_sort(F.collect_list(F.struct("k", "doc_id"))),
-            1,
-            SOURCE_CAP,
-        ).alias("ks")
+    return top.groupBy("source").agg(
+        F.array_sort(F.collect_list(F.struct("k", "doc_id"))).alias("ks")
     )
 
 
@@ -125,19 +113,82 @@ def run_source_cap_available_now(
     if not versions(table_dir):
         # zero batches drained (empty source): the batch op returns an
         # empty frame, so the stream gate must too
-        return spark.createDataFrame(
-            [], "source string, keep_rank int, doc_id long"
-        )
-    state = read_snapshot(spark, table_dir)
-    out = state.select(
-        "source", F.posexplode("ks").alias("pos", "e")
-    ).select(
-        "source",
-        (F.col("pos") + 1).cast("int").alias("keep_rank"),
-        F.col("e.doc_id").alias("doc_id"),
-    )
+        return spark.createDataFrame([], _RESULT_SCHEMA)
+    out = _read_final_state(spark, table_dir)
     # gate hygiene: intermediate snapshots are dead once the final
     # state is read — keep only the newest (the drain is gate-only;
     # a production deployment owns its table_dir lifecycle)
     vacuum(table_dir, keep_last=1)
     return out
+
+
+def _read_final_state(spark: SparkSession, table_dir: str) -> DataFrame:
+    """The latest snapshot exploded to (source, keep_rank, doc_id), as
+    a frame that no longer reads ``table_dir``.
+
+    The state is sources × cap keys, so it is usually tiny: when its
+    parquet footers put it under the broadcast budget it is read and
+    exploded on the driver with pyarrow and returned as an Arrow local
+    relation — no Spark job.  Above the budget, or when the footers
+    cannot be probed, Spark reads and explodes it and
+    ``localCheckpoint`` materializes the result."""
+    from ..session import broadcast_budget
+
+    # the fold commits whole snapshots (commit_snapshot): one data
+    # directory per version and no delete files
+    path = os.path.join(table_dir, snapshots(table_dir)[-1]["dir"])
+    if _fits(path, broadcast_budget(spark)):
+        return spark.createDataFrame(_explode_on_driver(path), _RESULT_SCHEMA)
+    state = read_snapshot(spark, table_dir)
+    return (
+        state.select("source", F.posexplode("ks").alias("pos", "e"))
+        .select(
+            "source",
+            (F.col("pos") + 1).cast("int").alias("keep_rank"),
+            F.col("e.doc_id").alias("doc_id"),
+        )
+        .localCheckpoint(eager=True)
+    )
+
+
+def _fits(path: str, budget: int) -> bool:
+    """Whether the uncompressed size the parquet footers of ``path``
+    report is under ``budget`` bytes (-1: nothing fits); False when
+    ``tables._part_footers`` cannot probe the path."""
+    from ..tables import _part_footers
+
+    footers = _part_footers(path)
+    if footers is None or budget < 0:
+        return False
+    size = 0
+    for meta in footers:
+        size += sum(
+            meta.row_group(i).total_byte_size for i in range(meta.num_row_groups)
+        )
+        if size >= budget:
+            return False
+    return True
+
+
+def _explode_on_driver(path: str):
+    """posexplode of a state snapshot in pyarrow: one row per kept key,
+    ``keep_rank`` its 1-based position in the sorted ``ks``."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    state = pq.read_table(path, columns=["source", "ks"])
+    ks = state.column("ks").combine_chunks()
+    parent = pc.list_parent_indices(ks).to_numpy()
+    lengths = pc.list_value_length(ks).fill_null(0).to_numpy()
+    starts = np.cumsum(lengths) - lengths
+    return pa.table(
+        {
+            "source": state.column("source").take(parent),
+            "keep_rank": pa.array(
+                np.arange(len(parent)) - starts[parent] + 1, pa.int32()
+            ),
+            "doc_id": ks.flatten().field("doc_id"),
+        }
+    )

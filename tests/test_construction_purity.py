@@ -298,3 +298,23 @@ def test_footer_schema_fallback_on_unconvertible(tmp_path, spark):
     bad = tmp_path / "not_parquet.parquet"
     bad.write_bytes(b"this is not a parquet file")
     assert _footer_spark_schema(str(bad)) is None
+
+
+def test_stream_source_cap_runs_no_job_after_its_drain(spark, monkeypatch):
+    """Below the broadcast budget stream_source_cap reads its drained
+    state back on the driver: once the fold returns, the rest of the
+    construction (read-back, explode, result frame) starts no job."""
+    from energy_consumption_forecasting_spark import streaming
+
+    qs, _ = load_all()
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    fold = streaming.fold_available_now
+    after_drain = []
+
+    def counted_fold(*args, **kwargs):
+        fold(*args, **kwargs)
+        after_drain.append(dag.numTotalJobs())
+
+    monkeypatch.setattr(streaming, "fold_available_now", counted_fold)
+    qs["stream_source_cap"](spark, SF)
+    assert after_drain and dag.numTotalJobs() == after_drain[0]

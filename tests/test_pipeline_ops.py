@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from energy_consumption_forecasting_spark.queries.pipeline_ops import (
@@ -18,7 +19,7 @@ from energy_consumption_forecasting_spark.queries.pipeline_ops import (
     pipeline_pii_scrub,
     pipeline_stratified_sample,
 )
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, pinned_budget
 
 
 def test_chunk_invariants(spark):
@@ -554,8 +555,10 @@ def test_source_cap_bounded_and_deterministic(spark):
 
 
 def test_source_cap_matches_window_rank(spark):
-    """The salted two-level top-k must equal the straightforward
-    window row_number() formulation (the oracle's shape)."""
+    """The shared SQL top-k (``TOPK_SQL``, one window whose rank
+    filter the planner splits into a map-side partial and a final
+    group limit) must equal a window row_number() written
+    independently in the DataFrame API (the oracle's shape)."""
     from pyspark.sql import Window
 
     from energy_consumption_forecasting_spark.queries.pipeline_ops import (
@@ -706,21 +709,12 @@ def test_sq8_index_roundtrip(spark, tmp_path):
     }
 
 
-def test_stream_source_cap_split_batches_matches_batch(spark, tmp_path):
-    """The min-k semilattice fold is batch-boundary-proof: splitting
-    the corpus across micro-batches (maxFilesPerTrigger=1 over two
-    half files) yields the same kept set as the batch operator."""
+def _split_docs(spark, tmp_path) -> str:
+    """SF_SMALL's documents split by doc_id parity into two files of one
+    directory, so a drain with maxFilesPerTrigger=1 sees two batches."""
     import os
     import shutil
 
-    from energy_consumption_forecasting_spark.queries.pipeline_ops import (
-        pipeline_source_cap,
-    )
-    from energy_consumption_forecasting_spark.streaming.source_cap_stream import (
-        run_source_cap_available_now,
-    )
-
-    # split the documents into two files so the drain sees >1 batch
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
     src = str(tmp_path / "docs_split")
     os.makedirs(src)
@@ -735,10 +729,23 @@ def test_stream_source_cap_split_batches_matches_batch(spark, tmp_path):
             if f.endswith(".parquet"):
                 shutil.move(f"{src}/{sub}/{f}", f"{src}/{sub}.parquet")
         shutil.rmtree(f"{src}/{sub}")
+    return src
+
+
+def test_stream_source_cap_split_batches_matches_batch(spark, tmp_path):
+    """The min-k semilattice fold is batch-boundary-proof: splitting
+    the corpus across micro-batches (maxFilesPerTrigger=1 over two
+    half files) yields the same kept set as the batch operator."""
+    from energy_consumption_forecasting_spark.queries.pipeline_ops import (
+        pipeline_source_cap,
+    )
+    from energy_consumption_forecasting_spark.streaming.source_cap_stream import (
+        run_source_cap_available_now,
+    )
 
     got = run_source_cap_available_now(
         spark,
-        src,
+        _split_docs(spark, tmp_path),
         str(tmp_path / "state"),
         glob="*.parquet",
         max_files_per_trigger=1,  # force one file per micro-batch
@@ -747,6 +754,55 @@ def test_stream_source_cap_split_batches_matches_batch(spark, tmp_path):
     assert {tuple(r) for r in got.collect()} == {
         tuple(r) for r in ref.collect()
     }
+
+
+@pytest.mark.parametrize("max_files", [None, 1])
+def test_stream_source_cap_read_back_tiers_agree(spark, tmp_path, max_files):
+    """The drained state reads back on the driver (pyarrow, under the
+    broadcast budget) or through Spark (budget -1): both tiers give the
+    same rows and the same schema, and neither reads the state table
+    after the drain returns."""
+    import shutil
+
+    from energy_consumption_forecasting_spark.streaming.source_cap_stream import (
+        run_source_cap_available_now,
+    )
+
+    src = _split_docs(spark, tmp_path)
+
+    def drain(tag):
+        state = str(tmp_path / f"state_{tag}")
+        out = run_source_cap_available_now(
+            spark, src, state, glob="*.parquet", max_files_per_trigger=max_files
+        )
+        shutil.rmtree(state)
+        return out.schema.simpleString(), sorted(tuple(r) for r in out.collect())
+
+    driver = drain("driver")
+    with pinned_budget(spark, -1):
+        spark_tier = drain("spark")
+    assert driver == spark_tier
+    assert driver[0] == "struct<source:string,keep_rank:int,doc_id:bigint>"
+    assert len(driver[1]) > 0
+
+
+def test_stream_source_cap_zero_batch_drain_is_empty(spark, tmp_path):
+    """A source whose glob matches no file drains zero batches and
+    still returns the batch operator's empty result shape."""
+    from energy_consumption_forecasting_spark.streaming.source_cap_stream import (
+        run_source_cap_available_now,
+    )
+
+    import shutil
+
+    shutil.copy(f"{SF_SMALL}/documents.parquet", tmp_path / "documents.parquet")
+    out = run_source_cap_available_now(
+        spark, str(tmp_path), str(tmp_path / "state"), glob="none-*.parquet"
+    )
+    assert out.schema.simpleString() == (
+        "struct<source:string,keep_rank:int,doc_id:bigint>"
+    )
+    assert out.collect() == []
 
 
 def test_bpe_tiers_agree(spark, monkeypatch):

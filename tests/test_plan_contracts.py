@@ -126,6 +126,30 @@ def test_basket_pairs_single_task_shape(spark, name):
         assert "CartesianProduct" not in plan
 
 
+def test_source_cap_topk_partial_group_limit_below_one_exchange(spark):
+    """The per-source top-k of pipeline_source_cap and of the stream
+    fold's batch delta is one window over one exchange, with the
+    planner's partial group limit below it: each map task ships at most
+    cap rows per source, so a mega-domain cannot flood one reducer."""
+    from energy_consumption_forecasting_spark.queries import load_all
+    from energy_consumption_forecasting_spark.queries.pipeline_ops import SOURCE_CAP
+    from energy_consumption_forecasting_spark.streaming.source_cap_stream import (
+        _batch_topk,
+    )
+
+    qs, _ = load_all()
+    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
+    partial = re.compile(
+        r"Exchange hashpartitioning\(source#\d+, \d+\)[^\n]*\n"
+        r"\s*\+- WindowGroupLimit \[source#\d+\], \[k#\d+ ASC NULLS FIRST\], "
+        rf"row_number\(\), {SOURCE_CAP}, Partial\n"
+    )
+    for df in (qs["pipeline_source_cap"](spark, SF_SMALL), _batch_topk(docs)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange ") == 1, plan
+        assert partial.search(plan), plan
+
+
 def test_markov_window_partitions_by_user(spark):
     """The lag window must partition by user_id — a global (empty
     partition-by) window here would serialize the whole event table

@@ -20,7 +20,8 @@ import sys
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from energy_consumption_forecasting_spark.ml.forecast import (  # noqa: E402
     _css_refine,

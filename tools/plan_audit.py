@@ -11,10 +11,12 @@ from __future__ import annotations
 import argparse
 import contextlib
 import io
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 AUDITED = [
     # NOTE: driver-composed gates (modularity, lsh/ann quality) are
@@ -391,7 +393,7 @@ def audit_unpartitioned_windows(df) -> list[str]:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument("--out", default="/root/repo/PLANS.md")
+    ap.add_argument("--out", default=os.path.join(REPO, "PLANS.md"))
     args = ap.parse_args()
 
     from energy_consumption_forecasting_spark import get_spark

@@ -8,16 +8,18 @@ ratio near 1 means the cost is fixed overhead (scheduling + scan floor)
 that a real cluster amortizes.  Super-linear growth is the red flag the
 probe exists to catch (none expected — no quadratic shapes registered).
 
-Usage: python tools/scaling_probe.py [--out /root/repo/SCALING.md]
+Usage: python tools/scaling_probe.py [--out SCALING.md]
 """
 
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 
@@ -46,7 +48,7 @@ PROBES = [
     ("dedup_source_overlap", "shingle-keyed source-pair join"),
     ("dedup_prefix_filter_join", "prefix-filtered exact Jaccard join"),
     ("pipeline_epoch_shuffle", "two-pass rank over hash order"),
-    ("pipeline_source_cap", "salted two-level window top-k"),
+    ("pipeline_source_cap", "window top-k, map-side partial group limit"),
     ("sim_sq8_topk", "uint8 quantize + asymmetric rescore"),
     ("a_basket_pairs", "basket collapse + row-local pair explode"),
     ("w_markov_transitions", "per-user lag window + matrix agg"),
@@ -96,8 +98,8 @@ PROBES = [
 ]
 
 
-SF1_DIR = "/root/repo/.stage/sf1"
-SF1_JSON = "/root/repo/.stage/sf1_probe.json"
+SF1_DIR = os.path.join(REPO, ".stage", "sf1")
+SF1_JSON = os.path.join(REPO, ".stage", "sf1_probe.json")
 
 # Queries whose ×(0.1/0.01) ratio was ≥2.5 in round 4 — the round-4
 # verdict (item 6) asked for a SECOND decade to settle whether the
@@ -233,8 +235,8 @@ def _gen_sf1() -> None:
     open(os.path.join(SF1_DIR, "_DONE"), "w").write("ok\n")
 
 
-SF10EMB_DIR = "/root/repo/.stage/sf10emb"
-SF10EMB_JSON = "/root/repo/SCALE_PROBE_sf10.json"
+SF10EMB_DIR = os.path.join(REPO, ".stage", "sf10emb")
+SF10EMB_JSON = os.path.join(REPO, "SCALE_PROBE_sf10.json")
 
 # The r7 verdict's named scale ceiling, answered with a measurement
 # (r8 item 5): the three adversarial embedding shapes at a FIFTH
@@ -287,8 +289,8 @@ def _gen_sf10emb() -> None:
     open(os.path.join(SF10EMB_DIR, "_DONE"), "w").write("ok\n")
 
 
-SF10LI_DIR = "/root/repo/.stage/sf10li"
-SF10LI_JSON = "/root/repo/SCALE_PROBE_sf10_basket.json"
+SF10LI_DIR = os.path.join(REPO, ".stage", "sf10li")
+SF10LI_JSON = os.path.join(REPO, "SCALE_PROBE_sf10_basket.json")
 
 # Round-9 verdict item 4: the basket/CF family is the largest sf1
 # block (7-8.5s each) with the steepest sf0.1 last-decade ratios among
@@ -414,10 +416,10 @@ def run_sf10emb(qs) -> None:
     print(f"wrote {SF10EMB_JSON}")
 
 
-SF10GRAPH_DIR = "/root/repo/.stage/sf10graph"
-SF1GRAPH_DIR = "/root/repo/.stage/sf1graph"
-SF10DOCS_DIR = "/root/repo/.stage/sf10docs"
-SF10GRAPH_JSON = "/root/repo/SCALE_PROBE_sf10_graph.json"
+SF10GRAPH_DIR = os.path.join(REPO, ".stage", "sf10graph")
+SF1GRAPH_DIR = os.path.join(REPO, ".stage", "sf1graph")
+SF10DOCS_DIR = os.path.join(REPO, ".stage", "sf10docs")
+SF10GRAPH_JSON = os.path.join(REPO, "SCALE_PROBE_sf10_graph.json")
 
 # Round-9 verdict item 4: the graph family (pagerank / k-core / label
 # propagation) and dedup_connected_components are the slowest
@@ -514,8 +516,8 @@ def _gen_sf10docs() -> None:
     open(os.path.join(SF10DOCS_DIR, "_DONE"), "w").write("ok\n")
 
 
-ZIPF_DIR = "/root/repo/.stage/zipfdocs"
-ZIPF_JSON = "/root/repo/SCALE_PROBE_zipf.json"
+ZIPF_DIR = os.path.join(REPO, ".stage", "zipfdocs")
+ZIPF_JSON = os.path.join(REPO, "SCALE_PROBE_zipf.json")
 
 
 def _gen_zipfdocs() -> None:
@@ -697,7 +699,7 @@ spark_holder: list = []
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--out", default="/root/repo/SCALING.md")
+    ap.add_argument("--out", default=os.path.join(REPO, "SCALING.md"))
     ap.add_argument(
         "--sf1",
         action="store_true",
