@@ -248,8 +248,8 @@ class ConsumptionForecasterTrainer:
 
     Delegates to ml/lstm.py: the numpy trainer (full BPTT + Adam,
     gradient-checked) in this container, the torch tier where torch
-    exists; ``fit`` consumes the distributed sequence dataset
-    (ml/lstm.py::sequence_dataset / to_numpy_dataset)."""
+    exists; ``fit`` consumes the (X, y) tensors of the distributed
+    sequence dataset (ml/lstm.py::sequence_dataset)."""
 
     def __init__(self, config=None):
         self.config = config or _AttrBag()

@@ -2,9 +2,10 @@
 
 Reference: SHAP KernelExplainer importance (evaluation.ipynb:13964-13991),
 feature-group ablation (V:14040-14072), order sensitivity sweep
-(V:14136-14238), learning curve (V:19103-19118).
+(V:14136-14238).  The learning curve (V:19103-19118) is the registered
+``m18_learning_curve`` query (queries/ml_queries.py).
 
-All four share one shape: a driver loop over *configurations*, where
+The harnesses share one shape: a driver loop over *configurations*, where
 each configuration's score is a Spark-evaluated metric.  The loops are
 over tens of configs (never data); each evaluation is distributed.
 
@@ -78,26 +79,6 @@ def sensitivity_sweep(
     """M17: score every configuration in the grid (the reference sweeps
     (P,D,Q) ± 5 around the optimum)."""
     return [(params, scorer_for(params)(df)) for params in param_grid]
-
-
-def learning_curve(
-    df: DataFrame,
-    time_col: str,
-    fractions: list[float],
-    scorer: Scorer,
-) -> list[tuple[float, float]]:
-    """M18: metric vs growing time-ordered data prefix."""
-    w = Window.orderBy(time_col)
-    ranked = df.withColumn("__rn", F.row_number().over(w)).withColumn(
-        "__n", F.count("*").over(Window.partitionBy())
-    )
-    out = []
-    for frac in fractions:
-        prefix = ranked.filter(F.col("__rn") <= frac * F.col("__n")).drop(
-            "__rn", "__n"
-        )
-        out.append((frac, scorer(prefix)))
-    return out
 
 
 def _coalition_values(

@@ -76,19 +76,6 @@ def dtw_distance_matrix(series_df: DataFrame) -> DataFrame:
     return pairs.groupBy("block").applyInPandas(block_dtw, schema=schema)
 
 
-def kmedoids_from_distances(
-    dist_df: DataFrame, k: int = 12, max_iter: int = 20, seed: int = 42
-) -> dict:
-    """Driver-side k-medoids over a collected (tiny) distance matrix.
-
-    The reference clusters ≤105 monthly series (K:1076-1077) — the
-    matrix is ≤105², far below driver limits; the expensive pairwise
-    DTW stage stayed distributed.  (The registered query runs the
-    identical core WITHOUT the collect — kmedoids_rows inside a
-    1-partition mapInPandas, r9.)"""
-    return kmedoids_rows(dist_df.collect(), k=k, max_iter=max_iter, seed=seed)
-
-
 def kmedoids_rows(
     rows, k: int = 12, max_iter: int = 20, seed: int = 42
 ) -> dict:
@@ -284,46 +271,6 @@ def _sbd(a: np.ndarray, b: np.ndarray) -> float:
     """Shape-based distance: 1 − max_w NCC_c(a, b) ∈ [0, 2]; 0 for any
     shift of a scaled copy."""
     return 1.0 - _ncc_max(a, b)[0]
-
-
-def sbd_distance_matrix(series_df: DataFrame) -> DataFrame:
-    """Pairwise SBD, distributed with the same block-keyed grouped map
-    as dtw_distance_matrix (one row per pair, blocks spread work)."""
-    pairs = (
-        series_df.alias("a")
-        .join(series_df.alias("b"), F.col("a.series_id") < F.col("b.series_id"))
-        .select(
-            F.col("a.series_id").alias("id_a"),
-            F.col("b.series_id").alias("id_b"),
-            F.col("a.series").alias("s_a"),
-            F.col("b.series").alias("s_b"),
-        )
-        .withColumn("block", F.crc32(F.concat_ws(",", "id_a", "id_b")) % 64)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("id_a", pairs.schema["id_a"].dataType),
-            T.StructField("id_b", pairs.schema["id_b"].dataType),
-            T.StructField("sbd", T.DoubleType()),
-        ]
-    )
-
-    def block_sbd(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for _, r in pdf.iterrows():
-            out.append(
-                {
-                    "id_a": r["id_a"],
-                    "id_b": r["id_b"],
-                    "sbd": _sbd(
-                        np.asarray(r["s_a"], dtype=np.float64),
-                        np.asarray(r["s_b"], dtype=np.float64),
-                    ),
-                }
-            )
-        return pd.DataFrame(out, columns=["id_a", "id_b", "sbd"])
-
-    return pairs.groupBy("block").applyInPandas(block_sbd, schema=schema)
 
 
 def _align_to(ref: np.ndarray, x: np.ndarray) -> np.ndarray:

@@ -5,10 +5,10 @@ Reference: BlockingTimeSeriesSplit (utils.py:8-23) — 5 contiguous equal
 blocks over time order, last 20 % of each block is validation — and the
 positional 85/15 split (xgb.ipynb:532-533).
 
-Each operation is a LABELLED frame plus a thin filter view:
-``label_folds`` (``fold``, ``role``) backs ``folds``, and
-``label_split`` (``split``) backs ``train_test_split``; the registered
-w6/w7 queries are the labelled frames themselves.
+Each operation is a LABELLED frame: ``label_folds`` (``fold``,
+``role``, with the thin filter view ``folds``) and ``label_split``
+(``split``); the registered w6/w7 queries are the labelled frames
+themselves.
 
 Scale contract (round-6 VERDICT item 4): the DEFAULT path is the
 two-pass distributed rank (``operators/ranking.global_row_number``) —
@@ -148,19 +148,3 @@ def label_split(
         F.when(F.col("__rn") <= F.ceil(train_frac * F.col("__n")), "train")
         .otherwise("test"),
     ).drop("__rn", "__n")
-
-
-def train_test_split(
-    df: DataFrame,
-    order_cols: list[str],
-    train_frac: float = 0.85,
-    bucket: Column | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Positional split (reference iloc[:85%] — xgb.ipynb:532-533):
-    ``(train, test)`` filters over ``label_split``."""
-    labeled = label_split(df, order_cols, train_frac, bucket)
-    is_train = F.col("split") == "train"
-    return (
-        labeled.filter(is_train).drop("split"),
-        labeled.filter(~is_train).drop("split"),
-    )

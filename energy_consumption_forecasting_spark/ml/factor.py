@@ -16,15 +16,13 @@ driver-sized correlation matrix, never the table."""
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
 def moment_aggs(cols: list[str]) -> list:
-    """The exact-moment aggregate list behind `correlation_matrix`:
-    row count, per-column decimal sums, upper-triangle cross sums.
-    Factored (r9) so the lazy in-plan fit frames and the driver path
-    build the identical expressions."""
+    """The exact-moment aggregate list behind the Pearson matrix
+    (`corr_from_moment_row`): row count, per-column decimal sums,
+    upper-triangle cross sums."""
     aggs = [F.count("*").alias("__n")]
     for c in cols:
         d = F.col(c).cast("decimal(28,6)")
@@ -51,11 +49,6 @@ def corr_from_moment_row(row, cols: list[str]) -> np.ndarray:
             C[i, j] = C[j, i] = cov
     d = np.sqrt(np.diag(C))
     return C / np.outer(d, d)
-
-
-def correlation_matrix(df: DataFrame, cols: list[str]) -> np.ndarray:
-    """Pearson correlations from one distributed pass of exact moments."""
-    return corr_from_moment_row(df.agg(*moment_aggs(cols)).first(), cols)
 
 
 def principal_axis_factoring(

@@ -10,9 +10,6 @@ import-gated.  What IS Spark-native and implemented here:
 * ``sequence_dataset`` — the W8 sliding-window tensor prep
   (LSTM.py:125-148) as window functions: length-L feature windows +
   next-step target, returned as array columns ready for Arrow export.
-* ``to_numpy_dataset`` — Arrow-batched export to (X, y) ndarrays for a
-  single-node trainer (at scale: ``TorchDistributor`` would consume the
-  same DataFrame).
 * ``NumpyLSTM`` / ``lstm_train`` — a real in-container trainer: numpy
   forward + full BPTT + Adam for the same single-layer shape (gradient-
   checked in tests/test_lstm_numpy.py).
@@ -67,81 +64,6 @@ def sequence_dataset(
         .filter((F.col("__n") == seq_length) & F.col("y").isNotNull())
         .drop("__n")
     )
-
-
-def _packed_blobs(seq_df: DataFrame) -> DataFrame:
-    """(n, xb, yb) — one contiguous float32 blob per Arrow batch.
-
-    The per-sequence double-list rows never exist on the driver: each
-    worker packs its batches into compact byte buffers (4 bytes/element,
-    no pandas object overhead)."""
-    import pandas as pd
-
-    def pack(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf["x"].to_numpy()).astype(np.float32)
-            y = pdf["y"].to_numpy(dtype=np.float32)
-            yield pd.DataFrame(
-                {"n": [len(pdf)], "xb": [X.tobytes()], "yb": [y.tobytes()]}
-            )
-
-    return seq_df.select("x", "y").mapInPandas(
-        pack, "n long, xb binary, yb binary"
-    )
-
-
-def iter_numpy_batches(seq_df: DataFrame, n_features: int):
-    """Stream (X, y) chunks to the driver one blob at a time.
-
-    ``toLocalIterator`` pulls one partition's blobs at a time, so the
-    driver's resident set is a single chunk, not the dataset — the
-    streaming feed for ``NumpyLSTM.fit_stream`` (r2 collected the whole
-    packed dataset before training; the driver-memory cliff is gone).
-    """
-    packed = _packed_blobs(seq_df)
-    for r in packed.toLocalIterator(prefetchPartitions=True):
-        X = np.frombuffer(r["xb"], np.float32).reshape(r["n"], -1, n_features)
-        y = np.frombuffer(r["yb"], np.float32)
-        yield X, y
-
-
-def to_numpy_dataset(
-    seq_df: DataFrame, n_features: int, max_bytes: int = 2 << 30
-) -> tuple[np.ndarray, np.ndarray]:
-    """Batched export to (n, seq_len, n_features) X and (n,) y.
-
-    A single-node trainer ultimately holds (X, y) in RAM by definition,
-    so the materialization is bounded: assembly streams chunk-by-chunk
-    (``iter_numpy_batches``) and raises once ``max_bytes`` of tensor is
-    exceeded instead of silently OOM-ing the driver.  Past the bound,
-    either train chunked (``NumpyLSTM.fit_stream``) or hand the sharded
-    parquet from ``export_sequences`` to a distributed trainer
-    (TorchDistributor / mapInPandas inference, SURVEY M11)."""
-    xs, ys, total = [], [], 0
-    for X, y in iter_numpy_batches(seq_df, n_features):
-        total += X.nbytes + y.nbytes
-        if total > max_bytes:
-            raise MemoryError(
-                f"sequence dataset exceeds max_bytes={max_bytes}; "
-                "use iter_numpy_batches/fit_stream or export_sequences"
-            )
-        xs.append(X)
-        ys.append(y)
-    if not xs:
-        return np.empty((0, 0, n_features), np.float32), np.empty(0, np.float32)
-    return np.concatenate(xs), np.concatenate(ys)
-
-
-def export_sequences(seq_df: DataFrame, path: str, shards: int | None = None) -> None:
-    """Write the sequence dataset as sharded parquet — the cluster-scale
-    handoff: each executor writes its shards, a distributed trainer
-    (TorchDistributor) streams them per worker; no driver bottleneck."""
-    out = seq_df.select("x", "y")
-    if shards:
-        out = out.repartition(shards)
-    out.write.mode("overwrite").parquet(path)
 
 
 class NumpyLSTM:
@@ -266,11 +188,10 @@ class NumpyLSTM:
         """Chunked Adam over a re-iterable source of (X, y) chunks.
 
         ``batches`` is a zero-arg callable returning an iterator (e.g.
-        ``lambda: iter_numpy_batches(seq_df, D)``) so every epoch can
-        re-stream.  One forward/BPTT/Adam step per chunk — with a
-        single chunk this is numerically identical to ``fit``; with
-        many it is plain mini-batch training, the driver holding one
-        chunk at a time.  Returns per-epoch sample-weighted MSE."""
+        ``lambda: iter(chunks)``) so every epoch can re-stream.  One
+        forward/BPTT/Adam step per chunk — with a single chunk this is
+        numerically identical to ``fit``; with many it is plain
+        mini-batch training, the driver holding one chunk at a time.  Returns per-epoch sample-weighted MSE."""
         history = []
         for _ in range(epochs):
             sse, n_total = 0.0, 0
@@ -360,7 +281,7 @@ class TorchLSTM:
 
 
 def lstm_train(X: np.ndarray, y: np.ndarray, params: dict | None = None):
-    """Train an LSTM on the (X, y) tensors from ``to_numpy_dataset``.
+    """Train an LSTM on (n, seq_len, n_features) X and (n,) y tensors.
 
     torch present → ``TorchLSTM``, the reference architecture
     (LSTM.py:14-123; TorchDistributor at cluster scale).  torch absent
@@ -384,41 +305,3 @@ def lstm_train(X: np.ndarray, y: np.ndarray, params: dict | None = None):
         )
     history = model.fit(X, y, epochs=int(p.get("epochs", 60)), lr=float(p["lr"]))
     return model, history
-
-
-def predict_distributed(
-    seq_df: DataFrame, model: "NumpyLSTM", n_features: int
-) -> DataFrame:
-    """Corpus-scale inference for a trained NumpyLSTM: weights (KB)
-    ride a broadcast, each Arrow batch runs the numpy forward pass
-    row-locally — training is single-node by design, scoring is not.
-    Input is a ``sequence_dataset`` frame; output adds ``pred``.
-
-    (The torch equivalent on a GPU cluster is mapInPandas with a
-    broadcast state_dict — same shape, swap the kernel.)"""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    spark = seq_df.sparkSession
-    bw = spark.sparkContext.broadcast(
-        (model.W, model.b, model.Wy, model.by, model.D, model.H)
-    )
-    out_fields = list(seq_df.schema.fields) + [
-        T.StructField("pred", T.DoubleType())
-    ]
-
-    def infer(batches):
-        W, b, Wy, by, D, H = bw.value
-        m = NumpyLSTM.__new__(NumpyLSTM)
-        m.W, m.b, m.Wy, m.by, m.D, m.H = W, b, Wy, by, D, H
-        m._adam = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf["x"].to_numpy()).astype(np.float64)
-            X = X.reshape(len(pdf), -1, D)
-            out = pdf.copy()
-            out["pred"] = m.predict(X)
-            yield out
-
-    return seq_df.mapInPandas(infer, schema=T.StructType(out_fields))

@@ -1,41 +1,19 @@
-"""Regression metrics — SURVEY §2.7 M14 (MAE/MSE/MAPE).
+"""Regression metrics — SURVEY §2.7 M14.
 
 Reference: mean_absolute_error objective (optimization.py:56-77),
 MAE/MSE reporting (evaluation.ipynb:40,233).
 
-Column-expression metrics so they compose into any aggregation; the
-exact-decimal forms are used where cross-engine verification matters.
+``mae`` is a column expression, so it composes into any aggregation
+(the CV scorers in ml/analysis.py).  The registered
+``m14_forecast_metrics`` query reports MAE/MSE/WMAPE in exact integer
+cents (queries/ml_queries.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
 def mae(pred: Column, label: Column) -> Column:
     return F.avg(F.abs(pred - label))
-
-
-def mse(pred: Column, label: Column) -> Column:
-    return F.avg(F.pow(pred - label, 2))
-
-
-def mape(pred: Column, label: Column) -> Column:
-    return F.avg(F.abs((pred - label) / label))
-
-
-def wmape(pred: Column, label: Column) -> Column:
-    """Weighted MAPE = sum|err| / sum|label| — scale-free like MAPE but a
-    ratio of sums, so it is exact under decimal accumulation."""
-    return F.sum(F.abs(pred - label)) / F.sum(F.abs(label))
-
-
-def evaluate(df: DataFrame, pred: str, label: str) -> dict[str, float]:
-    row = df.agg(
-        mae(F.col(pred), F.col(label)).alias("mae"),
-        mse(F.col(pred), F.col(label)).alias("mse"),
-        mape(F.col(pred), F.col(label)).alias("mape"),
-        wmape(F.col(pred), F.col(label)).alias("wmape"),
-    ).first()
-    return {k: float(row[k]) for k in ("mae", "mse", "mape", "wmape")}

@@ -1,37 +1,21 @@
-"""Parameter stores — SURVEY §2.1 S8/S9.
+"""Parameter stores — SURVEY §2.1 S9.
 
-Reference: hyperparameter dict JSONs (ARIMA_params.json, lstm_params.json;
-evaluation.ipynb:103-104,160-161) and a pickled BayesianOptimization
-object (optimization.py:199-204).
-
-Engine policy: JSON for parameters (portable, reviewable) and MLlib
-models via their native ``model.save(path)`` are the preferred paths;
-``save_pickle``/``load_pickle`` exist for parity with the reference's
-pickled-artifact workflow (optimization.py:199-204) — driver-side only,
-for dim-sized fitted parameters, never for data."""
+Reference: a pickled BayesianOptimization object (optimization.py:199-204).
+The S8 JSON parameter dicts round-trip through Spark in the registered
+``s8_params_roundtrip`` query (queries/sources_gate.py).
+``save_pickle``/``load_pickle`` keep the reference's pickled-artifact
+workflow — driver-side only, for dim-sized fitted parameters, never for
+data."""
 
 from __future__ import annotations
 
-import json
 import os
 import pickle
 from typing import Any
 
 
-def save_params(params: dict[str, Any], path: str) -> None:
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "w") as f:
-        json.dump(params, f, indent=2, sort_keys=True)
-
-
-def load_params(path: str) -> dict[str, Any]:
-    with open(path) as f:
-        return json.load(f)
-
-
 def save_pickle(obj: Any, path: str) -> None:
-    """S9 pickle sink (reference parity).  Use ``save_params`` unless
-    the artifact genuinely isn't JSON-representable."""
+    """S9 pickle sink (reference parity)."""
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     with open(path, "wb") as f:
         pickle.dump(obj, f, protocol=pickle.HIGHEST_PROTOCOL)
@@ -40,11 +24,3 @@ def save_pickle(obj: Any, path: str) -> None:
 def load_pickle(path: str) -> Any:
     with open(path, "rb") as f:
         return pickle.load(f)
-
-
-def best_of_grid(history: list[tuple[dict, float]], minimize: bool = True) -> dict:
-    """Reference selection logic (evaluation.ipynb:160-163): pick the
-    grid point with the best objective."""
-    key = min if minimize else max
-    best = key(history, key=lambda t: t[1])
-    return {"params": best[0], "objective": best[1]}

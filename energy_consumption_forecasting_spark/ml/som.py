@@ -38,7 +38,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -150,30 +149,3 @@ def som_fit(
         for r in _assigned_for(bc).select("series_id", "bmu").collect()
     }
     return assignment, codebook
-
-
-def som_quantization_error(
-    series_df: DataFrame, codebook: np.ndarray
-) -> float:
-    """Mean distance of each series to its BMU — the standard SOM fit
-    metric; one broadcast-map + one scalar agg."""
-    spark = series_df.sparkSession
-    bc = spark.sparkContext.broadcast(codebook)
-
-    schema = T.StructType([T.StructField("qe", T.DoubleType())])
-
-    def qe(batches):
-        W = bc.value
-        for pdf in batches:
-            out = []
-            for s in pdf["series"]:
-                x = np.asarray(s, dtype=np.float64)
-                out.append(float(np.sqrt(((W - x) ** 2).sum(axis=1).min())))
-            yield pd.DataFrame({"qe": out})
-
-    agg = (
-        series_df.select("series").mapInPandas(qe, schema=schema)
-        .agg(F.avg("qe").alias("m"))
-        .collect()[0]
-    )
-    return float(agg["m"])

@@ -14,8 +14,7 @@ Two families, both DataFrame-in / DataFrame-out:
   searchers (``ivf_search_lazy``, ``pq_topk_table_lazy``,
   ``sq8_topk_lazy``, ``sq8_ivf_topk_lazy``) read the fit from columns,
   so building a plan launches no job.  The registered ``sim_*`` queries
-  and the persisted index (sources/ann_index.py, plus its streaming
-  ingest) share this one code path.
+  (queries/similarity.py) share this one code path.
 
 Random-hyperplane LSH lives with its queries
 (queries/similarity.py::sim_lsh_hyperplane).
@@ -219,10 +218,8 @@ def pack_code_blocks(
 # (or, for SQ8, an exact in-plan aggregate), and attaches to corpus /
 # query plans via 1-row broadcast crossJoin.  The registered sim_*
 # queries build end-to-end lazy plans — constructing them launches
-# ZERO jobs.  Execution-time users (sources/ann_index.py collects each
-# fit once into meta.json and rebuilds the frames from it; bounded eval
-# collects) go through the same frames, so there is one quantizer
-# implementation.
+# ZERO jobs.  Execution-time users (bounded eval collects) go through
+# the same frames, so there is one quantizer implementation.
 #
 # Solver note: the IVF fit runs a seeded numpy Lloyd on the sorted
 # sample instead of MLlib KMeans (whose .fit() is irreducibly eager).

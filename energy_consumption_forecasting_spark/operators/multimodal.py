@@ -8,10 +8,7 @@ the decode kernels are deterministic fakes behind ``_decode_bytes``
 partitioning, output shapes — is real and tested.
 
 Scale notes: payloads never shuffle unless the operator needs them to —
-metadata extraction projects away the bytes as early as possible, and
-``repartition_for_decode`` sizes partitions by payload bytes (decode is
-CPU-bound; a 100 TB corpus wants ~128 MB of payload per task, not a
-row-count split)."""
+metadata extraction projects away the bytes as early as possible."""
 
 from __future__ import annotations
 
@@ -77,14 +74,6 @@ def payload_stats(df: DataFrame) -> DataFrame:
         F.col("meta.width").alias("width"),
         F.col("meta.height").alias("height"),
     )
-
-
-def repartition_for_decode(df: DataFrame, target_bytes: int = 128 << 20) -> DataFrame:
-    """Partition by cumulative payload size, not row count: decode cost
-    follows bytes.  Uses a size-bucketed repartition key."""
-    stats = df.agg(F.sum(F.octet_length("payload")).alias("total")).first()
-    n_parts = max(1, int((stats["total"] or 0) // target_bytes) + 1)
-    return df.repartition(n_parts, "media_id")
 
 
 def _decode_bytes(payload: bytes, kind: str) -> np.ndarray:

@@ -1043,31 +1043,6 @@ def kcore_peel_doubled(doubled: DataFrame, k: int, rounds: int) -> DataFrame:
     return cur
 
 
-def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
-    """Fixed-round k-core peel over an (u, v) edge DataFrame: each round
-    drops nodes of degree < k and the edges touching them.  Returns the
-    surviving edge set (the k-core when the peel has converged within
-    ``rounds``).  Testable against a pure-python reference on arbitrary
-    graphs (tests/test_components.py).
-
-    Thin (u, v)-contract wrapper over :func:`kcore_peel_doubled`: the
-    symmetric filter keeps or drops both orientations of an edge
-    together, so ``s < t`` on the surviving frame is exactly the
-    original undirected edge set."""
-    doubled = edges.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("u").alias("s"), F.col("v").alias("t")),
-                F.struct(F.col("v").alias("s"), F.col("u").alias("t")),
-            )
-        ).alias("e")
-    ).select("e.s", "e.t")
-    cur = kcore_peel_doubled(doubled, k, rounds)
-    return cur.filter(F.col("s") < F.col("t")).select(
-        F.col("s").alias("u"), F.col("t").alias("v")
-    )
-
-
 @query("graph_kcore", oracle=_kcore_oracle())
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-core (k = KCORE_K) of the support>=2 co-purchase graph (Seidman

@@ -448,11 +448,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
         .filter(F.size("docs") >= 2)
     )
-    # pair packing A/B'd here and LOST (r11, /tmp committed to
-    # OPTIMIZATION_r11.md: min 1.47 -> 1.70 s at sf1 interleaved) — the
-    # distinct's partial agg already collapses map-side, so the packed
-    # key saved nothing and the guard+pack projection cost showed; the
-    # COUNT aggregations below keep the pack (ngram min 11.3 -> 9.6 s).
+    # no pair packing here: the distinct's partial aggregate already
+    # collapses the pairs map-side, so a packed key saves nothing and
+    # its guard+pack projection only adds cost; the COUNT aggregations
+    # below keep the pack.
     cand = _pairs_from_members(members).distinct()
     sa = sigs.alias("sa")
     sb = sigs.alias("sb")
@@ -535,8 +534,8 @@ COS_BANDS = 4
 # capped total buckets at 512, so in-bucket pair work went ~N²/256 past
 # its last rung — the r7 verdict's one named scale ceiling).  The rule
 # is now the same count-derived discipline as dedup_semantic's
-# _semdedup_bits: 4 bands of b bits each, b = the SMALLEST integer in
-# [COS_MIN_BITS, COS_MAX_BITS] with
+# refinement bits (_min_rung_expr): 4 bands of b bits each, b = the
+# SMALLEST integer in [COS_MIN_BITS, COS_MAX_BITS] with
 #     COS_BANDS * COS_TARGET_BUCKET * 2^b >= N,
 # over the checked-in 64-plane set (band i = signature bits
 # [i*b, (i+1)*b)).  Expected in-band bucket population is thereby
@@ -813,35 +812,18 @@ def _planes64_sql() -> str:
     return f"[{rows}]"
 
 
-def _cos_sig(vec_col, n_bits: int = 16) -> Column:
-    """Sign-bit signature over the first ``n_bits`` of the checked-in
-    PLANES64 set (prefix semantics: ``_cos_sig(v, b)`` equals
-    ``substr(_cos_sig(v, 64), 1, b)`` — callers that only bucket on a
-    short prefix skip the other planes' fold-dots entirely)."""
-    from ._lsh_planes import PLANES64
-    from ..functions.vectors import dot
-
-    bits = [
-        F.when(dot(vec_col, F.array(*[F.lit(x) for x in row])) >= 0, "1").otherwise(
-            "0"
-        )
-        for row in PLANES64[:n_bits]
-    ]
-    return F.concat(*bits)
-
-
 def _cos_sig_prefix(vec_col, nbits_col: Column, max_bits: int = 16) -> Column:
-    """``_cos_sig`` truncated to a DATA-DEPENDENT bit count without
+    """Sign-bit signature over the first ``nbits_col`` planes of the
+    checked-in PLANES64 set — a DATA-DEPENDENT bit count — without
     paying for the untaken planes: the planes ship as ONE array
     literal, ``slice(planes, 1, nbits)`` keeps exactly the rung's
     prefix, and a single ``transform`` lambda folds each kept plane's
     sign bit — so a corpus at rung b folds exactly b dots per row, in
     the same index order as ``dot``/``list_dot_product`` (bit-exact
-    with the per-plane unrolled form and the oracle).  By prefix
-    semantics this equals ``substring(_cos_sig(v, max_bits), 1,
-    nbits_col)`` — which is what the r8 purity rewrite of
-    dedup_semantic first shipped, folding all 16 planes for every row
-    and tripling the query's wall-clock at sf0.1 (bench_diff catch,
+    with the per-plane unrolled form and the oracle).  The r8 purity
+    rewrite of dedup_semantic first shipped a full 16-plane signature
+    cut with ``substring``, folding all 16 planes for every row and
+    tripling the query's wall-clock at sf0.1 (bench_diff catch,
     0.99s → 2.68s).  The first cut of THIS helper unrolled one
     CASE-guarded fold per plane; at 64 planes that expression tree
     cost ~3.5s of codegen compile on the plan's first execution
@@ -1293,17 +1275,6 @@ def _semdedup_sub_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _semdedup_bits(n: int, c: int, target: int = SEMDEDUP_TARGET_BUCKET) -> int:
-    """Smallest b in [0, 16] with c * target * 2^b >= n — INTEGER-only
-    derivation (no log2: libm rounding at a power-of-two boundary could
-    disagree between engines and silently re-bucket the whole corpus).
-    The SQL oracle computes the identical minimum over range(0, 17)."""
-    for b in range(17):
-        if c * target * (1 << b) >= n:
-            return b
-    return 16
-
-
 @query(
     "dedup_semantic",
     oracle=f"""
@@ -1312,7 +1283,7 @@ def _semdedup_bits(n: int, c: int, target: int = SEMDEDUP_TARGET_BUCKET) -> int:
     ),
     bb AS (
       -- COALESCE: when no b in [0,16] satisfies the bound (astronomical
-      -- N), _semdedup_bits caps at 16 — MIN over the empty set is NULL
+      -- N), the rule caps at 16 — MIN over the empty set is NULL
       -- and substr(sig,1,NULL) would NULL every sub-bucket
       SELECT COALESCE(MIN(b), 16) AS b FROM range(0, 17) t(b), nb
       WHERE c * {SEMDEDUP_TARGET_BUCKET} * (CAST(1 AS BIGINT) << b) >= n
@@ -2245,11 +2216,10 @@ def pipeline_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
         .filter(F.size("docs") >= 2)
     )
-    # pair packing A/B'd here and LOST (r11, /tmp committed to
-    # OPTIMIZATION_r11.md: min 1.47 -> 1.70 s at sf1 interleaved) — the
-    # distinct's partial agg already collapses map-side, so the packed
-    # key saved nothing and the guard+pack projection cost showed; the
-    # COUNT aggregations below keep the pack (ngram min 11.3 -> 9.6 s).
+    # no pair packing here: the distinct's partial aggregate already
+    # collapses the pairs map-side, so a packed key saves nothing and
+    # its guard+pack projection only adds cost; the COUNT aggregations
+    # below keep the pack.
     cand = _pairs_from_members(members).distinct()
     splits = tbl(spark, sf_dir, "documents").select(
         "doc_id", split_col().alias("split")

@@ -108,12 +108,11 @@ def scale_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 # curve ranges cover tighter bounding boxes — the property behind
 # Databricks' liquid-clustering-style layouts preferring Hilbert over
 # Z-order.  The recurrence is stateful per bit (x/y rotate), so both
-# engines evaluate the SAME unrolled 10-stage integer pipeline: one
-# generator renders the per-stage expressions to the Spark DataFrame
-# chain and to a DuckDB materialized-CTE chain (the shared-template
-# discipline of the geohash encoder; AS MATERIALIZED per stage because
-# each stage references its predecessor ~4x and plain CTE inlining
-# would expand 4^10-fold — the graph_kcore lesson).
+# engines evaluate the SAME 10-stage integer recurrence over
+# ``_hilbert_stages``: an int64 NumPy kernel on the Spark side and a
+# DuckDB materialized-CTE chain for the oracle (AS MATERIALIZED per
+# stage because each stage references its predecessor ~4x and plain
+# CTE inlining would expand 4^10-fold — the graph_kcore lesson).
 _HN = 1 << BITS  # 1024x1024 grid
 
 
@@ -121,61 +120,17 @@ def _hilbert_stages() -> list[int]:
     return [1 << i for i in range(BITS - 1, -1, -1)]
 
 
-def hilbert_code(df, x_col: str, y_col: str):
-    """Attach ``hcode`` = Hilbert d-index of (x_col, y_col) via BITS
-    unrolled rotate-reflect stages (two projections per stage so rx/ry
-    materialize once instead of quadrupling the expression tree)."""
-    out = df.select(
-        "*", F.col(x_col).alias("__hx"), F.col(y_col).alias("__hy"),
-        F.lit(0).cast("long").alias("__hd"),
-    )
-    for s in _hilbert_stages():
-        out = out.select(
-            "*",
-            (F.shiftright("__hx", int(s).bit_length() - 1).bitwiseAND(1))
-            .cast("long")
-            .alias("__rx"),
-            (F.shiftright("__hy", int(s).bit_length() - 1).bitwiseAND(1))
-            .cast("long")
-            .alias("__ry"),
-        )
-        out = out.select(
-            *[c for c in out.columns if c not in ("__hx", "__hy", "__hd", "__rx", "__ry")],
-            (
-                F.col("__hd")
-                + F.lit(s * s)
-                * (F.lit(3) * F.col("__rx")).bitwiseXOR(F.col("__ry"))
-            ).alias("__hd"),
-            F.when(F.col("__ry") == 1, F.col("__hx"))
-            .otherwise(
-                F.when(
-                    F.col("__rx") == 1, F.lit(_HN - 1) - F.col("__hy")
-                ).otherwise(F.col("__hy"))
-            )
-            .alias("__hx"),
-            F.when(F.col("__ry") == 1, F.col("__hy"))
-            .otherwise(
-                F.when(
-                    F.col("__rx") == 1, F.lit(_HN - 1) - F.col("__hx")
-                ).otherwise(F.col("__hx"))
-            )
-            .alias("__hy"),
-        )
-    return out.withColumnRenamed("__hd", "hcode").drop("__hx", "__hy")
-
-
 def hilbert_code_arrow(df, x_col: str, y_col: str, out: str = "hcode"):
-    """Arrow-kernel twin of :func:`hilbert_code` — the identical
-    per-bit rotate-reflect recurrence vectorized over rows with int64
-    NumPy (r10, guide §4.2).  Pure integer algebra, so equality with
-    the JVM pipeline is exact by construction (pinned cell-for-cell by
-    tests/test_scale_ops.py against the textbook xy2d reference).
+    """Attach ``out`` = Hilbert d-index of (x_col, y_col): the per-bit
+    rotate-reflect recurrence vectorized over rows with int64 NumPy
+    (r10, guide §4.2), pinned cell-for-cell by tests/test_scale_ops.py
+    against the textbook xy2d reference.
 
-    Why: the unrolled JVM form is 2·BITS chained projections — cheap
-    to EXECUTE (whole-stage codegen) but expensive to BUILD: ~0.9 s of
-    py4j + Catalyst analysis per construction (each of the 20
-    projections re-analyzes the growing plan), re-paid on every bench
-    rep.  The kernel is one plan node."""
+    Why a kernel: the unrolled JVM form is 2·BITS chained projections
+    — cheap to EXECUTE (whole-stage codegen) but expensive to BUILD:
+    ~0.9 s of py4j + Catalyst analysis per construction (each of the
+    20 projections re-analyzes the growing plan), re-paid on every
+    bench rep.  The kernel is one plan node."""
     import numpy as np
     import pyarrow as pa
 
@@ -276,9 +231,6 @@ def scale_hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.datediff(F.to_date("o_orderdate"), F.lit("1970-01-01")) % 1024
         ).alias("yk"),
     )
-    # Arrow twin of hilbert_code (integer-exact; equality pinned by the
-    # xy2d reference test) — the 20-projection JVM pipeline cost ~0.9 s
-    # of plan construction per bench rep (r10, guide §4.2).
     coded = hilbert_code_arrow(keyed, "xk", "yk")
     return coded.groupBy(
         F.shiftright("hcode", BUCKET_SHIFT).cast("long").alias("bucket")

@@ -128,8 +128,7 @@ def m14_forecast_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     under allowPrecisionLoss, while DuckDB keeps scale 4 — the r1 hash
     mismatch).  The final divisions are the identical IEEE double
     sequence on both sides, so the driver's strict value hash matches.
-    WMAPE replaces MAPE so the denominator aggregates exactly
-    (ml/metrics.py)."""
+    WMAPE replaces MAPE so the denominator aggregates exactly."""
     daily = _daily(spark, sf_dir)
     w = Window.orderBy("d")
     scored = daily.select(
@@ -2051,10 +2050,8 @@ def m5_kshape(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded (≤105 in the reference), so the fit state is
     KB-sized — and since r9 it runs inside a 1-partition mapInPandas
     over the aggregated series frame (ONE lazy plan, zero construction
-    jobs; identical kshape core, identical seed).  The distributed
-    pairwise-SBD path (ml/clustering.py::sbd_distance_matrix) carries
-    the quality checks in pytest.  Rows-only: eigensolver-shaped
-    fit."""
+    jobs; identical kshape core, identical seed).  Rows-only:
+    eigensolver-shaped fit."""
     daily = _daily(spark, sf_dir)
     agg = daily.groupBy(F.trunc("d", "MM").alias("month")).agg(
         F.transform(

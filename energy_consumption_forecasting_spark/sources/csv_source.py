@@ -63,16 +63,6 @@ def read_csv(
     ).select("r.*")
 
 
-def write_stage(df: DataFrame, path: str, fmt: str = "parquet") -> None:
-    """Materialize a pipeline stage (reference: intermediate CSVs;
-    engine-internal: Parquet, with CSV kept for compat)."""
-    writer = df.write.mode("overwrite")
-    if fmt == "csv":
-        writer.option("header", True).csv(path)
-    else:
-        writer.parquet(path)
-
-
 def fetch_http_to_stage(
     spark: SparkSession,
     urls: list[str],

@@ -159,7 +159,7 @@ def delete_where(
     file listing the (file, row_index) pairs of live rows matching
     ``predicate``.  Deletes chain: each new version carries the full
     delete-file list, so reads stay one anti-join regardless of how
-    many DELETEs accumulated (compact_snapshot rewrites them away).
+    many DELETEs accumulated.
 
     Cost shape at 100 TB: the DELETE scans once to find positions and
     writes only the delete file — no data rewrite; the read-side
@@ -404,30 +404,3 @@ def read_snapshot_pruned(
         df = read_snapshot(spark, table_dir, entry["version"]).limit(0)
         return df, 0, len(files)
     return spark.read.parquet(*paths), len(keep), len(files)
-
-
-def compact_snapshot(
-    spark: SparkSession,
-    table_dir: str,
-    target_rows_per_file: int = 1_000_000,
-    note: str = "compaction",
-) -> int:
-    """Small-file compaction: rewrite the LATEST snapshot into
-    ceil(rows / target) evenly-sized files and commit the result as a
-    new version — the bin-packing maintenance pass every streaming or
-    micro-batch ingest needs (a year of 1-minute commits is ~500k tiny
-    files; scan planning and footer reads dominate before a single row
-    is decoded).
-
-    Data is byte-identical in content: the new version holds exactly
-    the old rows (the roundtrip test asserts set equality), only the
-    file layout changes.  Old versions stay time-travel readable until
-    ``vacuum``.  The row count comes from the snapshot being rewritten
-    anyway (one action on its count — metadata-only for parquet);
-    ``repartition(n)`` round-robins rows so files are even-sized, the
-    property object stores want for range requests.  Returns the new
-    version number."""
-    df = read_snapshot(spark, table_dir)
-    n_rows = df.count()
-    n_files = max(1, -(-n_rows // target_rows_per_file))
-    return commit_snapshot(df.repartition(n_files), table_dir, note=note)

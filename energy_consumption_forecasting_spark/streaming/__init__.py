@@ -38,40 +38,6 @@ def pinned_stream_partitions(spark, n: int = STREAM_STATE_PARTITIONS):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-@contextlib.contextmanager
-def rocksdb_state_store(spark):
-    """Run a streaming query with the RocksDB state store provider.
-
-    The default HDFSBackedStateStoreProvider keeps every state-store
-    version as deserialized JVM objects on the executor heap — at
-    100-TB stream scale (large keyspaces: per-user dedup sets,
-    session windows over millions of users) that heap residency is the
-    first thing to fall over.  RocksDB keeps state off-heap on local
-    SSD with incremental checkpointing to the checkpoint location, so
-    state size is bounded by disk, not heap.  The provider is baked
-    into stock Spark 4 — no extra jars.  Like the partition count, the
-    provider is fixed at the query's FIRST start; gate/test drains use
-    throwaway checkpoints so toggling here is safe."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
 @contextlib.contextmanager
 def _available_now(
     stream_df,

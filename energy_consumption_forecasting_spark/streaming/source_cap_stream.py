@@ -25,16 +25,11 @@ from pyspark.sql import functions as F
 
 # one source of truth with the batch operator
 from ..queries.pipeline_ops import SOURCE_CAP, TOPK_SQL
-from ..sources.versioned import (
-    commit_snapshot,
-    read_snapshot,
-    snapshots,
-    vacuum,
-    versions,
-)
+from ..sources.versioned import commit_snapshot, snapshots, vacuum, versions
 from .source import docs_stream
 
 _RESULT_SCHEMA = "source string, keep_rank int, doc_id long"
+_STATE_SCHEMA = "source string, ks array<struct<k:string,doc_id:bigint>>"
 
 
 def _batch_topk(batch: DataFrame) -> DataFrame:
@@ -102,7 +97,7 @@ def run_source_cap_available_now(
     def fold(batch: DataFrame, key: str) -> None:
         delta = _batch_topk(batch)
         prior = (
-            read_snapshot(batch.sparkSession, table_dir)
+            _read_state(batch.sparkSession, table_dir)
             if versions(table_dir)
             else None
         )
@@ -122,6 +117,19 @@ def run_source_cap_available_now(
     return out
 
 
+def _state_dir(table_dir: str) -> str:
+    """The latest state snapshot's data directory: the fold commits
+    whole snapshots (commit_snapshot), one data directory per version
+    and no delete files."""
+    return os.path.join(table_dir, snapshots(table_dir)[-1]["dir"])
+
+
+def _read_state(spark: SparkSession, table_dir: str) -> DataFrame:
+    """The latest state snapshot, read with its fixed schema: parquet
+    schema inference would run a Spark job per fold batch."""
+    return spark.read.schema(_STATE_SCHEMA).parquet(_state_dir(table_dir))
+
+
 def _read_final_state(spark: SparkSession, table_dir: str) -> DataFrame:
     """The latest snapshot exploded to (source, keep_rank, doc_id), as
     a frame that no longer reads ``table_dir``.
@@ -134,12 +142,10 @@ def _read_final_state(spark: SparkSession, table_dir: str) -> DataFrame:
     ``localCheckpoint`` materializes the result."""
     from ..session import broadcast_budget
 
-    # the fold commits whole snapshots (commit_snapshot): one data
-    # directory per version and no delete files
-    path = os.path.join(table_dir, snapshots(table_dir)[-1]["dir"])
+    path = _state_dir(table_dir)
     if _fits(path, broadcast_budget(spark)):
         return spark.createDataFrame(_explode_on_driver(path), _RESULT_SCHEMA)
-    state = read_snapshot(spark, table_dir)
+    state = _read_state(spark, table_dir)
     return (
         state.select("source", F.posexplode("ks").alias("pos", "e"))
         .select(

@@ -106,8 +106,6 @@ def duck():
 # unmatched, so tests/test_slow_registry.py fails on any entry whose
 # file::function does not exist.
 SLOW_NODE_IDS = {
-    "tests/test_ann_ingest.py::test_search_sees_ingested_vectors",
-    "tests/test_ann_ingest.py::test_streamed_ingest_matches_batch_encode",
     "tests/test_anomaly_stream.py::test_split_batches_converge_to_full_result",
     "tests/test_api_facade.py::test_blocking_split_matches_reference_shape",
     "tests/test_api_facade.py::test_etl_weather_chain",
@@ -119,7 +117,6 @@ SLOW_NODE_IDS = {
     "tests/test_cusum_stream.py::test_cusum_days_seal_midstream",
     "tests/test_cusum_stream.py::test_cusum_multibatch_equals_batch",
     "tests/test_enrich_stream.py::test_enrich_split_drain_equals_batch",
-    "tests/test_failure_injection.py::test_ann_ingest_crash_between_staging_and_promote",
     "tests/test_failure_injection.py::test_jsonl_stream_sink_crash_during_promote",
     "tests/test_markov_stream.py::test_multibatch_equals_batch",
     "tests/test_markov_stream.py::test_watermark_seals_midstream_and_tail_is_partial",
@@ -154,7 +151,6 @@ SLOW_NODE_IDS = {
     "tests/test_parity.py::test_rows_only_queries_run[m5_tskmeans_dba]",
     "tests/test_parity.py::test_rows_only_queries_run[m9_arima_full]",
     "tests/test_parity.py::test_rows_only_queries_run[sim_opq_topk]",
-    "tests/test_pipeline_ops.py::test_sq8_index_roundtrip",
     "tests/test_pipeline_ops.py::test_substring_dedup_exact_spans",
     "tests/test_plan_contracts.py::test_calendar_bounded_window_contract_all_queries",
     "tests/test_properties.py::test_basket_pair_explode_property",

@@ -14,30 +14,29 @@ from energy_consumption_forecasting_spark.streaming.anomaly_stream import (
 )
 
 SF_SMALL = "/root/testdata/sf0.001"
-SPLIT_DIR = "/root/repo/.stage/anomaly_split"
 
 
 @pytest.fixture(scope="module")
-def split_events(spark):
+def split_events(spark, tmp_path_factory):
     """events split into two files by event_id parity: every day's total
     arrives half in batch 1, half in batch 2."""
-    shutil.rmtree(SPLIT_DIR, ignore_errors=True)
+    split_dir = tmp_path_factory.mktemp("anomaly_split")
     # raw read/rewrite preserves the on-disk ts type; the stream reader
     # probes whatever lands here (streaming/source.py)
     ev = spark.read.parquet(f"{SF_SMALL}/events.parquet")
     for part, pred in (("a", 0), ("b", 1)):
         ev.filter(F.col("event_id") % 2 == pred).coalesce(1).write.parquet(
-            f"{SPLIT_DIR}/tmp_{part}"
+            f"{split_dir}/tmp_{part}"
         )
     # flatten into one directory of two parquet files
     import glob as g
     import os
 
-    os.makedirs(f"{SPLIT_DIR}/files", exist_ok=True)
+    os.makedirs(f"{split_dir}/files", exist_ok=True)
     for part in ("a", "b"):
-        src = g.glob(f"{SPLIT_DIR}/tmp_{part}/part-*.parquet")[0]
-        shutil.copy(src, f"{SPLIT_DIR}/files/{part}.parquet")
-    return f"{SPLIT_DIR}/files"
+        src = g.glob(f"{split_dir}/tmp_{part}/part-*.parquet")[0]
+        shutil.copy(src, f"{split_dir}/files/{part}.parquet")
+    return f"{split_dir}/files"
 
 
 def test_split_batches_converge_to_full_result(spark, split_events):

@@ -104,11 +104,13 @@ def test_kcore_is_true_fixpoint(spark):
 
 def test_kcore_peel_matches_python_reference(spark):
     """Distributed peel == pure-python true k-core on random graphs
-    (rounds chosen ample for convergence at this size)."""
+    (rounds chosen ample for convergence at this size).  The peel takes
+    both orientations of every edge and keeps or drops them together,
+    so ``s < t`` on its output is the surviving undirected edge set."""
     import random
 
     from energy_consumption_forecasting_spark.queries.components import (
-        kcore_peel,
+        kcore_peel_doubled,
     )
 
     rng = random.Random(13)
@@ -132,10 +134,13 @@ def test_kcore_peel_matches_python_reference(spark):
                     return es
                 es = {e for e in es if e[0] not in kill and e[1] not in kill}
 
-        df = spark.createDataFrame(sorted(edges), "u int, v int")
+        doubled = spark.createDataFrame(
+            sorted(edges | {(v, u) for u, v in edges}), "s int, t int"
+        )
         for k in (2, 3):
             got = {
-                (r["u"], r["v"])
-                for r in kcore_peel(df, k, rounds=12).collect()
+                (r["s"], r["t"])
+                for r in kcore_peel_doubled(doubled, k, rounds=12).collect()
+                if r["s"] < r["t"]
             }
             assert got == true_kcore(edges, k), (trial, k)

@@ -3,11 +3,9 @@ mid-stream, tail covers only the unsealed remainder."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
-from tests.test_markov_stream import SPLIT_DIR, _stage_split
+from tests.test_markov_stream import _stage_split
 
 
 def _mu_and_truth(spark, src_glob: str):
@@ -41,8 +39,8 @@ def _mu_and_truth(spark, src_glob: str):
     return mu, truth
 
 
-def test_cusum_multibatch_equals_batch(spark):
-    flat = _stage_split(spark)
+def test_cusum_multibatch_equals_batch(spark, tmp_path):
+    flat = _stage_split(spark, tmp_path)
     from energy_consumption_forecasting_spark.streaming.cusum_stream import (
         run_cusum_available_now,
     )
@@ -61,7 +59,7 @@ def test_cusum_multibatch_equals_batch(spark):
     assert got == truth
 
 
-def test_cusum_days_seal_midstream(spark):
+def test_cusum_days_seal_midstream(spark, tmp_path):
     """With 4 ts-contiguous chunks spanning ~30 days and a 1-day
     watermark delay, SOME days must seal (and emit) before the drain
     ends — the tail alone must not be the whole chart."""
@@ -75,9 +73,7 @@ def test_cusum_days_seal_midstream(spark):
         cusum_stream,
     )
 
-    flat = os.path.join(SPLIT_DIR, "flat")
-    if not os.path.isdir(flat):  # pragma: no cover — ordering guard
-        flat = _stage_split(spark)
+    flat = _stage_split(spark, tmp_path)
     mu, truth = _mu_and_truth(spark, f"{flat}/*.parquet")
     sink = f"cusum_t_{uuid.uuid4().hex[:8]}"
     with pinned_stream_partitions(spark):

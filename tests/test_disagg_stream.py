@@ -16,27 +16,26 @@ import time
 from pyspark.sql import functions as F
 
 SF_SMALL = "/root/testdata/sf0.001"
-SPLIT_DIR = "/root/repo/.stage/test_disagg_split"
 
 
-def _stage_split(spark, n_chunks: int = 4) -> str:
-    shutil.rmtree(SPLIT_DIR, ignore_errors=True)
+def _stage_split(spark, split_dir, n_chunks: int = 4) -> str:
+    split_dir = str(split_dir)
     orders = spark.read.parquet(f"{SF_SMALL}/orders.parquet").orderBy(
         "o_orderkey"
     )
     pdf = orders.toPandas()
     k = len(pdf) // n_chunks
-    os.makedirs(SPLIT_DIR, exist_ok=True)
+    os.makedirs(split_dir, exist_ok=True)
     for i in range(n_chunks):
         part = pdf.iloc[i * k : None if i == n_chunks - 1 else (i + 1) * k]
         spark.createDataFrame(part, orders.schema).coalesce(1).write.mode(
             "overwrite"
-        ).parquet(f"{SPLIT_DIR}/chunk={i:03d}")
-    flat = os.path.join(SPLIT_DIR, "flat")
+        ).parquet(f"{split_dir}/chunk={i:03d}")
+    flat = os.path.join(split_dir, "flat")
     os.makedirs(flat, exist_ok=True)
     idx = 0
     base = time.time() - 3600
-    for root, _dirs, files in sorted(os.walk(SPLIT_DIR)):
+    for root, _dirs, files in sorted(os.walk(split_dir)):
         for f in sorted(files):
             if f.endswith(".parquet") and root != flat:
                 dst = f"{flat}/{idx:03d}.parquet"
@@ -59,8 +58,8 @@ def _batch_daily(spark, orders_path: str):
     )
 
 
-def test_multibatch_daily_state_equals_batch(spark):
-    flat = _stage_split(spark)
+def test_multibatch_daily_state_equals_batch(spark, tmp_path):
+    flat = _stage_split(spark, tmp_path)
     from energy_consumption_forecasting_spark.streaming.disagg_stream import (
         run_disagg_daily_available_now,
     )

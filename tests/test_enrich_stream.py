@@ -15,24 +15,23 @@ from energy_consumption_forecasting_spark.streaming.enrich_stream import (
 )
 from tests.conftest import SF_SMALL
 
-SPLIT_DIR = "/root/repo/.stage/enrich_split"
 
 
 @pytest.fixture(scope="module")
-def split_events(spark):
-    shutil.rmtree(SPLIT_DIR, ignore_errors=True)
+def split_events(spark, tmp_path_factory):
+    split_dir = tmp_path_factory.mktemp("enrich_split")
     ev = spark.read.parquet(f"{SF_SMALL}/events.parquet")
     import glob as g
     import os
 
-    os.makedirs(f"{SPLIT_DIR}/files", exist_ok=True)
+    os.makedirs(f"{split_dir}/files", exist_ok=True)
     for part, parity in (("a", 0), ("b", 1)):
         ev.filter(F.col("event_id") % 2 == parity).coalesce(1).write.parquet(
-            f"{SPLIT_DIR}/tmp_{part}"
+            f"{split_dir}/tmp_{part}"
         )
-        src = g.glob(f"{SPLIT_DIR}/tmp_{part}/part-*.parquet")[0]
-        shutil.copy(src, f"{SPLIT_DIR}/files/{part}.parquet")
-    return f"{SPLIT_DIR}/files"
+        src = g.glob(f"{split_dir}/tmp_{part}/part-*.parquet")[0]
+        shutil.copy(src, f"{split_dir}/files/{part}.parquet")
+    return f"{split_dir}/files"
 
 
 def _as_map(df):

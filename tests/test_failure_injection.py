@@ -183,73 +183,6 @@ def test_fold_crash_between_snapshot_commit_and_txn_record(
     )
 
 
-def test_ann_ingest_crash_between_staging_and_promote(
-    spark, tmp_path, monkeypatch
-):
-    from energy_consumption_forecasting_spark.sources.ann_index import (
-        build_ann_index,
-    )
-    from energy_consumption_forecasting_spark.streaming.ann_ingest import (
-        ingest_vectors_available_now,
-    )
-
-    e = (
-        spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    )
-    base = e.filter(F.col("vec_id") < 80)
-    newer = e.filter((F.col("vec_id") >= 80) & (F.col("vec_id") < 120))
-
-    idx = str(tmp_path / "idx")
-    build_ann_index(base, idx, n_cells=4)
-    truth_idx = str(tmp_path / "truth")
-    build_ann_index(base, truth_idx, n_cells=4)
-
-    vec_dir = str(tmp_path / "arrivals")
-    newer.select(
-        "vec_id", F.col("v").cast("array<float>").alias("embedding")
-    ).coalesce(1).write.parquet(vec_dir)
-    ckpt = str(tmp_path / "ingest_ckpt")
-
-    real_replace = os.replace
-
-    def bomb(src_path, dst_path):
-        # only the ANN promote path (stage dir -> codes dir); everything
-        # else (parquet commits, manifest swaps) proceeds normally
-        if "_stage_" in str(src_path):
-            raise RuntimeError("injected: crash between staging and promote")
-        return real_replace(src_path, dst_path)
-
-    monkeypatch.setattr(os, "replace", bomb)
-    with pytest.raises(Exception, match="injected|Terminated|foreach"):
-        ingest_vectors_available_now(
-            spark, idx, vec_dir, checkpoint_dir=ckpt
-        )
-    # the crash left an orphaned stage dir and no recorded txn
-    assert any(
-        fn.startswith("_stage_") for fn in os.listdir(idx)
-    ), "expected an orphaned stage dir in the crash window"
-
-    monkeypatch.setattr(os, "replace", real_replace)
-    ingest_vectors_available_now(spark, idx, vec_dir, checkpoint_dir=ckpt)
-    # replay swept the orphan and promoted exactly once
-    assert not any(fn.startswith("_stage_") for fn in os.listdir(idx))
-    # clean reference: same ingest into the pristine twin index
-    ingest_vectors_available_now(
-        spark, truth_idx, vec_dir, checkpoint_dir=str(tmp_path / "ck2")
-    )
-    got = {
-        r["vec_id"]: (list(r["code"]), r["cell"])
-        for r in spark.read.parquet(f"{idx}/codes").collect()
-    }
-    want = {
-        r["vec_id"]: (list(r["code"]), r["cell"])
-        for r in spark.read.parquet(f"{truth_idx}/codes").collect()
-    }
-    assert got == want
-    assert len(got) == 120
-
-
 def test_jsonl_stream_sink_crash_during_promote(spark, tmp_path, monkeypatch):
     from energy_consumption_forecasting_spark.sources.jsonl_sink_datasource import (
         JsonlSinkDataSource,

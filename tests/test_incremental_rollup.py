@@ -20,22 +20,20 @@ from energy_consumption_forecasting_spark.sources.versioned import (
 )
 
 SF_SMALL = "/root/testdata/sf0.001"
-SPLIT_DIR = "/root/repo/.stage/incr_split"
-TABLE = "/root/repo/.stage/incr_table_test"
 
 
 @pytest.fixture(scope="module")
-def split_events(spark):
-    shutil.rmtree(SPLIT_DIR, ignore_errors=True)
+def split_events(spark, tmp_path_factory):
+    split_dir = tmp_path_factory.mktemp("incr_split")
     ev = spark.read.parquet(f"{SF_SMALL}/events.parquet")
-    os.makedirs(f"{SPLIT_DIR}/files", exist_ok=True)
+    os.makedirs(f"{split_dir}/files", exist_ok=True)
     for part, parity in (("a", 0), ("b", 1)):
         ev.filter(F.col("event_id") % 2 == parity).coalesce(1).write.parquet(
-            f"{SPLIT_DIR}/tmp_{part}"
+            f"{split_dir}/tmp_{part}"
         )
-        src = g.glob(f"{SPLIT_DIR}/tmp_{part}/part-*.parquet")[0]
-        shutil.copy(src, f"{SPLIT_DIR}/files/{part}.parquet")
-    return f"{SPLIT_DIR}/files"
+        src = g.glob(f"{split_dir}/tmp_{part}/part-*.parquet")[0]
+        shutil.copy(src, f"{split_dir}/files/{part}.parquet")
+    return f"{split_dir}/files"
 
 
 def _batch_truth(spark):
@@ -55,18 +53,18 @@ def _batch_truth(spark):
     }
 
 
-def test_two_batch_merge_equals_batch_aggregate(spark, split_events):
-    shutil.rmtree(TABLE, ignore_errors=True)
+def test_two_batch_merge_equals_batch_aggregate(spark, split_events, tmp_path):
+    table = str(tmp_path / "table")
     final = run_incremental_rollup(
-        spark, split_events, TABLE, glob="*.parquet", max_files_per_trigger=1
+        spark, split_events, table, glob="*.parquet", max_files_per_trigger=1
     )
     got = {
         (r.d, r.event_type): (r.n, r.sum_cents) for r in final.collect()
     }
     assert got == _batch_truth(spark)
     # one snapshot per micro-batch, both queryable
-    assert versions(TABLE) == [1, 2]
-    v1 = read_snapshot(spark, TABLE, version=1)
+    assert versions(table) == [1, 2]
+    v1 = read_snapshot(spark, table, version=1)
     # the first snapshot holds exactly the first file's contribution:
     # strictly fewer events than the final state, same state schema
     n1 = v1.agg(F.sum("n")).collect()[0][0]

@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from energy_consumption_forecasting_spark.ml.lstm import NumpyLSTM, lstm_train
 
@@ -95,84 +94,6 @@ def test_fit_stream_chunked_learns():
     model = NumpyLSTM(n_features=1, hidden=8, seed=42)
     history = model.fit_stream(lambda: iter(chunks), epochs=40, lr=0.02)
     assert history[-1] < history[0] * 0.2
-
-
-def test_iter_numpy_batches_matches_collected(spark):
-    """Streamed chunk assembly == the bounded one-shot export."""
-    from energy_consumption_forecasting_spark.ml.lstm import (
-        iter_numpy_batches,
-        sequence_dataset,
-        to_numpy_dataset,
-    )
-    from energy_consumption_forecasting_spark.tables import load_table
-
-    ev = (
-        load_table(spark, SF_SMALL, "events")
-        .groupBy(F.to_date("ts").alias("d"))
-        .agg(F.sum("value").alias("demand"))
-    )
-    seq = sequence_dataset(ev, "d", ["demand"], "demand", seq_length=7)
-    X0, y0 = to_numpy_dataset(seq, n_features=1)
-    xs, ys = zip(*iter_numpy_batches(seq, n_features=1))
-    assert np.array_equal(np.concatenate(xs), X0)
-    assert np.array_equal(np.concatenate(ys), y0)
-    assert X0.shape[1:] == (7, 1)
-
-
-def test_to_numpy_dataset_enforces_bound(spark):
-    from energy_consumption_forecasting_spark.ml.lstm import (
-        sequence_dataset,
-        to_numpy_dataset,
-    )
-    from energy_consumption_forecasting_spark.tables import load_table
-
-    ev = (
-        load_table(spark, SF_SMALL, "events")
-        .groupBy(F.to_date("ts").alias("d"))
-        .agg(F.sum("value").alias("demand"))
-    )
-    seq = sequence_dataset(ev, "d", ["demand"], "demand", seq_length=7)
-    with pytest.raises(MemoryError):
-        to_numpy_dataset(seq, n_features=1, max_bytes=16)
-
-
-def test_distributed_inference_matches_driver(spark):
-    """mapInPandas inference with broadcast weights == model.predict on
-    the collected tensors, element for element."""
-    from energy_consumption_forecasting_spark.ml.lstm import (
-        predict_distributed,
-        sequence_dataset,
-        to_numpy_dataset,
-    )
-    from energy_consumption_forecasting_spark.tables import load_table
-
-    ev = (
-        load_table(spark, SF_SMALL, "events")
-        .groupBy(F.to_date("ts").alias("d"))
-        .agg(F.sum("value").alias("demand"))
-    )
-    seq = sequence_dataset(ev, "d", ["demand"], "demand", seq_length=7)
-    X, y = to_numpy_dataset(seq, n_features=1)
-    model = NumpyLSTM(n_features=1, hidden=4, seed=9)
-    model.fit(X, y, epochs=3, lr=0.01)
-
-    dist = {
-        r["d"]: r["pred"]
-        for r in predict_distributed(seq, model, n_features=1).collect()
-    }
-    rows = sorted(
-        (r["d"], list(r["x"])) for r in seq.select("d", "x").collect()
-    )
-    import numpy as np
-
-    # same float64 path as the distributed kernel (which consumes the
-    # double-typed x column directly, not the float32 packed export)
-    Xo = np.asarray([x for _, x in rows], dtype=np.float64).reshape(
-        len(rows), -1, 1
-    )
-    want = model.predict(Xo)
-    got = np.asarray([dist[d] for d, _ in rows])
-    assert np.allclose(got, want, rtol=0, atol=0)
 
 
 def test_torch_trainer_when_torch_present():

@@ -11,7 +11,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 SF_SMALL = "/root/testdata/sf0.001"
-SPLIT_DIR = "/root/repo/.stage/markov_split"
 
 
 def _batch_truth(spark, src_dir: str) -> dict[tuple[str, str], int]:
@@ -30,22 +29,22 @@ def _batch_truth(spark, src_dir: str) -> dict[tuple[str, str], int]:
     return {(r["p"], r["nx"]): r["count"] for r in rows}
 
 
-def _stage_split(spark, n_chunks: int = 4) -> str:
+def _stage_split(spark, split_dir, n_chunks: int = 4) -> str:
     """Split the (globally ts-ordered) events file into ts-contiguous
     chunks, one parquet file each, so maxFilesPerTrigger=1 yields real
     multi-batch arrival with an advancing watermark and no late rows."""
-    shutil.rmtree(SPLIT_DIR, ignore_errors=True)
+    split_dir = str(split_dir)
     ev = spark.read.parquet(f"{SF_SMALL}/events.parquet").orderBy(
         "ts", "event_id"
     )
     pdf = ev.toPandas()
     k = len(pdf) // n_chunks
-    os.makedirs(SPLIT_DIR, exist_ok=True)
+    os.makedirs(split_dir, exist_ok=True)
     for i in range(n_chunks):
         part = pdf.iloc[i * k : None if i == n_chunks - 1 else (i + 1) * k]
         spark.createDataFrame(part, ev.schema).coalesce(1).write.mode(
             "overwrite"
-        ).parquet(f"{SPLIT_DIR}/chunk={i:03d}")  # zero-pad: walk order must be ts order
+        ).parquet(f"{split_dir}/chunk={i:03d}")  # zero-pad: walk order must be ts order
     # flatten: file source globs *.parquet in one dir.  The file source
     # admits maxFilesPerTrigger files per batch in MODIFICATION-TIME
     # order; freshly-copied chunks share an mtime, which makes the
@@ -55,11 +54,11 @@ def _stage_split(spark, n_chunks: int = 4) -> str:
     # scenario the exact-parity assertion is about.
     import time
 
-    flat = os.path.join(SPLIT_DIR, "flat")
+    flat = os.path.join(split_dir, "flat")
     os.makedirs(flat, exist_ok=True)
     idx = 0
     base = time.time() - 3600
-    for root, _dirs, files in sorted(os.walk(SPLIT_DIR)):
+    for root, _dirs, files in sorted(os.walk(split_dir)):
         for f in sorted(files):
             if f.endswith(".parquet") and root != flat:
                 dst = f"{flat}/{idx:03d}.parquet"
@@ -69,8 +68,8 @@ def _stage_split(spark, n_chunks: int = 4) -> str:
     return flat
 
 
-def test_multibatch_equals_batch(spark):
-    flat = _stage_split(spark)
+def test_multibatch_equals_batch(spark, tmp_path):
+    flat = _stage_split(spark, tmp_path)
     from energy_consumption_forecasting_spark.streaming.markov_stream import (
         run_markov_available_now,
     )
@@ -84,7 +83,7 @@ def test_multibatch_equals_batch(spark):
     assert got == _batch_truth(spark, flat)
 
 
-def test_watermark_seals_midstream_and_tail_is_partial(spark):
+def test_watermark_seals_midstream_and_tail_is_partial(spark, tmp_path):
     """With 4 ts-contiguous chunks the watermark advances between
     batches, so SOME transitions must be sealed+emitted mid-stream
     (the tail alone must NOT account for the whole answer)."""
@@ -99,9 +98,7 @@ def test_watermark_seals_midstream_and_tail_is_partial(spark):
         markov_stream,
     )
 
-    flat = os.path.join(SPLIT_DIR, "flat")
-    if not os.path.isdir(flat):  # pragma: no cover — ordering guard
-        flat = _stage_split(spark)
+    flat = _stage_split(spark, tmp_path)
     sink = f"markov_t_{uuid.uuid4().hex[:8]}"
     ckpt = tempfile.mkdtemp(prefix="ecf_markov_test_ckpt_")
     with pinned_stream_partitions(spark):

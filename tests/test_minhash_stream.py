@@ -13,7 +13,6 @@ from energy_consumption_forecasting_spark.streaming.minhash_stream import (
 )
 
 SF_SMALL = "/root/testdata/sf0.001"
-SPLIT_DIR = "/root/repo/.stage/minhash_split"
 
 
 def _batch_truth(spark):
@@ -56,26 +55,26 @@ def test_stream_drain_equals_batch_banding(spark):
 
 
 @pytest.fixture(scope="module")
-def split_docs(spark):
+def split_docs(spark, tmp_path_factory):
     """documents split so high doc_ids arrive in batch 1 and low ids in
     batch 2 — adversarial for first-writer-wins."""
     import glob as g
     import os
 
-    shutil.rmtree(SPLIT_DIR, ignore_errors=True)
+    split_dir = tmp_path_factory.mktemp("minhash_split")
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
     mid = docs.agg(F.expr("percentile(doc_id, 0.5)")).collect()[0][0]
-    os.makedirs(f"{SPLIT_DIR}/files", exist_ok=True)
+    os.makedirs(f"{split_dir}/files", exist_ok=True)
     # lexicographic file order drives FileStreamSource batch order:
     # 'a_high' (doc_id > mid) drains before 'b_low'
     for fname, pred in (
         ("a_high", F.col("doc_id") > mid),
         ("b_low", F.col("doc_id") <= mid),
     ):
-        docs.filter(pred).coalesce(1).write.parquet(f"{SPLIT_DIR}/tmp_{fname}")
-        src = g.glob(f"{SPLIT_DIR}/tmp_{fname}/part-*.parquet")[0]
-        shutil.copy(src, f"{SPLIT_DIR}/files/{fname}.parquet")
-    return f"{SPLIT_DIR}/files"
+        docs.filter(pred).coalesce(1).write.parquet(f"{split_dir}/tmp_{fname}")
+        src = g.glob(f"{split_dir}/tmp_{fname}/part-*.parquet")[0]
+        shutil.copy(src, f"{split_dir}/files/{fname}.parquet")
+    return f"{split_dir}/files"
 
 
 def test_first_writer_wins_across_batches(spark, split_docs):

@@ -10,16 +10,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from energy_consumption_forecasting_spark.ml.bayesopt import _NumpyGP, bayes_opt
-from energy_consumption_forecasting_spark.ml.cv import folds, label_folds, train_test_split
+from energy_consumption_forecasting_spark.ml.cv import folds, label_folds, label_split
 from energy_consumption_forecasting_spark.ml.forecast import (
     _ar_fit_forecast,
     ar_forecast_grouped,
 )
-from energy_consumption_forecasting_spark.ml.metrics import evaluate
+from energy_consumption_forecasting_spark.ml.metrics import mae
 from energy_consumption_forecasting_spark.ml.clustering import (
     _dtw,
     dtw_distance_matrix,
-    kmedoids_from_distances,
+    kmedoids_rows,
 )
 from energy_consumption_forecasting_spark.ml.decomposition import _np_decompose
 from energy_consumption_forecasting_spark.queries.ml_queries import (
@@ -68,7 +68,9 @@ def test_blocked_cv_folds(spark, series_df):
 
 
 def test_train_test_split(spark, series_df):
-    tr, te = train_test_split(series_df, ["d"])
+    labeled = label_split(series_df, ["d"])
+    tr = labeled.filter(F.col("split") == "train")
+    te = labeled.filter(F.col("split") == "test")
     assert tr.count() == math.ceil(0.85 * 90)
     assert te.count() == 90 - math.ceil(0.85 * 90)
     assert tr.agg(F.max("d")).first()[0] < te.agg(F.min("d")).first()[0]
@@ -78,10 +80,8 @@ def test_metrics(spark):
     df = spark.createDataFrame(
         [(1.0, 2.0), (3.0, 3.0), (5.0, 4.0)], "pred double, y double"
     )
-    m = evaluate(df, "pred", "y")
-    assert m["mae"] == pytest.approx(2.0 / 3)
-    assert m["mse"] == pytest.approx(2.0 / 3)
-    assert m["wmape"] == pytest.approx(2.0 / 9)
+    m = df.agg(mae(F.col("pred"), F.col("y"))).first()[0]
+    assert m == pytest.approx(2.0 / 3)
 
 
 def test_ar_forecast_linear_trend():
@@ -113,7 +113,7 @@ def test_dtw_kmedoids(spark):
         rows.append((f"s{sid}", [base + float(i % 3) for i in range(12)]))
     df = spark.createDataFrame(rows, "series_id string, series array<double>")
     dist = dtw_distance_matrix(df)
-    assignment = kmedoids_from_distances(dist, k=2, seed=7)
+    assignment = kmedoids_rows(dist.collect(), k=2, seed=7)
     g1 = {assignment[f"s{i}"] for i in range(3)}
     g2 = {assignment[f"s{i}"] for i in range(3, 6)}
     assert len(g1) == 1 and len(g2) == 1 and g1 != g2
@@ -253,8 +253,8 @@ def test_label_folds_raw_frame_never_single_partitions(spark):
     raw = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     labeled = label_folds(raw, ["o_orderdate", "o_orderkey"])
     assert audit_unpartitioned_windows(labeled) == []
-    tr, te = train_test_split(raw, ["o_orderdate", "o_orderkey"])
-    assert audit_unpartitioned_windows(tr) == []
+    split = label_split(raw, ["o_orderdate", "o_orderkey"])
+    assert audit_unpartitioned_windows(split) == []
     # the lazy-bucket variant is action-free AND clean
     dag = spark.sparkContext._jsc.sc().dagScheduler()
     before = dag.numTotalJobs()

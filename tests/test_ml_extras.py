@@ -1,4 +1,4 @@
-"""Factor analysis, params store, analysis harness, LSTM dataset prep."""
+"""Factor analysis, analysis harness, LSTM dataset prep."""
 
 from __future__ import annotations
 
@@ -8,24 +8,16 @@ from pyspark.sql import functions as F
 
 from energy_consumption_forecasting_spark.ml.analysis import (
     ablation,
-    learning_curve,
     naive_ar_cv_mae,
     permutation_importance,
 )
 from energy_consumption_forecasting_spark.ml.factor import (
-    correlation_matrix,
+    corr_from_moment_row,
+    moment_aggs,
     principal_axis_factoring,
     varimax,
 )
-from energy_consumption_forecasting_spark.ml.lstm import (
-    sequence_dataset,
-    to_numpy_dataset,
-)
-from energy_consumption_forecasting_spark.ml.params import (
-    best_of_grid,
-    load_params,
-    save_params,
-)
+from energy_consumption_forecasting_spark.ml.lstm import sequence_dataset
 
 
 @pytest.fixture(scope="module")
@@ -45,7 +37,8 @@ def corr_df(spark):
 
 
 def test_correlation_matrix(spark, corr_df):
-    R = correlation_matrix(corr_df, ["a", "b", "c"])
+    cols = ["a", "b", "c"]
+    R = corr_from_moment_row(corr_df.agg(*moment_aggs(cols)).first(), cols)
     assert R.shape == (3, 3)
     assert np.allclose(np.diag(R), 1.0)
     assert R[0, 1] > 0.95  # a,b share factor 1
@@ -53,20 +46,12 @@ def test_correlation_matrix(spark, corr_df):
 
 
 def test_factoring_recovers_structure(spark, corr_df):
-    R = correlation_matrix(corr_df, ["a", "b", "c"])
+    cols = ["a", "b", "c"]
+    R = corr_from_moment_row(corr_df.agg(*moment_aggs(cols)).first(), cols)
     L = varimax(principal_axis_factoring(R, 2))
     # a & b load on one factor, c on the other
     dom = np.argmax(np.abs(L), axis=1)
     assert dom[0] == dom[1] != dom[2]
-
-
-def test_params_roundtrip(tmp_path):
-    p = {"order": [3, 1, 4], "lr": 0.005}
-    path = str(tmp_path / "params.json")
-    save_params(p, path)
-    assert load_params(path) == p
-    hist = [({"p": 1}, 5.0), ({"p": 3}, 2.0), ({"p": 7}, 9.0)]
-    assert best_of_grid(hist)["params"] == {"p": 3}
 
 
 @pytest.fixture(scope="module")
@@ -96,9 +81,21 @@ def test_ablation(spark, ts_df):
     assert res["none"] == pytest.approx(res["drop_x"])
 
 
-def test_learning_curve_monotone_rows(spark, ts_df):
-    res = learning_curve(ts_df, "d", [0.5, 1.0], lambda df: float(df.count()))
-    assert res[0][1] == 50.0 and res[1][1] == 100.0
+def test_learning_curve_monotone_rows(spark):
+    """M18 (the registered query): each growing data fraction scores a
+    longer prefix of the daily series, and the full fraction scores
+    every day that has a lag-1 prediction."""
+    from energy_consumption_forecasting_spark.queries.ml_queries import (
+        _daily,
+        m18_learning_curve,
+    )
+    from tests.conftest import SF_SMALL
+
+    rows = sorted(m18_learning_curve(spark, SF_SMALL).collect())
+    assert [r["frac"] for r in rows] == [0.25, 0.5, 0.75, 1.0]
+    n_rows = [r["n_rows"] for r in rows]
+    assert n_rows == sorted(n_rows) and n_rows[0] < n_rows[-1]
+    assert n_rows[-1] == _daily(spark, SF_SMALL).count() - 1
 
 
 def test_permutation_importance_signal(spark, ts_df):
@@ -118,11 +115,12 @@ def test_sequence_dataset_shapes(spark, ts_df):
     # n - (L-1) full windows, minus the last row (no lead target)
     assert len(rows) == 100 - 4 - 1
     assert all(len(r["x"]) == 5 * 2 for r in rows)
-    X, y = to_numpy_dataset(seq, n_features=2)
-    assert X.shape == (95, 5, 2)
-    assert y.shape == (95,)
-    # window content: first window = rows 0..4 of feature y
-    assert X[0, :, 0] == pytest.approx([100 + (i % 7) * 5 + i * 0.3 for i in range(5)])
+    # window content: first window = rows 0..4 of feature y, interleaved
+    # with feature x per time step
+    first = min(rows, key=lambda r: r["d"])
+    assert first["x"][0::2] == pytest.approx(
+        [100 + (i % 7) * 5 + i * 0.3 for i in range(5)]
+    )
 
 
 # --- M9 full ARMA (Hannan-Rissanen MA terms) --------------------------------
@@ -261,20 +259,6 @@ def test_db4_odd_length_and_filter_identities():
         )
     ca, cd = db4_dwt(np.arange(31, dtype=float))  # odd: repeat last sample
     assert ca.shape == cd.shape == (16,)
-
-
-def test_to_numpy_dataset_matches_full_topandas(spark, ts_df):
-    """The mapInPandas-packed export must reproduce the naive whole-table
-    toPandas arrays exactly (same rows, same order, float32)."""
-    import numpy as np
-
-    seq = sequence_dataset(ts_df, "d", ["y", "x"], "y", seq_length=5)
-    X, y = to_numpy_dataset(seq, n_features=2)
-    pdf = seq.select("x", "y").toPandas()
-    X_ref = np.stack(pdf["x"].to_numpy()).astype(np.float32).reshape(len(pdf), -1, 2)
-    y_ref = pdf["y"].to_numpy(dtype=np.float32)
-    assert np.array_equal(X, X_ref)
-    assert np.array_equal(y, y_ref)
 
 
 # --- M15 exact interventional Shapley values --------------------------------
@@ -487,14 +471,11 @@ def test_css_refine_improves_on_hr_starts():
 
 def test_som_recovers_separated_clusters(spark):
     """Batch SOM: two well-separated series shapes land on different
-    units, each group on ONE unit, and the quantization error after
-    training beats the seeded init."""
+    units, each group on ONE unit, and every series sits close to its
+    best-matching unit after training."""
     import numpy as np
 
-    from energy_consumption_forecasting_spark.ml.som import (
-        som_fit,
-        som_quantization_error,
-    )
+    from energy_consumption_forecasting_spark.ml.som import som_fit
 
     rng = np.random.RandomState(3)
     rows = []
@@ -508,7 +489,10 @@ def test_som_recovers_separated_clusters(spark):
     a_units = {assignment[f"a{i}"] for i in range(8)}
     b_units = {assignment[f"b{i}"] for i in range(8)}
     assert len(a_units) == 1 and len(b_units) == 1 and a_units != b_units
-    assert som_quantization_error(df, codebook) < 1.0  # groups ~0.01 noise
+    # mean distance to the BMU (quantization error); groups ~0.01 noise
+    X = np.array([r[1] for r in rows])
+    qe = np.sqrt(((X[:, None, :] - codebook[None]) ** 2).sum(axis=2)).min(axis=1)
+    assert qe.mean() < 1.0
 
 
 def test_arima_exact_mle_goldens():
@@ -564,17 +548,13 @@ def test_arima_exact_mle_goldens():
         assert dfc < 0.1, f"{name}: forecast deviation {dfc} sigma"
 
 
-def test_sbd_properties_and_kshape_recovery(spark):
+def test_sbd_properties_and_kshape_recovery():
     """SBD: zero on self and on scaled copies, symmetric, shift-tolerant;
     k-Shape recovers two well-separated shape families regardless of
     per-series scale and shift."""
     import numpy as np
 
-    from energy_consumption_forecasting_spark.ml.clustering import (
-        _sbd,
-        kshape,
-        sbd_distance_matrix,
-    )
+    from energy_consumption_forecasting_spark.ml.clustering import _sbd, kshape
 
     t = np.arange(48, dtype=float)
     slow = np.sin(2 * np.pi * t / 24)  # period 24
@@ -602,17 +582,6 @@ def test_sbd_properties_and_kshape_recovery(spark):
     square_labels = {labels[k] for k in labels if k.startswith("q")}
     assert len(sine_labels) == 1 and len(square_labels) == 1
     assert sine_labels != square_labels
-    # distributed SBD matrix agrees with the driver distance
-    sdf = spark.createDataFrame(
-        [(k, [float(x) for x in v]) for k, v in series.items()],
-        "series_id string, series array<double>",
-    )
-    got = {
-        (r["id_a"], r["id_b"]): r["sbd"]
-        for r in sbd_distance_matrix(sdf).collect()
-    }
-    for (a, b), d in list(got.items())[:10]:
-        assert d == pytest.approx(_sbd(series[a], series[b]), abs=1e-9)
 
 
 def test_isotonic_minimax_equals_pav(spark):
@@ -1267,7 +1236,7 @@ def test_dtw_external_golden(spark):
     from energy_consumption_forecasting_spark.ml.clustering import (
         _dtw,
         dtw_distance_matrix,
-        kmedoids_from_distances,
+        kmedoids_rows,
     )
 
     path = os.path.join(
@@ -1297,7 +1266,7 @@ def test_dtw_external_golden(spark):
     assert got == km["pair_dtw"]
 
     # and k-medoids over those distances recovers the derived partition
-    labels = kmedoids_from_distances(dtw_distance_matrix(sdf), k=2)
+    labels = kmedoids_rows(dtw_distance_matrix(sdf).collect(), k=2)
     (ga, gb) = km["partition"]
     assert labels[ga[0]] == labels[ga[1]]
     assert labels[gb[0]] == labels[gb[1]]

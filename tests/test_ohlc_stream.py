@@ -11,31 +11,30 @@ import time
 from pyspark.sql import functions as F
 
 SF_SMALL = "/root/testdata/sf0.001"
-SPLIT_DIR = "/root/repo/.stage/test_ohlc_split"
 
 
-def _stage_split(spark, n_chunks: int = 4) -> str:
+def _stage_split(spark, split_dir, n_chunks: int = 4) -> str:
     """ts-contiguous chunks with strictly increasing mtimes so arrival
     order == event-time order (the file source admits files in
     modification-time order).  Chunk boundaries intentionally fall
     MID-DAY, so day bars must merge partial states across batches."""
-    shutil.rmtree(SPLIT_DIR, ignore_errors=True)
+    split_dir = str(split_dir)
     ev = spark.read.parquet(f"{SF_SMALL}/events.parquet").orderBy(
         "ts", "event_id"
     )
     pdf = ev.toPandas()
     k = len(pdf) // n_chunks
-    os.makedirs(SPLIT_DIR, exist_ok=True)
+    os.makedirs(split_dir, exist_ok=True)
     for i in range(n_chunks):
         part = pdf.iloc[i * k : None if i == n_chunks - 1 else (i + 1) * k]
         spark.createDataFrame(part, ev.schema).coalesce(1).write.mode(
             "overwrite"
-        ).parquet(f"{SPLIT_DIR}/chunk={i:03d}")
-    flat = os.path.join(SPLIT_DIR, "flat")
+        ).parquet(f"{split_dir}/chunk={i:03d}")
+    flat = os.path.join(split_dir, "flat")
     os.makedirs(flat, exist_ok=True)
     idx = 0
     base = time.time() - 3600
-    for root, _dirs, files in sorted(os.walk(SPLIT_DIR)):
+    for root, _dirs, files in sorted(os.walk(split_dir)):
         for f in sorted(files):
             if f.endswith(".parquet") and root != flat:
                 dst = f"{flat}/{idx:03d}.parquet"
@@ -82,8 +81,8 @@ def _batch_truth(spark, events_path: str):
     }
 
 
-def test_multibatch_equals_batch(spark):
-    flat = _stage_split(spark)
+def test_multibatch_equals_batch(spark, tmp_path):
+    flat = _stage_split(spark, tmp_path)
     from energy_consumption_forecasting_spark.streaming.ohlc_stream import (
         run_ohlc_available_now,
     )
@@ -104,7 +103,7 @@ def test_multibatch_equals_batch(spark):
     assert got == _batch_truth(spark, flat) and len(got) > 0
 
 
-def test_available_now_leaves_no_checkpoint_or_view(spark):
+def test_available_now_leaves_no_checkpoint_or_view(spark, tmp_path):
     """run_ohlc_available_now must reclaim its tempdir checkpoint and
     memory-sink view (round-6 advice: repeated gate/bench invocations
     leaked one of each per call), while the returned frame stays
@@ -116,7 +115,7 @@ def test_available_now_leaves_no_checkpoint_or_view(spark):
         run_ohlc_available_now,
     )
 
-    flat = _stage_split(spark, n_chunks=2)
+    flat = _stage_split(spark, tmp_path, n_chunks=2)
     pat = os.path.join(tempfile.gettempdir(), "ecf_ohlc_ckpt_*")
     before = set(glob.glob(pat))
     views_before = {t.name for t in spark.catalog.listTables()}

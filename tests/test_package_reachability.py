@@ -1,42 +1,42 @@
-"""Every package module must be reachable from a runtime entry point:
-the query registry (``queries.load_all``), ``api.py``, ``bench.py``,
-``perfbench/workloads.py`` or ``__spark_entry__.py``.  A module that only
-tests import is code no query runs, and a second implementation of some
-concept tends to hide there.  Spark-free: the import graph is read from
-the source with ``ast`` (imports inside functions count), nothing is
-imported."""
+"""Every package module, and every top-level function in one, must be
+reachable from a runtime entry point: the query registry
+(``queries.load_all`` and its ``@query`` functions), ``api.py``,
+``bench.py``, ``perfbench/*.py``, ``tools/*.py`` or
+``__spark_entry__.py``.  Code that only tests reach is code no query
+runs, and a second implementation of some concept tends to hide there.
+Spark-free: the import graph and the names each function mentions are
+read from the source with ``ast``, nothing is imported."""
 
 from __future__ import annotations
 
 import ast
+import functools
+import glob
 import os
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "energy_consumption_forecasting_spark"
 
-ROOTS = (
-    f"{PACKAGE}/queries/__init__.py",
-    f"{PACKAGE}/api.py",
-    "bench.py",
-    "perfbench/workloads.py",
-    "__spark_entry__.py",
-)
+# Entry files outside the package: all of their code runs.
+SCRIPTS = tuple(
+    sorted(
+        os.path.relpath(p, REPO)
+        for pattern in ("perfbench/*.py", "tools/*.py")
+        for p in glob.glob(os.path.join(REPO, pattern))
+    )
+) + ("bench.py", "__spark_entry__.py")
+
+ROOTS = (f"{PACKAGE}/queries/__init__.py", f"{PACKAGE}/api.py") + SCRIPTS
 
 # Modules kept although no entry point reaches them, one reason each.
-EXEMPT = {
-    f"{PACKAGE}.sources.ann_index": (
-        "the persisted quantized-ANN index (build, save, search); its "
-        "committed fixture pins backward-compatible search of an index "
-        "built by an earlier version"
-    ),
-    f"{PACKAGE}.streaming.ann_ingest": (
-        "the persisted index's streaming ingest, an exactly-once "
-        "fold_available_now sink"
-    ),
-    f"{PACKAGE}.plans.dataset_assembly": (
-        "the reference's EP2 modeling-dataset assembly (hourly balance, "
-        "monthly fuel consumption and daily weather joined into the daily "
-        "training set), pinned by tests/test_pipelines.py"
+EXEMPT: dict[str, str] = {}
+
+# Top-level functions kept although no entry point names them, one
+# reason each: a test oracle, or an api.py or tool path.
+EXEMPT_FUNCTIONS = {
+    f"{PACKAGE}.queries.dedup.dedup_cosine_allpairs": (
+        "test oracle: the exact all-pairs cosine reference the banded-LSH "
+        "recall test (tests/test_scale_ops.py) compares against"
     ),
 }
 
@@ -64,14 +64,18 @@ def _with_parents(name: str) -> list[str]:
     return [".".join(parts[: i + 1]) for i in range(len(parts))]
 
 
+@functools.lru_cache(maxsize=None)
+def _parse(path: str) -> ast.Module:
+    with open(path) as f:
+        return ast.parse(f.read(), filename=path)
+
+
 def _imports(path: str) -> set[str]:
     """Package modules ``path`` imports, anywhere in its body."""
-    with open(path) as f:
-        tree = ast.parse(f.read(), filename=path)
     me = _module_name(path)
     is_pkg = path.endswith("__init__.py")
     out: set[str] = set()
-    for node in ast.walk(tree):
+    for node in ast.walk(_parse(path)):
         if isinstance(node, ast.Import):
             names = [a.name for a in node.names]
         elif isinstance(node, ast.ImportFrom):
@@ -120,6 +124,64 @@ def _reachable() -> set[str]:
     return seen
 
 
+def _names(node: ast.AST) -> set[str]:
+    """Identifiers the code under ``node`` mentions: variable names,
+    attribute names and imported names.  Docstrings are string
+    constants and comments are not in the tree, so neither counts."""
+    out: set[str] = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.split(".")[-1])
+    return out
+
+
+def _is_query(fn: ast.FunctionDef) -> bool:
+    """Registered through the ``@query(...)`` decorator."""
+    for d in fn.decorator_list:
+        f = d.func if isinstance(d, ast.Call) else d
+        if getattr(f, "id", None) == "query" or getattr(f, "attr", None) == "query":
+            return True
+    return False
+
+
+def _reached_functions() -> tuple[set[str], set[str]]:
+    """(every top-level function of a reached module, the reached ones),
+    as ``module.function``.  A function is reached when an ``@query``
+    decorator registers it, or when an entry script, the top-level
+    code of a reached module, or a reached function names it."""
+    defs: dict[str, list[tuple[str, ast.FunctionDef]]] = {}
+    named: set[str] = set()
+    reached: set[str] = set()
+    todo: list[ast.AST] = []
+    for mod in _reachable():
+        for st in _parse(_module_path(mod)).body:
+            if not isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                todo.append(st)
+                continue
+            qual = f"{mod}.{st.name}"
+            defs.setdefault(st.name, []).append((qual, st))
+            # decorators and defaults run when the module is imported
+            todo += st.decorator_list + st.args.defaults
+            todo += [d for d in st.args.kw_defaults if d is not None]
+            if _is_query(st):
+                reached.add(qual)
+                todo.append(st)
+    todo += [_parse(os.path.join(REPO, s)) for s in SCRIPTS]
+    while todo:
+        for name in _names(todo.pop()) - named:
+            named.add(name)
+            for qual, fn in defs.get(name, ()):
+                if qual not in reached:
+                    reached.add(qual)
+                    todo.append(fn)
+    every = {qual for entries in defs.values() for qual, _ in entries}
+    return every, reached
+
+
 def test_every_package_module_is_reached_from_an_entry_point():
     unreached = _package_modules() - _reachable() - set(EXEMPT)
     assert not unreached, (
@@ -133,3 +195,20 @@ def test_exemptions_are_still_needed():
     reached = _reachable()
     stale = sorted(m for m in EXEMPT if m not in modules or m in reached)
     assert not stale, f"EXEMPT entries that are gone or now reached: {stale}"
+
+
+def test_every_package_function_is_reached_from_an_entry_point():
+    every, reached = _reached_functions()
+    unreached = every - reached - set(EXEMPT_FUNCTIONS)
+    assert not unreached, (
+        "top-level package functions no entry point reaches (delete "
+        f"them, or reach them from a query): {sorted(unreached)}"
+    )
+
+
+def test_function_exemptions_are_still_needed():
+    every, reached = _reached_functions()
+    stale = sorted(f for f in EXEMPT_FUNCTIONS if f not in every or f in reached)
+    assert not stale, (
+        f"EXEMPT_FUNCTIONS entries that are gone or now reached: {stale}"
+    )

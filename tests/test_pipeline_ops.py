@@ -294,195 +294,6 @@ def test_bpe_encode_respects_rank_order(spark):
     assert got == ["a", "ba", "b"]
 
 
-def test_ann_index_roundtrip(spark, tmp_path):
-    """Persisted index (codes parquet + meta.json) answers identically
-    to the in-session lazy fits + pq_topk_table_lazy, and IVF codes
-    are cell-partitioned."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from energy_consumption_forecasting_spark.functions.vectors import (
-        as_double,
-    )
-    from energy_consumption_forecasting_spark.operators.ann import (
-        ivf_assign_lazy,
-        ivf_fit_frame,
-        pq_encode_lazy,
-        pq_fit_frame,
-        pq_topk_table_lazy,
-    )
-    from energy_consumption_forecasting_spark.sources.ann_index import (
-        build_ann_index,
-        search_ann_index,
-    )
-    from energy_consumption_forecasting_spark.tables import load_table
-
-    e = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
-        "vec_id", as_double("embedding").alias("v")
-    )
-    idx = str(tmp_path / "ann_idx")
-    build_ann_index(e, idx, n_cells=8)
-    q = e.filter(F.col("vec_id") < 3)
-    got = {
-        (r["query_id"], r["rank"]): (r["vec_id"], round(r["adc_dist"], 9))
-        for r in search_ann_index(spark, idx, q, k_neighbors=4).collect()
-    }
-
-    # same quantizers (deterministic seeds) built in-session
-    fit = pq_fit_frame(e, m=8, k=16)
-    ivf_fit = ivf_fit_frame(e, n_cells=8)
-    encoded = pq_encode_lazy(e, fit, m=8).join(
-        ivf_assign_lazy(e, ivf_fit).select("vec_id", "cell"), "vec_id"
-    )
-    want = {
-        (r["query_id"], r["rank"]): (r["vec_id"], round(r["adc_dist"], 9))
-        for r in pq_topk_table_lazy(
-            encoded, q, fit, k_neighbors=4, ivf_fit=ivf_fit
-        ).collect()
-    }
-    assert got == want and len(got) == 12
-    # cell-partitioned layout on disk (partition pruning at the scan)
-    assert any(
-        d.startswith("cell=") for d in os.listdir(os.path.join(idx, "codes"))
-    )
-
-
-def test_opq_plus_ivf_probes_raw_cells(spark, tmp_path):
-    """OPQ + IVF together: IVF cells are assigned on RAW vectors at
-    build time, so the coarse probe must use the UN-rotated query.
-
-    Regression for the bug where the ADC kernel rotated Q before the
-    probe: a corpus vector used as its own query then probed the wrong
-    cell (~1/n_cells self-recall at nprobe=1). With raw probing, a
-    corpus query's nearest raw cell IS its assigned cell, so the query
-    itself is always in the candidate set and self-recall@4 is high."""
-    from pyspark.sql import functions as F
-
-    from energy_consumption_forecasting_spark.functions.vectors import (
-        as_double,
-    )
-    from energy_consumption_forecasting_spark.sources.ann_index import (
-        build_ann_index,
-        search_ann_index,
-    )
-    from energy_consumption_forecasting_spark.tables import load_table
-
-    e = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
-        "vec_id", as_double("embedding").alias("v")
-    )
-    idx = str(tmp_path / "ann_opq_ivf")
-    build_ann_index(e, idx, opq=True, n_cells=8)
-
-    q = e.filter(F.col("vec_id") < 20)
-    hits = search_ann_index(spark, idx, q, k_neighbors=4, nprobe=1)
-    self_hits = hits.filter(
-        F.col("query_id") == F.col("vec_id")
-    ).count()
-    assert self_hits >= 15  # >= 75% self-recall@4; the bug gives ~1/8
-
-
-def test_ann_index_meta_equals_fit_frames(spark, tmp_path):
-    """build_ann_index persists exactly the quantizers the lazy fit
-    frames collect on the same corpus — one quantizer implementation
-    for the index and the sim_* queries.  meta.json keeps R itself; the
-    OPQ frame's rt column holds R's columns.  The OPQ+IVF codes are the
-    lazy encoders' output: PQ codes on the rotated vector, IVF cells on
-    the RAW vector."""
-    import json
-
-    import numpy as np
-
-    from energy_consumption_forecasting_spark.functions.vectors import (
-        as_double,
-    )
-    from energy_consumption_forecasting_spark.operators.ann import (
-        ivf_assign_lazy,
-        ivf_fit_frame,
-        opq_fit_frame,
-        opq_rotate_lazy,
-        pq_encode_lazy,
-        pq_fit_frame,
-        sq8_fit_frame,
-    )
-    from energy_consumption_forecasting_spark.sources.ann_index import (
-        build_ann_index,
-    )
-
-    e = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet").select(
-        "vec_id", as_double("embedding").alias("v")
-    )
-
-    def meta_of(name, **kw):
-        idx = str(tmp_path / name)
-        build_ann_index(e, idx, **kw)
-        with open(f"{idx}/meta.json") as f:
-            return json.load(f)
-
-    pq = meta_of("pq", n_cells=8)
-    assert pq["codebooks"] == pq_fit_frame(e, m=8, k=16).first()["books"]
-    assert pq["centroids"] == ivf_fit_frame(e, n_cells=8).first()["centroids"]
-    assert (pq["kind"], pq["m"], pq["k"], pq["opq"], pq["n_cells"]) == (
-        "pq", 8, 16, False, 8,
-    )
-
-    opq = meta_of("opq", opq=True, n_cells=8)
-    opq_fit = opq_fit_frame(e, m=8, k=16)
-    fit = opq_fit.first()
-    assert opq["codebooks"] == fit["books"]
-    assert opq["rotation"] == np.asarray(fit["rt"]).T.tolist()
-    assert opq["centroids"] == pq["centroids"]
-    ivf_fit = ivf_fit_frame(e, n_cells=8)
-    want = pq_encode_lazy(
-        opq_rotate_lazy(e, opq_fit), opq_fit.select("books"), m=8
-    ).join(ivf_assign_lazy(e, ivf_fit).select("vec_id", "cell"), "vec_id")
-
-    def as_rows(df):
-        return {r["vec_id"]: (list(r["code"]), r["cell"]) for r in df.collect()}
-
-    got = as_rows(spark.read.parquet(str(tmp_path / "opq" / "codes")))
-    assert got == as_rows(want) and len(got) == e.count()
-
-    sq8 = meta_of("sq8", kind="sq8", n_cells=None)
-    ranges = sq8_fit_frame(e).first()
-    assert sq8["mins"] == ranges["mn"] and sq8["maxs"] == ranges["mx"]
-
-
-def test_committed_opq_ivf_index_searches_same_rows(spark):
-    """A PQ+OPQ+IVF index written to disk by the previous (eager)
-    implementation still loads and searches to the same
-    (query_id, rank, vec_id) rows it answered when written.  Pins the
-    meta.json/codes layout and the rotation orientation (meta holds R,
-    applied as x·R)."""
-    import json
-    import os
-
-    from energy_consumption_forecasting_spark.functions.vectors import (
-        as_double,
-    )
-    from energy_consumption_forecasting_spark.sources.ann_index import (
-        search_ann_index,
-    )
-
-    fixtures = os.path.join(os.path.dirname(__file__), "fixtures")
-    idx = os.path.join(fixtures, "ann_index_pq_opq_ivf")
-    with open(os.path.join(fixtures, "ann_index_pq_opq_ivf_search.json")) as f:
-        want = json.load(f)
-    e = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet").select(
-        "vec_id", as_double("embedding").alias("v")
-    )
-    q = e.filter(F.col("vec_id") < 20)
-    for nprobe, rows in want["rows_by_nprobe"].items():
-        got = sorted(
-            [r["query_id"], r["rank"], r["vec_id"]]
-            for r in search_ann_index(
-                spark, idx, q, k_neighbors=want["k_neighbors"],
-                nprobe=int(nprobe),
-            ).collect()
-        )
-        assert got == rows and len(got) == 80, f"nprobe={nprobe}"
-
-
 def test_substring_dedup_exact_spans(spark, tmp_path, monkeypatch):
     """Hand-built corpus pins the exact-span semantics: maximal merge of
     overlapping duplicated windows, same-doc repeats counted, unique
@@ -652,83 +463,23 @@ def test_sq8_ivf_recall_vs_exact(spark):
         assert sorted(ranks) == list(range(1, len(ranks) + 1))
 
 
-def test_sq8_index_roundtrip(spark, tmp_path):
-    """Persisted SQ8 index: build, reload in a fresh read, self-retrieve."""
-    from energy_consumption_forecasting_spark.functions.vectors import as_double
-    from energy_consumption_forecasting_spark.sources.ann_index import (
-        build_ann_index,
-        load_ann_index,
-        search_ann_index,
-    )
-
-    e = (
-        spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-        .select("vec_id", as_double("embedding").alias("v"))
-    )
-    idx = str(tmp_path / "sq8_idx")
-    build_ann_index(e, idx, kind="sq8", n_cells=8)
-    codes, meta = load_ann_index(spark, idx)
-    assert meta["kind"] == "sq8"
-    assert "cell" in codes.columns and len(meta["mins"]) == 64
-    q = e.filter(F.col("vec_id") < 3)
-    out = search_ann_index(spark, idx, q, k_neighbors=3, nprobe=8).collect()
-
-    # numpy expectation: asymmetric cosine of raw queries against the
-    # dequantized corpus, self excluded (the search drops self-matches
-    # like the sim_* queries), top-3 with (sim desc, id asc) ties
-    import numpy as np
-
-    rows = e.collect()
-    ids = np.array([r.vec_id for r in rows])
-    X = np.array([r.v for r in rows])
-    mn = np.array(meta["mins"])
-    mx = np.array(meta["maxs"])
-    span = np.where(mx > mn, mx - mn, 1.0)
-    code = np.clip(np.floor((X - mn) / span * 255.0 + 0.5), 0, 255)
-    R = mn + code * (mx - mn) / 255.0
-
-    def expect(qid):
-        qv = X[ids == qid][0]
-        sims = (R @ qv) / (np.linalg.norm(R, axis=1) * np.linalg.norm(qv))
-        order = sorted(
-            [(s, i) for s, i in zip(sims, ids) if i != qid],
-            key=lambda t: (-t[0], t[1]),
-        )
-        return [i for _, i in order[:3]]
-
-    for qid in (0, 1, 2):
-        got = [r.vec_id for r in sorted(out, key=lambda r: r.rank) if r.query_id == qid]
-        assert got == expect(qid), f"query {qid}: {got}"
-
-    # flat (no-cell) variant agrees with the all-cells-probed search
-    idx2 = str(tmp_path / "sq8_flat")
-    build_ann_index(e, idx2, kind="sq8", n_cells=None)
-    out2 = search_ann_index(spark, idx2, q, k_neighbors=3).collect()
-    assert {(r.query_id, r.rank, r.vec_id) for r in out2} == {
-        (r.query_id, r.rank, r.vec_id) for r in out
-    }
-
-
-def _split_docs(spark, tmp_path) -> str:
-    """SF_SMALL's documents split by doc_id parity into two files of one
-    directory, so a drain with maxFilesPerTrigger=1 sees two batches."""
+def _split_docs(spark, tmp_path, n_files: int = 2) -> str:
+    """SF_SMALL's documents split by doc_id mod ``n_files`` into that
+    many files of one directory, so a drain with maxFilesPerTrigger=1
+    sees ``n_files`` batches."""
     import os
     import shutil
 
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
     src = str(tmp_path / "docs_split")
     os.makedirs(src)
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(
-        f"{src}/even"
-    )
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(
-        f"{src}/odd"
-    )
-    for sub in ("even", "odd"):
-        for f in os.listdir(f"{src}/{sub}"):
+    for i in range(n_files):
+        sub = f"{src}/part{i}"
+        docs.filter(F.col("doc_id") % n_files == i).coalesce(1).write.parquet(sub)
+        for f in os.listdir(sub):
             if f.endswith(".parquet"):
-                shutil.move(f"{src}/{sub}/{f}", f"{src}/{sub}.parquet")
-        shutil.rmtree(f"{src}/{sub}")
+                shutil.move(f"{sub}/{f}", f"{sub}.parquet")
+        shutil.rmtree(sub)
     return src
 
 
@@ -754,6 +505,39 @@ def test_stream_source_cap_split_batches_matches_batch(spark, tmp_path):
     assert {tuple(r) for r in got.collect()} == {
         tuple(r) for r in ref.collect()
     }
+
+
+def test_stream_source_cap_fold_reads_state_without_inference(
+    spark, tmp_path, monkeypatch
+):
+    """Every fold batch after the first reads the prior state with its
+    fixed schema, so no batch runs a parquet schema-inference job: a
+    4-batch drain runs at least 3 fewer jobs than the same drain whose
+    state reads infer the schema, and both keep the same rows."""
+    from energy_consumption_forecasting_spark.streaming import source_cap_stream
+    from energy_consumption_forecasting_spark.sources.versioned import (
+        read_snapshot,
+    )
+
+    src = _split_docs(spark, tmp_path, n_files=4)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def drain(state):
+        before = dag.numTotalJobs()
+        rows = source_cap_stream.run_source_cap_available_now(
+            spark,
+            src,
+            str(tmp_path / state),
+            glob="*.parquet",
+            max_files_per_trigger=1,
+        )
+        return dag.numTotalJobs() - before, {tuple(r) for r in rows.collect()}
+
+    jobs, rows = drain("state")
+    monkeypatch.setattr(source_cap_stream, "_read_state", read_snapshot)
+    inferring_jobs, inferring_rows = drain("state_inferred")
+    assert rows == inferring_rows and rows
+    assert inferring_jobs - jobs >= 3, (jobs, inferring_jobs)
 
 
 @pytest.mark.parametrize("max_files", [None, 1])

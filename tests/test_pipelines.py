@@ -12,11 +12,6 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from energy_consumption_forecasting_spark.plans.dataset_assembly import (
-    assemble_dataset,
-    disaggregate_monthly,
-    monthly_consumption_target,
-)
 from energy_consumption_forecasting_spark.plans.weather_pipeline import (
     gap_fill,
     melt_days,
@@ -111,56 +106,31 @@ def test_calendar_validity(spark):
 
 
 def test_dataset_assembly_disaggregation(spark):
+    """EP2's monthly→daily step is the registered w18_disaggregation's
+    shared arithmetic (``timeseries.disagg_from_daily``): each day gets
+    its share of the month's demand times the month's target."""
+    from energy_consumption_forecasting_spark.queries.timeseries import (
+        disagg_from_daily,
+    )
+
     # two months of daily demand; monthly targets 100 / 200
     daily = spark.createDataFrame(
         [(dt.date(2021, 1, 1), 10.0), (dt.date(2021, 1, 2), 30.0),
          (dt.date(2021, 2, 1), 20.0), (dt.date(2021, 2, 2), 20.0)],
-        "date date, demand double",
+        "d date, demand double",
     )
     monthly = spark.createDataFrame(
         [(dt.date(2021, 1, 1), 100.0), (dt.date(2021, 2, 1), 200.0)],
-        "month date, total_consumption double",
+        "month date, month_qty double",
     )
-    out = {r["date"]: r["consumption"] for r in disaggregate_monthly(daily, monthly).collect()}
+    out = {
+        r["d"]: r["daily_consumption"]
+        for r in disagg_from_daily(daily, monthly).collect()
+    }
     assert out[dt.date(2021, 1, 1)] == 25.0  # 100 × 10/40
     assert out[dt.date(2021, 1, 2)] == 75.0
     assert out[dt.date(2021, 2, 1)] == 100.0
     assert out[dt.date(2021, 2, 2)] == 100.0
-
-
-def test_monthly_consumption_target(spark):
-    cons = spark.createDataFrame(
-        [(dt.date(2021, 1, 1), 2.0, 42.0, 1.0, 100.0)],
-        "date date, coal double, petroleum_liquids double, petroleum_coke double, natural_gas double",
-    )
-    row = monthly_consumption_target(cons).first()
-    assert row["total_consumption"] == pytest.approx(
-        2.0 * 1760.0 + 42.0 * (12.9 / 42.0) + 1.0 * 2360.0 + 100.0 * 0.13
-    )
-
-
-def test_assemble_dataset_end_to_end(spark):
-    hourly = spark.createDataFrame(
-        [
-            (dt.datetime(2021, 1, d, h), float(100 * d + h))
-            for d in (1, 2)
-            for h in range(4)
-        ],
-        "ts timestamp, demand double",
-    )
-    weather = spark.createDataFrame(
-        [(dt.datetime(2021, 1, 1), 5.0), (dt.datetime(2021, 1, 2), 7.0)],
-        "DATE timestamp, TMAX double",
-    )
-    cons = spark.createDataFrame(
-        [(dt.date(2021, 1, 1), 1.0, 0.0, 0.0, 0.0)],
-        "date date, coal double, petroleum_liquids double, petroleum_coke double, natural_gas double",
-    )
-    out = assemble_dataset(hourly, cons, weather, "ts", ["demand"], ["TMAX"]).collect()
-    assert len(out) == 2
-    assert {r["date"] for r in out} == {dt.date(2021, 1, 1), dt.date(2021, 1, 2)}
-    total = sum(r["consumption"] for r in out)
-    assert total == pytest.approx(1760.0, abs=1.0)  # disaggregation conserves
 
 
 def test_lifecycle_growth_accounting_identity(spark):

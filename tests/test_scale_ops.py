@@ -203,75 +203,46 @@ def test_semdedup_cells_scale_with_corpus(spark):
     are bounded by SEMDEDUP_TARGET_BUCKET regardless of corpus size —
     the refinement bit count grows with N so pair work is ~N·target
     (linear), never (N/labels)²."""
-    from energy_consumption_forecasting_spark.queries.dedup import (
-        SEMDEDUP_TARGET_BUCKET as T,
-        _semdedup_bits,
-    )
-
-    # integer-only derivation: smallest b with c*T*2^b >= n
-    assert _semdedup_bits(500, 10, target=50) == 0      # gate SFs: inert
-    assert _semdedup_bits(2000, 10, target=50) == 2     # sf0.1: engaged
-    assert _semdedup_bits(10**9, 10_000, target=2000) == 6
-    assert _semdedup_bits(10**9, 10, target=50) == 16   # capped
-    for n, c in [(1, 1), (10**6, 7), (10**9, 1000)]:
-        b = _semdedup_bits(n, c, target=T)
-        # bound holds (or the 16-bit cap was hit)
-        assert c * T * (1 << b) >= n or b == 16
-        # minimality: one fewer bit would violate the bound
-        assert b == 0 or c * T * (1 << (b - 1)) < n
-
-    # end-to-end: at sf0.1 the (label, sub) buckets are target-bounded
     from pyspark.sql import functions as F
 
-    from energy_consumption_forecasting_spark.queries._util import tbl
-    from energy_consumption_forecasting_spark.functions.vectors import as_double
-    from energy_consumption_forecasting_spark.queries.dedup import _cos_sig
+    from energy_consumption_forecasting_spark.queries.dedup import (
+        SEMDEDUP_TARGET_BUCKET as T,
+        _min_rung_expr,
+        _semdedup_sub_frame,
+    )
 
-    e = tbl(spark, "/root/testdata/sf0.1", "embeddings").select(
-        "vec_id", "label", as_double("embedding").alias("v")
-    )
-    n = e.count()
-    c = e.select("label").distinct().count()
-    b = _semdedup_bits(n, c, target=T)
+    def expected_bits(n, c):
+        """Smallest b in [0, 16] with c*T*2^b >= n, capped at 16."""
+        return next((b for b in range(17) if c * T * (1 << b) >= n), 16)
+
+    # the integer-only rung rule the frame instantiates, on literals
+    cases = [(500, 10), (2000, 10), (10**9, 10_000), (10**9, 10), (1, 1)]
+    got = spark.range(1).select(
+        *[
+            _min_rung_expr(F.lit(n).cast("long"), F.lit(c * T).cast("long"), 0, 16, 16)
+            for n, c in cases
+        ]
+    ).first()
+    assert list(got) == [expected_bits(n, c) for n, c in cases]
+    assert expected_bits(500, 10) == 0  # gate SFs: inert
+    assert expected_bits(10**9, 10) == 16  # capped
+
+    # end-to-end: at sf0.1 the frame dedup_semantic pairs over refines
+    # each label by the minimal bit count, and its (label, sub) buckets
+    # are target-bounded
+    e = _semdedup_sub_frame(spark, "/root/testdata/sf0.1")
+    st = e.agg(
+        F.count("*").alias("n"),
+        F.countDistinct("label").alias("c"),
+        F.min(F.length("sub")).alias("b_lo"),
+        F.max(F.length("sub")).alias("b_hi"),
+    ).first()
+    b = expected_bits(st["n"], st["c"])
     assert b > 0  # the refinement actually engages at this SF
-    sizes = (
-        e.withColumn("sub", F.substring(_cos_sig(F.col("v")), 1, b))
-        .groupBy("label", "sub")
-        .count()
-    )
+    assert st["b_lo"] == st["b_hi"] == b
+    sizes = e.groupBy("label", "sub").count()
     # hyperplane bits split near-evenly; allow 2x headroom over target
     assert sizes.agg(F.max("count")).collect()[0][0] <= 2 * T
-
-
-def test_compact_snapshot_preserves_rows(spark, tmp_path):
-    """Compaction rewrites the latest snapshot into fewer files with
-    identical content; old versions stay readable."""
-    import glob as globmod
-
-    from energy_consumption_forecasting_spark.sources.versioned import (
-        compact_snapshot,
-        commit_snapshot,
-        read_snapshot,
-        versions,
-    )
-
-    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").select(
-        "doc_id", "source", "n_chars"
-    )
-    table = str(tmp_path / "tbl")
-    # fragment: 8-file commit of a tiny table
-    commit_snapshot(docs.repartition(8), table, note="fragmented")
-    v1_files = globmod.glob(f"{table}/v=1/*.parquet")
-    assert len(v1_files) == 8
-
-    v2 = compact_snapshot(spark, table, target_rows_per_file=10_000)
-    assert versions(table) == [1, 2] and v2 == 2
-    v2_files = globmod.glob(f"{table}/v=2/*.parquet")
-    assert len(v2_files) == 1  # 100 rows pack into one file
-
-    before = {tuple(r) for r in read_snapshot(spark, table, 1).collect()}
-    after = {tuple(r) for r in read_snapshot(spark, table, 2).collect()}
-    assert before == after and before
 
 
 def test_observe_metrics_ride_the_job(spark):
@@ -586,17 +557,14 @@ def test_fim_transform_reconstruction_property(spark):
 
 
 def test_hilbert_code_matches_reference_and_beats_morton(spark):
-    """The unrolled Hilbert pipeline must equal the textbook xy2d
-    recurrence cell-for-cell (sampled grid), be a bijection on the
+    """The Hilbert kernel (the query path) must equal the textbook
+    xy2d recurrence cell-for-cell (sampled grid), be a bijection on the
     grid, and deliver its advertised locality edge: mean per-bucket
     bounding-box area at the shared bucket width is no worse than the
     Morton layout's on the same keys."""
-    from pyspark.sql import functions as F
-
     from energy_consumption_forecasting_spark.queries.layout import (
         _HN,
-        BITS,
-        hilbert_code,
+        hilbert_code_arrow,
     )
 
     def xy2d_ref(x, y):
@@ -617,23 +585,13 @@ def test_hilbert_code_matches_reference_and_beats_morton(spark):
     df = spark.createDataFrame(pts, "xk int, yk int")
     got = {
         (r["xk"], r["yk"]): r["hcode"]
-        for r in hilbert_code(df, "xk", "yk").collect()
+        for r in hilbert_code_arrow(df, "xk", "yk").collect()
     }
+    assert len(got) == len(pts)
     for (x, y), h in got.items():
         assert h == xy2d_ref(x, y), (x, y)
     assert len(set(got.values())) == len(got)  # injective on the sample
     assert all(0 <= h < _HN * _HN for h in got.values())
-
-    # the r10 Arrow twin (the query path) must agree cell-for-cell
-    from energy_consumption_forecasting_spark.queries.layout import (
-        hilbert_code_arrow,
-    )
-
-    got_arrow = {
-        (r["xk"], r["yk"]): r["hcode"]
-        for r in hilbert_code_arrow(df, "xk", "yk").collect()
-    }
-    assert got_arrow == got
 
     from energy_consumption_forecasting_spark.queries import load_all
 

@@ -11,30 +11,28 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 SF_SMALL = "/root/testdata/sf0.001"
-SPLIT_DIR = "/root/repo/.stage/test_cdc_split"
-TABLE_DIR = "/root/repo/.stage/test_cdc_table"
 
 
-def _stage_split(spark, n_chunks: int = 4) -> str:
+def _stage_split(spark, split_dir, n_chunks: int = 4) -> str:
     """ts-contiguous chunks with strictly increasing mtimes so LATER
     batches carry LATER events — the CDC overwrite contract."""
-    shutil.rmtree(SPLIT_DIR, ignore_errors=True)
+    split_dir = str(split_dir)
     ev = spark.read.parquet(f"{SF_SMALL}/events.parquet").orderBy(
         "ts", "event_id"
     )
     pdf = ev.toPandas()
     k = len(pdf) // n_chunks
-    os.makedirs(SPLIT_DIR, exist_ok=True)
+    os.makedirs(split_dir, exist_ok=True)
     for i in range(n_chunks):
         part = pdf.iloc[i * k : None if i == n_chunks - 1 else (i + 1) * k]
         spark.createDataFrame(part, ev.schema).coalesce(1).write.mode(
             "overwrite"
-        ).parquet(f"{SPLIT_DIR}/chunk={i:03d}")
-    flat = os.path.join(SPLIT_DIR, "flat")
+        ).parquet(f"{split_dir}/chunk={i:03d}")
+    flat = os.path.join(split_dir, "flat")
     os.makedirs(flat, exist_ok=True)
     idx = 0
     base = time.time() - 3600
-    for root, _dirs, files in sorted(os.walk(SPLIT_DIR)):
+    for root, _dirs, files in sorted(os.walk(split_dir)):
         for f in sorted(files):
             if f.endswith(".parquet") and root != flat:
                 dst = f"{flat}/{idx:03d}.parquet"
@@ -64,15 +62,15 @@ def _batch_truth(spark, events_path: str):
     return {(r["user_id"], str(r["last_d"]), r["last_value_c"]) for r in rows}
 
 
-def test_multibatch_cdc_equals_batch_latest(spark):
-    flat = _stage_split(spark)
-    shutil.rmtree(TABLE_DIR, ignore_errors=True)
+def test_multibatch_cdc_equals_batch_latest(spark, tmp_path):
+    flat = _stage_split(spark, tmp_path / "split")
+    table = str(tmp_path / "table")
     from energy_consumption_forecasting_spark.streaming.upsert_stream import (
         run_cdc_upsert_available_now,
     )
 
     out = run_cdc_upsert_available_now(
-        spark, flat, TABLE_DIR, glob="*.parquet", max_files_per_trigger=1
+        spark, flat, table, glob="*.parquet", max_files_per_trigger=1
     )
     got = {
         (r["user_id"], str(r["last_d"]), r["last_value_c"])
@@ -84,18 +82,17 @@ def test_multibatch_cdc_equals_batch_latest(spark):
         versions,
     )
 
-    assert len(versions(TABLE_DIR)) == 4
+    assert len(versions(table)) == 4
 
 
-def test_replayed_batch_is_noop(spark):
+def test_replayed_batch_is_noop(spark, tmp_path):
     """Re-running the drain with the SAME persistent checkpoint replays
     no batch (offsets committed) and the txn guard keeps the table
     unchanged even if foreachBatch were re-invoked."""
     import tempfile
 
-    flat = _stage_split(spark, n_chunks=2)
-    table = TABLE_DIR + "_replay"
-    shutil.rmtree(table, ignore_errors=True)
+    flat = _stage_split(spark, tmp_path / "split", n_chunks=2)
+    table = str(tmp_path / "table")
     ckpt = tempfile.mkdtemp(prefix="ecf_cdc_test_ckpt_")
     from energy_consumption_forecasting_spark.sources.versioned import (
         versions,

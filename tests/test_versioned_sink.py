@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import shutil
-
 import pytest
 
 from energy_consumption_forecasting_spark.sources.versioned import (
@@ -12,36 +10,32 @@ from energy_consumption_forecasting_spark.sources.versioned import (
     versions,
 )
 
-TABLE = "/root/repo/.stage/versioned_test"
 
-
-def test_commit_read_time_travel(spark):
-    shutil.rmtree(TABLE, ignore_errors=True)
+def test_commit_read_time_travel(spark, tmp_path):
+    table = str(tmp_path / "versioned_test")
     df1 = spark.range(5).withColumnRenamed("id", "k")
     df2 = spark.range(9).withColumnRenamed("id", "k")
-    v1 = commit_snapshot(df1, TABLE, "five")
-    v2 = commit_snapshot(df2, TABLE, "nine")
+    v1 = commit_snapshot(df1, table, "five")
+    v2 = commit_snapshot(df2, table, "nine")
     assert (v1, v2) == (1, 2)
-    assert versions(TABLE) == [1, 2]
-    assert read_snapshot(spark, TABLE).count() == 9  # latest
-    assert read_snapshot(spark, TABLE, version=1).count() == 5  # AS OF
+    assert versions(table) == [1, 2]
+    assert read_snapshot(spark, table).count() == 9  # latest
+    assert read_snapshot(spark, table, version=1).count() == 5  # AS OF
     with pytest.raises(ValueError, match="version 7"):
-        read_snapshot(spark, TABLE, version=7)
+        read_snapshot(spark, table, version=7)
 
 
-def test_empty_table_raises(spark):
-    shutil.rmtree(TABLE + "_none", ignore_errors=True)
+def test_empty_table_raises(spark, tmp_path):
     with pytest.raises(FileNotFoundError):
-        read_snapshot(spark, TABLE + "_none")
+        read_snapshot(spark, str(tmp_path / "none"))
 
 
-def test_vacuum_keeps_recent_versions(spark):
+def test_vacuum_keeps_recent_versions(spark, tmp_path):
     import os
 
     from energy_consumption_forecasting_spark.sources.versioned import vacuum
 
-    shutil.rmtree(TABLE + "_vac", ignore_errors=True)
-    t = TABLE + "_vac"
+    t = str(tmp_path / "vac")
     for n in (3, 4, 5, 6):
         commit_snapshot(spark.range(n), t)
     assert versions(t) == [1, 2, 3, 4]
@@ -56,11 +50,9 @@ def test_vacuum_keeps_recent_versions(spark):
     assert vacuum(t, keep_last=5) == []  # nothing to drop
 
 
-def test_manifest_skipping_prunes_files_and_is_lossless(spark):
+def test_manifest_skipping_prunes_files_and_is_lossless(spark, tmp_path):
     """The band read must (a) skip at least one file via manifest stats
     and (b) return exactly the rows a full-scan filter returns."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     from energy_consumption_forecasting_spark.sources.versioned import (
@@ -70,8 +62,7 @@ def test_manifest_skipping_prunes_files_and_is_lossless(spark):
     )
     from energy_consumption_forecasting_spark.tables import load_table
 
-    table = "/root/repo/.stage/test_manifest_skip"
-    shutil.rmtree(table, ignore_errors=True)
+    table = str(tmp_path / "test_manifest_skip")
     orders = load_table(spark, "/root/testdata/sf0.001", "orders").select(
         F.to_date("o_orderdate").alias("od"), "o_orderkey"
     )
@@ -97,9 +88,7 @@ def test_manifest_skipping_prunes_files_and_is_lossless(spark):
     assert got == want and len(got) > 0
 
 
-def test_manifest_skipping_empty_band_keeps_schema(spark):
-    import shutil
-
+def test_manifest_skipping_empty_band_keeps_schema(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from energy_consumption_forecasting_spark.sources.versioned import (
@@ -108,8 +97,7 @@ def test_manifest_skipping_empty_band_keeps_schema(spark):
     )
     from energy_consumption_forecasting_spark.tables import load_table
 
-    table = "/root/repo/.stage/test_manifest_skip_empty"
-    shutil.rmtree(table, ignore_errors=True)
+    table = str(tmp_path / "test_manifest_skip_empty")
     orders = load_table(spark, "/root/testdata/sf0.001", "orders").select(
         F.to_date("o_orderdate").alias("od"), "o_orderkey"
     )
@@ -122,7 +110,7 @@ def test_manifest_skipping_empty_band_keeps_schema(spark):
     assert set(df.columns) == {"od", "o_orderkey"}
 
 
-def test_deletion_vectors_merge_on_read(spark):
+def test_deletion_vectors_merge_on_read(spark, tmp_path):
     """delete_where commits position-delete files only: data files are
     untouched, reads anti-join them out, time travel still sees the
     pre-delete content, and duplicates are deleted by POSITION (a
@@ -134,8 +122,7 @@ def test_deletion_vectors_merge_on_read(spark):
         delete_where,
     )
 
-    table = TABLE + "_dv"
-    shutil.rmtree(table, ignore_errors=True)
+    table = str(tmp_path / "dv")
     # duplicate rows on purpose: k=3 appears twice
     df = spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c"), (3, "c"), (4, "d")], "k int, s string"
@@ -160,20 +147,17 @@ def test_deletion_vectors_merge_on_read(spark):
     assert read_snapshot(spark, table, version=1).count() == 5
 
 
-def test_deletion_vectors_vacuum_shares_base_dir(spark):
+def test_deletion_vectors_vacuum_shares_base_dir(spark, tmp_path):
     """vacuum must NOT remove the base data directory while a surviving
-    delete-version still references it, and compaction rewrites the
-    deletes away into a self-contained snapshot."""
+    delete-version still references it."""
     import os
 
     from energy_consumption_forecasting_spark.sources.versioned import (
-        compact_snapshot,
         delete_where,
         vacuum,
     )
 
-    table = TABLE + "_dvvac"
-    shutil.rmtree(table, ignore_errors=True)
+    table = str(tmp_path / "dvvac")
     commit_snapshot(
         spark.createDataFrame([(i,) for i in range(10)], "k int"), table, "base"
     )
@@ -183,19 +167,9 @@ def test_deletion_vectors_vacuum_shares_base_dir(spark):
     assert dropped == [1]
     assert os.path.isdir(os.path.join(table, "v=1"))
     assert read_snapshot(spark, table).count() == 8
-    # compaction materializes the surviving rows without delete files
-    v = compact_snapshot(spark, table)
-    from energy_consumption_forecasting_spark.sources.versioned import snapshots
-
-    entry = [e for e in snapshots(table) if e["version"] == v][0]
-    assert not entry.get("deletes")
-    assert read_snapshot(spark, table, version=v).count() == 8
-    # now the old delete-version can be vacuumed fully
-    vacuum(table, keep_last=1)
-    assert read_snapshot(spark, table).count() == 8
 
 
-def test_deletion_vectors_randomized_predicate_sequence(spark):
+def test_deletion_vectors_randomized_predicate_sequence(spark, tmp_path):
     """Randomized: any sequence of delete_where predicates must leave
     exactly the rows surviving the conjunction of their negations —
     including with duplicate rows and multi-file snapshots."""
@@ -207,8 +181,7 @@ def test_deletion_vectors_randomized_predicate_sequence(spark):
 
     rng = random.Random(99)
     for trial in range(3):
-        table = f"{TABLE}_dvprop{trial}"
-        shutil.rmtree(table, ignore_errors=True)
+        table = str(tmp_path / f"dvprop{trial}")
         rows = [
             (rng.randrange(20), rng.randrange(5)) for _ in range(120)
         ]  # duplicates guaranteed
@@ -230,22 +203,19 @@ def test_deletion_vectors_randomized_predicate_sequence(spark):
         assert got == sorted(survivors), trial
 
 
-def test_merge_upsert_update_insert_chain(spark):
+def test_merge_upsert_update_insert_chain(spark, tmp_path):
     """merge_upsert replaces matched keys, inserts new ones, chains
     with prior deletes and a second upsert (updating a row the first
-    upsert inserted), keeps time travel, and survives vacuum +
-    compaction."""
+    upsert inserted), keeps time travel, and survives vacuum."""
     import os
 
     from energy_consumption_forecasting_spark.sources.versioned import (
-        compact_snapshot,
         delete_where,
         merge_upsert,
         vacuum,
     )
 
-    table = TABLE + "_upsert"
-    shutil.rmtree(table, ignore_errors=True)
+    table = str(tmp_path / "upsert")
     base = spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c"), (4, "d")], "k int, s string"
     )
@@ -278,24 +248,16 @@ def test_merge_upsert_update_insert_chain(spark):
     got = sorted((r["k"], r["s"]) for r in read_snapshot(spark, table).collect())
     assert got == [(1, "a"), (2, "B2"), (3, "c"), (9, "I9v2")]
     assert os.path.isdir(os.path.join(table, "v=1"))
-    # compaction materializes a self-contained single-dir snapshot
-    v = compact_snapshot(spark, table)
-    got = sorted(
-        (r["k"], r["s"])
-        for r in read_snapshot(spark, table, version=v).collect()
-    )
-    assert got == [(1, "a"), (2, "B2"), (3, "c"), (9, "I9v2")]
 
 
-def test_merge_upsert_rejects_duplicate_update_keys(spark):
+def test_merge_upsert_rejects_duplicate_update_keys(spark, tmp_path):
     """MERGE INTO semantics: two source rows matching one key is an
     error, not a silent duplicate-row append (round-6 advice)."""
     from energy_consumption_forecasting_spark.sources.versioned import (
         merge_upsert,
     )
 
-    table = TABLE + "_dupkeys"
-    shutil.rmtree(table, ignore_errors=True)
+    table = str(tmp_path / "dupkeys")
     commit_snapshot(
         spark.createDataFrame([(1, "a")], "k int, s string"), table, "base"
     )
