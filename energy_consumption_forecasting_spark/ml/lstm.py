@@ -182,30 +182,6 @@ class NumpyLSTM:
             self._adam_step(grads, lr)
         return history
 
-    def fit_stream(
-        self, batches, epochs: int = 60, lr: float = 0.005
-    ) -> list[float]:
-        """Chunked Adam over a re-iterable source of (X, y) chunks.
-
-        ``batches`` is a zero-arg callable returning an iterator (e.g.
-        ``lambda: iter(chunks)``) so every epoch can re-stream.  One
-        forward/BPTT/Adam step per chunk — with a single chunk this is
-        numerically identical to ``fit``; with many it is plain
-        mini-batch training, the driver holding one chunk at a time.  Returns per-epoch sample-weighted MSE."""
-        history = []
-        for _ in range(epochs):
-            sse, n_total = 0.0, 0
-            for X, y in batches():
-                X = np.asarray(X, np.float64)
-                y = np.asarray(y, np.float64)
-                pred, h_last, cache = self._forward(X)
-                sse += float(np.sum((pred - y) ** 2))
-                n_total += len(y)
-                grads = self._backward(X, y, pred, h_last, cache)
-                self._adam_step(grads, lr)
-            history.append(sse / max(n_total, 1))
-        return history
-
     def predict(self, X: np.ndarray) -> np.ndarray:
         pred, _, _ = self._forward(np.asarray(X, np.float64))
         return pred

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import single_task
+
 
 # --- blocked query-table path (no driver collect) -------------------------------
 #
@@ -289,19 +291,19 @@ def ivf_fit_frame(
     single-partition numpy Lloyd fold → ``centroids`` (n_cells × dim).
     Nothing executes until an action; the driver never sees a matrix."""
 
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = [v for pdf in batches for v in pdf[vec_col].tolist()]
+    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        rows = pdf[vec_col].tolist()
         if not rows:
             raise ValueError("IVF fit: empty embeddings sample")
         cent = _lloyd(np.asarray(rows, dtype=np.float64), n_cells, iters, seed)
-        yield pd.DataFrame(
+        return pd.DataFrame(
             [{"centroids": [[float(x) for x in c] for c in cent]}]
         )
 
-    return (
-        _ann_sample(emb, vec_col, id_col, sample)
-        .coalesce(1)
-        .mapInPandas(fold, "centroids array<array<double>>")
+    return single_task.run(
+        _ann_sample(emb, vec_col, id_col, sample),
+        fold,
+        "centroids array<array<double>>",
     )
 
 
@@ -560,12 +562,12 @@ def pq_fit_frame(
     """PQ codebooks as a LAZY 1-row frame: sorted sample → per-subspace
     seeded Lloyd fold → ``books`` (m × k × dim/m)."""
 
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = [v for pdf in batches for v in pdf[vec_col].tolist()]
+    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        rows = pdf[vec_col].tolist()
         if not rows:
             raise ValueError("PQ fit: empty embeddings sample")
         books = _pq_train_np(np.asarray(rows, dtype=np.float64), m, k, iters, seed)
-        yield pd.DataFrame(
+        return pd.DataFrame(
             [
                 {
                     "books": [
@@ -575,10 +577,10 @@ def pq_fit_frame(
             ]
         )
 
-    return (
-        _ann_sample(emb, vec_col, id_col, sample)
-        .coalesce(1)
-        .mapInPandas(fold, "books array<array<array<double>>>")
+    return single_task.run(
+        _ann_sample(emb, vec_col, id_col, sample),
+        fold,
+        "books array<array<array<double>>>",
     )
 
 
@@ -738,8 +740,8 @@ def opq_fit_frame(
     ``rt`` holds the COLUMNS of R (R transposed) so the
     in-plan rotation is a per-output-dim dot: rotated[d] = v · rt[d]."""
 
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = [v for pdf in batches for v in pdf[vec_col].tolist()]
+    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        rows = pdf[vec_col].tolist()
         if not rows:
             raise ValueError("OPQ fit: empty embeddings sample")
         X = np.asarray(rows, dtype=np.float64)
@@ -775,7 +777,7 @@ def opq_fit_frame(
                 Y[:, j * sub : (j + 1) * sub] = books[j][d.argmin(axis=1)]
             U, _, Vt = np.linalg.svd(X.T @ Y)
             R = U @ Vt
-        yield pd.DataFrame(
+        return pd.DataFrame(
             [
                 {
                     "books": [
@@ -787,13 +789,10 @@ def opq_fit_frame(
             ]
         )
 
-    return (
-        _ann_sample(emb, vec_col, id_col, sample)
-        .coalesce(1)
-        .mapInPandas(
-            fold,
-            "books array<array<array<double>>>, rt array<array<double>>",
-        )
+    return single_task.run(
+        _ann_sample(emb, vec_col, id_col, sample),
+        fold,
+        "books array<array<array<double>>>, rt array<array<double>>",
     )
 
 

@@ -16,7 +16,7 @@ plan stays an equi-join / window, never a nested-loop:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 

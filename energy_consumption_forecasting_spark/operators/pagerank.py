@@ -37,7 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..session import aqe_disabled, broadcast_budget, loop_shuffle_width
+from ..session import aqe_disabled, loop_shuffle_width
+from . import single_task
 
 # Lineage-truncation cadence for the fixed-iteration loops: one eager
 # localCheckpoint per _CKPT_EVERY rounds.  Rank lineage is linear (one
@@ -87,10 +88,9 @@ def prepare_rank_graph(
     shuffled-hash tier — the join then reuses the layout and only the
     agg shuffles).
 
-    The tier compares the session's broadcast budget
-    (``spark.sql.autoBroadcastJoinThreshold``, -1 = nothing fits) with
-    the counts: 24 bytes per edge for the single-task tier, 48 per node
-    for the broadcast tier.
+    The tier sizes the counts for ``single_task.fits`` (the session's
+    broadcast budget): 24 bytes per edge for the single-task tier, 48
+    per node for the broadcast tier.
 
     PRECONDITION: symmetric-style graph — every node has out- and
     in-degree >= 1 (true for any symmetrized edge set), the same
@@ -134,10 +134,9 @@ def prepare_rank_graph(
         if n == 0:
             raise ValueError("prepare_rank_graph: empty graph")
         n_edges = int(stats["n_edges"] or 0)
-        budget = broadcast_budget(spark)
-        if n_edges * 24 < budget:
+        if single_task.fits(spark, n_edges * 24):
             tier = SINGLE_TASK
-        elif n * 48 < budget:
+        elif single_task.fits(spark, n * 48):
             tier = BROADCAST
         else:
             tier = SHUFFLED_HASH
@@ -351,11 +350,10 @@ def _single_task_iterate(
             for c in ("src", "dst")
         ]
 
-    def kernel(batches):
+    def kernel(pdf):
         import numpy as np
         import pandas as pd
 
-        pdf = pd.concat(list(batches), ignore_index=True)
         m = len(pdf)
         ids, idx = np.unique(
             np.concatenate([pdf["src"].to_numpy(), pdf["dst"].to_numpy()]),
@@ -383,7 +381,7 @@ def _single_task_iterate(
             r[tgt] = base[tgt] + (damp_num * inflow) // damp_den
             r[~live] = 0
         keep = np.flatnonzero(live)
-        yield pd.DataFrame({"v": ids[keep], "rank_scaled": r[keep]})
+        return pd.DataFrame({"v": ids[keep], "rank_scaled": r[keep]})
 
     schema = T.StructType(
         [
@@ -391,7 +389,7 @@ def _single_task_iterate(
             T.StructField("rank_scaled", T.LongType()),
         ]
     )
-    return graph.we.select(*cols).coalesce(1).mapInPandas(kernel, schema)
+    return single_task.run(graph.we.select(*cols), kernel, schema)
 
 
 def pagerank_personalized_exact(

@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import query
-from ._util import shared_plan, tbl
+from ._util import tbl
 
 
 def _dec(c: str) -> Column:

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import single_task
 from ..session import broadcast_budget
 from ..tables import footer_row_count, table_path
 from . import query
@@ -92,13 +93,6 @@ def _item_counts(lines: DataFrame) -> DataFrame:
     return lines.groupBy("l_partkey").agg(
         F.countDistinct("l_orderkey").alias("n_item")
     )
-
-
-def single_task_fits(n_lines: int | None, budget: int) -> bool:
-    """The tier rule of :func:`pair_counts_from_lines`: one numpy task
-    when the line table's (order, part) int64 pairs fit the broadcast
-    budget.  An unknown line count, or a budget of -1, never fits."""
-    return n_lines is not None and n_lines * _LINE_BYTES < budget
 
 
 def _keep_frequent(orders, parts):
@@ -187,19 +181,18 @@ def _single_task_pair_counts(
     Building it runs no job; executing it is one job."""
     chunk = max(1, budget // 8)
 
-    def kernel(batches):
+    def kernel(pdf):
         import numpy as np
         import pandas as pd
 
-        cols = ("l_orderkey", "l_partkey")
-        empty = pd.DataFrame({c: np.empty(0, np.int64) for c in cols})
-        pdf = pd.concat([empty, *batches], ignore_index=True)
         p1, p2, n = count_pairs_np(
-            *(pdf[c].to_numpy(np.int64) for c in cols), line_prune, chunk
+            *(pdf[c].to_numpy(np.int64) for c in ("l_orderkey", "l_partkey")),
+            line_prune,
+            chunk,
         )
-        yield pd.DataFrame({"p1": p1, "p2": p2, "n": n})
+        return pd.DataFrame({"p1": p1, "p2": p2, "n": n})
 
-    return lines.coalesce(1).mapInPandas(kernel, "p1 long, p2 long, n long")
+    return single_task.run(lines, kernel, "p1 long, p2 long, n long")
 
 
 def pair_counts_from_lines(
@@ -212,10 +205,9 @@ def pair_counts_from_lines(
     null dropped first (the oracle's equi-join never pairs them).
 
     Two tiers, chosen once while the plan is built
-    (:func:`single_task_fits`): when ``n_lines`` — the exact row count
-    of ``lines``, read from the parquet footers by the queries — times
-    16 bytes is under the session's broadcast budget
-    (``session.broadcast_budget``, -1 = nothing fits), one numpy task
+    (``single_task.fits``): when ``n_lines`` — the exact row count of
+    ``lines``, read from the parquet footers by the queries — times 16
+    bytes is under the session's broadcast budget, one numpy task
     counts every pair (:func:`count_pairs_np`); otherwise, and whenever
     ``n_lines`` is None (a frame of unknown size), the Spark plan below
     runs.  Counts are exact integers, so the tiers give identical rows;
@@ -260,10 +252,11 @@ def pair_counts_from_lines(
     lines = lines.select("l_orderkey", "l_partkey").where(
         F.col("l_orderkey").isNotNull() & F.col("l_partkey").isNotNull()
     )
-    if n_lines is not None:
-        budget = broadcast_budget(lines.sparkSession)
-        if single_task_fits(n_lines, budget):
-            return _single_task_pair_counts(lines, item_counts is None, budget)
+    spark = lines.sparkSession
+    if n_lines is not None and single_task.fits(spark, n_lines * _LINE_BYTES):
+        return _single_task_pair_counts(
+            lines, item_counts is None, broadcast_budget(spark)
+        )
     if item_counts is None:
         item_counts = lines.groupBy("l_partkey").agg(
             F.count("*").alias("n_item")

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import query
-from ..functions.vectors import as_double, cosine
+from ..functions.vectors import as_double
 from ._util import shared_plan, tbl
 
 MAX_DOC_FREQ = 100  # stop-shingle cap for candidate generation

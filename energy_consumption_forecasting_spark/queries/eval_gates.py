@@ -19,9 +19,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import single_task
 from . import query
 from ._util import shared_plan, tbl
-from .ml_queries import _daily
+from .ml_queries import _daily, _lstm_fit_forecast, _lstm_sequences
 from .text import STOPWORDS
 
 _SEQ_LEN = 14
@@ -53,55 +54,18 @@ def m11_lstm_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     attach in-plan, the bounded training set folds through a
     1-partition mapInPandas running the identical trainer, verdicts
     emitted from the fold — zero construction jobs."""
-    from ..ml.lstm import sequence_dataset
+    seq, _ = _lstm_sequences(spark, sf_dir, _SEQ_LEN)
 
-    daily = (
-        tbl(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("d"))
-        .agg(F.sum("o_totalprice").alias("demand"))
-    )
-    mm = daily.agg(F.min("demand").alias("lo"), F.max("demand").alias("hi"))
-    scaled = daily.crossJoin(F.broadcast(mm)).select(
-        "d",
-        (
-            (F.col("demand") - F.col("lo")) / (F.col("hi") - F.col("lo"))
-        ).alias("v"),
-    )
-    seq = sequence_dataset(scaled, "d", ["v"], "v", seq_length=_SEQ_LEN)
-
-    def fold(batches):
-        import numpy as np
+    def fold(pdf):
         import pandas as pd
 
-        from energy_consumption_forecasting_spark.ml.lstm import lstm_train
-
-        parts = [pdf for pdf in batches if len(pdf)]
-        if not parts:
-            return
-        pdf = pd.concat(parts).sort_values("d")
-        X = (
-            np.stack(pdf["x"].to_numpy())
-            .astype(np.float32)
-            .reshape(len(pdf), _SEQ_LEN, 1)
-        )
-        y = pdf["y"].to_numpy(dtype=np.float32)
-        model, history = lstm_train(
-            X, y, {"epochs": 40, "hidden_size": 8, "lr": 0.01}
-        )
-        window = list(X[-1, :, 0].astype(float))
-        preds = []
-        for _ in range(_HORIZON):
-            p = float(
-                model.predict(
-                    np.array(window[-_SEQ_LEN:])[None, :, None]
-                )[0]
-            )
-            preds.append(p)
-            window.append(p)
-        yield pd.DataFrame(
+        if not len(pdf):
+            return None
+        n_windows, history, preds = _lstm_fit_forecast(pdf, _SEQ_LEN, _HORIZON)
+        return pd.DataFrame(
             [
                 {
-                    "n_windows": int(X.shape[0]),
+                    "n_windows": n_windows,
                     "loss_decreased": bool(history[-1] < history[0]),
                     "forecast_in_band": bool(
                         all(-1.0 <= p <= 2.0 for p in preds)
@@ -111,7 +75,8 @@ def m11_lstm_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         )
 
-    return seq.coalesce(1).mapInPandas(
+    return single_task.run(
+        seq,
         fold,
         "n_windows long, loss_decreased boolean, forecast_in_band boolean,"
         " horizon int",

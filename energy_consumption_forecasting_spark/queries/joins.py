@@ -9,7 +9,7 @@ correct reading of pandas index alignment on a distributed engine.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import query

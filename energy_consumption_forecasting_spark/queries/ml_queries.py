@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from . import query
 from ..functions.vectors import as_double
+from ..operators import single_task
 from ._util import shared_plan, tbl
 
 _DAILY_SQL = """
@@ -315,6 +316,57 @@ def m18_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# --- M11 LSTM: the training set and kernel both m11 queries run ------------------------
+
+
+def _lstm_sequences(
+    spark: SparkSession, sf_dir: str, seq_len: int
+) -> tuple[DataFrame, DataFrame]:
+    """Min-max-scaled daily order demand as ``seq_len``-day windows
+    (``sequence_dataset``: d, x, y), and the 1-row (lo, hi) frame that
+    scaled it — one row per calendar day, so the set stays small."""
+    from ..ml.lstm import sequence_dataset
+
+    daily = (
+        tbl(spark, sf_dir, "orders")
+        .groupBy(F.to_date("o_orderdate").alias("d"))
+        .agg(F.sum("o_totalprice").alias("demand"))
+    )
+    mm = daily.agg(F.min("demand").alias("lo"), F.max("demand").alias("hi"))
+    scaled = daily.crossJoin(F.broadcast(mm)).select(
+        "d",
+        (
+            (F.col("demand") - F.col("lo")) / (F.col("hi") - F.col("lo"))
+        ).alias("v"),
+    )
+    return sequence_dataset(scaled, "d", ["v"], "v", seq_length=seq_len), mm
+
+
+def _lstm_fit_forecast(pdf, seq_len: int, horizon: int):
+    """Fit the fixed-seed LSTM on the ``_lstm_sequences`` windows in
+    ``pdf`` and forecast ``horizon`` scaled steps recursively from the
+    last window.  Returns (n_windows, per-epoch MSE history, forecasts)."""
+    import numpy as np
+
+    from energy_consumption_forecasting_spark.ml.lstm import lstm_train
+
+    pdf = pdf.sort_values("d")
+    X = (
+        np.stack(pdf["x"].to_numpy())
+        .astype(np.float32)
+        .reshape(len(pdf), seq_len, 1)
+    )
+    y = pdf["y"].to_numpy(dtype=np.float32)
+    model, history = lstm_train(X, y, {"epochs": 40, "hidden_size": 8, "lr": 0.01})
+    window = list(X[-1, :, 0].astype(float))
+    preds = []
+    for _ in range(horizon):
+        p = float(model.predict(np.array(window[-seq_len:])[None, :, None])[0])
+        preds.append(p)
+        window.append(p)
+    return int(X.shape[0]), history, preds
+
+
 # --- rows-only model-fitting operators --------------------------------------------------
 
 
@@ -350,17 +402,27 @@ def _moment_rows(emb: DataFrame) -> DataFrame:
     )
 
 
-def _fold_moments(rows):
-    """Driverless fold of `_moment_rows` partials (runs inside a
-    1-partition mapInPandas): returns (n, mu, cov, dim)."""
+def _sum_moments(rows):
+    """Sum a frame of (n, s, ss) moment partials — `_moment_rows`
+    output, or the whitened partials shaped like it — in row order:
+    returns (n, s, ss)."""
     import numpy as np
 
     n, s, ss = 0, None, None
-    for r in rows:
-        n += int(r["n"])
-        sv, gv = np.asarray(r["s"]), np.asarray(r["ss"])
+    for rn, rs, rss in zip(rows["n"], rows["s"], rows["ss"]):
+        n += int(rn)
+        sv, gv = np.asarray(rs), np.asarray(rss)
         s = sv if s is None else s + sv
         ss = gv if ss is None else ss + gv
+    return n, s, ss
+
+
+def _fold_moments(rows):
+    """Driverless fold of `_moment_rows` partials (runs inside a
+    single-task kernel): returns (n, mu, cov, dim)."""
+    import numpy as np
+
+    n, s, ss = _sum_moments(rows)
     if n < 2:
         raise ValueError(
             f"moment fold needs >=2 vectors to form a covariance, got {n}"
@@ -380,16 +442,15 @@ def _pca_fit_frame(emb: DataFrame, k: int = 3) -> DataFrame:
     orthonormal_ok / variance_ok (the eigensolver invariants the M3
     gate asserts, computed where the loadings already live)."""
 
-    def fold(batches):
+    def fold(pdf):
         import numpy as np
         import pandas as pd
 
-        rows = [r for pdf in batches for _, r in pdf.iterrows()]
-        if not rows:
+        if not len(pdf):
             raise ValueError(
                 "PCA fit: embeddings corpus is empty — nothing to fit"
             )
-        n, _, cov, dim = _fold_moments(rows)
+        n, _, cov, dim = _fold_moments(pdf)
         vals, vecs = np.linalg.eigh(cov)
         order = np.argsort(vals)[::-1]
         vals, vecs = vals[order], vecs[:, order]
@@ -400,7 +461,7 @@ def _pca_fit_frame(emb: DataFrame, k: int = 3) -> DataFrame:
         variance_ok = bool(
             ev[0] >= ev[1] >= ev[2] > 0 and sum(ev) > float(k) / dim
         )
-        yield pd.DataFrame(
+        return pd.DataFrame(
             [
                 {
                     "n_vec": n,
@@ -412,14 +473,11 @@ def _pca_fit_frame(emb: DataFrame, k: int = 3) -> DataFrame:
             ]
         )
 
-    return (
-        _moment_rows(emb)
-        .coalesce(1)
-        .mapInPandas(
-            fold,
-            "n_vec long, dim int, pc array<array<double>>,"
-            " orthonormal_ok boolean, variance_ok boolean",
-        )
+    return single_task.run(
+        _moment_rows(emb),
+        fold,
+        "n_vec long, dim int, pc array<array<double>>,"
+        " orthonormal_ok boolean, variance_ok boolean",
     )
 
 
@@ -660,22 +718,22 @@ def m5_dtw_kmedoids(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("month").cast("string").alias("series_id"), "series")
     dist = dtw_distance_matrix(series)
 
-    def fold(batches):
+    def fold(pdf):
         import pandas as pd
 
         from energy_consumption_forecasting_spark.ml.clustering import (
             kmedoids_rows,
         )
 
-        rows = [r for pdf in batches for _, r in pdf.iterrows()]
+        rows = [r for _, r in pdf.iterrows()]
         if not rows:
-            return
+            return None
         out = sorted(kmedoids_rows(rows, k=6).items())
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {"month": [m for m, _ in out], "cluster": [c for _, c in out]}
         )
 
-    return dist.coalesce(1).mapInPandas(fold, "month string, cluster int")
+    return single_task.run(dist, fold, "month string, cluster int")
 
 
 @query("m5_tskmeans_dba")
@@ -2060,7 +2118,7 @@ def m5_kshape(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("series")
     )
 
-    def fold(batches):
+    def fold(pdf):
         import numpy as np
         import pandas as pd
 
@@ -2069,24 +2127,23 @@ def m5_kshape(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
         series = {}
-        for pdf in batches:
-            for _, r in pdf.iterrows():
-                v = np.zeros(31)
-                arr = np.asarray(list(r["series"]), dtype=np.float64)
-                v[: len(arr)] = arr
-                series[str(r["month"])] = v
+        for month, s in zip(pdf["month"], pdf["series"]):
+            v = np.zeros(31)
+            arr = np.asarray(list(s), dtype=np.float64)
+            v[: len(arr)] = arr
+            series[str(month)] = v
         if not series:
-            return
+            return None
         fit = kshape(series, k=4, seed=42)
         rows = sorted(fit["labels"].items())
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {
                 "month": [m for m, _ in rows],
                 "cluster": [c for _, c in rows],
             }
         )
 
-    return agg.coalesce(1).mapInPandas(fold, "month string, cluster int")
+    return single_task.run(agg, fold, "month string, cluster int")
 
 
 @query(
@@ -2127,26 +2184,20 @@ def emb_whitening_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         as_double("embedding").alias("v")
     )
 
-    def fit_fold(batches):
+    def fit_fold(pdf):
         import numpy as np
         import pandas as pd
 
-        rows = [r for pdf in batches for _, r in pdf.iterrows()]
-        if not rows:
-            return
-        n, s, ss = 0, None, None
-        for r in rows:
-            n += int(r["n"])
-            sv, gv = np.asarray(r["s"]), np.asarray(r["ss"])
-            s = sv if s is None else s + sv
-            ss = gv if ss is None else ss + gv
+        if not len(pdf):
+            return None
+        n, s, ss = _sum_moments(pdf)
         dim = int(round(len(ss) ** 0.5))
         mu = s / n
         cov = ss.reshape(dim, dim) / n - np.outer(mu, mu)
         vals, vecs = np.linalg.eigh(cov)
         W = vecs @ np.diag(1.0 / np.sqrt(np.clip(vals, 1e-12, None)))
         raw_cond = float(vals.max() / max(vals.min(), 1e-12))
-        yield pd.DataFrame(
+        return pd.DataFrame(
             [
                 {
                     "n_vec": n,
@@ -2158,14 +2209,11 @@ def emb_whitening_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         )
 
-    fit = (
-        _moment_rows(emb)
-        .coalesce(1)
-        .mapInPandas(
-            fit_fold,
-            "n_vec long, dim int, mu array<double>,"
-            " w array<array<double>>, raw_cond double",
-        )
+    fit = single_task.run(
+        _moment_rows(emb),
+        fit_fold,
+        "n_vec long, dim int, mu array<double>,"
+        " w array<array<double>>, raw_cond double",
     )
 
     def whiten_partials(batches):
@@ -2211,28 +2259,22 @@ def emb_whitening_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         " n_vec long, dim int, raw_cond double",
     )
 
-    def verdict_fold(batches):
+    def verdict_fold(pdf):
         import numpy as np
         import pandas as pd
 
-        rows = [r for pdf in batches for _, r in pdf.iterrows()]
-        if not rows:
-            return
-        n, s, ss = 0, None, None
-        for r in rows:
-            n += int(r["n"])
-            sv, gv = np.asarray(r["s"]), np.asarray(r["ss"])
-            s = sv if s is None else s + sv
-            ss = gv if ss is None else ss + gv
-        dim = int(rows[0]["dim"])
-        raw_cond = float(rows[0]["raw_cond"])
+        if not len(pdf):
+            return None
+        n, s, ss = _sum_moments(pdf)
+        dim = int(pdf["dim"].iloc[0])
+        raw_cond = float(pdf["raw_cond"].iloc[0])
         wmu = s / n
         wcov = ss.reshape(dim, dim) / n - np.outer(wmu, wmu)
         wvals = np.linalg.eigvalsh(wcov)
-        yield pd.DataFrame(
+        return pd.DataFrame(
             [
                 {
-                    "n_vec": int(rows[0]["n_vec"]),
+                    "n_vec": int(pdf["n_vec"].iloc[0]),
                     "dim": dim,
                     "mean_zero_ok": bool(np.abs(wmu).max() < 1e-9),
                     "identity_cov_ok": bool(
@@ -2245,7 +2287,8 @@ def emb_whitening_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         )
 
-    return wparts.coalesce(1).mapInPandas(
+    return single_task.run(
+        wparts,
         verdict_fold,
         "n_vec long, dim int, mean_zero_ok boolean,"
         " identity_cov_ok boolean, condition_improved_ok boolean",

@@ -8,8 +8,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators import single_task
 from . import query
 from ._util import shared_plan, tbl
+from .ml_queries import _lstm_fit_forecast, _lstm_sequences
 
 
 # --- TPC-H Q6 shape: selective scan-aggregate ---------------------------------
@@ -226,66 +228,30 @@ def m11_lstm_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas that runs the identical trainer — zero construction
     jobs, the driver never holds a tensor.  Rows-only: gradient
     descent is solver-shaped."""
-    from ..ml.lstm import sequence_dataset
-
     seq_len = 14
-    daily = (
-        tbl(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("d"))
-        .agg(F.sum("o_totalprice").alias("demand"))
-    )
-    mm = daily.agg(F.min("demand").alias("lo"), F.max("demand").alias("hi"))
-    scaled = daily.crossJoin(F.broadcast(mm)).select(
-        "d",
-        (
-            (F.col("demand") - F.col("lo")) / (F.col("hi") - F.col("lo"))
-        ).alias("v"),
-    )
-    seq = sequence_dataset(scaled, "d", ["v"], "v", seq_length=seq_len)
+    seq, mm = _lstm_sequences(spark, sf_dir, seq_len)
     packed = seq.crossJoin(F.broadcast(mm))
 
-    def fold(batches):
-        import numpy as np
+    def fold(pdf):
         import pandas as pd
 
-        from energy_consumption_forecasting_spark.ml.lstm import lstm_train
-
-        parts = [pdf for pdf in batches if len(pdf)]
-        if not parts:
-            return
-        pdf = pd.concat(parts).sort_values("d")
+        if not len(pdf):
+            return None
         lo = float(pdf["lo"].iloc[0])
         hi = float(pdf["hi"].iloc[0])
-        X = (
-            np.stack(pdf["x"].to_numpy())
-            .astype(np.float32)
-            .reshape(len(pdf), seq_len, 1)
-        )
-        y = pdf["y"].to_numpy(dtype=np.float32)
-        model, history = lstm_train(
-            X, y, {"epochs": 40, "hidden_size": 8, "lr": 0.01}
-        )
-        window = list(X[-1, :, 0].astype(float))
-        out = []
-        for i in range(7):
-            p = float(
-                model.predict(np.array(window[-seq_len:])[None, :, None])[0]
-            )
-            out.append(
-                (
-                    i + 1,
-                    lo + (hi - lo) * p,
-                    float(history[0]),
-                    float(history[-1]),
-                )
-            )
-            window.append(p)
-        yield pd.DataFrame(
+        _, history, preds = _lstm_fit_forecast(pdf, seq_len, 7)
+        out = [
+            (i + 1, lo + (hi - lo) * p, float(history[0]), float(history[-1]))
+            for i, p in enumerate(preds)
+        ]
+        return pd.DataFrame(
             out, columns=["step", "forecast", "mse_first", "mse_last"]
         )
 
-    return packed.coalesce(1).mapInPandas(
-        fold, "step int, forecast double, mse_first double, mse_last double"
+    return single_task.run(
+        packed,
+        fold,
+        "step int, forecast double, mse_first double, mse_last double",
     )
 
 

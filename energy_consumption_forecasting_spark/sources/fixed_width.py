@@ -12,7 +12,6 @@ parallelizes across files/blocks."""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 # GHCN-Daily station-file column spec (public format description):
 # (name, 1-based start, length, type)

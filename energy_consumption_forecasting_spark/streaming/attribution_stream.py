@@ -14,9 +14,6 @@ total history.
 
 from __future__ import annotations
 
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 

@@ -16,9 +16,6 @@ first-seen-per-hash dedup — the test contract
 
 from __future__ import annotations
 
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 

@@ -140,10 +140,11 @@ def _read_final_state(spark: SparkSession, table_dir: str) -> DataFrame:
     relation — no Spark job.  Above the budget, or when the footers
     cannot be probed, Spark reads and explodes it and
     ``localCheckpoint`` materializes the result."""
-    from ..session import broadcast_budget
+    from ..operators.single_task import fits
+    from ..tables import footer_bytes
 
     path = _state_dir(table_dir)
-    if _fits(path, broadcast_budget(spark)):
+    if fits(spark, footer_bytes(path)):
         return spark.createDataFrame(_explode_on_driver(path), _RESULT_SCHEMA)
     state = _read_state(spark, table_dir)
     return (
@@ -155,25 +156,6 @@ def _read_final_state(spark: SparkSession, table_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-
-
-def _fits(path: str, budget: int) -> bool:
-    """Whether the uncompressed size the parquet footers of ``path``
-    report is under ``budget`` bytes (-1: nothing fits); False when
-    ``tables._part_footers`` cannot probe the path."""
-    from ..tables import _part_footers
-
-    footers = _part_footers(path)
-    if footers is None or budget < 0:
-        return False
-    size = 0
-    for meta in footers:
-        size += sum(
-            meta.row_group(i).total_byte_size for i in range(meta.num_row_groups)
-        )
-        if size >= budget:
-            return False
-    return True
 
 
 def _explode_on_driver(path: str):

@@ -149,8 +149,8 @@ def load_events(spark: SparkSession, path: str) -> DataFrame:
 
 
 def _part_footers(path: str):
-    """The footer probe behind ``scan_is_narrow`` and
-    ``footer_row_count``: a lazy iterator over the parquet footer
+    """The footer probe behind ``scan_is_narrow``, ``footer_row_count``
+    and ``footer_bytes``: a lazy iterator over the parquet footer
     metadata of each part file of ``path``, read on the driver, or
     None when the path cannot be probed.
 
@@ -209,6 +209,20 @@ def footer_row_count(path: str) -> int | None:
     if footers is None:
         return None
     return sum(meta.num_rows for meta in footers)
+
+
+def footer_bytes(path: str) -> int | None:
+    """Uncompressed size of a parquet table in bytes, summed from the
+    row groups in the footers of its part files on the driver (no job);
+    None when ``_part_footers`` cannot probe the path."""
+    footers = _part_footers(path)
+    if footers is None:
+        return None
+    return sum(
+        meta.row_group(i).total_byte_size
+        for meta in footers
+        for i in range(meta.num_row_groups)
+    )
 
 
 def table_path(sf_dir: str, name: str) -> str:

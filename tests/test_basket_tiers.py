@@ -13,21 +13,27 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_single_task_rule():
-    """16 bytes per line against the broadcast budget: sf0.1 fits 64 MiB,
-    sf1 (6,000,000 lines = 96 MB) does not, and a budget of -1 or an
-    unknown line count never fits."""
-    from energy_consumption_forecasting_spark.queries.basket import (
-        single_task_fits,
-    )
+def test_single_task_rule(spark):
+    """``single_task.fits`` at 16 bytes per line: sf0.1 (600,000 lines)
+    fits a 64 MiB budget, sf1 (6,000,000 lines = 96 MB) does not, a
+    budget of -1 or an unknown size never fits, and a size equal to the
+    budget does not fit."""
+    from energy_consumption_forecasting_spark.operators.single_task import fits
 
     mib64 = 64 << 20
-    assert single_task_fits(600_000, mib64)
-    assert not single_task_fits(6_000_000, mib64)
-    assert not single_task_fits(0, -1)
-    assert not single_task_fits(600_000, -1)
-    assert not single_task_fits(None, mib64)
-    assert single_task_fits(100, 1601) and not single_task_fits(100, 1600)
+    cases = [
+        (600_000 * 16, mib64, True),
+        (6_000_000 * 16, mib64, False),
+        (0, -1, False),
+        (600_000 * 16, -1, False),
+        (None, mib64, False),
+        (100 * 16, 1601, True),
+        (100 * 16, 1600, False),
+        (mib64, mib64, False),
+    ]
+    for n_bytes, budget, want in cases:
+        with pinned_budget(spark, budget):
+            assert fits(spark, n_bytes) is want, (n_bytes, budget)
 
 
 def test_empty_lines_both_tiers(spark):

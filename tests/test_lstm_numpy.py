@@ -71,31 +71,6 @@ def test_m11_forecast_gate(spark):
     assert rows[0].mse_last < rows[0].mse_first  # training moved the loss
 
 
-def test_fit_stream_single_chunk_equals_fit():
-    """fit_stream over one chunk is bit-identical to full-batch fit."""
-    rng = np.random.RandomState(5)
-    X = rng.randn(64, 8, 2)
-    y = rng.randn(64)
-    a = NumpyLSTM(n_features=2, hidden=4, seed=1)
-    ha = a.fit(X, y, epochs=12, lr=0.01)
-    b = NumpyLSTM(n_features=2, hidden=4, seed=1)
-    hb = b.fit_stream(lambda: iter([(X, y)]), epochs=12, lr=0.01)
-    assert np.array_equal(a.W, b.W) and np.array_equal(a.Wy, b.Wy)
-    assert ha == pytest.approx(hb)
-
-
-def test_fit_stream_chunked_learns():
-    rng = np.random.RandomState(7)
-    N, L = 200, 10
-    sig = np.sin(np.arange(N + L) / 3.0)
-    X = np.stack([sig[i : i + L] for i in range(N)])[:, :, None]
-    y = sig[L : N + L]
-    chunks = [(X[i : i + 50], y[i : i + 50]) for i in range(0, N, 50)]
-    model = NumpyLSTM(n_features=1, hidden=8, seed=42)
-    history = model.fit_stream(lambda: iter(chunks), epochs=40, lr=0.02)
-    assert history[-1] < history[0] * 0.2
-
-
 def test_torch_trainer_when_torch_present():
     """lstm_train must NOT raise because torch is present (r3 verdict
     item 2): with torch installed it routes to TorchLSTM (reference

@@ -212,3 +212,28 @@ def test_function_exemptions_are_still_needed():
     assert not stale, (
         f"EXEMPT_FUNCTIONS entries that are gone or now reached: {stale}"
     )
+
+
+def test_no_unused_top_level_imports():
+    """A name a module imports at top level must be used in it: the
+    function scan above reads an imported name as a use, so a dead
+    import could mark a dead function reached.  ``__init__.py``
+    re-exports and ``from __future__`` are exempt."""
+    unused = []
+    for mod in sorted(_package_modules()):
+        path = _module_path(mod)
+        if path.endswith("__init__.py"):
+            continue
+        tree = _parse(path)
+        bound: dict[str, int] = {}
+        for st in tree.body:
+            if isinstance(st, ast.Import):
+                for a in st.names:
+                    bound[a.asname or a.name.split(".")[0]] = st.lineno
+            elif isinstance(st, ast.ImportFrom) and st.module != "__future__":
+                for a in st.names:
+                    bound[a.asname or a.name] = st.lineno
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        rel = os.path.relpath(path, REPO)
+        unused += [f"{rel}:{ln} {name}" for name, ln in bound.items() if name not in used]
+    assert not unused, f"unused top-level imports: {unused}"
