@@ -40,9 +40,9 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (F.sqrt(norm2(a)) * F.sqrt(norm2(b)))
 
 
-def with_norm(df, vec_col: str = "v", norm_col: str = "nrm"):
-    """Attach the L2 norm as a column (computed once per vector)."""
-    return df.withColumn(norm_col, F.sqrt(norm2(F.col(vec_col))))
+def with_norm(df):
+    """Attach the L2 norm of ``v`` as ``nrm`` (computed once per vector)."""
+    return df.withColumn("nrm", F.sqrt(norm2(F.col("v"))))
 
 
 def cosine_prenormed(a: Column, b: Column, na: Column, nb: Column) -> Column:
@@ -51,8 +51,7 @@ def cosine_prenormed(a: Column, b: Column, na: Column, nb: Column) -> Column:
     return dot(a, b) / (na * nb)
 
 
-def rung_sig_norm_arrow(df, planes, nbits_col="__nbits", vec="v",
-                        norm_col="nrm", sig_col="sig"):
+def rung_sig_norm_arrow(df, planes):
     """Arrow-batch sign-signature + L2-norm kernel, BIT-IDENTICAL to
     the per-plane ``dot`` fold + ``norm2`` fold (r10, guide §4.2).
 
@@ -73,21 +72,21 @@ def rung_sig_norm_arrow(df, planes, nbits_col="__nbits", vec="v",
     False — but a NaN dot means NaN inputs, which the strict oracle
     already forbids upstream.)
 
-    ``df`` must carry ``vec`` (fixed-dim double arrays) and
-    ``nbits_col`` (the corpus-rung plane count, constant across rows);
-    all other columns pass through untouched as Arrow buffers.
-    ``planes`` is the full plane table (list of list[float]); each
-    batch slices the first ``nbits`` rows."""
+    ``df`` must carry ``v`` (fixed-dim double arrays) and ``__nbits``
+    (the corpus-rung plane count, constant across rows); it gains
+    ``nrm`` and ``sig``, and all other columns pass through untouched
+    as Arrow buffers.  ``planes`` is the full plane table (list of
+    list[float]); each batch slices the first ``nbits`` rows."""
     import numpy as np
     import pyarrow as pa
 
     P_full = np.asarray(planes, dtype=np.float64)
 
     sch_in = df.schema
-    keep = [f for f in sch_in.fields if f.name != nbits_col]
+    keep = [f for f in sch_in.fields if f.name != "__nbits"]
     ddl = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in keep
-    ) + f", {norm_col} double, {sig_col} string"
+    ) + ", nrm double, sig string"
 
     def _run(batches):
         for b in batches:
@@ -95,10 +94,10 @@ def rung_sig_norm_arrow(df, planes, nbits_col="__nbits", vec="v",
             if n == 0:
                 continue
             ix = {name: j for j, name in enumerate(b.schema.names)}
-            v = b.column(ix[vec]).flatten().to_numpy(zero_copy_only=False)
+            v = b.column(ix["v"]).flatten().to_numpy(zero_copy_only=False)
             d = v.size // n
             v = v.reshape(n, d)
-            nbits = b.column(ix[nbits_col])[0].as_py()
+            nbits = b.column(ix["__nbits"])[0].as_py()
             P = P_full[:nbits]
             acc = np.zeros((n, nbits), dtype=np.float64)
             nrm = np.zeros(n, dtype=np.float64)
@@ -118,14 +117,14 @@ def rung_sig_norm_arrow(df, planes, nbits_col="__nbits", vec="v",
             yield pa.RecordBatch.from_arrays(
                 [b.column(ix[f.name]) for f in keep]
                 + [pa.array(nrm, type=pa.float64()), sigs],
-                names=[f.name for f in keep] + [norm_col, sig_col],
+                names=[f.name for f in keep] + ["nrm", "sig"],
             )
 
     return df.mapInArrow(_run, ddl)
 
 
-def plane_dots_arrow(df, planes, vec="v", out="parr", divisor=None):
-    """Arrow-batch plane-dot projection: attach ``out`` =
+def plane_dots_arrow(df, planes, divisor=None):
+    """Arrow-batch plane-dot projection: attach ``parr`` =
     [dot(v, p_0), dot(v, p_1), …] (each optionally divided by the
     exact ``divisor``), BIT-IDENTICAL to the per-plane ``dot``
     left-fold (r10, guide §4.2 — same per-dimension accumulation
@@ -144,7 +143,7 @@ def plane_dots_arrow(df, planes, vec="v", out="parr", divisor=None):
     keep = list(df.schema.fields)
     ddl = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in keep
-    ) + f", {out} array<double>"
+    ) + ", parr array<double>"
 
     def _run(batches):
         for b in batches:
@@ -152,7 +151,7 @@ def plane_dots_arrow(df, planes, vec="v", out="parr", divisor=None):
             if n == 0:
                 continue
             ix = {name: j for j, name in enumerate(b.schema.names)}
-            v = b.column(ix[vec]).flatten().to_numpy(zero_copy_only=False)
+            v = b.column(ix["v"]).flatten().to_numpy(zero_copy_only=False)
             d = v.size // n
             v = v.reshape(n, d)
             acc = np.zeros((n, P.shape[0]), dtype=np.float64)
@@ -165,14 +164,13 @@ def plane_dots_arrow(df, planes, vec="v", out="parr", divisor=None):
             ).cast(pa.list_(pa.float64()))
             yield pa.RecordBatch.from_arrays(
                 [b.column(ix[f.name]) for f in keep] + [parr],
-                names=[f.name for f in keep] + [out],
+                names=[f.name for f in keep] + ["parr"],
             )
 
     return df.mapInArrow(_run, ddl)
 
 
-def bucket_pair_scores_arrow(df, n_bands, out_a="vec_a", out_b="vec_b",
-                             out="cos_sim"):
+def bucket_pair_scores_arrow(df, n_bands, out_a="vec_a", out_b="vec_b"):
     """Bucket-LOCAL candidate generation + first-collision dedup +
     exact cosine, in one Arrow pass (r10, guide §8).
 
@@ -211,7 +209,7 @@ def bucket_pair_scores_arrow(df, n_bands, out_a="vec_a", out_b="vec_b",
     import numpy as np
     import pyarrow as pa
 
-    ddl = f"{out_a} long, {out_b} long, {out} double"
+    ddl = f"{out_a} long, {out_b} long, cos_sim double"
 
     def _run(batches):
         # carry-over buffer for the bucket straddling batch boundaries
@@ -255,7 +253,7 @@ def bucket_pair_scores_arrow(df, n_bands, out_a="vec_a", out_b="vec_b",
                     pa.array(vid[ib], type=pa.int64()),
                     pa.array(cos, type=pa.float64()),
                 ],
-                names=[out_a, out_b, out],
+                names=[out_a, out_b, "cos_sim"],
             )
 
         for b in batches:

@@ -254,11 +254,10 @@ def permutation_importance(
     df: DataFrame,
     feature_cols: list[str],
     scorer: Scorer,
-    seed: int = 42,
 ) -> dict[str, float]:
     """M15 analog: importance(c) = score with column c shuffled − base
     score.  The shuffle is a rank-based value permutation — distributed,
-    deterministic under the seed (content-hash ordering)."""
+    deterministic under the fixed seed 42 (content-hash ordering)."""
     base = scorer(df)
     out: dict[str, float] = {}
     keyed = df.withColumn(
@@ -271,7 +270,7 @@ def permutation_importance(
             keyed.select(
                 F.col(c).alias("__v"),
                 F.row_number()
-                .over(Window.orderBy(F.md5(F.concat_ws("|", F.lit(seed), F.lit(c), "__rid"))))
+                .over(Window.orderBy(F.md5(F.concat_ws("|", F.lit(42), F.lit(c), "__rid"))))
                 .alias("__prid"),
             )
         )

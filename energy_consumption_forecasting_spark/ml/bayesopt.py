@@ -26,6 +26,8 @@ except ImportError:
     _HAS_SKLEARN = False
 
 KAPPA = 2.753  # reference's LCB multiplier (optimization.py:84-91)
+N_CANDIDATES = 100  # random LCB candidate pool per iteration
+OUTLIER_FACTOR = 3.5  # forsake a run above this multiple of the max so far
 
 
 class _NumpyGP:
@@ -65,15 +67,13 @@ def bayes_opt(
     bounds: list[tuple[float, float]],
     n_init: int = 5,
     n_iter: int = 20,
-    n_candidates: int = 100,
     seed: int = 42,
-    outlier_factor: float = 3.5,
 ) -> dict:
     """Minimize ``objective`` over box ``bounds`` with GP + LCB.
 
     Mirrors the reference loop: random init, fit surrogate, score a
     random candidate pool with mu − κ·σ, evaluate the argmin.  A NEW
-    evaluation exceeding ``outlier_factor`` × the max of the
+    evaluation exceeding ``OUTLIER_FACTOR`` × the max of the
     already-accepted objectives is forsaken — recorded in history but
     kept out of the surrogate's X/y (optimization.py:131's 'forsake
     this run' branch; the r1 filter compared a point against a max that
@@ -88,7 +88,7 @@ def bayes_opt(
     history: list[tuple[list[float], float, bool]] = []
 
     def record(x: np.ndarray, v: float) -> None:
-        accepted = not y or v <= outlier_factor * max(y)
+        accepted = not y or v <= OUTLIER_FACTOR * max(y)
         history.append((list(map(float, x)), v, accepted))
         if accepted:
             X.append(np.asarray(x))
@@ -119,11 +119,11 @@ def bayes_opt(
         if _HAS_SKLEARN:
             gp = GaussianProcessRegressor(alpha=1e-3, normalize_y=True)
             gp.fit(Xf, yf)
-            cand = lo + rng.rand(n_candidates, dim) * (hi - lo)
+            cand = lo + rng.rand(N_CANDIDATES, dim) * (hi - lo)
             mu, std = gp.predict(cand, return_std=True)
         else:
             gp = _NumpyGP(alpha=1e-3).fit(Xf, yf)
-            cand = lo + rng.rand(n_candidates, dim) * (hi - lo)
+            cand = lo + rng.rand(N_CANDIDATES, dim) * (hi - lo)
             mu, std = gp.predict(cand)
         consider(cand[int(np.argmin(mu - KAPPA * std))])
 

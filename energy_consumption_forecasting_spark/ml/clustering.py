@@ -76,11 +76,10 @@ def dtw_distance_matrix(series_df: DataFrame) -> DataFrame:
     return pairs.groupBy("block").applyInPandas(block_dtw, schema=schema)
 
 
-def kmedoids_rows(
-    rows, k: int = 12, max_iter: int = 20, seed: int = 42
-) -> dict:
+def kmedoids_rows(rows, k: int = 12, seed: int = 42) -> dict:
     """k-medoids over (id_a, id_b, dtw) mapping rows — pure Python/
-    numpy, callable on the driver OR inside an executor fold."""
+    numpy, callable on the driver OR inside an executor fold.  Seeded
+    medoid init, at most 20 swap rounds."""
     ids = sorted({r["id_a"] for r in rows} | {r["id_b"] for r in rows})
     idx = {v: i for i, v in enumerate(ids)}
     n = len(ids)
@@ -90,7 +89,7 @@ def kmedoids_rows(
         D[i, j] = D[j, i] = r["dtw"]
     rng = np.random.RandomState(seed)
     medoids = rng.choice(n, size=min(k, n), replace=False)
-    for _ in range(max_iter):
+    for _ in range(20):
         labels = np.argmin(D[:, medoids], axis=1)
         new_medoids = medoids.copy()
         for c in range(len(medoids)):
@@ -156,8 +155,6 @@ def tskmeans_dba(
     series_df: DataFrame,
     k: int = 6,
     n_iter: int = 5,
-    dba_iters: int = 3,
-    seed: int = 42,
 ) -> tuple[dict, np.ndarray]:
     """TimeSeriesKMeans(metric="dtw") with true DBA centroid updates,
     Spark-shaped: per-iteration the ASSIGNMENT step is an Arrow-batched
@@ -165,7 +162,8 @@ def tskmeans_dba(
     k DTWs row-locally), and the CENTROID step is one applyInPandas per
     cluster (series of a cluster never leave the executors; only the k
     new centroids — KB — return to the driver).  Initialization:
-    k seeded series (deterministic).
+    the first k series by id (deterministic).  Each centroid step runs
+    3 DBA rounds.
 
     Requires equal-length series (the reference's monthly windows are).
     Returns ({series_id: cluster}, centroids array)."""
@@ -225,7 +223,7 @@ def tskmeans_dba(
             series = [
                 np.asarray(s, dtype=np.float64) for s in pdf["series"]
             ]
-            center = _dba(series, bc.value[c], iters=dba_iters)
+            center = _dba(series, bc.value[c], iters=3)
             return pd.DataFrame(
                 {"cluster": [c], "centroid": [center.tolist()]}
             )
@@ -300,13 +298,12 @@ def _shape_extraction(X: np.ndarray, ref: np.ndarray) -> np.ndarray:
     return _znorm(c)
 
 
-def kshape(
-    series: dict, k: int = 4, max_iter: int = 20, seed: int = 42
-) -> dict:
+def kshape(series: dict, k: int = 4, seed: int = 42) -> dict:
     """Driver-side k-Shape over bounded series (reference scale: ≤105
     monthly sub-series).  ``series``: {id: np.ndarray}, equal lengths
     (zero-pad shorter months).  Returns {"labels": {id: c},
-    "centroids": [np.ndarray]}.  Deterministic under the seed; empty
+    "centroids": [np.ndarray]}, after at most 20 refinement rounds.
+    Deterministic under the seed; empty
     clusters re-seed from the farthest series (standard k-Shape
     repair)."""
     ids = sorted(series)
@@ -315,7 +312,7 @@ def kshape(
     rng = np.random.RandomState(seed)
     labels = rng.randint(0, k, size=n)
     centroids = [np.zeros_like(X[0]) for _ in range(k)]
-    for _ in range(max_iter):
+    for _ in range(20):
         for c in range(k):
             members = [X[i] for i in range(n) if labels[i] == c]
             if members:

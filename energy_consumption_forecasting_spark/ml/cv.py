@@ -120,10 +120,9 @@ def folds(
     n_folds: int = 5,
     val_frac: float = 0.2,
     bounded: bool = False,
-    bucket: Column | None = None,
 ) -> Iterator[tuple[DataFrame, DataFrame]]:
     """Yield (train, val) per fold — train is the block head, val the tail."""
-    labeled = label_folds(df, order_cols, n_folds, val_frac, bounded, bucket)
+    labeled = label_folds(df, order_cols, n_folds, val_frac, bounded)
     for k in range(1, n_folds + 1):
         fold_df = labeled.filter(F.col("fold") == k)
         yield (
@@ -135,16 +134,15 @@ def folds(
 def label_split(
     df: DataFrame,
     order_cols: list[str],
-    train_frac: float = 0.85,
     bucket: Column | None = None,
 ) -> DataFrame:
-    """Add ``split`` ('train'|'test'): the first ``ceil(train_frac·n)``
+    """Add ``split`` ('train'|'test'): the first ``ceil(0.85·n)``
     rows in order are train — the same double→ceil arithmetic as SQL's
     ``CEIL(0.85 * COUNT(*))``, evaluated as a column, so the lazy
     bucket path needs no count job."""
     ranked = _ranked(df, order_cols, bucket)
     return ranked.withColumn(
         "split",
-        F.when(F.col("__rn") <= F.ceil(train_frac * F.col("__n")), "train")
+        F.when(F.col("__rn") <= F.ceil(0.85 * F.col("__n")), "train")
         .otherwise("test"),
     ).drop("__rn", "__n")

@@ -51,14 +51,13 @@ def corr_from_moment_row(row, cols: list[str]) -> np.ndarray:
     return C / np.outer(d, d)
 
 
-def principal_axis_factoring(
-    R: np.ndarray, n_factors: int, n_iter: int = 50
-) -> np.ndarray:
+def principal_axis_factoring(R: np.ndarray, n_factors: int) -> np.ndarray:
     """Iterated PAF: communalities on the diagonal, eigendecompose,
-    update until stable.  Returns (k, n_factors) loadings."""
+    update until stable (at most 50 rounds).  Returns (k, n_factors)
+    loadings."""
     k = R.shape[0]
     h2 = 1.0 - 1.0 / np.diag(np.linalg.pinv(R))  # SMC start
-    for _ in range(n_iter):
+    for _ in range(50):
         Rr = R.copy()
         np.fill_diagonal(Rr, h2)
         vals, vecs = np.linalg.eigh(Rr)
@@ -82,19 +81,20 @@ def principal_axis_factoring(
     return L
 
 
-def varimax(L: np.ndarray, n_iter: int = 100, tol: float = 1e-8) -> np.ndarray:
-    """Kaiser's varimax rotation (published algorithm)."""
+def varimax(L: np.ndarray) -> np.ndarray:
+    """Kaiser's varimax rotation (published algorithm): at most 100
+    rounds, stopping once the criterion gains less than 1e-8."""
     k, m = L.shape
     R = np.eye(m)
     var_old = 0.0
-    for _ in range(n_iter):
+    for _ in range(100):
         Lr = L @ R
         u, s, vt = np.linalg.svd(
             L.T @ (Lr**3 - (Lr * (Lr**2).sum(axis=0) / k))
         )
         R = u @ vt
         var_new = s.sum()
-        if var_new - var_old < tol:
+        if var_new - var_old < 1e-8:
             break
         var_old = var_new
     return L @ R

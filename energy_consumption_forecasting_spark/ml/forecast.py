@@ -107,7 +107,6 @@ def _hannan_rissanen(
     X: np.ndarray | None,
     p: int,
     q: int,
-    n_iter: int = 2,
 ) -> tuple[float, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """ARMA(p,q)+exog coefficients by the (iterated) Hannan–Rissanen
     two-stage regression — the published library-free route to MA terms:
@@ -116,7 +115,7 @@ def _hannan_rissanen(
     2. OLS of z_t on [1, z_{t-1..t-p}, ê_{t-1..t-q}, X_t];
     3. re-derive innovations from the fitted ARMA recursion
        (presample ê = 0, the conditional-sum-of-squares convention) and
-       refit — ``n_iter`` refinement rounds.
+       refit — 2 refinement rounds.
 
     Returns ``(c, phi, theta, beta, resid)`` with ``resid`` aligned to
     ``z`` (presample entries zero).  Caller guarantees
@@ -136,7 +135,7 @@ def _hannan_rissanen(
     theta = np.zeros(q)
     beta = np.zeros(k)
     start = max(p, q, m)
-    for _ in range(max(1, n_iter)):
+    for _ in range(2):
         rows = range(start, n)
         zl = np.column_stack(
             [[z[t - j - 1] for t in rows] for j in range(p)]
@@ -204,7 +203,6 @@ def _css_refine(
     phi: np.ndarray,
     theta: np.ndarray,
     beta: np.ndarray,
-    max_iter: int = 60,
 ) -> tuple[float, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Conditional-sum-of-squares refinement of Hannan–Rissanen starts
     (the r3 verdict's M9 fidelity step): Levenberg–Marquardt on the CSS
@@ -235,7 +233,7 @@ def _css_refine(
     sse = float(r @ r)
     lam = 1e-3
     converged = False
-    for _ in range(max_iter):
+    for _ in range(60):
         # forward-difference Jacobian of the residual vector
         J = np.empty((len(z), dim))
         for j in range(dim):

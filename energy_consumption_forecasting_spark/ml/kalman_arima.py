@@ -115,7 +115,6 @@ def exact_mle_fit(
     p: int,
     q: int,
     start: tuple[float, np.ndarray, np.ndarray] | None = None,
-    max_iter: int = 4000,
 ) -> dict:
     """Exact-MLE ARMA(p,q) fit by Nelder–Mead over (mu, phi, theta).
 
@@ -140,7 +139,7 @@ def exact_mle_fit(
         v0 = np.r_[start[0], np.asarray(start[1], float), np.asarray(start[2], float)]
         if not np.isfinite(neg_ll(v0)):
             v0 = np.r_[z.mean(), np.zeros(p), np.zeros(q)]
-    v = _nelder_mead(neg_ll, v0, max_iter=max_iter)
+    v = _nelder_mead(neg_ll, v0)
     mu, phi, theta = unpack(v)
     ll, sigma2 = arma_loglik(z, mu, phi, theta)
     return {
@@ -152,10 +151,11 @@ def exact_mle_fit(
     }
 
 
-def _nelder_mead(
-    f, x0: np.ndarray, max_iter: int = 4000, xtol: float = 1e-8, ftol: float = 1e-10
-) -> np.ndarray:
-    """Minimal deterministic Nelder–Mead (scipy is absent)."""
+def _nelder_mead(f, x0: np.ndarray) -> np.ndarray:
+    """Minimal deterministic Nelder–Mead (scipy is absent): at most 4000
+    rounds, stopping once the simplex spans less than 1e-8 in x and
+    1e-10 (relative) in f."""
+    xtol, ftol = 1e-8, 1e-10
     n = len(x0)
     simplex = [x0.copy()]
     for i in range(n):
@@ -163,7 +163,7 @@ def _nelder_mead(
         xi[i] += 0.05 if xi[i] == 0 else 0.05 * abs(xi[i])
         simplex.append(xi)
     fs = [f(x) for x in simplex]
-    for _ in range(max_iter):
+    for _ in range(4000):
         order = np.argsort(fs)
         simplex = [simplex[i] for i in order]
         fs = [fs[i] for i in order]

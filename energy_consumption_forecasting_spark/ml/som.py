@@ -50,10 +50,9 @@ def som_fit(
     series_df: DataFrame,
     grid: tuple[int, int] = (3, 2),
     n_iter: int = 8,
-    sigma0: float | None = None,
-    seed: int = 42,
 ) -> tuple[dict, np.ndarray]:
-    """Fit a ``grid`` SOM to equal-length ``(series_id, series)`` rows.
+    """Fit a ``grid`` SOM to equal-length ``(series_id, series)`` rows;
+    the neighbourhood radius decays from half the longer grid side.
 
     Returns ``({series_id: (row, col)}, codebook[k, L])`` with the
     final assignment computed against the final codebook."""
@@ -61,7 +60,7 @@ def som_fit(
     k = gx * gy
     spark = series_df.sparkSession
     coords = _grid_coords(gx, gy)
-    sigma0 = sigma0 if sigma0 is not None else max(gx, gy) / 2.0
+    sigma0 = max(gx, gy) / 2.0
 
     first = (
         series_df.select("series_id", "series")

@@ -56,12 +56,10 @@ from . import single_task
 
 def pack_blocks(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
     rows_per_block: int = 4096,
     prefix: str = "",
 ) -> DataFrame:
-    """Pack (id, vector) rows into matrix blocks: one output row per
+    """Pack (vec_id, v) rows into matrix blocks: one output row per
     chunk of ``rows_per_block`` inside each Arrow batch —
     (ids array<long>, vecs array<array<double>>)."""
     ids_c, vecs_c = f"{prefix}ids", f"{prefix}vecs"
@@ -74,8 +72,8 @@ def pack_blocks(
                     continue
                 yield pd.DataFrame(
                     {
-                        ids_c: [chunk[id_col].tolist()],
-                        vecs_c: [chunk[vec_col].tolist()],
+                        ids_c: [chunk["vec_id"].tolist()],
+                        vecs_c: [chunk["v"].tolist()],
                     }
                 )
 
@@ -85,7 +83,7 @@ def pack_blocks(
             T.StructField(vecs_c, T.ArrayType(T.ArrayType(T.DoubleType()))),
         ]
     )
-    return df.select(id_col, vec_col).mapInPandas(pack, schema=schema)
+    return df.select("vec_id", "v").mapInPandas(pack, schema=schema)
 
 
 def _topk_window(partial: DataFrame, k: int, order_col: str, asc: bool,
@@ -103,8 +101,6 @@ def _topk_window(partial: DataFrame, k: int, order_col: str, asc: bool,
 def topk_blocked(
     emb: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
     k: int = 5,
     rows_per_block: int = 4096,
 ) -> DataFrame:
@@ -112,8 +108,8 @@ def topk_blocked(
 
     Returns (query_id, neighbor_id, cos_sim, rank); self-matches
     (same id) are excluded, matching sim_topk_bruteforce semantics."""
-    eb = pack_blocks(emb, id_col, vec_col, rows_per_block, prefix="e_")
-    qb = pack_blocks(queries, id_col, vec_col, rows_per_block, prefix="q_")
+    eb = pack_blocks(emb, rows_per_block, prefix="e_")
+    qb = pack_blocks(queries, rows_per_block, prefix="q_")
     pairs = eb.crossJoin(F.broadcast(qb))
 
     schema = T.StructType(
@@ -178,22 +174,17 @@ def topk_blocked(
     return _topk_window(partial, k, "cos_sim", asc=False, id_col="neighbor_id")
 
 
-def pack_code_blocks(
-    encoded: DataFrame,
-    id_col: str = "vec_id",
-    code_col: str = "code",
-    cell_col: str | None = None,
-    rows_per_block: int = 8192,
-) -> DataFrame:
-    """Pack PQ codes (and optionally IVF cell ids) into blocks."""
-    cols = {"e_ids": id_col, "e_codes": code_col}
+def pack_code_blocks(encoded: DataFrame, cell_col: str | None = None) -> DataFrame:
+    """Pack PQ codes (and optionally IVF cell ids) into blocks of 8192
+    rows."""
+    cols = {"e_ids": "vec_id", "e_codes": "code"}
     if cell_col:
         cols["e_cells"] = cell_col
 
     def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for lo in range(0, len(pdf), rows_per_block):
-                chunk = pdf.iloc[lo : lo + rows_per_block]
+            for lo in range(0, len(pdf), 8192):
+                chunk = pdf.iloc[lo : lo + 8192]
                 if not len(chunk):
                     continue
                 yield pd.DataFrame(
@@ -206,7 +197,7 @@ def pack_code_blocks(
     ]
     if cell_col:
         fields.append(T.StructField("e_cells", T.ArrayType(T.IntegerType())))
-    sel = [id_col, code_col] + ([cell_col] if cell_col else [])
+    sel = ["vec_id", "code"] + ([cell_col] if cell_col else [])
     return encoded.select(*sel).mapInPandas(
         pack, schema=T.StructType(fields)
     )
@@ -233,11 +224,11 @@ def pack_code_blocks(
 FIT_SAMPLE = 2048
 
 
-def _ann_sample(emb: DataFrame, vec_col: str, id_col: str, n: int) -> DataFrame:
-    """Deterministic training sample: sorted by id, first n — identical
-    row set AND order on every run/engine (a bare .limit() is
+def _ann_sample(emb: DataFrame) -> DataFrame:
+    """Deterministic training sample: sorted by id, first FIT_SAMPLE —
+    identical row set AND order on every run/engine (a bare .limit() is
     plan-stable but not contractually ordered)."""
-    return emb.orderBy(id_col).limit(n).select(vec_col)
+    return emb.orderBy("vec_id").limit(FIT_SAMPLE).select("v")
 
 
 def _lloyd(X: np.ndarray, k: int, iters: int, seed: int) -> np.ndarray:
@@ -278,61 +269,44 @@ def _d2_sql(a: str, b: str) -> str:
     )
 
 
-def ivf_fit_frame(
-    emb: DataFrame,
-    vec_col: str = "v",
-    id_col: str = "vec_id",
-    n_cells: int = 16,
-    sample: int = FIT_SAMPLE,
-    iters: int = 10,
-    seed: int = 42,
-) -> DataFrame:
+def ivf_fit_frame(emb: DataFrame, n_cells: int = 16) -> DataFrame:
     """The IVF coarse quantizer as a LAZY 1-row frame: sorted sample →
-    single-partition numpy Lloyd fold → ``centroids`` (n_cells × dim).
-    Nothing executes until an action; the driver never sees a matrix."""
+    single-partition numpy Lloyd fold (10 rounds, seed 42) →
+    ``centroids`` (n_cells × dim).  Nothing executes until an action;
+    the driver never sees a matrix."""
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = pdf[vec_col].tolist()
+        rows = pdf["v"].tolist()
         if not rows:
             raise ValueError("IVF fit: empty embeddings sample")
-        cent = _lloyd(np.asarray(rows, dtype=np.float64), n_cells, iters, seed)
+        cent = _lloyd(np.asarray(rows, dtype=np.float64), n_cells, 10, 42)
         return pd.DataFrame(
             [{"centroids": [[float(x) for x in c] for c in cent]}]
         )
 
     return single_task.run(
-        _ann_sample(emb, vec_col, id_col, sample),
-        fold,
-        "centroids array<array<double>>",
+        _ann_sample(emb), fold, "centroids array<array<double>>"
     )
 
 
-def ivf_assign_lazy(emb: DataFrame, fit: DataFrame, vec_col: str = "v") -> DataFrame:
+def ivf_assign_lazy(emb: DataFrame, fit: DataFrame) -> DataFrame:
     """Nearest-centroid cell assignment as a Catalyst HOF argmin over
     the attached centroid array — no Python on the corpus path, no
     eager fit.  First-index min ties, matching np.argmin/MLlib."""
     at = emb.crossJoin(F.broadcast(fit))
     # One F.expr for the cell argmin (r10 — see _d2_sql).
-    d2s = f"transform(centroids, c -> {_d2_sql(vec_col, 'c')})"
+    d2s = f"transform(centroids, c -> {_d2_sql('v', 'c')})"
     cell = F.expr(f"CAST(array_position({d2s}, array_min({d2s})) - 1 AS INT)")
     return at.withColumn("cell", cell).drop("centroids")
 
 
-def ivf_probe_lazy(
-    queries: DataFrame,
-    fit: DataFrame,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-) -> DataFrame:
+def ivf_probe_lazy(queries: DataFrame, fit: DataFrame, nprobe: int = 4) -> DataFrame:
     """Per-query nprobe nearest coarse cells, fully in-plan: posexplode
     the attached centroids, rank by squared distance per query."""
     from pyspark.sql import Window
 
     at = (
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        )
+        queries.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
         .crossJoin(F.broadcast(fit))
         .select("query_id", "qv", F.posexplode("centroids").alias("cell", "cv"))
     )
@@ -349,8 +323,6 @@ def ivf_search_lazy(
     assigned: DataFrame,
     queries: DataFrame,
     fit: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
     k: int = 5,
     nprobe: int = 4,
 ) -> DataFrame:
@@ -363,17 +335,17 @@ def ivf_search_lazy(
 
     from ..functions.vectors import cosine_prenormed, norm2
 
-    probe = ivf_probe_lazy(queries, fit, nprobe, id_col, vec_col).withColumn(
+    probe = ivf_probe_lazy(queries, fit, nprobe).withColumn(
         "qnrm", F.sqrt(norm2(F.col("qv")))
     )
-    cand = assigned.withColumn("nrm", F.sqrt(norm2(F.col(vec_col)))).join(
+    cand = assigned.withColumn("nrm", F.sqrt(norm2(F.col("v")))).join(
         F.broadcast(probe), "cell"
     )
-    scored = cand.filter(F.col(id_col) != F.col("query_id")).select(
+    scored = cand.filter(F.col("vec_id") != F.col("query_id")).select(
         "query_id",
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         cosine_prenormed(
-            F.col("qv"), F.col(vec_col), F.col("qnrm"), F.col("nrm")
+            F.col("qv"), F.col("v"), F.col("qnrm"), F.col("nrm")
         ).alias("cos_sim"),
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -385,7 +357,7 @@ def ivf_search_lazy(
     )
 
 
-def sq8_fit_frame(emb: DataFrame, vec_col: str = "v") -> DataFrame:
+def sq8_fit_frame(emb: DataFrame) -> DataFrame:
     """The SQ8 quantizer fit as a LAZY 1-row frame: per-dimension
     min/max via posexplode → groupBy partials (map-side combine), the
     dim-ordered arrays assembled INSIDE the plan.  Unlike PQ/IVF
@@ -393,7 +365,7 @@ def sq8_fit_frame(emb: DataFrame, vec_col: str = "v") -> DataFrame:
     ``SQ8`` recipe), so the whole tier is deterministic and
     cross-engine verifiable."""
     per_dim = (
-        emb.select(F.posexplode(vec_col).alias("i", "x"))
+        emb.select(F.posexplode("v").alias("i", "x"))
         .groupBy("i")
         .agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
     )
@@ -407,12 +379,7 @@ def sq8_fit_frame(emb: DataFrame, vec_col: str = "v") -> DataFrame:
     )
 
 
-def sq8_encode_lazy(
-    emb: DataFrame,
-    fit: DataFrame,
-    vec_col: str = "v",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def sq8_encode_lazy(emb: DataFrame, fit: DataFrame) -> DataFrame:
     """Quantize each dimension to a uint8 code: ``floor((x−mn)/(mx−mn)
     ·255 + 0.5)`` clipped to [0,255] (code 0 for degenerate dims), with
     the ranges read from attached COLUMNS — pure Catalyst, no Python,
@@ -432,7 +399,7 @@ def sq8_encode_lazy(
         ).otherwise(F.lit(0))
 
     return at.select(
-        id_col, F.transform(F.col(vec_col), code).alias("code"), "mn", "mx"
+        "vec_id", F.transform(F.col("v"), code).alias("code"), "mn", "mx"
     )
 
 
@@ -452,8 +419,6 @@ def sq8_topk_lazy(
     encoded: DataFrame,
     queries_df: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
 ) -> DataFrame:
     """Asymmetric SQ8 search over an encoded frame (code+mn+mx): the RAW
     query vector scored against reconstructed corpus vectors (quantizing
@@ -464,12 +429,10 @@ def sq8_topk_lazy(
     from ..functions.vectors import cosine
 
     corpus = encoded.select(
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         _sq8_reconstruct_cols(F.col("code")).alias("rv"),
     )
-    q = queries_df.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
+    q = queries_df.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
     scored = corpus.join(
         F.broadcast(q), F.col("query_id") != F.col("neighbor_id")
     ).select(
@@ -493,8 +456,6 @@ def sq8_ivf_topk_lazy(
     ivf_fit: DataFrame,
     k: int = 5,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
 ) -> DataFrame:
     """IVF + SQ8 composite: probe lists from the IVF fit frame on RAW
     query vectors (never probe in a space the assigner didn't use),
@@ -504,13 +465,13 @@ def sq8_ivf_topk_lazy(
 
     from ..functions.vectors import cosine
 
-    probe = ivf_probe_lazy(queries_df, ivf_fit, nprobe, id_col, vec_col)
+    probe = ivf_probe_lazy(queries_df, ivf_fit, nprobe)
     cand = encoded_with_cell.join(F.broadcast(probe), "cell").filter(
-        F.col(id_col) != F.col("query_id")
+        F.col("vec_id") != F.col("query_id")
     )
     scored = cand.select(
         "query_id",
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         cosine(F.col("qv"), _sq8_reconstruct_cols(F.col("code"))).alias(
             "sq_sim"
         ),
@@ -549,24 +510,15 @@ def _pq_train_np(
     return books
 
 
-def pq_fit_frame(
-    emb: DataFrame,
-    vec_col: str = "v",
-    id_col: str = "vec_id",
-    m: int = 8,
-    k: int = 16,
-    sample: int = FIT_SAMPLE,
-    iters: int = 10,
-    seed: int = 7,
-) -> DataFrame:
+def pq_fit_frame(emb: DataFrame, m: int = 8, k: int = 16) -> DataFrame:
     """PQ codebooks as a LAZY 1-row frame: sorted sample → per-subspace
-    seeded Lloyd fold → ``books`` (m × k × dim/m)."""
+    seeded Lloyd fold (10 rounds, seed 7) → ``books`` (m × k × dim/m)."""
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = pdf[vec_col].tolist()
+        rows = pdf["v"].tolist()
         if not rows:
             raise ValueError("PQ fit: empty embeddings sample")
-        books = _pq_train_np(np.asarray(rows, dtype=np.float64), m, k, iters, seed)
+        books = _pq_train_np(np.asarray(rows, dtype=np.float64), m, k, 10, 7)
         return pd.DataFrame(
             [
                 {
@@ -578,19 +530,11 @@ def pq_fit_frame(
         )
 
     return single_task.run(
-        _ann_sample(emb, vec_col, id_col, sample),
-        fold,
-        "books array<array<array<double>>>",
+        _ann_sample(emb), fold, "books array<array<array<double>>>"
     )
 
 
-def pq_encode_lazy(
-    emb: DataFrame,
-    fit: DataFrame,
-    m: int = 8,
-    vec_col: str = "v",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def pq_encode_lazy(emb: DataFrame, fit: DataFrame, m: int = 8) -> DataFrame:
     """PQ encode as pure Catalyst HOFs against the attached codebooks:
     per subspace, argmin of squared distance between the vector slice
     and the 16 centroids — no Arrow pass, no broadcast variable, zero
@@ -601,16 +545,16 @@ def pq_encode_lazy(
     # loop built, including the duplicated d_j subtree inside
     # array_position(d_j, array_min(d_j)) that Column reuse also
     # produced.
-    sub = f"CAST(size({vec_col}) / {m} AS INT)"
+    sub = f"CAST(size(v) / {m} AS INT)"
     codes = []
     for j in range(m):
-        sv = f"slice({vec_col}, ({j} * {sub}) + 1, {sub})"
+        sv = f"slice(v, ({j} * {sub}) + 1, {sub})"
         d_j = f"transform(element_at(books, {j + 1}), c -> {_d2_sql(sv, 'c')})"
         codes.append(
             f"CAST(array_position({d_j}, array_min({d_j})) - 1 AS INT)"
         )
     return at.select(
-        id_col, F.expr("array(" + ", ".join(codes) + ")").alias("code")
+        "vec_id", F.expr("array(" + ", ".join(codes) + ")").alias("code")
     )
 
 
@@ -619,8 +563,6 @@ def pq_topk_table_lazy(
     queries: DataFrame,
     fit: DataFrame,
     k_neighbors: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
     ivf_fit: DataFrame | None = None,
     opq_fit: DataFrame | None = None,
     nprobe: int = 4,
@@ -636,12 +578,8 @@ def pq_topk_table_lazy(
     numpy, no broadcast variable, zero construction jobs.  The corpus
     blocks carry only ids/codes(/cells); the KB-sized fit payload rides
     the broadcast qb side once per block pair."""
-    cb = pack_code_blocks(
-        encoded,
-        id_col=id_col,
-        cell_col="cell" if ivf_fit is not None else None,
-    )
-    qb = pack_blocks(queries, id_col, vec_col, prefix="q_").crossJoin(
+    cb = pack_code_blocks(encoded, "cell" if ivf_fit is not None else None)
+    qb = pack_blocks(queries, prefix="q_").crossJoin(
         F.broadcast(fit)
     )
     if ivf_fit is not None:
@@ -655,7 +593,7 @@ def pq_topk_table_lazy(
     schema = T.StructType(
         [
             T.StructField("query_id", T.LongType()),
-            T.StructField(id_col, T.LongType()),
+            T.StructField("vec_id", T.LongType()),
             T.StructField("adc_dist", T.DoubleType()),
         ]
     )
@@ -713,46 +651,37 @@ def pq_topk_table_lazy(
                     out_v.extend(idq[top].tolist())
                     out_d.extend(d[top].tolist())
                 yield pd.DataFrame(
-                    {"query_id": out_q, id_col: out_v, "adc_dist": out_d}
+                    {"query_id": out_q, "vec_id": out_v, "adc_dist": out_d}
                 )
 
     partial = pairs.mapInPandas(kernel, schema=schema)
     return _topk_window(partial, k_neighbors, "adc_dist", asc=True,
-                        id_col=id_col)
+                        id_col="vec_id")
 
 
-def opq_fit_frame(
-    emb: DataFrame,
-    vec_col: str = "v",
-    id_col: str = "vec_id",
-    m: int = 8,
-    k: int = 16,
-    sample: int = FIT_SAMPLE,
-    opq_iters: int = 5,
-    kmeans_iters: int = 6,
-    seed: int = 7,
-) -> DataFrame:
+def opq_fit_frame(emb: DataFrame, m: int = 8, k: int = 16) -> DataFrame:
     """Optimized Product Quantization (Ge et al., CVPR'13) as a LAZY
     1-row frame: learn an orthogonal rotation R that redistributes
     variance across the PQ subspaces by alternating per-subspace k-means
     on the rotated sample X·R with orthogonal Procrustes (SVD of Xᵀ·Y,
-    Y the quantized reconstruction), folded over the sorted sample.
+    Y the quantized reconstruction; 5 alternations of 6 Lloyd rounds,
+    seed 7), folded over the sorted sample.
     ``rt`` holds the COLUMNS of R (R transposed) so the
     in-plan rotation is a per-output-dim dot: rotated[d] = v · rt[d]."""
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = pdf[vec_col].tolist()
+        rows = pdf["v"].tolist()
         if not rows:
             raise ValueError("OPQ fit: empty embeddings sample")
         X = np.asarray(rows, dtype=np.float64)
         n, dim = X.shape
         assert dim % m == 0, f"dim {dim} not divisible by m {m}"
         sub = dim // m
-        rng = np.random.default_rng(seed)
+        rng = np.random.default_rng(7)
         R = np.eye(dim)
 
         def _km(Xj, cent):
-            for _ in range(kmeans_iters):
+            for _ in range(6):
                 d = ((Xj[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
                 assign = d.argmin(axis=1)
                 for c in range(k):
@@ -762,7 +691,7 @@ def opq_fit_frame(
             return cent
 
         books = np.empty((m, k, sub))
-        for it in range(opq_iters):
+        for it in range(5):
             Xr = X @ R
             Y = np.empty_like(Xr)
             for j in range(m):
@@ -790,18 +719,13 @@ def opq_fit_frame(
         )
 
     return single_task.run(
-        _ann_sample(emb, vec_col, id_col, sample),
+        _ann_sample(emb),
         fold,
         "books array<array<array<double>>>, rt array<array<double>>",
     )
 
 
-def opq_rotate_lazy(
-    emb: DataFrame,
-    fit: DataFrame,
-    vec_col: str = "v",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def opq_rotate_lazy(emb: DataFrame, fit: DataFrame) -> DataFrame:
     """Apply the OPQ rotation in-plan: rotated[d] = v · rt[d] as a HOF
     dot per output dimension (dim² multiplies per row — the same FLOPs
     the Arrow matmul pays, without leaving the JVM)."""
@@ -809,9 +733,9 @@ def opq_rotate_lazy(
     rot = F.transform(
         F.col("rt"),
         lambda col: F.aggregate(
-            F.zip_with(F.col(vec_col), col, lambda a, b: a * b),
+            F.zip_with(F.col("v"), col, lambda a, b: a * b),
             F.lit(0.0),
             lambda s, x: s + x,
         ),
     )
-    return at.select(id_col, rot.alias(vec_col))
+    return at.select("vec_id", rot.alias("v"))

@@ -58,10 +58,8 @@ def _merge_pair(symbols, left: str, right: str):
 _LOCAL_VOCAB_MAX = 50_000  # driver-tier cap: words fit comfortably in RAM
 
 
-def learn_bpe(
-    words: DataFrame, n_merges: int, word_col: str = "w", count_col: str = "cnt"
-) -> list[tuple[str, str, int]]:
-    """Learn ``n_merges`` BPE merges from a (word, count) table.
+def learn_bpe(words: DataFrame, n_merges: int) -> list[tuple[str, str, int]]:
+    """Learn ``n_merges`` BPE merges from a (w, cnt) word-count table.
 
     Returns [(left, right, weighted_pair_count), ...] in merge order.
 
@@ -77,7 +75,7 @@ def learn_bpe(
 
     spark = words.sparkSession
     state = words.select(
-        F.split(F.col(word_col), "").alias("syms"), F.col(count_col).alias("cnt")
+        F.split(F.col("w"), "").alias("syms"), F.col("cnt").alias("cnt")
     )
     # The merge loop runs n_merges tiny shuffle jobs over the
     # VOCABULARY-sized state — size the loop's shuffle width to the
@@ -179,10 +177,9 @@ def _learn_bpe_loop(state: DataFrame, n_merges: int) -> list[tuple[str, str, int
     return merges
 
 
-def bpe_encode_words(
-    words: DataFrame, merges: list[tuple[str, str]], word_col: str = "w"
-) -> DataFrame:
-    """Encode each distinct word with a learned merge list → token array.
+def bpe_encode_words(words: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
+    """Encode each distinct word ``w`` with a learned merge list → token
+    array.
 
     The standard apply loop (Sennrich §2 / every production tokenizer):
     split to characters, then repeatedly merge the adjacent pair with
@@ -203,7 +200,7 @@ def bpe_encode_words(
         rk = br.value
         for pdf in batches:
             out = []
-            for w in pdf[word_col]:
+            for w in pdf["w"]:
                 syms = list(w)
                 while len(syms) >= 2:
                     best, best_i = None, -1
@@ -217,12 +214,12 @@ def bpe_encode_words(
                         syms[best_i] + syms[best_i + 1]
                     ]
                 out.append(syms)
-            yield pd.DataFrame({word_col: pdf[word_col], "tokens": out})
+            yield pd.DataFrame({"w": pdf["w"], "tokens": out})
 
     schema = T.StructType(
         [
-            T.StructField(word_col, T.StringType()),
+            T.StructField("w", T.StringType()),
             T.StructField("tokens", T.ArrayType(T.StringType())),
         ]
     )
-    return words.select(word_col).mapInPandas(encode, schema=schema)
+    return words.select("w").mapInPandas(encode, schema=schema)

@@ -27,9 +27,8 @@ def range_join_binned(
     lo_col: str,
     hi_col: str,
     bin_size: float,
-    how: str = "inner",
 ) -> DataFrame:
-    """Join fact rows to intervals containing their value via bin
+    """Inner-join fact rows to intervals containing their value via bin
     bucketing + exact bound re-check.
 
     Intervals spanning multiple bins are exploded to one row per
@@ -46,14 +45,12 @@ def range_join_binned(
         .withColumn("__ibin", F.explode("__bins"))
         .drop("__bins")
     )
-    # The exact bounds check lives IN the join condition (not a
-    # post-filter): under how='left' a post-filter would silently drop
-    # unmatched left rows (whose lo/hi are NULL), turning left into
-    # inner.  The bin equality still gives the planner its equi key.
+    # The exact bounds check lives IN the join condition; the bin
+    # equality gives the planner its equi key.
     cond = (F.col("__bin") == F.col("__ibin")) & F.col(value_col).between(
         F.col(lo_col), F.col(hi_col)
     )
-    joined = f.join(iv, cond, how)
+    joined = f.join(iv, cond, "inner")
     return joined.drop("__bin", "__ibin")
 
 
@@ -63,10 +60,10 @@ def asof_join(
     key_cols: list[str],
     time_col: str,
     value_cols: list[str],
-    suffix: str = "_asof",
 ) -> DataFrame:
-    """For every left row, attach the most recent right values with
-    right.time ≤ left.time (per key) — union-merge implementation.
+    """For every left row, attach the most recent right values (as
+    ``<col>_asof``) with right.time ≤ left.time (per key) — union-merge
+    implementation.
 
     One shuffle on (key, time); right rows ride the same window as
     left rows, so there is no join at all in the physical plan."""
@@ -93,5 +90,5 @@ def asof_join(
         "__r_last", F.last("__r_row", ignorenulls=True).over(w)
     )
     for c in value_cols:
-        merged = merged.withColumn(c + suffix, F.col(f"__r_last.{c}"))
+        merged = merged.withColumn(c + "_asof", F.col(f"__r_last.{c}"))
     return merged.filter(F.col("__side") == 1).drop("__side", "__r_row", "__r_last")

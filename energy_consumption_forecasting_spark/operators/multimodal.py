@@ -89,7 +89,7 @@ def _decode_bytes(payload: bytes, kind: str) -> np.ndarray:
     return arr[: side * side].reshape(side, side).astype(np.float32)
 
 
-def extract_features(df: DataFrame, batch_hint: int = 64) -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """mapInPandas decode + feature extraction: exact pixel moments +
     mean/std/shape per item.
 
@@ -197,7 +197,7 @@ AUDIO_WINDOW = 256  # samples per analysis window (non-overlapping)
 AUDIO_CAP = 1024  # decode cap, matching _decode_bytes' image cap
 
 
-def audio_rms_windows(df: DataFrame, batch_hint: int = 64) -> DataFrame:
+def audio_rms_windows(df: DataFrame) -> DataFrame:
     """Audio analysis plumbing: interpret each payload's first
     AUDIO_CAP bytes as unsigned 8-bit PCM (the deterministic fake
     decode — codecs absent), frame into non-overlapping AUDIO_WINDOW

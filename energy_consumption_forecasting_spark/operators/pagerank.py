@@ -4,10 +4,12 @@ Together with connected components (queries/components.py) this covers
 the two standard iterative-graph shapes: label fixpoints and weighted
 power iteration.  No GraphFrames dependency.
 
-Ranks are exact scaled int64s (``pagerank_exact``,
-``pagerank_personalized_exact``), so any aggregation order — Spark
-partial aggregation, numpy, DuckDB single-threaded — yields identical
-integers and the cross-engine oracle can hash-compare values.
+Ranks are exact scaled int64s (``pagerank_exact``, global or
+personalized), so any aggregation order — Spark partial aggregation,
+numpy, DuckDB single-threaded — yields identical integers and the
+cross-engine oracle can hash-compare values.  The recurrence's
+constants (``ITERS``, ``SCALE``, ``DAMP_NUM``/``DAMP_DEN``) live here,
+and the DuckDB oracles in queries/components.py read the same ones.
 
 ``prepare_rank_graph`` builds the static half once (degree table,
 counts, the deg-folded edge table ``we``) and picks one of three tiers
@@ -46,6 +48,17 @@ from . import single_task
 # per round was measured as pure scheduling floor at gate SF.
 _CKPT_EVERY = 5
 
+# The exact recurrence: ITERS rounds over ranks scaled by SCALE, damping
+# DAMP_NUM/DAMP_DEN = 0.85.  Overflow headroom: inflow <= SCALE, so
+# DAMP_NUM * inflow <= 1.7e16 << 2^63.
+ITERS = 10
+SCALE = 10**15
+DAMP_NUM = 17
+DAMP_DEN = 20
+
+# Edge rows per task of the loop's shuffles (session.loop_shuffle_width).
+_ROWS_PER_TASK = 100_000
+
 SINGLE_TASK = "single_task"
 BROADCAST = "broadcast"
 SHUFFLED_HASH = "shuffled_hash"
@@ -60,11 +73,9 @@ class PreparedRankGraph:
     node table the setup derived it from; ``tier`` the loop shape
     (SINGLE_TASK, BROADCAST or SHUFFLED_HASH — module docstring).  The
     whole graph family (global + personalized PageRank over the same
-    edge set) rebuilds this identical structure, so callers cache one
+    edge set) iterates this identical structure, so callers cache one
     PreparedRankGraph per (session, edge source) and pass it in — the
-    per-query cost is then just the iteration (round-7 item 1: the
-    bench session rebuilt the same supply-graph edges for every family
-    member)."""
+    per-query cost is then just the iteration."""
 
     we: DataFrame
     deg: DataFrame
@@ -77,11 +88,7 @@ class PreparedRankGraph:
         self.deg.unpersist()
 
 
-def prepare_rank_graph(
-    edges: DataFrame,
-    rows_per_task: int = 100_000,
-    check_symmetry: bool = False,
-) -> PreparedRankGraph:
+def prepare_rank_graph(edges: DataFrame) -> PreparedRankGraph:
     """One pass of setup for the exact PageRank tiers: degree table,
     node/edge counts, the tier, and the deg-folded edge table persisted
     on the loop's aggregation key (``dst``, or ``src`` on the
@@ -93,12 +100,9 @@ def prepare_rank_graph(
     per node for the broadcast tier.
 
     PRECONDITION: symmetric-style graph — every node has out- and
-    in-degree >= 1 (true for any symmetrized edge set), the same
-    contract as ``pagerank_exact(symmetrized=True)``.  Checked only
-    under ``check_symmetry=True`` (one extra distinct over dst, folded
-    into the SAME stats collect — never a second degree pass); with
-    the flag off, wrong use shows up as rank mass leaking, which the
-    sanity tests pin."""
+    in-degree >= 1 (true for any symmetrized edge set, which is what
+    every caller builds).  It is not checked: off the contract, rank
+    mass leaks through source-only and sink-only nodes."""
     spark = edges.sparkSession
     e = edges.persist()
     try:
@@ -107,29 +111,9 @@ def prepare_rank_graph(
             .agg(F.count("*").alias("deg"))
             .persist()
         )
-        if check_symmetry:
-            in_tbl = (
-                e.select(F.col("dst").alias("v"))
-                .distinct()
-                .withColumn("has_in", F.lit(True))
-            )
-            meta = deg.join(in_tbl, "v", "full")
-            stats = meta.agg(
-                F.count(F.col("deg")).alias("n"),
-                F.count(F.when(F.col("deg").isNull(), 1)).alias("n_sink"),
-                F.count(F.when(F.col("has_in").isNull(), 1)).alias("n_src"),
-                F.sum("deg").alias("n_edges"),
-            ).collect()[0]
-            if stats["n_sink"] > 0 or stats["n_src"] > 0:
-                raise ValueError(
-                    "pagerank requires every node to have out- and "
-                    f"in-edges (symmetrized graph); {stats['n_sink']} "
-                    f"sink-only / {stats['n_src']} source-only nodes"
-                )
-        else:
-            stats = deg.agg(
-                F.count("*").alias("n"), F.sum("deg").alias("n_edges")
-            ).collect()[0]
+        stats = deg.agg(
+            F.count("*").alias("n"), F.sum("deg").alias("n_edges")
+        ).collect()[0]
         n = stats["n"]
         if n == 0:
             raise ValueError("prepare_rank_graph: empty graph")
@@ -140,7 +124,7 @@ def prepare_rank_graph(
             tier = BROADCAST
         else:
             tier = SHUFFLED_HASH
-        with loop_shuffle_width(spark, n_edges, rows_per_task) as iter_n:
+        with loop_shuffle_width(spark, n_edges, _ROWS_PER_TASK) as iter_n:
             part_key = "src" if tier == SHUFFLED_HASH else "dst"
             we = (
                 e.join(deg.withColumnRenamed("v", "src"), "src")
@@ -160,98 +144,42 @@ def prepare_rank_graph(
 
 
 def pagerank_exact(
-    edges: DataFrame | None = None,
-    iters: int = 10,
-    scale: int = 10**15,
-    damp_num: int = 17,
-    damp_den: int = 20,
-    symmetrized: bool = False,
-    graph: PreparedRankGraph | None = None,
+    graph: PreparedRankGraph, seed_pred=None, n_seeds: int = 0
 ) -> DataFrame:
-    """Fixed-point PageRank in EXACT scaled-integer arithmetic — the
-    hash-checkable tier of the operator.
+    """Fixed-point PageRank in EXACT scaled-integer arithmetic over a
+    prepared graph, global (``seed_pred is None``: uniform init and
+    teleport) or personalized (init and teleport mass on the seed set
+    only).
 
     Double power iteration is aggregation-order-dependent in the last
     bits, so a float PageRank could only be rows-verified
-    cross-engine.  This variant keeps every rank as an int64 scaled by
-    ``scale`` and replaces each float op with integer ops that are
+    cross-engine.  This keeps every rank as an int64 scaled by
+    ``SCALE`` and replaces each float op with integer ops that are
     associative and order-independent:
 
     * contribution  ``r_u div deg_u``          (int64 floor division)
     * inflow        ``SUM(..)``                (exact int64 sum)
     * update        ``base + (17*inflow) div 20`` with
-      ``base = (3*scale) div (20*n)``          (damping 0.85 = 17/20)
+      ``base = (3*SCALE) div (20*n)``          (damping 0.85 = 17/20)
+
+    Personalized, the teleport mass lands ONLY on the seed set S:
+
+      r0_v    = (SCALE div |S|)·[v ∈ S]
+      r_{t+1} = [v ∈ S]·(3·SCALE) div (20·|S|) + (17·inflow) div 20
+
+    so ranks measure proximity to the seeds (the 'recommendation from
+    these nodes' form of PageRank).  ``seed_pred`` is a Column
+    predicate over a node id column; ``n_seeds`` must be |S ∩ nodes|
+    (the caller counts it — it is also the oracle's ns).
 
     Any engine computing this recurrence — Spark partial aggregation in
     any order, numpy, DuckDB single-threaded — produces IDENTICAL
     integers, which is what makes a cross-engine value-hash oracle
     possible (see queries/components.py::graph_pagerank's unrolled-CTE
-    oracle).  The truncation error vs real PageRank is < n·iters ulps
-    of 1/scale — invisible at scale=1e15.
-
-    PRECONDITION (asserted): the graph is symmetric-style — every node
-    has out-degree >= 1 and in-degree >= 1 (true for any symmetrized
-    edge set), so there is no dangling mass and no inflow-less node.
-    Overflow headroom: inflow <= scale, so damp_num*inflow <= 1.7e16
-    << 2^63.
-
-    The loop runs on the tier ``prepare_rank_graph`` picked (module
-    docstring): one numpy task below the broadcast budget, else
-    per-round Spark joins against the persisted edge table.
-
-    ``graph=`` (a :class:`PreparedRankGraph`, implies the symmetrized
-    contract) skips the whole setup: the caller owns the persisted
-    frames and their lifetime — the shared-edge-frame path the graph
-    family's queries use.  With ``edges=`` the result is materialized
-    before the setup's persisted frames are released."""
-    if graph is not None:
-        return _power_iterate(
-            graph, iters, scale, damp_num, damp_den, seed_pred=None, n_seeds=0
-        )
-    if edges is None:
-        raise ValueError("pagerank_exact: pass edges= or graph=")
-    # callers of the symmetrized form GUARANTEE every edge has its
-    # reverse (e.g. built by unioning pairs with their swap): the
-    # in-set equals the out-set, so the symmetry probe — a full
-    # distinct over the edge table, folded into prepare_rank_graph's
-    # single stats collect — is provably redundant there and skipped
-    # (wrong use shows up as rank mass leaking, which the sanity
-    # tests pin).
-    return _standalone(
-        edges,
-        not symmetrized,
-        lambda g: _power_iterate(
-            g, iters, scale, damp_num, damp_den, seed_pred=None, n_seeds=0
-        ),
-    )
-
-
-def _standalone(edges: DataFrame, check_symmetry: bool, run) -> DataFrame:
-    """``run`` over a graph prepared for this one call.  The single-task
-    tier's lazy result is checkpointed before the setup frames are
-    unpersisted (the Spark tiers end in an eager checkpoint already)."""
-    g = prepare_rank_graph(edges, check_symmetry=check_symmetry)
-    try:
-        ranks = run(g)
-        if g.tier == SINGLE_TASK:
-            ranks = ranks.localCheckpoint(eager=True)
-        return ranks
-    finally:
-        g.unpersist()
-
-
-def _power_iterate(
-    graph: PreparedRankGraph,
-    iters: int,
-    scale: int,
-    damp_num: int,
-    damp_den: int,
-    seed_pred,
-    n_seeds: int,
-) -> DataFrame:
-    """The shared fixed-iteration loop of both exact variants — global
-    (``seed_pred is None``: uniform init + uniform teleport) and
-    personalized (seed-restricted init + teleport).
+    oracle).  The truncation error vs real PageRank is < n·ITERS ulps
+    of 1/SCALE — invisible at SCALE=1e15.  The graph must keep
+    :func:`prepare_rank_graph`'s symmetric-style precondition; the
+    caller owns its persisted frames and their lifetime.
 
     Single-task tier: :func:`_single_task_iterate`, lazy.  Spark tiers,
     per round: broadcast(ranks) ⋈ we → groupBy(dst).sum — with ``we``
@@ -262,32 +190,32 @@ def _power_iterate(
     was measured as ~2x the loop at gate SF) and ends with an EAGER
     checkpoint so every round executes inside those confs — without it
     the tail of the lazy chain would run under the session's AQE at
-    the caller's action time.  Checkpoint cadence _CKPT_EVERY (round-6
-    item 2): rank lineage is linear, short lazy chains are safe, 10
-    chained barriers were pure scheduling overhead."""
+    the caller's action time.  Checkpoint cadence _CKPT_EVERY: rank
+    lineage is linear, short lazy chains are safe, 10 chained barriers
+    were pure scheduling overhead."""
+    if seed_pred is not None and n_seeds <= 0:
+        raise ValueError("personalized pagerank needs a non-empty seed set")
     if graph.tier == SINGLE_TASK:
-        return _single_task_iterate(
-            graph, iters, scale, damp_num, damp_den, seed_pred, n_seeds
-        )
+        return _single_task_iterate(graph, seed_pred, n_seeds)
     spark = graph.we.sparkSession
     n = graph.n
     if seed_pred is None:
-        base_expr = F.lit((damp_den - damp_num) * scale // (damp_den * n))
-        init = F.lit(scale // n)
+        base_expr = F.lit((DAMP_DEN - DAMP_NUM) * SCALE // (DAMP_DEN * n))
+        init = F.lit(SCALE // n)
     else:
-        base_seed = (damp_den - damp_num) * scale // (damp_den * n_seeds)
+        base_seed = (DAMP_DEN - DAMP_NUM) * SCALE // (DAMP_DEN * n_seeds)
         base_expr = F.when(
             seed_pred(F.col("dst")), F.lit(base_seed)
         ).otherwise(F.lit(0))
-        init = F.when(seed_pred(F.col("v")), F.lit(scale // n_seeds)).otherwise(
+        init = F.when(seed_pred(F.col("v")), F.lit(SCALE // n_seeds)).otherwise(
             F.lit(0)
         )
     with (
-        loop_shuffle_width(spark, graph.n_edges, 100_000),
+        loop_shuffle_width(spark, graph.n_edges, _ROWS_PER_TASK),
         aqe_disabled(spark),
     ):
         ranks = graph.deg.select("v", init.cast("long").alias("r"))
-        for it in range(iters):
+        for it in range(ITERS):
             rank_side = ranks.withColumnRenamed("v", "src")
             if graph.tier == BROADCAST:
                 rank_side = F.broadcast(rank_side)
@@ -311,25 +239,19 @@ def _power_iterate(
                     F.col("dst").alias("v"),
                     (
                         base_expr
-                        + F.expr(f"({damp_num} * inflow) div {damp_den}")
+                        + F.expr(f"({DAMP_NUM} * inflow) div {DAMP_DEN}")
                     ).cast("long").alias("r"),
                 )
             )
-            if (it + 1) % _CKPT_EVERY == 0 or it + 1 == iters:
+            if (it + 1) % _CKPT_EVERY == 0 or it + 1 == ITERS:
                 ranks = ranks.localCheckpoint(eager=True)
     return ranks.select("v", F.col("r").alias("rank_scaled"))
 
 
 def _single_task_iterate(
-    graph: PreparedRankGraph,
-    iters: int,
-    scale: int,
-    damp_num: int,
-    damp_den: int,
-    seed_pred,
-    n_seeds: int,
+    graph: PreparedRankGraph, seed_pred, n_seeds: int
 ) -> DataFrame:
-    """All ``iters`` rounds of the Spark tiers' recurrence in ONE
+    """All ``ITERS`` rounds of the Spark tiers' recurrence in ONE
     mapInPandas task over the coalesced edge table, in int64 numpy.
 
     Every operand is a non-negative int64, so numpy's ``//`` equals
@@ -341,8 +263,8 @@ def _single_task_iterate(
     contract.  Seed flags come from ``seed_pred`` over both endpoint
     columns, since an id may appear on one side only."""
     n_s = graph.n if seed_pred is None else n_seeds
-    base_seed = (damp_den - damp_num) * scale // (damp_den * n_s)
-    init_seed = scale // n_s
+    base_seed = (DAMP_DEN - DAMP_NUM) * SCALE // (DAMP_DEN * n_s)
+    init_seed = SCALE // n_s
     cols = [F.col("src"), F.col("dst"), F.col("deg")]
     if seed_pred is not None:
         cols += [
@@ -372,13 +294,13 @@ def _single_task_iterate(
         live = np.zeros(len(ids), dtype=bool)
         live[src] = True
         r = np.where(live & seed, init_seed, 0).astype(np.int64)
-        for _ in range(iters):
+        for _ in range(ITERS):
             inflow = np.add.reduceat(r[src] // deg, starts)
             nxt = np.zeros(len(ids), dtype=bool)
             nxt[dst[live[src]]] = True
             live = nxt
             r = np.zeros(len(ids), dtype=np.int64)
-            r[tgt] = base[tgt] + (damp_num * inflow) // damp_den
+            r[tgt] = base[tgt] + (DAMP_NUM * inflow) // DAMP_DEN
             r[~live] = 0
         keep = np.flatnonzero(live)
         return pd.DataFrame({"v": ids[keep], "rank_scaled": r[keep]})
@@ -391,45 +313,3 @@ def _single_task_iterate(
     )
     return single_task.run(graph.we.select(*cols), kernel, schema)
 
-
-def pagerank_personalized_exact(
-    edges: DataFrame | None = None,
-    seed_pred=None,
-    n_seeds: int = 0,
-    iters: int = 10,
-    scale: int = 10**15,
-    damp_num: int = 17,
-    damp_den: int = 20,
-    graph: PreparedRankGraph | None = None,
-) -> DataFrame:
-    """Personalized PageRank in the same exact scaled-int64 algebra as
-    :func:`pagerank_exact`: the teleport mass lands ONLY on the seed
-    set instead of uniformly —
-
-      r0_v    = (scale div |S|)·[v ∈ S]
-      r_{t+1} = [v ∈ S]·(3·scale) div (20·|S|) + (17·inflow) div 20
-
-    — so ranks measure proximity to the seeds (the
-    'recommendation from these nodes' form of PageRank).  Every op is
-    order-independent integer arithmetic → cross-engine hash-checkable
-    like the global variant.  ``seed_pred`` is a Column predicate over
-    a node id column; ``n_seeds`` must be |S ∩ nodes| (the caller
-    counts it — it is also the oracle's ns).  Same tiers and loop as
-    pagerank_exact.  Requires a symmetrized edge set (no dangling
-    mass).  ``graph=`` shares a caller-owned :class:`PreparedRankGraph`
-    exactly as in :func:`pagerank_exact`."""
-    if n_seeds <= 0:
-        raise ValueError("personalized pagerank needs a non-empty seed set")
-    if graph is not None:
-        return _power_iterate(
-            graph, iters, scale, damp_num, damp_den, seed_pred, n_seeds
-        )
-    if edges is None:
-        raise ValueError("pagerank_personalized_exact: pass edges= or graph=")
-    return _standalone(
-        edges,
-        False,
-        lambda g: _power_iterate(
-            g, iters, scale, damp_num, damp_den, seed_pred, n_seeds
-        ),
-    )

@@ -103,9 +103,8 @@ def lag_by_rank(
     rn_col: str,
     value_col: str,
     lags: list[int],
-    prefix: str = "lag_",
 ) -> DataFrame:
-    """Positional lag features from a global rank column: one broadcast-
+    """Positional lag features ``lag_<k>`` from a global rank column: one broadcast-
     friendly equi-join per lag on ``rn - k`` (no global-order window).
     Rows missing any lag (the first ``max(lags)``) are dropped, matching
     ``F.lag`` + ``na.drop`` semantics on a unique total order."""
@@ -113,7 +112,7 @@ def lag_by_rank(
     for k in lags:
         shifted = ranked.select(
             (F.col(rn_col) + k).alias(rn_col),
-            F.col(value_col).alias(f"{prefix}{k}"),
+            F.col(value_col).alias(f"lag_{k}"),
         )
         out = out.join(shifted, rn_col, "inner")
     return out

@@ -38,11 +38,9 @@ def candidate_pieces(
     words: DataFrame,
     max_len: int = 4,
     top_v: int = 160,
-    word_col: str = "w",
-    count_col: str = "cnt",
 ) -> DataFrame:
     """(piece, weighted_count) candidate table: all substrings of
-    length <= max_len of each distinct word, weighted by the word's
+    length <= max_len of each distinct word ``w``, weighted by the word's
     corpus count, truncated to the top-V by (count DESC, piece ASC) —
     single characters are always retained regardless of rank."""
     subs = words.select(
@@ -52,13 +50,13 @@ def candidate_pieces(
             # greatest()-clamped sequence.
             F.expr(
                 f"""flatten(transform(sequence(1, {max_len}), l ->
-                      CASE WHEN length({word_col}) >= l THEN
-                        transform(sequence(1, length({word_col}) - l + 1),
-                                  i -> substring({word_col}, i, l))
+                      CASE WHEN length(w) >= l THEN
+                        transform(sequence(1, length(w) - l + 1),
+                                  i -> substring(w, i, l))
                       ELSE CAST(array() AS ARRAY<STRING>) END))"""
             )
         ).alias("piece"),
-        F.col(count_col).alias("cnt"),
+        F.col("cnt").alias("cnt"),
     )
     counts = subs.groupBy("piece").agg(
         F.sum("cnt").cast("long").alias("weighted_count")
@@ -107,20 +105,16 @@ def learn_unigram(
     rounds: int = 3,
     max_len: int = 4,
     top_v: int = 160,
-    word_col: str = "w",
-    count_col: str = "cnt",
 ) -> dict[str, float]:
-    """Fit piece log-probs by hard EM over the distinct-word table.
+    """Fit piece log-probs by hard EM over the distinct-word (w, cnt)
+    table.
 
     Each E-step is one Arrow-batched pass over the (bounded) vocabulary
     with the current KB-scale piece dict broadcast in the closure; each
     M-step is a driver-side normalization of the piece-count dict
     (piece-vocabulary-bounded — the sanctioned bounded-collect shape).
     """
-    cand = candidate_pieces(
-        words, max_len=max_len, top_v=top_v,
-        word_col=word_col, count_col=count_col,
-    ).collect()
+    cand = candidate_pieces(words, max_len=max_len, top_v=top_v).collect()
     counts = {r["piece"]: int(r["weighted_count"]) for r in cand}
     logp = _norm_logp(counts)
     spark = words.sparkSession
@@ -130,13 +124,13 @@ def learn_unigram(
         def estep(batches):
             for pdf in batches:
                 rows = []
-                for w_, c_ in zip(pdf[word_col], pdf[count_col]):
+                for w_, c_ in zip(pdf["w"], pdf["cnt"]):
                     for piece in viterbi_segment(str(w_), lp, max_len):
                         rows.append((piece, int(c_)))
                 yield pd.DataFrame(rows, columns=["piece", "cnt"])
 
         new_counts = (
-            words.select(word_col, count_col)
+            words.select("w", "cnt")
             .mapInPandas(estep, schema="piece string, cnt long")
             .groupBy("piece")
             .agg(F.sum("cnt").alias("c"))
@@ -154,24 +148,23 @@ def unigram_encode_words(
     words: DataFrame,
     logp: dict[str, float],
     max_len: int = 4,
-    word_col: str = "w",
 ) -> DataFrame:
-    """Segment each distinct word -> (word, pieces array, n_pieces)."""
+    """Segment each distinct word -> (w, pieces array, n_pieces)."""
 
     def seg(batches):
         for pdf in batches:
             out = [
                 viterbi_segment(str(w_), logp, max_len)
-                for w_ in pdf[word_col]
+                for w_ in pdf["w"]
             ]
             yield pd.DataFrame(
                 {
-                    word_col: pdf[word_col],
+                    "w": pdf["w"],
                     "pieces": out,
                     "n_pieces": [len(p) for p in out],
                 }
             )
 
-    return words.select(word_col).mapInPandas(
-        seg, schema=f"{word_col} string, pieces array<string>, n_pieces int"
+    return words.select("w").mapInPandas(
+        seg, schema="w string, pieces array<string>, n_pieces int"
     )

@@ -41,18 +41,15 @@ def union_aligned(frames: list[DataFrame]) -> DataFrame:
 
 def balance_pipeline(
     yearly_frames: list[DataFrame],
-    region: str = "MIDW",
-    authority: str = "MISO",
     ts_col: str = "local_time_end_hour",
-    col_null_frac: float = 0.2,
-    row_thresh: int = 7,
 ) -> DataFrame:
-    """The full EP1a chain on already-scanned yearly frames."""
+    """The full EP1a chain on already-scanned yearly frames: MIDW/MISO
+    rows, columns at least 20% non-null, rows with at least 7 values."""
     kept = [
         select_adjusted_columns(
             f.filter(
-                (F.col("Region") == region)
-                & (F.col("`Balancing Authority`") == authority)
+                (F.col("Region") == "MIDW")
+                & (F.col("`Balancing Authority`") == "MISO")
             ),
             key_cols=["Balancing Authority", "Data Date", "Hour Number", "Region",
                       ts_col],
@@ -69,10 +66,10 @@ def balance_pipeline(
     total = df.count()
     counts = df.agg(*[F.count(c).alias(c) for c in df.columns]).first()
     df = df.select(
-        *[c for c in df.columns if counts[c] / max(total, 1) >= col_null_frac]
+        *[c for c in df.columns if counts[c] / max(total, 1) >= 0.2]
     )
     # F11: row null threshold.
-    df = df.na.drop(thresh=min(row_thresh, len(df.columns)))
+    df = df.na.drop(thresh=min(7, len(df.columns)))
     # W2: backfill over time order (single bounded series — the hourly
     # feed is calendar-bounded, so the global window is small by design).
     w = Window.orderBy(ts_norm).rowsBetween(0, Window.unboundedFollowing)

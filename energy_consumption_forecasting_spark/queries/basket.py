@@ -66,8 +66,8 @@ pair_counts AS (
 """
 
 
-def basket_pairs(baskets: DataFrame, arr_col: str = "arr") -> DataFrame:
-    """All (p1 < p2) item pairs of a SORTED array column as rows,
+def basket_pairs(baskets: DataFrame) -> DataFrame:
+    """All (p1 < p2) item pairs of the SORTED array column ``arr`` as rows,
     through two PIPELINED explodes: the first fans the 1-based upper
     index i over 1..k-1, the second explodes the i-prefix slice as p1
     against arr[i] as p2.  GenerateExec streams one pair at a time, so
@@ -76,13 +76,13 @@ def basket_pairs(baskets: DataFrame, arr_col: str = "arr") -> DataFrame:
     Shared by the queries and the brute-force property test (the test
     must exercise THIS plan, not a private copy).  Size-<2 arrays are
     dropped (F.sequence(1, 0) is DESCENDING in Spark)."""
-    step1 = baskets.filter(F.size(arr_col) >= 2).select(
-        arr_col,
-        F.explode(F.sequence(F.lit(1), F.size(arr_col) - 1)).alias("i"),
+    step1 = baskets.filter(F.size("arr") >= 2).select(
+        "arr",
+        F.explode(F.sequence(F.lit(1), F.size("arr") - 1)).alias("i"),
     )
     return step1.select(
-        F.explode(F.slice(arr_col, 1, F.col("i"))).alias("p1"),
-        F.element_at(arr_col, F.col("i") + 1).alias("p2"),
+        F.explode(F.slice("arr", 1, F.col("i"))).alias("p1"),
+        F.element_at("arr", F.col("i") + 1).alias("p2"),
     )
 
 

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.pagerank import DAMP_DEN, DAMP_NUM, ITERS, SCALE
 from . import query
 from ._util import shared_plan, tbl
 from .dedup import (
@@ -87,9 +88,18 @@ def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Min-label connected components over (v) nodes and (doc_a, doc_b)
     edges; returns (v, comp) with comp = min node id in the component.
 
-    Deterministic: the fixpoint is independent of iteration order."""
+    Deterministic: the fixpoint is independent of iteration order.
+    Node ids must be numeric: the convergence probe sums labels."""
+    from pyspark.sql.types import NumericType
+
     from ..session import aqe_disabled, loop_shuffle_width
 
+    id_type = nodes.schema["v"].dataType
+    if not isinstance(id_type, NumericType):
+        raise ValueError(
+            "connected_components needs numeric node ids, got "
+            + id_type.simpleString()
+        )
     spark = nodes.sparkSession
     # Symmetrize by EXPLODE, not union (r10 — the _supply_edges lesson
     # applied here too): the union's two branches are separate subtrees,
@@ -124,27 +134,14 @@ def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     # shuffle-free aggregation over the just-checkpointed blocks.
     # DECIMAL(38,0) so corpus-scale id sums can't wrap.  The invariant
     # needs NUMERIC labels (a failed cast would NULL every sum and
-    # None == None would fake convergence after one round), so
-    # non-numeric node ids fall back to the join-based changed count.
-    from pyspark.sql.types import NumericType
-
-    numeric_ids = isinstance(
-        labels.schema["comp"].dataType, NumericType
-    )
-
+    # None == None would fake convergence after one round), hence the
+    # id type check above.
     def _label_sum(df: DataFrame):
         return df.agg(
             F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
         ).collect()[0]["s"]
 
-    def _changed(new: DataFrame, old: DataFrame) -> int:
-        return (
-            new.join(old.withColumnRenamed("comp", "old"), "v")
-            .filter(F.col("comp") != F.col("old"))
-            .count()
-        )
-
-    prev_sum = _label_sum(labels) if numeric_ids else None
+    prev_sum = _label_sum(labels)
     sym_j = None
     try:
         # every round executes INSIDE the context (eager checkpoint +
@@ -186,15 +183,11 @@ def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
                     .select("v", F.coalesce("pcomp", "comp").alias("comp"))
                     .localCheckpoint(eager=True)
                 )
-                if numeric_ids:
-                    cur_sum = _label_sum(new)
-                    converged = cur_sum == prev_sum
-                    prev_sum = cur_sum
-                else:
-                    converged = _changed(new, labels) == 0
+                cur_sum = _label_sum(new)
                 labels = new
-                if converged:
+                if cur_sum == prev_sum:
                     return labels
+                prev_sum = cur_sum
             raise RuntimeError(
                 f"connected_components did not converge in {MAX_CC_ROUNDS} rounds"
             )
@@ -274,11 +267,7 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("csize", F.count("*").over(w))
 
 
-_PR_SCALE = 10**15
-_PR_ITERS = 10
-
-
-def _pagerank_oracle(iters: int = _PR_ITERS) -> str:
+def _pagerank_oracle() -> str:
     """Unrolled fixed-iteration PageRank in exact scaled-int64 algebra —
     one CTE per power iteration (DuckDB recursive CTEs can't aggregate
     over the recursive term, and a fixed iteration count unrolls to a
@@ -286,7 +275,7 @@ def _pagerank_oracle(iters: int = _PR_ITERS) -> str:
     r0 = S div n;  r_{t+1} = (3S) div (20n) + (17*inflow) div 20 with
     inflow = SUM(r_t div deg) — every op integer, so both engines
     produce identical BIGINTs regardless of aggregation order."""
-    s = f"CAST({_PR_SCALE} AS BIGINT)"
+    s = f"CAST({SCALE} AS BIGINT)"
     parts = [
         f"""li AS (SELECT DISTINCT 'p' || CAST(l_partkey AS VARCHAR) AS src,
                           's' || CAST(l_suppkey AS VARCHAR) AS dst
@@ -297,12 +286,12 @@ def _pagerank_oracle(iters: int = _PR_ITERS) -> str:
     nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM deg),
     r0 AS (SELECT v, deg, {s} // n AS r FROM deg CROSS JOIN nn)"""
     ]
-    for t in range(1, iters + 1):
+    for t in range(1, ITERS + 1):
         parts.append(
             f"""r{t} AS (
       SELECT d.v, d.deg,
-             CAST((3 * {s}) // (20 * n)
-                  + (17 * i.inflow) // 20 AS BIGINT) AS r
+             CAST(({DAMP_DEN - DAMP_NUM} * {s}) // ({DAMP_DEN} * n)
+                  + ({DAMP_NUM} * i.inflow) // {DAMP_DEN} AS BIGINT) AS r
       FROM deg d CROSS JOIN nn
       JOIN (SELECT e.dst AS v, SUM(p.r // p.deg) AS inflow
             FROM sym e JOIN r{t - 1} p ON p.v = e.src
@@ -312,7 +301,7 @@ def _pagerank_oracle(iters: int = _PR_ITERS) -> str:
         "WITH "
         + ",\n    ".join(parts)
         + f"""
-    SELECT v, r AS rank_scaled FROM r{iters}
+    SELECT v, r AS rank_scaled FROM r{ITERS}
     ORDER BY rank_scaled DESC, v LIMIT 50"""
     )
 
@@ -338,11 +327,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     50 rows."""
     from ..operators.pagerank import pagerank_exact
 
-    ranks = pagerank_exact(
-        graph=_supply_rank_graph(spark, sf_dir),
-        iters=_PR_ITERS,
-        scale=_PR_SCALE,
-    )
+    ranks = pagerank_exact(_supply_rank_graph(spark, sf_dir))
     v_str = F.when(
         F.col("v") % 2 == 0,
         F.concat(F.lit("p"), F.expr("CAST(v div 2 AS STRING)")),
@@ -689,12 +674,12 @@ def graph_reachability_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PPR_SEED_MAX = 10  # seed set: supplier nodes with suppkey < 10
 
 
-def _ppr_oracle(iters: int = _PR_ITERS) -> str:
+def _ppr_oracle() -> str:
     """Unrolled personalized-PageRank oracle: same exact scaled-int64
     recurrence as _pagerank_oracle but teleport mass restricted to the
     seed suppliers — r0 = (S div ns)·[seed], base = (3S) div (20·ns)
     on seeds, 0 elsewhere."""
-    s = f"CAST({_PR_SCALE} AS BIGINT)"
+    s = f"CAST({SCALE} AS BIGINT)"
     def seed(col: str) -> str:
         return (
             f"({col} LIKE 's%' AND CAST(substr({col}, 2) AS INT)"
@@ -712,13 +697,13 @@ def _ppr_oracle(iters: int = _PR_ITERS) -> str:
                   CASE WHEN {seed('v')} THEN {s} // ns ELSE 0 END AS r
            FROM deg CROSS JOIN nn)"""
     ]
-    for t in range(1, iters + 1):
+    for t in range(1, ITERS + 1):
         parts.append(
             f"""r{t} AS (
       SELECT d.v, d.deg,
              CAST(CASE WHEN {seed('d.v')}
-                       THEN (3 * {s}) // (20 * ns) ELSE 0 END
-                  + (17 * i.inflow) // 20 AS BIGINT) AS r
+                       THEN ({DAMP_DEN - DAMP_NUM} * {s}) // ({DAMP_DEN} * ns) ELSE 0 END
+                  + ({DAMP_NUM} * i.inflow) // {DAMP_DEN} AS BIGINT) AS r
       FROM deg d CROSS JOIN nn
       JOIN (SELECT e.dst AS v, SUM(p.r // p.deg) AS inflow
             FROM sym e JOIN r{t - 1} p ON p.v = e.src
@@ -728,7 +713,7 @@ def _ppr_oracle(iters: int = _PR_ITERS) -> str:
         "WITH "
         + ",\n    ".join(parts)
         + f"""
-    SELECT v, r AS rank_scaled FROM r{iters}
+    SELECT v, r AS rank_scaled FROM r{ITERS}
     ORDER BY rank_scaled DESC, v LIMIT 50"""
     )
 
@@ -739,7 +724,7 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     measure PROXIMITY to the seeds, the 'related to these' primitive
     behind graph recommendations — same exact scaled-int64 recurrence
     and loop shape as graph_pagerank, teleport mass restricted to the
-    seeds (operators/pagerank.py::pagerank_personalized_exact).
+    seeds (operators/pagerank.py::pagerank_exact with a seed predicate).
     Integer node ids in the loop (2k parts / 2k+1 suppliers: seeds are
     odd ids < 20), string ids minted on the final 50 rows.  The static
     half (deg-folded edge table + node stats) comes from the
@@ -747,7 +732,7 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph_pagerank; the seed count is a fast filter over the cached
     (node-sized) degree table, one job with AQE off (AQE submits the
     count's shuffle stage as a job of its own)."""
-    from ..operators.pagerank import pagerank_personalized_exact
+    from ..operators.pagerank import pagerank_exact
     from ..session import aqe_disabled
 
     g = _supply_rank_graph(spark, sf_dir)
@@ -757,9 +742,7 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with aqe_disabled(spark):
         n_seeds = g.deg.filter(seed_pred(F.col("v"))).count()
-    ranks = pagerank_personalized_exact(
-        seed_pred=seed_pred, n_seeds=n_seeds, graph=g
-    )
+    ranks = pagerank_exact(g, seed_pred, n_seeds)
     return (
         ranks.select(
             F.concat(

@@ -577,7 +577,7 @@ COS_TARGET_BUCKET = 32
 COS_BUCKET_CAP = 1024
 
 
-def _cos_bands_sql(src_count: str = "(SELECT COUNT(*) FROM embeddings)") -> str:
+def _cos_bands_sql() -> str:
     """Oracle fragment: adaptive (vec_id, b, bucket) rows over a ``sig``
     CTE — the DuckDB twin of :func:`_cos_band_rows` (count-derived band
     bits + the COS_BUCKET_CAP population backstop)."""
@@ -588,7 +588,7 @@ def _cos_bands_sql(src_count: str = "(SELECT COUNT(*) FROM embeddings)") -> str:
       SELECT COALESCE(MIN(b), {COS_MAX_BITS}) AS b
       FROM range({COS_MIN_BITS}, {COS_MAX_BITS + 1}) t(b)
       WHERE {COS_BANDS * COS_TARGET_BUCKET} * (CAST(1 AS BIGINT) << b)
-              >= {src_count}
+              >= (SELECT COUNT(*) FROM embeddings)
     ),
     bands AS (
       SELECT vec_id, b, bucket FROM (
@@ -812,9 +812,10 @@ def _planes64_sql() -> str:
     return f"[{rows}]"
 
 
-def _cos_sig_prefix(vec_col, nbits_col: Column, max_bits: int = 16) -> Column:
-    """Sign-bit signature over the first ``nbits_col`` planes of the
-    checked-in PLANES64 set — a DATA-DEPENDENT bit count — without
+def _cos_sig_prefix(vec_col, nbits_col: Column) -> Column:
+    """Sign-bit signature over the first ``nbits_col`` (at most 16, the
+    SemDeDup rung ceiling) planes of the checked-in PLANES64 set — a
+    DATA-DEPENDENT bit count — without
     paying for the untaken planes: the planes ship as ONE array
     literal, ``slice(planes, 1, nbits)`` keeps exactly the rung's
     prefix, and a single ``transform`` lambda folds each kept plane's
@@ -833,12 +834,12 @@ def _cos_sig_prefix(vec_col, nbits_col: Column, max_bits: int = 16) -> Column:
     from ..functions.vectors import dot
 
     # ONE parsed literal for the plane matrix (r10): the nested
-    # F.array/F.lit form built max_bits×64 Column objects through py4j
-    # per call site (~1-2 s of pure construction at max_bits=64).
+    # F.array/F.lit form built planes×64 Column objects through py4j
+    # per call site (~1-2 s of pure construction at 64 planes).
     planes = F.expr(
         "array(" + ",".join(
             "array(" + ",".join(f"{float(x)!r}D" for x in row) + ")"
-            for row in PLANES64[:max_bits]
+            for row in PLANES64[:16]
         ) + ")"
     )
     return F.array_join(

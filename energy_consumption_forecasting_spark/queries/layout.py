@@ -34,18 +34,18 @@ BITS = 10  # bits per dimension -> 20-bit code
 BUCKET_SHIFT = 8  # keep top 12 bits -> 4096 buckets
 
 
-def morton_code(x: Column, y: Column, bits: int = BITS) -> Column:
-    """Interleave the low ``bits`` of x (even positions) and y (odd)."""
+def morton_code(x: Column, y: Column) -> Column:
+    """Interleave the low ``BITS`` of x (even positions) and y (odd)."""
     out = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(BITS):
         out = out + F.shiftleft(F.shiftright(x, i).bitwiseAND(1), 2 * i)
         out = out + F.shiftleft(F.shiftright(y, i).bitwiseAND(1), 2 * i + 1)
     return out
 
 
-def _morton_sql(x: str, y: str, bits: int = BITS) -> str:
+def _morton_sql(x: str, y: str) -> str:
     terms = []
-    for i in range(bits):
+    for i in range(BITS):
         terms.append(f"((({x} >> {i}) & 1) << {2 * i})")
         terms.append(f"((({y} >> {i}) & 1) << {2 * i + 1})")
     return " + ".join(terms)
@@ -120,8 +120,8 @@ def _hilbert_stages() -> list[int]:
     return [1 << i for i in range(BITS - 1, -1, -1)]
 
 
-def hilbert_code_arrow(df, x_col: str, y_col: str, out: str = "hcode"):
-    """Attach ``out`` = Hilbert d-index of (x_col, y_col): the per-bit
+def hilbert_code_arrow(df, x_col: str, y_col: str):
+    """Attach ``hcode`` = Hilbert d-index of (x_col, y_col): the per-bit
     rotate-reflect recurrence vectorized over rows with int64 NumPy
     (r10, guide §4.2), pinned cell-for-cell by tests/test_scale_ops.py
     against the textbook xy2d reference.
@@ -137,7 +137,7 @@ def hilbert_code_arrow(df, x_col: str, y_col: str, out: str = "hcode"):
     keep = list(df.schema.fields)
     ddl = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in keep
-    ) + f", {out} long"
+    ) + ", hcode long"
     stages = _hilbert_stages()
 
     def _run(batches):
@@ -164,7 +164,7 @@ def hilbert_code_arrow(df, x_col: str, y_col: str, out: str = "hcode"):
             yield pa.RecordBatch.from_arrays(
                 [b.column(ix[f.name]) for f in keep]
                 + [pa.array(d, type=pa.int64())],
-                names=[f.name for f in keep] + [out],
+                names=[f.name for f in keep] + ["hcode"],
             )
 
     return df.mapInArrow(_run, ddl)

@@ -433,12 +433,12 @@ def _fold_moments(rows):
     return n, mu, cov, dim
 
 
-def _pca_fit_frame(emb: DataFrame, k: int = 3) -> DataFrame:
+def _pca_fit_frame(emb: DataFrame) -> DataFrame:
     """The M3 PCA fit as a LAZY 1-row frame (r9): distributed Gram
     partials → single-partition eigh fold inside mapInPandas — the
     same covariance-eigendecomposition MLlib's RowMatrix PCA runs,
     but deferred to action time and never touching the driver.
-    Columns: n_vec, dim, pc (k arrays of dim — principal axes),
+    Columns: n_vec, dim, pc (3 arrays of dim — principal axes),
     orthonormal_ok / variance_ok (the eigensolver invariants the M3
     gate asserts, computed where the loadings already live)."""
 
@@ -451,6 +451,7 @@ def _pca_fit_frame(emb: DataFrame, k: int = 3) -> DataFrame:
                 "PCA fit: embeddings corpus is empty — nothing to fit"
             )
         n, _, cov, dim = _fold_moments(pdf)
+        k = 3
         vals, vecs = np.linalg.eigh(cov)
         order = np.argsort(vals)[::-1]
         vals, vecs = vals[order], vecs[:, order]

@@ -859,7 +859,7 @@ def sim_tier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def sample_X() -> "np.ndarray":
         # the SAME sorted sample the lazy fits train on
-        rows = _ann_sample(e, "v", "vec_id", 2048).toPandas()["v"].tolist()
+        rows = _ann_sample(e).toPandas()["v"].tolist()
         return np.asarray(rows, dtype=np.float64)
 
     def recon_mse(X: np.ndarray, books: np.ndarray, R=None) -> float:

@@ -93,9 +93,7 @@ def broadcast_budget(spark: SparkSession) -> int:
 
 
 @contextmanager
-def loop_shuffle_width(
-    spark: SparkSession, n_rows: int, rows_per_task: int, floor: int = 4
-):
+def loop_shuffle_width(spark: SparkSession, n_rows: int, rows_per_task: int):
     """Pin ``spark.sql.shuffle.partitions`` to a data-sized width for an
     iterative loop, restoring the session value on exit.
 
@@ -104,10 +102,10 @@ def loop_shuffle_width(
     are far smaller than the corpus — N rounds of 32 near-empty
     reducers is pure scheduling floor at gate SF, while a 100-TB input
     still gets the session's full width through the ``min``.  Yields
-    the chosen width (``max(floor, min(session, n_rows//rows_per_task
+    the chosen width (``max(4, min(session, n_rows//rows_per_task
     + 1))``) so callers can also use it for explicit repartitions."""
     shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    loop_n = max(floor, min(shuffle_n, int(n_rows) // rows_per_task + 1))
+    loop_n = max(4, min(shuffle_n, int(n_rows) // rows_per_task + 1))
     try:
         spark.conf.set("spark.sql.shuffle.partitions", str(loop_n))
         yield loop_n

@@ -22,7 +22,6 @@ def read_csv(
     schema: T.StructType,
     header: bool = True,
     skip_rows: int = 0,
-    timestamp_format: str | None = None,
 ) -> DataFrame:
     """Schema-on-read CSV scan.  ``path`` may be a glob — the reference's
     per-file union loop (ETL.py:168-178) is just a multi-path scan here,
@@ -32,8 +31,6 @@ def read_csv(
     skipRows, so rows are zipped with a per-file index via an initial
     text scan when needed."""
     reader = spark.read.schema(schema).option("header", header)
-    if timestamp_format:
-        reader = reader.option("timestampFormat", timestamp_format)
     if skip_rows == 0:
         return reader.csv(path)
     # header=N emulation: read as text, drop the first N lines of EACH

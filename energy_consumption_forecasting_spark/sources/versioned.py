@@ -357,7 +357,6 @@ def commit_snapshot_with_stats(
     table_dir: str,
     stats_cols: list[str],
     cluster_files: int = 4,
-    note: str = "",
 ) -> int:
     """Commit a snapshot whose files are RANGE-CLUSTERED on
     ``stats_cols[0]`` and whose manifest carries per-file min/max for
@@ -369,7 +368,7 @@ def commit_snapshot_with_stats(
     clustered = df.repartitionByRange(cluster_files, *stats_cols[:1]).sortWithinPartitions(
         *stats_cols[:1]
     )
-    return _commit(clustered, table_dir, note, stats_cols)
+    return _commit(clustered, table_dir, "", stats_cols)
 
 
 def read_snapshot_pruned(
@@ -378,15 +377,14 @@ def read_snapshot_pruned(
     col: str,
     lo,
     hi,
-    version: int | None = None,
 ) -> tuple[DataFrame, int, int]:
-    """Manifest-stats file skipping: read only the snapshot files whose
-    [min, max] for ``col`` overlaps [lo, hi] (stringified bounds compare
-    lexicographically for dates/strings — the formats used here sort
-    correctly).  Returns (df, files_read, files_total); the caller still
+    """Manifest-stats file skipping: read only the latest snapshot's
+    files whose [min, max] for ``col`` overlaps [lo, hi] (stringified
+    bounds compare lexicographically for dates/strings — the formats
+    used here sort correctly).  Returns (df, files_read, files_total); the caller still
     applies the row-level filter — skipping is a superset guarantee,
     exactly like Iceberg manifest pruning."""
-    entry = _resolve(table_dir, version)
+    entry = _resolve(table_dir, None)
     files = entry.get("files") or []
     if not files:
         raise ValueError("snapshot has no manifest stats; use read_snapshot")

@@ -26,9 +26,9 @@ def dedup_stream(
     spark: SparkSession,
     docs_dir: str,
     glob: str = "documents.parquet",
-    lateness: str = "1 hour",
 ) -> DataFrame:
-    """Streaming DataFrame of first-seen documents per content hash.
+    """Streaming DataFrame of first-seen documents per content hash,
+    deduplicated within a one-hour watermark.
 
     Schema is probed from the files; ``docs_stream`` synthesizes a
     deterministic event-time when the table carries none (the current
@@ -37,7 +37,7 @@ def dedup_stream(
         "text_hash", F.md5("text")
     )
     return (
-        stream.withWatermark("ts", lateness)
+        stream.withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["text_hash"])
         .select("doc_id", "text_hash", "source")
     )

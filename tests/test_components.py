@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from energy_consumption_forecasting_spark.queries.components import (
@@ -64,26 +65,17 @@ def test_cc_gate_query_covers_every_doc_once(spark):
 
 
 def test_connected_components_string_ids(spark):
-    """Non-numeric node ids: the label-sum probe can't run (cast would
-    NULL the sums), so the join-based changed count must kick in and
-    still produce correct components."""
-    from pyspark.sql import functions as F
-
-    from energy_consumption_forecasting_spark.queries.components import (
-        connected_components,
-    )
-
+    """Non-numeric node ids are rejected before any job runs: the
+    label-sum convergence probe needs numeric labels (a failed cast
+    would NULL every sum and fake convergence after one round)."""
     nodes = spark.createDataFrame(
         [("a",), ("b",), ("c",), ("d",), ("e",)], ["v"]
     )
     edges = spark.createDataFrame(
         [("b", "c"), ("c", "d")], ["doc_a", "doc_b"]
     )
-    comp = {
-        r["v"]: r["comp"] for r in connected_components(nodes, edges).collect()
-    }
-    assert comp["b"] == comp["c"] == comp["d"] == "b"
-    assert comp["a"] == "a" and comp["e"] == "e"
+    with pytest.raises(ValueError, match="numeric node ids, got string"):
+        connected_components(nodes, edges)
 
 
 def test_kcore_is_true_fixpoint(spark):

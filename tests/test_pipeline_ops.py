@@ -198,6 +198,7 @@ def test_opq_rotation_orthogonal_and_lowers_error(spark):
     from pyspark.sql import functions as F
 
     from energy_consumption_forecasting_spark.operators.ann import (
+        FIT_SAMPLE,
         opq_fit_frame,
         pq_fit_frame,
     )
@@ -206,19 +207,19 @@ def test_opq_rotation_orthogonal_and_lowers_error(spark):
         spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     )
-    opq = opq_fit_frame(e, m=8, k=16, sample=512).first()
+    opq = opq_fit_frame(e, m=8, k=16).first()
     R = np.asarray(opq["rt"], dtype=np.float64).T  # rt holds R's columns
     opq_books = np.asarray(opq["books"], dtype=np.float64)
     dim = R.shape[0]
     assert np.allclose(R @ R.T, np.eye(dim), atol=1e-8)
 
     pq_books = np.asarray(
-        pq_fit_frame(e, m=8, k=16, sample=512).first()["books"],
+        pq_fit_frame(e, m=8, k=16).first()["books"],
         dtype=np.float64,
     )
-    # the training sample both fits fold over: first 512 by vec_id
+    # the training sample both fits fold over: first FIT_SAMPLE by vec_id
     X = np.asarray(
-        e.orderBy("vec_id").limit(512).toPandas()["v"].tolist(),
+        e.orderBy("vec_id").limit(FIT_SAMPLE).toPandas()["v"].tolist(),
         dtype=np.float64,
     )
 

@@ -1051,8 +1051,6 @@ def test_rung_sig_arrow_kernel_matches_jvm_fold(spark):
         norm2,
     )
     from energy_consumption_forecasting_spark.queries.dedup import (
-        COS_BANDS,
-        COS_MAX_BITS,
         _cos_sig_prefix,
         attach_rung_sig,
     )
@@ -1075,9 +1073,7 @@ def test_rung_sig_arrow_kernel_matches_jvm_fold(spark):
         r["vec_id"]: (r["sig"], r["nrm"])
         for r in base.select(
             "vec_id",
-            _cos_sig_prefix(
-                F.col("v"), F.lit(nbits), max_bits=COS_BANDS * COS_MAX_BITS
-            ).alias("sig"),
+            _cos_sig_prefix(F.col("v"), F.lit(nbits)).alias("sig"),
             F.sqrt(norm2(F.col("v"))).alias("nrm"),
         ).collect()
     }

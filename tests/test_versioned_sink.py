@@ -311,16 +311,3 @@ def test_stats_commit_failure_publishes_no_version(spark, tmp_path, monkeypatch)
             cluster_files=2,
         )
     assert versions(table) == [1]
-
-
-def test_pruned_read_unknown_version_raises_value_error(spark, tmp_path):
-    """read_snapshot_pruned resolves versions like read_snapshot: an
-    unknown version is a ValueError naming the known ones."""
-    from energy_consumption_forecasting_spark.sources.versioned import (
-        read_snapshot_pruned,
-    )
-
-    table = str(tmp_path / "pruned_unknown")
-    commit_snapshot(spark.range(4).withColumnRenamed("id", "k"), table)
-    with pytest.raises(ValueError, match=r"version 9 not in \[1\]"):
-        read_snapshot_pruned(spark, table, "k", 0, 1, version=9)

@@ -2,9 +2,12 @@
 plan evidence for before/after snapshots from any git state,
 independent of host load.
 
-Exchange ``[plan_id=N]`` values come from a process-global counter, so
-they differ between runs of the same code; every dump writes them
-masked as ``plan_id=N`` so two dumps compare byte for byte.
+Exchange ``[plan_id=N]`` values, expression ids (``name#N``), RDD ids
+(``RDD[N]``) and lambda variable suffixes (``lambda x_N``) come from
+process-global counters, so they differ between runs of the same code;
+every dump masks plan ids as ``plan_id=N`` and renumbers the other
+three by first appearance, so two dumps of one plan compare byte for
+byte while ids that are equal stay equal.
 
 Usage:
     python tools/plan_dump.py --tag before [--sf DIR] [--out DIR] q1 q2 ...
@@ -22,11 +25,26 @@ sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tools"))
 
 _PLAN_ID = re.compile(r"plan_id=\d+")
+# (kept prefix, counter) per kind of process-global id
+_COUNTED_IDS = (
+    re.compile(r"(#)(\d+)"),
+    re.compile(r"(RDD\[)(\d+)(?=\])"),
+    re.compile(r"(\blambda [A-Za-z]\w*?_)(\d+)\b"),
+)
 
 
 def mask_plan_ids(plan: str) -> str:
-    """Replace every run-dependent ``plan_id=<digits>`` with ``plan_id=N``."""
-    return _PLAN_ID.sub("plan_id=N", plan)
+    """Replace every run-dependent ``plan_id=<digits>`` with ``plan_id=N``
+    and renumber ``#<n>`` expression ids, ``RDD[<n>]`` ids and the
+    ``<name>_<n>`` suffixes of lambda variables, each kind from 0 in
+    order of first appearance."""
+    plan = _PLAN_ID.sub("plan_id=N", plan)
+    for pattern in _COUNTED_IDS:
+        seen: dict[str, str] = {}
+        plan = pattern.sub(
+            lambda m: m[1] + seen.setdefault(m[2], str(len(seen))), plan
+        )
+    return plan
 
 
 def main() -> int:
