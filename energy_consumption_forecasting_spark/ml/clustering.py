@@ -6,10 +6,11 @@ Reference: TimeSeriesKMeans (n_clusters, metric="dtw")
 live with their queries (queries/ml_queries.py::_pca_fit_frame and
 ::silhouette_frame).
 
-DTW has no MLlib form: the distance matrix is computed distributed (one
-pandas-UDF task per series-pair block), and only the k-medoids
-assignment loop — O(n_series²) on a ≤105-month matrix — runs on the
-driver, per SURVEY §4.2.6."""
+The series are the reference's monthly windows — at most 105 — so each
+fit here (k-medoids, DBA k-means, k-Shape) is numpy over the whole set,
+which its query runs in one task (operators/single_task.py).  Only the
+DTW distance matrix is computed distributed (one pandas-UDF task per
+series-pair block), per SURVEY §4.2.6."""
 
 from __future__ import annotations
 
@@ -76,10 +77,12 @@ def dtw_distance_matrix(series_df: DataFrame) -> DataFrame:
     return pairs.groupBy("block").applyInPandas(block_dtw, schema=schema)
 
 
-def kmedoids_rows(rows, k: int = 12, seed: int = 42) -> dict:
+def kmedoids_rows(rows, k: int = 12) -> dict:
     """k-medoids over (id_a, id_b, dtw) mapping rows — pure Python/
     numpy, callable on the driver OR inside an executor fold.  Seeded
-    medoid init, at most 20 swap rounds."""
+    medoid init (seed 42), at most 20 swap rounds.  An empty cluster
+    re-seeds its medoid from the worst-fit non-medoid series (the
+    k-Shape repair below)."""
     ids = sorted({r["id_a"] for r in rows} | {r["id_b"] for r in rows})
     idx = {v: i for i, v in enumerate(ids)}
     n = len(ids)
@@ -87,7 +90,7 @@ def kmedoids_rows(rows, k: int = 12, seed: int = 42) -> dict:
     for r in rows:
         i, j = idx[r["id_a"]], idx[r["id_b"]]
         D[i, j] = D[j, i] = r["dtw"]
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(42)
     medoids = rng.choice(n, size=min(k, n), replace=False)
     for _ in range(20):
         labels = np.argmin(D[:, medoids], axis=1)
@@ -97,6 +100,10 @@ def kmedoids_rows(rows, k: int = 12, seed: int = 42) -> dict:
             if len(members):
                 costs = D[np.ix_(members, members)].sum(axis=1)
                 new_medoids[c] = members[int(np.argmin(costs))]
+            else:
+                fit = D[np.arange(n), medoids[labels]]
+                fit[new_medoids] = -np.inf
+                new_medoids[c] = int(np.argmax(fit))
         if (new_medoids == medoids).all():
             break
         medoids = new_medoids
@@ -152,99 +159,38 @@ def _dba(series: list[np.ndarray], init: np.ndarray, iters: int = 5) -> np.ndarr
 
 
 def tskmeans_dba(
-    series_df: DataFrame,
-    k: int = 6,
-    n_iter: int = 5,
+    series: dict, k: int, n_iter: int
 ) -> tuple[dict, np.ndarray]:
-    """TimeSeriesKMeans(metric="dtw") with true DBA centroid updates,
-    Spark-shaped: per-iteration the ASSIGNMENT step is an Arrow-batched
-    map with the k×L centroid matrix on a broadcast (each series scores
-    k DTWs row-locally), and the CENTROID step is one applyInPandas per
-    cluster (series of a cluster never leave the executors; only the k
-    new centroids — KB — return to the driver).  Initialization:
-    the first k series by id (deterministic).  Each centroid step runs
-    3 DBA rounds.
+    """TimeSeriesKMeans(metric="dtw") with true DBA centroid updates
+    over bounded series (reference scale: ≤105 monthly sub-series).
+    ``series``: {series_id: np.ndarray}, equal lengths (the reference's
+    monthly windows are).  Series and cluster members are taken in
+    series_id order, so the fit does not depend on input order.
 
-    Requires equal-length series (the reference's monthly windows are).
-    Returns ({series_id: cluster}, centroids array)."""
-    spark = series_df.sparkSession
-    first = series_df.select(
-        "series_id", "series"
-    ).orderBy("series_id").limit(k).collect()
-    centroids = np.asarray(
-        [list(r["series"]) for r in first], dtype=np.float64
-    )
+    Initialization: the first k series by id.  Each of ``n_iter``
+    rounds assigns every series to its DTW-nearest centroid, then
+    moves each non-empty cluster's centroid by 3 DBA rounds started
+    from the old one.  The returned labels are a final assignment
+    against the returned centroids (tslearn-consistent).  Returns
+    ({series_id: cluster}, centroids array)."""
+    ids = sorted(series)
+    X = [np.asarray(series[i], dtype=np.float64) for i in ids]
+    centroids = np.array(X[:k])
 
-    assign_schema = T.StructType(
-        [
-            T.StructField("series_id", series_df.schema["series_id"].dataType),
-            T.StructField("series", T.ArrayType(T.DoubleType())),
-            T.StructField("cluster", T.IntegerType()),
-        ]
-    )
-    cent_schema = T.StructType(
-        [
-            T.StructField("cluster", T.IntegerType()),
-            T.StructField("centroid", T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    def _assigned_for(bc):
-        def assign(batches):
-            cents = bc.value
-            for pdf in batches:
-                out_c = []
-                for s in pdf["series"]:
-                    sa = np.asarray(s, dtype=np.float64)
-                    out_c.append(
-                        int(np.argmin([_dtw(sa, c) for c in cents]))
-                    )
-                yield pd.DataFrame(
-                    {
-                        "series_id": pdf["series_id"],
-                        "series": pdf["series"],
-                        "cluster": out_c,
-                    }
-                )
-
-        return series_df.select("series_id", "series").mapInPandas(
-            assign, schema=assign_schema
+    def assign() -> np.ndarray:
+        return np.array(
+            [int(np.argmin([_dtw(x, c) for c in centroids])) for x in X],
+            dtype=int,
         )
 
     for _ in range(n_iter):
-        bc = spark.sparkContext.broadcast(centroids)
-        # One k-DTW assignment pass per iteration: persist so the
-        # centroid-update action doesn't recompute it (the pre-fix
-        # version ran the full assignment twice per iteration).
-        assigned = _assigned_for(bc).persist()
-
-        def update(pdf: pd.DataFrame) -> pd.DataFrame:
-            c = int(pdf["cluster"].iloc[0])
-            series = [
-                np.asarray(s, dtype=np.float64) for s in pdf["series"]
-            ]
-            center = _dba(series, bc.value[c], iters=3)
-            return pd.DataFrame(
-                {"cluster": [c], "centroid": [center.tolist()]}
-            )
-
-        new_cents = (
-            assigned.groupBy("cluster")
-            .applyInPandas(update, schema=cent_schema)
-            .collect()
-        )
-        assigned.unpersist()
-        for r in new_cents:
-            centroids[r["cluster"]] = np.asarray(r["centroid"])
-
-    # Final assignment against the UPDATED centroids (tslearn-consistent:
-    # labels always reflect the returned cluster centers).
-    bc = spark.sparkContext.broadcast(centroids)
-    assignment = {
-        r["series_id"]: int(r["cluster"])
-        for r in _assigned_for(bc).select("series_id", "cluster").collect()
-    }
-    return assignment, centroids
+        labels = assign()
+        for c in range(len(centroids)):
+            members = [X[i] for i in np.flatnonzero(labels == c)]
+            if members:
+                centroids[c] = _dba(members, centroids[c], iters=3)
+    labels = assign()
+    return {ids[i]: int(labels[i]) for i in range(len(ids))}, centroids
 
 
 # --- k-Shape clustering (Paparrizos & Gravano, SIGMOD 2015) ----------------------

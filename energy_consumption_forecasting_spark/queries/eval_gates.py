@@ -10,8 +10,9 @@ efficiency, segmentation identity, grid completeness).  A kernel
 regression flips a boolean or shifts a count and the driver's
 value-hash fails.
 
-All gates are FIT-class for construction purity (training executes at
-DataFrame-construction time — tests/test_construction_purity.py).
+Gates whose training executes at DataFrame-construction time are
+FIT-class for construction purity (tests/test_construction_purity.py);
+the rest fold their fit into the returned plan.
 """
 
 from __future__ import annotations
@@ -22,7 +23,12 @@ from pyspark.sql import functions as F
 from ..operators import single_task
 from . import query
 from ._util import shared_plan, tbl
-from .ml_queries import _daily, _lstm_fit_forecast, _lstm_sequences
+from .ml_queries import (
+    _daily,
+    _lstm_fit_forecast,
+    _lstm_sequences,
+    _som_units,
+)
 from .text import STOPWORDS
 
 _SEQ_LEN = 14
@@ -248,45 +254,22 @@ def m21_som_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule m21/m5 share), every such series must receive exactly one BMU
     with coordinates inside the declared grid, and the trained
     codebook must be finite everywhere (a diverged update or an
-    indexing bug off the grid flips a boolean)."""
-    import numpy as np
-
-    from ..ml.som import som_fit
-
-    daily = _daily(spark, sf_dir)
-    series = (
-        daily.groupBy(F.trunc("d", "MM").alias("month"))
-        .agg(
-            F.slice(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("d", "demand"))),
-                    lambda s: s["demand"].cast("double"),
-                ),
-                1,
-                28,
-            ).alias("series")
-        )
-        .select(F.col("month").cast("string").alias("series_id"), "series")
-        .filter(F.size("series") == 28)
-    )
-    n_series = series.count()
-    if n_series == 0:
-        return spark.createDataFrame(
-            [(0, True, True, True)],
-            "n_series long, assignments_complete boolean,"
-            " bmu_in_grid boolean, codebook_finite boolean",
-        )
-    grid = (3, 2) if n_series >= 6 else (int(n_series), 1)
-    assignment, codebook = som_fit(series, grid=grid, n_iter=6)
-    complete = len(assignment) == n_series
-    in_grid = all(
-        0 <= r < grid[0] and 0 <= c < grid[1] for r, c in assignment.values()
-    )
-    finite = bool(np.isfinite(np.asarray(codebook, dtype=float)).all())
-    return spark.createDataFrame(
-        [(int(n_series), bool(complete), bool(in_grid), finite)],
-        "n_series long, assignments_complete boolean, bmu_in_grid boolean,"
-        " codebook_finite boolean",
+    indexing bug off the grid flips a boolean).  One aggregate over the
+    single-task fit's per-month rows (ml_queries._som_units): zero
+    construction jobs, and one row even when no month qualifies."""
+    units = _som_units(spark, sf_dir)
+    in_grid = F.col("bmu_row").between(0, F.col("grid_rows") - 1) & F.col(
+        "bmu_col"
+    ).between(0, F.col("grid_cols") - 1)
+    return units.agg(
+        F.count("*").alias("n_series"),
+        F.coalesce(F.count("*") == F.max("n_fit"), F.lit(True)).alias(
+            "assignments_complete"
+        ),
+        F.coalesce(F.bool_and(in_grid), F.lit(True)).alias("bmu_in_grid"),
+        F.coalesce(F.bool_and("codebook_finite"), F.lit(True)).alias(
+            "codebook_finite"
+        ),
     )
 
 

@@ -35,6 +35,28 @@ def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _month_series(
+    spark: SparkSession, sf_dir: str, days: int | None = None
+) -> DataFrame:
+    """(month date, series array<double>): each month's daily demand in
+    day order — the series the month models (M5, M8, M21) fit, at most
+    one row per calendar month.  With ``days``, each series is cut to
+    its first ``days`` days and shorter months are dropped, so every
+    series has that one length."""
+    series = F.transform(
+        F.array_sort(F.collect_list(F.struct("d", "demand"))),
+        lambda s: s["demand"].cast("double"),
+    )
+    if days is not None:
+        series = F.slice(series, 1, days)
+    months = (
+        _daily(spark, sf_dir)
+        .groupBy(F.trunc("d", "MM").alias("month"))
+        .agg(series.alias("series"))
+    )
+    return months if days is None else months.filter(F.size("series") == days)
+
+
 # --- M1: min-max scaling (K:817-818) -------------------------------------------
 @query(
     "m1_minmax_scale",
@@ -710,13 +732,9 @@ def m5_dtw_kmedoids(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect ran), so construction launches zero jobs."""
     from ..ml.clustering import dtw_distance_matrix
 
-    daily = _daily(spark, sf_dir)
-    series = daily.groupBy(F.trunc("d", "MM").alias("month")).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("d", "demand"))),
-            lambda s: s["demand"].cast("double"),
-        ).alias("series")
-    ).select(F.col("month").cast("string").alias("series_id"), "series")
+    series = _month_series(spark, sf_dir).select(
+        F.col("month").cast("string").alias("series_id"), "series"
+    )
     dist = dtw_distance_matrix(series)
 
     def fold(pdf):
@@ -742,29 +760,31 @@ def m5_tskmeans_dba(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TimeSeriesKMeans with TRUE DBA centroid updates (Petitjean 2011)
     — the tslearn semantics the reference runs
     (ts_kmeans_base.ipynb:1942-1944), closing the r2 k-medoids
-    substitution: assignment is a broadcast-centroid DTW map, the
-    barycenter update runs one applyInPandas per cluster
-    (ml/clustering.py::tskmeans_dba).  Equal-length series required:
-    each month is truncated to 28 days.  Rows-only: float DTW argmins
-    are solver-shaped."""
-    from ..ml.clustering import tskmeans_dba
+    substitution (ml/clustering.py::tskmeans_dba, k=6, 4 rounds).
+    Equal-length series required: each month is truncated to 28 days.
+    The month count is calendar-bounded, so the numpy fit runs in one
+    task over the month-series frame (zero construction jobs).
+    Rows-only: float DTW argmins are solver-shaped."""
 
-    daily = _daily(spark, sf_dir)
-    series = daily.groupBy(F.trunc("d", "MM").alias("month")).agg(
-        F.slice(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("d", "demand"))),
-                lambda s: s["demand"].cast("double"),
-            ),
-            1,
-            28,
-        ).alias("series")
-    ).select(
-        F.col("month").cast("string").alias("series_id"), "series"
-    ).filter(F.size("series") == 28)
-    assignment, _cents = tskmeans_dba(series, k=6, n_iter=4)
-    rows = [(k, v) for k, v in sorted(assignment.items())]
-    return spark.createDataFrame(rows, "month string, cluster int")
+    def fold(pdf):
+        import pandas as pd
+
+        from energy_consumption_forecasting_spark.ml.clustering import (
+            tskmeans_dba,
+        )
+
+        if not len(pdf):
+            return None
+        series = dict(zip(pdf["month"].astype(str), pdf["series"]))
+        assignment, _ = tskmeans_dba(series, k=6, n_iter=4)
+        rows = sorted(assignment.items())
+        return pd.DataFrame(
+            {"month": [m for m, _ in rows], "cluster": [c for _, c in rows]}
+        )
+
+    return single_task.run(
+        _month_series(spark, sf_dir, days=28), fold, "month string, cluster int"
+    )
 
 
 @query("m8_wavelet_coeffs")
@@ -1342,45 +1362,56 @@ def m25_calibration_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- M21 (extension): SOM clustering of the monthly series -------------------------
+def _som_units(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The SOM fit (ml/som.py) over the 28-day month series, one row
+    per month: its best-matching unit, the grid and series count the
+    fit used, and whether the trained codebook is finite.  The month
+    count is calendar-bounded, so the fit runs in one task over the
+    month-series frame; no rows when no month has 28 days."""
+
+    def fit(pdf):
+        import numpy as np
+        import pandas as pd
+
+        from energy_consumption_forecasting_spark.ml.som import som_fit, som_grid
+
+        if not len(pdf):
+            return None
+        series = dict(zip(pdf["month"].astype(str), pdf["series"]))
+        grid = som_grid(len(series))
+        assignment, codebook = som_fit(series, grid)
+        rows = sorted(assignment.items())
+        return pd.DataFrame(
+            {
+                "month": [m for m, _ in rows],
+                "bmu_row": [r for _, (r, _) in rows],
+                "bmu_col": [c for _, (_, c) in rows],
+                "grid_rows": grid[0],
+                "grid_cols": grid[1],
+                "n_fit": len(series),
+                "codebook_finite": bool(np.isfinite(codebook).all()),
+            }
+        )
+
+    return single_task.run(
+        _month_series(spark, sf_dir, days=28),
+        fit,
+        "month string, bmu_row int, bmu_col int, grid_rows int, grid_cols int,"
+        " n_fit long, codebook_finite boolean",
+    )
+
+
 @query("m21_som_map")
 def m21_som_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kohonen SOM over the monthly demand series — the reference's
     `ts_SOM_base.ipynb` workload (notebook blob missing from the
     snapshot; this is the public batch-SOM algorithm at standard
     fidelity, ml/som.py).  3x2 grid (shrunk to a 1-row map when the
-    calendar yields fewer than 6 complete months — the sf0.001 smoke
-    slice), same 28-day month series as M5; emits each month's
-    best-matching unit coordinates.  Rows-only: float BMU argmins are
-    solver-shaped (like M5/M6)."""
-    from ..ml.som import som_fit
-
-    daily = _daily(spark, sf_dir)
-    series = daily.groupBy(F.trunc("d", "MM").alias("month")).agg(
-        F.slice(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("d", "demand"))),
-                lambda s: s["demand"].cast("double"),
-            ),
-            1,
-            28,
-        ).alias("series")
-    ).select(
-        F.col("month").cast("string").alias("series_id"), "series"
-    ).filter(F.size("series") == 28)
-    # months-sized frame: the count is a bounded driver scalar
-    n_series = series.count()
-    if n_series == 0:
-        return spark.createDataFrame(
-            [], "month string, bmu_row int, bmu_col int"
-        )
-    grid = (3, 2) if n_series >= 6 else (int(n_series), 1)
-    assignment, _codebook = som_fit(series, grid=grid, n_iter=6)
-    rows = [
-        (sid, int(r), int(c)) for sid, (r, c) in sorted(assignment.items())
-    ]
-    return spark.createDataFrame(
-        rows, "month string, bmu_row int, bmu_col int"
-    )
+    calendar yields fewer than 6 complete months — ml/som.py::som_grid),
+    same 28-day month series as M5; emits each month's best-matching
+    unit coordinates.  Rows-only: float BMU argmins are solver-shaped
+    (like M5/M6)."""
+    return _som_units(spark, sf_dir).select("month", "bmu_row", "bmu_col")
 
 
 # --- M28: pinball (quantile) loss of the naive forecaster ----------------------------
@@ -1563,8 +1594,9 @@ def m5_cluster_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
       silhouette of the assignment beats a round-robin baseline
       partition of the same months (measured +0.06..+0.09 margin).
     * ``dba`` — ``assign_ok``: the returned labels equal the argmin-DTW
-      assignment against the tier's own DBA centroids (re-derived,
-      seeded) — the documented contract of tskmeans_dba;
+      assignment against the tier's own DBA centroids (re-derived by
+      the same numpy fit on the driver) — the documented contract of
+      tskmeans_dba;
       ``quality_ok``: every month is labeled and labels are in range.
       (A beats-baseline floor is NOT claimed: at sf0.001 the DBA tier
       legitimately collapses to one cluster on this corpus.)
@@ -1573,24 +1605,15 @@ def m5_cluster_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
       assignment step); ``quality_ok``: more than one cluster in use.
 
     The DTW matrix stays distributed (dtw_distance_matrix); only the
-    ≤105² matrix, labels, and KB-sized centroids reach the driver —
-    the operators' own bounded shapes."""
+    ≤105² matrix, the ≤105 month series and the labels reach the
+    driver — the operators' own bounded shapes."""
     import numpy as np
 
     from ..ml.clustering import dtw_distance_matrix, tskmeans_dba
 
     out = []
-    # ---- series frame shared by the two DTW tiers -------------------------
-    daily = _daily(spark, sf_dir)
-    series = (
-        daily.groupBy(F.trunc("d", "MM").alias("month"))
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("d", "demand"))),
-                lambda s: s["demand"].cast("double"),
-            ).alias("series")
-        )
-        .select(F.col("month").cast("string").alias("series_id"), "series")
+    series = _month_series(spark, sf_dir).select(
+        F.col("month").cast("string").alias("series_id"), "series"
     )
     dm = dtw_distance_matrix(series).collect()
     ids = sorted({r["id_a"] for r in dm} | {r["id_b"] for r in dm})
@@ -1639,12 +1662,12 @@ def m5_cluster_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     out.append(("dtw_kmedoids", n, assign_ok, quality_ok))
 
     # ---- dba --------------------------------------------------------------
-    series28 = series.select(
-        "series_id", F.slice("series", 1, 28).alias("series")
-    ).filter(F.size("series") >= 28)
-    assignment, centroids = tskmeans_dba(series28, k=6, n_iter=4)
+    s28 = {
+        str(r["month"]): np.asarray(r["series"], dtype=np.float64)
+        for r in _month_series(spark, sf_dir, days=28).collect()
+    }
+    _, centroids = tskmeans_dba(s28, k=6, n_iter=4)
     dba_rows = {r["month"]: r["cluster"] for r in m5_tskmeans_dba(spark, sf_dir).collect()}
-    s28 = {r["series_id"]: np.asarray(r["series"]) for r in series28.collect()}
 
     # the tier's own metric (|a-b| step cost) — a reimplementation with a
     # different cost would silently change argmins
@@ -1806,13 +1829,6 @@ def m8_wavelet_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     emits per-series verdicts and a final AND/count aggregate folds
     them (zero construction jobs; strictly more parallel than the old
     driver loop over collected arrays)."""
-    daily = _daily(spark, sf_dir)
-    agg = daily.groupBy(F.trunc("d", "MM").alias("month")).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("d", "demand"))),
-            lambda s: s["demand"].cast("double"),
-        ).alias("series")
-    )
 
     def check(batches):
         import numpy as np
@@ -1844,7 +1860,7 @@ def m8_wavelet_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                     out, columns=["recon_ok", "energy_ok", "length_ok"]
                 )
 
-    checked = agg.mapInPandas(
+    checked = _month_series(spark, sf_dir).mapInPandas(
         check, "recon_ok boolean, energy_ok boolean, length_ok boolean"
     )
     return checked.agg(
@@ -2111,13 +2127,6 @@ def m5_kshape(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the aggregated series frame (ONE lazy plan, zero construction
     jobs; identical kshape core, identical seed).  Rows-only:
     eigensolver-shaped fit."""
-    daily = _daily(spark, sf_dir)
-    agg = daily.groupBy(F.trunc("d", "MM").alias("month")).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("d", "demand"))),
-            lambda s: s["demand"].cast("double"),
-        ).alias("series")
-    )
 
     def fold(pdf):
         import numpy as np
@@ -2144,7 +2153,9 @@ def m5_kshape(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    return single_task.run(agg, fold, "month string, cluster int")
+    return single_task.run(
+        _month_series(spark, sf_dir), fold, "month string, cluster int"
+    )
 
 
 @query(

@@ -122,11 +122,9 @@ SLOW_NODE_IDS = {
     "tests/test_markov_stream.py::test_watermark_seals_midstream_and_tail_is_partial",
     "tests/test_minhash_stream.py::test_stream_cms_matches_batch",
     "tests/test_minhash_stream.py::test_stream_drain_equals_batch_banding",
-    "tests/test_ml.py::test_dtw_kmedoids",
     "tests/test_ml_extras.py::test_arima_exact_mle_goldens",
     "tests/test_ml_extras.py::test_dtw_external_golden",
     "tests/test_ml_extras.py::test_sbd_properties_and_kshape_recovery",
-    "tests/test_ml_extras.py::test_som_recovers_separated_clusters",
     "tests/test_ohlc_stream.py::test_available_now_leaves_no_checkpoint_or_view",
     "tests/test_ohlc_stream.py::test_multibatch_equals_batch",
     "tests/test_pagerank.py::test_power_iterate_shuffled_hash_tier_matches_broadcast",
@@ -148,7 +146,6 @@ SLOW_NODE_IDS = {
     "tests/test_parity.py::test_rows_only_queries_run[m15_shap_gbt]",
     "tests/test_parity.py::test_rows_only_queries_run[m16_ablation]",
     "tests/test_parity.py::test_rows_only_queries_run[m17_sensitivity]",
-    "tests/test_parity.py::test_rows_only_queries_run[m5_tskmeans_dba]",
     "tests/test_parity.py::test_rows_only_queries_run[m9_arima_full]",
     "tests/test_parity.py::test_rows_only_queries_run[sim_opq_topk]",
     "tests/test_pipeline_ops.py::test_substring_dedup_exact_spans",

@@ -103,12 +103,13 @@ EXEMPT: dict[str, str] = {
     # exact-moment aggregate feeds a mapInPandas that rebuilds R and
     # runs the identical PAF + varimax core; zero construction jobs.
     "m5_kmeans_clusters": "FIT",
-    "m5_tskmeans_dba": "FIT",
     # m5_kshape / m5_dtw_kmedoids: un-exempted r9 — the bounded
     # (≤105-series) fits fold through a 1-partition mapInPandas over
     # the aggregated series / distance frames (identical cores, same
-    # seeds); the DBA variant stays FIT: its barycenter update is
-    # genuinely iterative ON DATA (per-round Spark jobs).
+    # seeds).  m5_tskmeans_dba / m21_som_map / m21_som_eval:
+    # un-exempted — DBA k-means and the batch SOM are numpy fits in
+    # one single_task.run over the month-series frame, not per-round
+    # Spark jobs; the SOM eval aggregates the fit's rows in-plan.
     "m5_cluster_eval": "FIT",
     # m6_silhouette: un-exempted r9 — exact Rousseeuw silhouette via
     # per-cluster sufficient statistics + broadcast + HOF fold; the
@@ -129,7 +130,6 @@ EXEMPT: dict[str, str] = {
     "m15_permutation_importance": "FIT",
     "m16_ablation": "FIT",
     "m17_sensitivity": "FIT",
-    "m21_som_map": "FIT",
     "pipeline_quality_classifier": "FIT",
     "pipeline_bpe_merges": "FIT",
     "pipeline_bpe_encode": "FIT",
@@ -146,7 +146,6 @@ EXEMPT: dict[str, str] = {
     "m15_shap_eval": "FIT",
     "m16_ablation_eval": "FIT",
     "m17_sensitivity_eval": "FIT",
-    "m21_som_eval": "FIT",
     "pipeline_unigram_eval": "FIT",
     "pipeline_classifier_eval": "FIT",
     # m9_arima_eval: un-exempted r9 — the per-returnflag CSS fits run

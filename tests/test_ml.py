@@ -113,7 +113,7 @@ def test_dtw_kmedoids(spark):
         rows.append((f"s{sid}", [base + float(i % 3) for i in range(12)]))
     df = spark.createDataFrame(rows, "series_id string, series array<double>")
     dist = dtw_distance_matrix(df)
-    assignment = kmedoids_rows(dist.collect(), k=2, seed=7)
+    assignment = kmedoids_rows(dist.collect(), k=2)
     g1 = {assignment[f"s{i}"] for i in range(3)}
     g2 = {assignment[f"s{i}"] for i in range(3, 6)}
     assert len(g1) == 1 and len(g2) == 1 and g1 != g2

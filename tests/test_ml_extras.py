@@ -398,7 +398,21 @@ def test_kernel_shap_efficiency_and_guard(spark):
         kernel_shap(predict, explain, background, ["x1"])
 
 
-def test_dba_fixed_point_and_recovery(spark):
+def _two_shape_series(n_each: int, length: int, offset: float, seed: int):
+    """(id, series) pairs: ``n_each`` noisy sines around +offset ("a")
+    and cosines around -offset ("b"), interleaved a0, b0, a1, ..."""
+    import numpy as np
+
+    rng = np.random.RandomState(seed)
+    t = np.arange(length)
+    rows = []
+    for i in range(n_each):
+        rows.append((f"a{i}", np.sin(t) + offset + rng.randn(length) * 0.01))
+        rows.append((f"b{i}", np.cos(t) - offset + rng.randn(length) * 0.01))
+    return rows
+
+
+def test_dba_fixed_point_and_recovery():
     """DBA of identical series is that series; DBA k-means recovers
     well-separated synthetic clusters."""
     import numpy as np
@@ -413,13 +427,8 @@ def test_dba_fixed_point_and_recovery(spark):
     assert np.allclose(out, s)
 
     # two separated shapes, 6 series each, equal length 8
-    rng = np.random.RandomState(0)
-    rows = []
-    for i in range(6):
-        rows.append((f"a{i}", (np.sin(np.arange(8)) + 10 + rng.randn(8) * 0.01).tolist()))
-        rows.append((f"b{i}", (np.cos(np.arange(8)) - 10 + rng.randn(8) * 0.01).tolist()))
-    df = spark.createDataFrame(rows, "series_id string, series array<double>")
-    assignment, cents = tskmeans_dba(df, k=2, n_iter=3)
+    rows = _two_shape_series(6, 8, 10.0, seed=0)
+    assignment, cents = tskmeans_dba(dict(rows), k=2, n_iter=3)
     a_clusters = {assignment[f"a{i}"] for i in range(6)}
     b_clusters = {assignment[f"b{i}"] for i in range(6)}
     assert len(a_clusters) == 1 and len(b_clusters) == 1
@@ -469,7 +478,22 @@ def test_css_refine_improves_on_hr_starts():
     assert abs(b1[0] - 2.5) < 0.1
 
 
-def test_som_recovers_separated_clusters(spark):
+def test_dba_is_independent_of_input_order():
+    """The DBA fit takes series and cluster members in id order: the
+    same series handed over in two orders give identical labels and
+    bit-identical centroids."""
+    import numpy as np
+
+    from energy_consumption_forecasting_spark.ml.clustering import tskmeans_dba
+
+    rows = _two_shape_series(5, 8, 1.0, seed=5)
+    fits = [tskmeans_dba(dict(r), k=3, n_iter=3) for r in (rows, rows[::-1])]
+    (labels_a, cents_a), (labels_b, cents_b) = fits
+    assert labels_a == labels_b
+    assert np.array_equal(cents_a, cents_b)
+
+
+def test_som_recovers_separated_clusters():
     """Batch SOM: two well-separated series shapes land on different
     units, each group on ONE unit, and every series sits close to its
     best-matching unit after training."""
@@ -477,14 +501,8 @@ def test_som_recovers_separated_clusters(spark):
 
     from energy_consumption_forecasting_spark.ml.som import som_fit
 
-    rng = np.random.RandomState(3)
-    rows = []
-    for i in range(8):
-        rows.append((f"a{i}", (np.sin(np.arange(12)) + 20 + rng.randn(12) * 0.01).tolist()))
-        rows.append((f"b{i}", (np.cos(np.arange(12)) - 20 + rng.randn(12) * 0.01).tolist()))
-    df = spark.createDataFrame(rows, "series_id string, series array<double>")
-
-    assignment, codebook = som_fit(df, grid=(2, 2), n_iter=6)
+    rows = _two_shape_series(8, 12, 20.0, seed=3)
+    assignment, codebook = som_fit(dict(rows), (2, 2))
     assert codebook.shape == (4, 12)
     a_units = {assignment[f"a{i}"] for i in range(8)}
     b_units = {assignment[f"b{i}"] for i in range(8)}
@@ -493,6 +511,26 @@ def test_som_recovers_separated_clusters(spark):
     X = np.array([r[1] for r in rows])
     qe = np.sqrt(((X[:, None, :] - codebook[None]) ** 2).sum(axis=2)).min(axis=1)
     assert qe.mean() < 1.0
+
+
+def test_som_is_independent_of_input_order_and_grid_shrinks():
+    """The SOM fit seeds and sums in id order: the same series handed
+    over in two orders give identical units and a bit-identical
+    codebook.  Below six series the map is one row of n units."""
+    import numpy as np
+
+    from energy_consumption_forecasting_spark.ml.som import som_fit, som_grid
+
+    rows = _two_shape_series(5, 12, 1.0, seed=9)
+    assert som_grid(len(rows)) == (3, 2)
+    fits = [som_fit(dict(r), som_grid(len(r))) for r in (rows, rows[::-1])]
+    (units_a, book_a), (units_b, book_b) = fits
+    assert units_a == units_b
+    assert np.array_equal(book_a, book_b)
+    assert som_grid(4) == (4, 1)
+    units, book = som_fit(dict(rows[:4]), som_grid(4))
+    assert book.shape == (4, 12)
+    assert all(0 <= r < 4 and c == 0 for r, c in units.values())
 
 
 def test_arima_exact_mle_goldens():

@@ -76,11 +76,6 @@ EXEMPT_PARAMS = {
         "test_topk_blocked_large_query_table crosses block boundaries, "
         "which the 4096-row default does not reach at test size"
     ),
-    f"{PACKAGE}.ml.clustering.kmedoids_rows(seed)": (
-        "test seam: tests/test_ml.py::test_dtw_kmedoids holds only for its "
-        "seed 7; seed 42 draws two identical series as medoids and one "
-        "cluster stays empty"
-    ),
     f"{_STREAMING}.anomaly_stream.run_anomaly_available_now"
     "(max_files_per_trigger)": _DRAIN.format(
         test="tests/test_anomaly_stream.py::"
