@@ -1,84 +1,86 @@
-"""Model-analysis harnesses — SURVEY §2.7 M15-M18.
+"""Model-analysis kernels — SURVEY §2.7 M13, M15-M18.
 
 Reference: SHAP KernelExplainer importance (evaluation.ipynb:13964-13991),
 feature-group ablation (V:14040-14072), order sensitivity sweep
-(V:14136-14238).  The learning curve (V:19103-19118) is the registered
-``m18_learning_curve`` query (queries/ml_queries.py).
+(V:14136-14238), BO over the AR order (optimization.py:112-151).  The
+learning curve (V:19103-19118) is the registered ``m18_learning_curve``
+query (queries/ml_queries.py).
 
-The harnesses share one shape: a driver loop over *configurations*, where
-each configuration's score is a Spark-evaluated metric.  The loops are
-over tens of configs (never data); each evaluation is distributed.
+The ablation, the sensitivity sweep, permutation importance and the
+AR-order BO all score the daily order series, one row per calendar day,
+with the trailing-mean AR objective.  The series is small by
+construction, so each of those queries scores it with the numpy
+functions below inside one ``single_task.run`` task: every objective
+evaluation is a numpy call on the task, not a Spark job.
 
-SHAP itself needs the shap package; ``permutation_importance`` is the
-library-free analog (published algorithm: metric degradation under
-per-feature value shuffling)."""
+The Shapley estimators score a fitted Spark model: their v(S) grid is
+one distributed ``predict`` pass.  SHAP itself needs the shap package;
+``hashed_permutation`` drives the library-free permutation-importance
+analog (published algorithm: metric degradation under per-feature
+value shuffling)."""
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import hashlib
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+from numpy.lib.stride_tricks import sliding_window_view
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .cv import folds
-from .metrics import mae
+
+def trailing_mean_mae(y: np.ndarray, p: int, first_scored: int) -> float:
+    """MAE of the trailing-mean AR(p) predictor over ``y[first_scored:]``:
+    row i is predicted by the mean of the up-to-``p`` rows before it,
+    and is scored when it has at least one.  NaN when no row is scored.
+
+    Each window and the error list are summed left to right
+    (``np.add.accumulate``; ``np.sum`` sums pairwise), the order a
+    Spark ``avg`` over a sliding row frame and over one sorted
+    partition adds in, so the value is the same double Spark gives."""
+    y = np.asarray(y, dtype=float)
+    start = max(first_scored, 1)
+    if start >= len(y):
+        return float("nan")
+    # row i's window is padded[i : i + p]: y[i-p:i] behind zeros, and a
+    # leading 0.0 leaves a left-to-right sum unchanged
+    windows = sliding_window_view(np.concatenate([np.zeros(p), y]), p)
+    sums = np.add.accumulate(windows[start : len(y)], axis=1)[:, -1]
+    errs = np.abs(sums / np.minimum(np.arange(start, len(y)), p) - y[start:])
+    return float(np.add.accumulate(errs)[-1] / len(errs))
 
 
-Scorer = Callable[[DataFrame], float]
-"""A Scorer maps a (train∪val-ready) DataFrame to a scalar metric."""
+def blocked_cv_mae(y: np.ndarray, p: int, n_folds: int) -> float:
+    """Blocked-CV MAE of the trailing-mean AR(p) predictor (ml/cv.py's
+    folds over ``y`` in order): ``ntile`` blocks, the first
+    ``len(y) % n_folds`` one row longer, and a row is validation when
+    its 1-based position in its block is ``> 0.8 * size``.  Each block
+    is scored on its own rows; blocks with no scored row are left out,
+    and the result is NaN when none is left."""
+    base, big = divmod(len(y), n_folds)
+    scores, start = [], 0
+    for k in range(n_folds):
+        size = base + (k < big)
+        first = next((j for j in range(size) if j + 1 > 0.8 * size), size)
+        if max(first, 1) < size:
+            scores.append(trailing_mean_mae(y[start : start + size], p, first))
+        start += size
+    if not scores:
+        return float("nan")
+    return float(np.add.accumulate(scores)[-1] / len(scores))
 
 
-def naive_ar_cv_mae(
-    df: DataFrame,
-    time_col: str,
-    value_col: str,
-    p: int = 7,
-    n_folds: int = 5,
-) -> float:
-    """Shared cheap objective: blocked-CV MAE of a trailing-mean AR(p)
-    baseline — every fold evaluation is a window aggregate.
-
-    The folds use ``label_folds``' bounded window form: the documented
-    domain is calendar-bounded daily aggregates (the m16/m17 gates and
-    queries all pass one), matching the m12 gate's treatment — the
-    two-pass rank would pay a repartitionByRange + counting job per CV
-    evaluation inside ablation/sensitivity loops for nothing."""
-    scores = []
-    for train, val in folds(df, [time_col], n_folds=n_folds, bounded=True):
-        fold = train.withColumn("__role", F.lit("t")).unionByName(
-            val.withColumn("__role", F.lit("v"))
-        )
-        w = Window.orderBy(time_col).rowsBetween(-p, -1)
-        scored = fold.withColumn("__pred", F.avg(value_col).over(w)).filter(
-            (F.col("__role") == "v") & F.col("__pred").isNotNull()
-        )
-        m = scored.agg(mae(F.col("__pred"), F.col(value_col)).alias("m")).first()["m"]
-        if m is not None:
-            scores.append(float(m))
-    return sum(scores) / len(scores)
-
-
-def ablation(
-    df: DataFrame,
-    feature_groups: dict[str, list[str]],
-    scorer: Scorer,
-) -> dict[str, float]:
-    """M16: re-score with each feature group dropped (plus 'none')."""
-    out = {"none": scorer(df)}
-    for name, cols in feature_groups.items():
-        out[f"drop_{name}"] = scorer(df.drop(*cols))
-    return out
-
-
-def sensitivity_sweep(
-    df: DataFrame,
-    param_grid: list[dict],
-    scorer_for: Callable[[dict], Scorer],
-) -> list[tuple[dict, float]]:
-    """M17: score every configuration in the grid (the reference sweeps
-    (P,D,Q) ± 5 around the optimum)."""
-    return [(params, scorer_for(params)(df)) for params in param_grid]
+def hashed_permutation(values: np.ndarray, col: str) -> np.ndarray:
+    """``values`` (one per row, in row order) under the fixed shuffle of
+    column ``col``: the row with 1-based rank r takes the value of the
+    row whose key ``md5("42|<col>|<rank>")`` sorts r-th, so the
+    permutation is a function of the row count and the column name."""
+    keys = [
+        hashlib.md5(f"42|{col}|{r}".encode()).hexdigest()
+        for r in range(1, len(values) + 1)
+    ]
+    return np.asarray(values)[np.argsort(keys)]
 
 
 def _coalition_values(
@@ -201,8 +203,6 @@ def kernel_shap(
     KB-sized, never data-path.  Returns (id_col, feature, phi)."""
     import math
 
-    import numpy as np
-
     m = len(feature_cols)
     if m < 2:
         raise ValueError("kernel_shap needs >= 2 features")
@@ -248,37 +248,3 @@ def kernel_shap(
         ]
     )
     return spark.createDataFrame(out_rows, out_schema)
-
-
-def permutation_importance(
-    df: DataFrame,
-    feature_cols: list[str],
-    scorer: Scorer,
-) -> dict[str, float]:
-    """M15 analog: importance(c) = score with column c shuffled − base
-    score.  The shuffle is a rank-based value permutation — distributed,
-    deterministic under the fixed seed 42 (content-hash ordering)."""
-    base = scorer(df)
-    out: dict[str, float] = {}
-    keyed = df.withColumn(
-        "__rid", F.row_number().over(Window.orderBy(F.monotonically_increasing_id()))
-    )
-    n = keyed.count()
-    for c in feature_cols:
-        # permute by joining values back on a hashed rank
-        perm = (
-            keyed.select(
-                F.col(c).alias("__v"),
-                F.row_number()
-                .over(Window.orderBy(F.md5(F.concat_ws("|", F.lit(42), F.lit(c), "__rid"))))
-                .alias("__prid"),
-            )
-        )
-        shuffled = (
-            keyed.drop(c)
-            .join(perm, F.col("__rid") == F.col("__prid"))
-            .withColumnRenamed("__v", c)
-            .drop("__prid")
-        )
-        out[c] = scorer(shuffled.drop("__rid")) - base
-    return out

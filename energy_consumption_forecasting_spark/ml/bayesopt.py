@@ -7,10 +7,11 @@ n_restarts=10, normalize_y=True)), LCB acquisition mu − 2.753·std,
 
 sklearn is optional; the numpy GP below implements the published RBF-GP
 regression equations (Cholesky solve) and the same LCB rule.  The
-surrogate is driver-side by design — it models a handful of scalar
-(hyperparam, objective) points; every objective evaluation is a
-Spark-evaluated cross-validated metric, which is where the data-scale
-work happens."""
+surrogate models a handful of scalar (hyperparam, objective) points, so
+it runs wherever the loop runs.  The objective is the caller's: for
+``m13_bayesopt_gbt`` each evaluation fits Spark GBT models, while
+``m13_bayesopt_ar_order`` runs the whole loop inside one task and each
+evaluation is a numpy MAE over the daily series (ml/analysis.py)."""
 
 from __future__ import annotations
 

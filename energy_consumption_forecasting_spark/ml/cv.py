@@ -119,10 +119,9 @@ def folds(
     order_cols: list[str],
     n_folds: int = 5,
     val_frac: float = 0.2,
-    bounded: bool = False,
 ) -> Iterator[tuple[DataFrame, DataFrame]]:
     """Yield (train, val) per fold — train is the block head, val the tail."""
-    labeled = label_folds(df, order_cols, n_folds, val_frac, bounded)
+    labeled = label_folds(df, order_cols, n_folds, val_frac)
     for k in range(1, n_folds + 1):
         fold_df = labeled.filter(F.col("fold") == k)
         yield (

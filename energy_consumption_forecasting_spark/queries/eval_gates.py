@@ -24,11 +24,13 @@ from ..operators import single_task
 from . import query
 from ._util import shared_plan, tbl
 from .ml_queries import (
-    _daily,
+    _finite_positive,
+    _gbt_shapley_inputs,
     _lstm_fit_forecast,
     _lstm_sequences,
     _som_units,
 )
+from .more_relational import m16_ablation, m17_sensitivity
 from .text import STOPWORDS
 
 _SEQ_LEN = 14
@@ -108,30 +110,9 @@ def m15_shap_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation end to end.  n_explained is SQL truth: the newest 5 of
     the n_days − 7 rows that have a full lag_7 history (the inner
     per-lag joins drop shorter histories)."""
-    from pyspark.ml.feature import VectorAssembler
-
     from ..ml.analysis import shapley_values
-    from ..ml.forecast import GBTLagForecaster
 
-    daily = _daily(spark, sf_dir).select(
-        "d", F.col("demand").cast("double").alias("demand")
-    )
-    fc = GBTLagForecaster(lags=[1, 2, 3, 7], max_iter=5, fit_partitions=8).fit(
-        daily, "d", "demand"
-    )
-    cols = [f"lag_{k}" for k in fc.lags]
-    feats = fc._features(daily, "d", "demand")
-    explain = (
-        feats.orderBy(F.col("d").desc())
-        .limit(5)
-        .select(F.col("d").cast("string").alias("__sid"), *cols)
-    )
-    background = feats.orderBy("d").limit(64).select(*cols)
-    assembler = VectorAssembler(inputCols=cols, outputCol="features")
-
-    def predict(df: DataFrame) -> DataFrame:
-        return fc.model.transform(assembler.transform(df))
-
+    predict, explain, background, cols = _gbt_shapley_inputs(spark, sf_dir, 64)
     phi = shapley_values(predict, explain, background, cols, id_col="__sid")
     sums = phi.groupBy("__sid").agg(F.sum("phi").alias("sum_phi"))
     fx = predict(explain).select("__sid", F.col("prediction").alias("fx"))
@@ -167,33 +148,15 @@ def m15_shap_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def m16_ablation_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MEASURE the ablation harness (rows-only m16_ablation): the
-    config set must be exactly the baseline plus one drop per feature
-    group (a broken loop drops or duplicates a config and the row hash
-    fails), and every blocked-CV MAE must be a finite positive double
-    (a leaked empty fold or a NaN objective flips mae_ok)."""
-    import math
-
-    from ..ml.analysis import ablation, naive_ar_cv_mae
-
-    daily = (
-        tbl(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("d"))
-        .agg(
-            F.sum("o_totalprice").alias("demand"),
-            F.count("*").alias("n_orders"),
-            F.avg("o_totalprice").alias("avg_price"),
-        )
+    """MEASURE the ablation (rows-only m16_ablation): the config set
+    must be exactly the baseline plus one drop per feature group (a
+    broken loop drops or duplicates a config and the row hash fails),
+    and every blocked-CV MAE must be a finite positive double (a
+    leaked empty fold or a NaN objective flips mae_ok).  A projection
+    of m16_ablation's rows."""
+    return m16_ablation(spark, sf_dir).select(
+        "config", _finite_positive(F.col("cv_mae")).alias("mae_ok")
     )
-    res = ablation(
-        daily,
-        {"volume": ["n_orders"], "price": ["avg_price"]},
-        lambda df: naive_ar_cv_mae(df, "d", "demand", p=7, n_folds=3),
-    )
-    rows = [
-        (cfg, bool(math.isfinite(v) and v > 0)) for cfg, v in sorted(res.items())
-    ]
-    return spark.createDataFrame(rows, "config string, mae_ok boolean")
 
 
 @query(
@@ -207,30 +170,12 @@ def m16_ablation_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m17_sensitivity_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MEASURE the sensitivity sweep (rows-only m17_sensitivity): the
-    grid must come back complete and in order with a finite positive
-    CV MAE per configuration — a sweep that skips, reorders, or
-    NaN-poisons a cell fails the hash."""
-    import math
-
-    from ..ml.analysis import naive_ar_cv_mae, sensitivity_sweep
-
-    daily = (
-        tbl(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("d"))
-        .agg(F.sum("o_totalprice").alias("demand"))
+    grid must come back complete with a finite positive CV MAE per
+    configuration — a sweep that skips, duplicates, or NaN-poisons a
+    cell fails the hash.  A projection of m17_sensitivity's rows."""
+    return m17_sensitivity(spark, sf_dir).select(
+        "p", _finite_positive(F.col("cv_mae")).alias("mae_ok")
     )
-    grid = [{"p": p} for p in (1, 3, 7, 14)]
-    res = sensitivity_sweep(
-        daily,
-        grid,
-        lambda params: lambda df: naive_ar_cv_mae(
-            df, "d", "demand", p=params["p"], n_folds=3
-        ),
-    )
-    rows = [
-        (int(r[0]["p"]), bool(math.isfinite(r[1]) and r[1] > 0)) for r in res
-    ]
-    return spark.createDataFrame(rows, "p int, mae_ok boolean")
 
 
 @query(

@@ -23,16 +23,39 @@ _DAILY_SQL = """
 """
 
 
-def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _daily(spark: SparkSession, sf_dir: str, *features: Column) -> DataFrame:
+    """One row per order date ``d``: the exact-decimal ``demand`` sum,
+    and each of ``features`` as a further aggregate over that day's
+    orders."""
     return (
         tbl(spark, sf_dir, "orders")
         .groupBy(F.to_date("o_orderdate").alias("d"))
         .agg(
             F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
             .cast("decimal(18,2)")
-            .alias("demand")
+            .alias("demand"),
+            *features,
         )
     )
+
+
+def _daily_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The daily series the M15 and M16 kernels score: ``demand`` as a
+    double, the day's order count ``n_orders`` and its exact mean order
+    price ``avg_price`` (the decimal sum over the count)."""
+    demand = F.col("demand").cast("double")
+    return _daily(spark, sf_dir, F.count("*").alias("n_orders")).select(
+        "d",
+        demand.alias("demand"),
+        "n_orders",
+        (demand / F.col("n_orders")).alias("avg_price"),
+    )
+
+
+def _finite_positive(c: Column) -> Column:
+    """``c`` is a finite positive double: Spark orders NaN above +inf,
+    so NaN fails the upper bound."""
+    return (c > 0) & (c < float("inf"))
 
 
 def _month_series(
@@ -822,48 +845,57 @@ def m7_decompose_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decompose_grouped(daily, ["l_returnflag"], "d", "qty", period=7)
 
 
-def _ar_order_objective(daily: DataFrame):
-    """The m13 AR-order objective: MAE of the trailing-p-mean predictor
-    over the daily series.  Shared by the BO loop AND its evaluation
-    gate (which sweeps the full grid), so the two cannot drift."""
-    w = Window.orderBy("d")
+def _bayesopt_ar_order(pdf):
+    """The m13 kernel: GP+LCB Bayesian optimization of the AR order p
+    over [1, 14] against the trailing-mean MAE of the whole daily
+    series (``pdf``: ``d``, ``y``), one row per evaluation, each with
+    the optimum of the full 14-point grid and the series length."""
+    import pandas as pd
 
-    def objective(p: int) -> float:
-        pred = F.avg("y").over(w.rowsBetween(-int(p), -1))
-        scored = daily.select("y", pred.alias("pred")).filter(
-            F.col("pred").isNotNull()
-        )
-        return float(
-            scored.agg(F.avg(F.abs(F.col("pred") - F.col("y")))).first()[0]
-        )
+    from ..ml.analysis import trailing_mean_mae
+    from ..ml.bayesopt import bayes_opt
 
-    return objective
+    if not len(pdf):
+        return None
+    y = pdf.sort_values("d")["y"].to_numpy()
+    res = bayes_opt(
+        lambda x: trailing_mean_mae(y, int(round(float(x[0]))), 0),
+        bounds=[(1.0, 14.0)],
+        n_init=3,
+        n_iter=4,
+    )
+    return pd.DataFrame(
+        {
+            "p": [int(round(x[0])) for x, _ in res["history"]],
+            "cv_mae": [float(v) for _, v in res["history"]],
+            "grid_best": min(trailing_mean_mae(y, p, 0) for p in range(1, 15)),
+            "n_days": len(y),
+        }
+    )
+
+
+def _ar_order_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The m13 AR-order search as one task over the calendar-bounded
+    daily series: (p, cv_mae, grid_best, n_days) per BO evaluation, no
+    rows when the series is empty."""
+    daily = _daily(spark, sf_dir).select(
+        "d", F.col("demand").cast("double").alias("y")
+    )
+    return single_task.run(
+        daily,
+        _bayesopt_ar_order,
+        "p int, cv_mae double, grid_best double, n_days long",
+    )
 
 
 @query("m13_bayesopt_ar_order")
 def m13_bayesopt_ar_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GP+LCB Bayesian optimization (M13) of the AR lag order against a
-    Spark-evaluated blocked-CV naive-AR MAE — the reference's loop shape
-    (surrogate on driver, objective on the cluster) at a demo budget."""
-    import numpy as np
-
-    from ..ml.bayesopt import bayes_opt
-
-    daily = _daily(spark, sf_dir).select(
-        "d", F.col("demand").cast("double").alias("y")
-    )
-    daily = daily.persist()
-    obj = _ar_order_objective(daily)
-
-    def objective(x: np.ndarray) -> float:
-        return obj(int(round(float(x[0]))))
-
-    res = bayes_opt(objective, bounds=[(1.0, 14.0)], n_init=3, n_iter=4)
-    rows = [
-        (int(round(x[0])), float(y)) for x, y in res["history"]
-    ]
-    daily.unpersist()
-    return spark.createDataFrame(rows, "p int, cv_mae double")
+    """GP+LCB Bayesian optimization (M13) of the AR lag order: the
+    objective is the trailing-mean AR(p) MAE over the full daily series
+    (every day with a predecessor is scored; no CV folds), at a demo
+    budget of 3 random and 4 guided evaluations.  The reference's loop
+    shape (surrogate, then objective), run whole in one task."""
+    return _ar_order_search(spark, sf_dir).select("p", "cv_mae")
 
 
 @query("m13_bayesopt_gbt")
@@ -967,17 +999,14 @@ def m13_bayesopt_gbt(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("m15_shap_gbt")
-def m15_shap_gbt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M15: EXACT interventional Shapley values for the GBT lag
-    forecaster's newest predictions (ml/analysis.py::shapley_values —
-    the quantity SHAP KernelExplainer estimates, evaluation.ipynb:
-    13964-13991; exact here because the lag feature set is small).
-    One distributed scoring pass over the explain×background×subset
-    grid.  Rows-only: GBT fits are solver-shaped."""
+def _gbt_shapley_inputs(spark: SparkSession, sf_dir: str, n_background: int):
+    """The M15 Shapley setup: the lag-[1, 2, 3, 7] GBT forecaster fitted
+    to the daily series, its 5 newest feature rows to explain (keyed
+    ``__sid``, the date), its ``n_background`` oldest as the
+    background, and ``predict``, the model over assembled lag
+    features.  Returns (predict, explain, background, lag columns)."""
     from pyspark.ml.feature import VectorAssembler
 
-    from ..ml.analysis import shapley_values
     from ..ml.forecast import GBTLagForecaster
 
     daily = _daily(spark, sf_dir).select(
@@ -993,12 +1022,26 @@ def m15_shap_gbt(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(5)
         .select(F.col("d").cast("string").alias("__sid"), *cols)
     )
-    background = feats.orderBy("d").limit(64).select(*cols)
+    background = feats.orderBy("d").limit(n_background).select(*cols)
     assembler = VectorAssembler(inputCols=cols, outputCol="features")
 
     def predict(df: DataFrame) -> DataFrame:
         return fc.model.transform(assembler.transform(df))
 
+    return predict, explain, background, cols
+
+
+@query("m15_shap_gbt")
+def m15_shap_gbt(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """M15: EXACT interventional Shapley values for the GBT lag
+    forecaster's newest predictions (ml/analysis.py::shapley_values —
+    the quantity SHAP KernelExplainer estimates, evaluation.ipynb:
+    13964-13991; exact here because the lag feature set is small).
+    One distributed scoring pass over the explain×background×subset
+    grid.  Rows-only: GBT fits are solver-shaped."""
+    from ..ml.analysis import shapley_values
+
+    predict, explain, background, cols = _gbt_shapley_inputs(spark, sf_dir, 64)
     out = shapley_values(predict, explain, background, cols, id_col="__sid")
     return out.select(F.col("__sid").alias("d"), "feature", "phi")
 
@@ -1012,30 +1055,9 @@ def m15_kernel_shap(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed v(S) scoring pass as m15_shap_gbt; with full coalition
     enumeration the regression equals exact Shapley (pytest-pinned
     against shapley_values).  Rows-only: GBT fits are solver-shaped."""
-    from pyspark.ml.feature import VectorAssembler
-
     from ..ml.analysis import kernel_shap
-    from ..ml.forecast import GBTLagForecaster
 
-    daily = _daily(spark, sf_dir).select(
-        "d", F.col("demand").cast("double").alias("demand")
-    )
-    fc = GBTLagForecaster(lags=[1, 2, 3, 7], max_iter=5, fit_partitions=8).fit(
-        daily, "d", "demand"
-    )
-    cols = [f"lag_{k}" for k in fc.lags]
-    feats = fc._features(daily, "d", "demand")
-    explain = (
-        feats.orderBy(F.col("d").desc())
-        .limit(5)
-        .select(F.col("d").cast("string").alias("__sid"), *cols)
-    )
-    background = feats.orderBy("d").limit(50).select(*cols)
-    assembler = VectorAssembler(inputCols=cols, outputCol="features")
-
-    def predict(df: DataFrame) -> DataFrame:
-        return fc.model.transform(assembler.transform(df))
-
+    predict, explain, background, cols = _gbt_shapley_inputs(spark, sf_dir, 50)
     out = kernel_shap(predict, explain, background, cols, id_col="__sid")
     return out.select(F.col("__sid").alias("d"), "feature", "phi")
 
@@ -1972,43 +1994,30 @@ def m13_bayesopt_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     * ``in_bounds_ok`` — every proposal respects the declared bounds
       (1 <= p <= 14): an unclipped acquisition argmax escapes first;
-    * ``finite_ok`` — every Spark-evaluated CV objective is a finite
-      positive MAE (a broken objective silently yields NaN);
+    * ``finite_ok`` — every objective value is a finite positive MAE
+      (a broken objective silently yields NaN);
     * ``near_optimum_ok`` — the BO best is within 5% of the TRUE grid
       optimum, obtained by sweeping the full 14-point bound range with
-      the SAME shared objective (_ar_order_objective — measured margin
-      ~0.1%; the worst point BO explores sits ~39% above, so a loop
-      that stopped improving would flip this FALSE).  This replaces a
-      min(all) <= min(init) check that was a tautology (review catch).
+      the SAME objective in the same task (measured margin ~0.1%; the
+      worst point BO explores sits ~39% above, so a loop that stopped
+      improving would flip this FALSE).
 
-    n_days pins the corpus; the history is 7 driver rows and the grid
-    sweep 14 cheap window aggregates."""
-    import math
-
-    hist = m13_bayesopt_ar_order(spark, sf_dir).collect()
-    n_days = (
-        tbl(spark, sf_dir, "orders")
-        .select(F.to_date("o_orderdate").alias("d"))
-        .distinct()
-        .count()
-    )
-    ps = [r["p"] for r in hist]
-    ys = [r["cv_mae"] for r in hist]
-    in_bounds_ok = all(1 <= p <= 14 for p in ps)
-    finite_ok = all(math.isfinite(y) and y > 0 for y in ys)
-    daily = (
-        _daily(spark, sf_dir)
-        .select("d", F.col("demand").cast("double").alias("y"))
-        .persist()
-    )
-    obj = _ar_order_objective(daily)
-    grid_best = min(obj(p) for p in range(1, 15))
-    daily.unpersist()
-    near_optimum_ok = min(ys) <= 1.05 * grid_best
-    return spark.createDataFrame(
-        [(n_days, len(hist), in_bounds_ok, finite_ok, near_optimum_ok)],
-        "n_days long, n_evals long, in_bounds_ok boolean,"
-        " finite_ok boolean, near_optimum_ok boolean",
+    n_days pins the corpus.  One aggregate over the search's rows
+    (``_ar_order_search``): zero construction jobs, and one row with
+    ``n_evals`` 0 when there are no orders."""
+    search = _ar_order_search(spark, sf_dir)
+    return search.agg(
+        F.coalesce(F.max("n_days"), F.lit(0)).cast("long").alias("n_days"),
+        F.count("*").alias("n_evals"),
+        F.coalesce(F.bool_and(F.col("p").between(1, 14)), F.lit(True)).alias(
+            "in_bounds_ok"
+        ),
+        F.coalesce(F.bool_and(_finite_positive(F.col("cv_mae"))), F.lit(True)).alias(
+            "finite_ok"
+        ),
+        F.coalesce(
+            F.min("cv_mae") <= 1.05 * F.max("grid_best"), F.lit(True)
+        ).alias("near_optimum_ok"),
     )
 
 

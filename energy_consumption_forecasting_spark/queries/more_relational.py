@@ -11,7 +11,12 @@ from pyspark.sql import functions as F
 from ..operators import single_task
 from . import query
 from ._util import shared_plan, tbl
-from .ml_queries import _lstm_fit_forecast, _lstm_sequences
+from .ml_queries import (
+    _daily,
+    _daily_features,
+    _lstm_fit_forecast,
+    _lstm_sequences,
+)
 
 
 # --- TPC-H Q6 shape: selective scan-aggregate ---------------------------------
@@ -255,88 +260,113 @@ def m11_lstm_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- M15: permutation importance (rows-only) ----------------------------------------
+# --- M15-M17: the daily-series analysis kernels (rows-only) ---------------------------
+# The daily series is bounded by the calendar, so each query scores it
+# in one single_task.run task; each kernel orders the rows by ``d``.
+_ABLATION_GROUPS = {"volume": ["n_orders"], "price": ["avg_price"]}
+_SENSITIVITY_ORDERS = [1, 3, 7, 14]
+
+
+def _permutation_importance(pdf):
+    """The m15 kernel: how much the MAE of the global-ratio predictor
+    (demand ≈ n_orders · Σdemand / Σn_orders) grows when one feature
+    column is shuffled (ml/analysis.py::hashed_permutation over the
+    rows ranked by ``d``), one row per feature."""
+    import numpy as np
+    import pandas as pd
+
+    from ..ml.analysis import hashed_permutation
+
+    if not len(pdf):
+        return None
+    pdf = pdf.sort_values("d")
+    demand = pdf["demand"].to_numpy()
+    feats = {c: pdf[c].to_numpy() for c in ("avg_price", "n_orders")}
+
+    def score(f) -> float:
+        ratio = demand.sum() / f["n_orders"].sum()
+        return float(np.abs(f["n_orders"] * ratio - demand).mean())
+
+    base = score(feats)
+    return pd.DataFrame(
+        [
+            (c, score({**feats, c: hashed_permutation(v, c)}) - base)
+            for c, v in feats.items()
+        ],
+        columns=["feature", "delta_mae"],
+    )
+
+
+def _ablation(pdf):
+    """The m16 kernel: the blocked-CV AR(7) MAE of daily demand with
+    each feature group's columns dropped, and with none dropped."""
+    import pandas as pd
+
+    from ..ml.analysis import blocked_cv_mae
+
+    if not len(pdf):
+        return None
+    pdf = pdf.sort_values("d")
+    frames = {"none": pdf} | {
+        f"drop_{g}": pdf.drop(columns=cols) for g, cols in _ABLATION_GROUPS.items()
+    }
+    return pd.DataFrame(
+        sorted(
+            (cfg, blocked_cv_mae(f["demand"].to_numpy(), 7, 3))
+            for cfg, f in frames.items()
+        ),
+        columns=["config", "cv_mae"],
+    )
+
+
+def _sensitivity(pdf):
+    """The m17 kernel: the blocked-CV MAE of daily demand at each AR
+    order of the grid, in grid order."""
+    import pandas as pd
+
+    from ..ml.analysis import blocked_cv_mae
+
+    if not len(pdf):
+        return None
+    y = pdf.sort_values("d")["demand"].to_numpy()
+    return pd.DataFrame(
+        {
+            "p": _SENSITIVITY_ORDERS,
+            "cv_mae": [blocked_cv_mae(y, p, 3) for p in _SENSITIVITY_ORDERS],
+        }
+    )
+
+
 @query("m15_permutation_importance")
 def m15_permutation_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SHAP-style attribution via permutation importance: metric
-    degradation when one feature column is shuffled (ml/analysis.py)."""
-    from ..ml.analysis import permutation_importance
-
-    daily = (
-        tbl(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("d"))
-        .agg(
-            F.sum("o_totalprice").alias("demand"),
-            F.count("*").alias("n_orders"),
-            F.avg("o_totalprice").alias("avg_price"),
-        )
-    )
-
-    def scorer(df: DataFrame) -> float:
-        # predict demand from n_orders via the global ratio; MAE as metric
-        stats = df.agg(
-            (F.sum("demand") / F.sum("n_orders")).alias("ratio")
-        )
-        scored = df.crossJoin(F.broadcast(stats))
-        return float(
-            scored.agg(
-                F.avg(F.abs(F.col("n_orders") * F.col("ratio") - F.col("demand")))
-            ).first()[0]
-        )
-
-    imp = permutation_importance(daily, ["n_orders", "avg_price"], scorer)
-    return spark.createDataFrame(
-        sorted(imp.items()), "feature string, delta_mae double"
+    degradation when one feature column is shuffled.  The shuffle is a
+    function of the date order, so the rows do not depend on the
+    shuffle width or on AQE."""
+    return single_task.run(
+        _daily_features(spark, sf_dir),
+        _permutation_importance,
+        "feature string, delta_mae double",
     )
 
 
-# --- M16: feature-group ablation (rows-only) ------------------------------------------
 @query("m16_ablation")
 def m16_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ablation over feature groups with the blocked-CV naive-AR MAE
-    objective (V:14040-14072 shape)."""
-    from ..ml.analysis import ablation, naive_ar_cv_mae
-
-    daily = (
-        tbl(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("d"))
-        .agg(
-            F.sum("o_totalprice").alias("demand"),
-            F.count("*").alias("n_orders"),
-            F.avg("o_totalprice").alias("avg_price"),
-        )
+    """Ablation over feature groups with the blocked-CV trailing-mean
+    AR(7) MAE objective (V:14040-14072 shape)."""
+    return single_task.run(
+        _daily_features(spark, sf_dir), _ablation, "config string, cv_mae double"
     )
-    res = ablation(
-        daily,
-        {"volume": ["n_orders"], "price": ["avg_price"]},
-        lambda df: naive_ar_cv_mae(df, "d", "demand", p=7, n_folds=3),
-    )
-    return spark.createDataFrame(sorted(res.items()), "config string, cv_mae double")
 
 
-# --- M17: hyperparameter sensitivity sweep (rows-only) ----------------------------------
 @query("m17_sensitivity")
 def m17_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CV MAE across the AR-order grid (the reference sweeps ±5 around
-    the optimum; V:14136-14238)."""
-    from ..ml.analysis import naive_ar_cv_mae, sensitivity_sweep
-
-    daily = (
-        tbl(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("d"))
-        .agg(F.sum("o_totalprice").alias("demand"))
+    """Blocked-CV MAE across the AR-order grid (the reference sweeps
+    ±5 around the optimum; V:14136-14238)."""
+    daily = _daily(spark, sf_dir).select(
+        "d", F.col("demand").cast("double").alias("demand")
     )
-    grid = [{"p": p} for p in (1, 3, 7, 14)]
-    res = sensitivity_sweep(
-        daily,
-        grid,
-        lambda params: lambda df: naive_ar_cv_mae(
-            df, "d", "demand", p=params["p"], n_folds=3
-        ),
-    )
-    return spark.createDataFrame(
-        [(r[0]["p"], r[1]) for r in res], "p int, cv_mae double"
-    )
+    return single_task.run(daily, _sensitivity, "p int, cv_mae double")
 
 
 # --- grouping sets: cube (free Spark capability, SURVEY §2.4 note) -------------

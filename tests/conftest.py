@@ -144,8 +144,6 @@ SLOW_NODE_IDS = {
     "tests/test_parity.py::test_rows_only_queries_run[m13_bayesopt_gbt]",
     "tests/test_parity.py::test_rows_only_queries_run[m15_kernel_shap]",
     "tests/test_parity.py::test_rows_only_queries_run[m15_shap_gbt]",
-    "tests/test_parity.py::test_rows_only_queries_run[m16_ablation]",
-    "tests/test_parity.py::test_rows_only_queries_run[m17_sensitivity]",
     "tests/test_parity.py::test_rows_only_queries_run[m9_arima_full]",
     "tests/test_parity.py::test_rows_only_queries_run[sim_opq_topk]",
     "tests/test_pipeline_ops.py::test_substring_dedup_exact_spans",

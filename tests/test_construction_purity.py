@@ -123,13 +123,13 @@ EXEMPT: dict[str, str] = {
     # folds through a 1-partition mapInPandas running the identical
     # NumpyLSTM trainer; zero construction jobs.
     "m13_bayesopt_gbt": "FIT",
-    "m13_bayesopt_ar_order": "FIT",
-    "m13_bayesopt_eval": "FIT",
+    # m13_bayesopt_ar_order / m15_permutation_importance / m16_ablation
+    # / m17_sensitivity and their eval gates: un-exempted — the AR
+    # objective is numpy over the calendar-bounded daily series, one
+    # single_task.run per query; the gates aggregate or project their
+    # sibling's rows.
     "m15_shap_gbt": "FIT",
     "m15_kernel_shap": "FIT",
-    "m15_permutation_importance": "FIT",
-    "m16_ablation": "FIT",
-    "m17_sensitivity": "FIT",
     "pipeline_quality_classifier": "FIT",
     "pipeline_bpe_merges": "FIT",
     "pipeline_bpe_encode": "FIT",
@@ -144,8 +144,6 @@ EXEMPT: dict[str, str] = {
     # m11_lstm_eval: un-exempted r9 — same 1-partition trainer fold
     # as m11_lstm_forecast; verdicts emitted from the fold.
     "m15_shap_eval": "FIT",
-    "m16_ablation_eval": "FIT",
-    "m17_sensitivity_eval": "FIT",
     "pipeline_unigram_eval": "FIT",
     "pipeline_classifier_eval": "FIT",
     # m9_arima_eval: un-exempted r9 — the per-returnflag CSS fits run

@@ -15,7 +15,6 @@ from energy_consumption_forecasting_spark.ml.forecast import (
     _ar_fit_forecast,
     ar_forecast_grouped,
 )
-from energy_consumption_forecasting_spark.ml.metrics import mae
 from energy_consumption_forecasting_spark.ml.clustering import (
     _dtw,
     dtw_distance_matrix,
@@ -74,14 +73,6 @@ def test_train_test_split(spark, series_df):
     assert tr.count() == math.ceil(0.85 * 90)
     assert te.count() == 90 - math.ceil(0.85 * 90)
     assert tr.agg(F.max("d")).first()[0] < te.agg(F.min("d")).first()[0]
-
-
-def test_metrics(spark):
-    df = spark.createDataFrame(
-        [(1.0, 2.0), (3.0, 3.0), (5.0, 4.0)], "pred double, y double"
-    )
-    m = df.agg(mae(F.col("pred"), F.col("y"))).first()[0]
-    assert m == pytest.approx(2.0 / 3)
 
 
 def test_ar_forecast_linear_trend():

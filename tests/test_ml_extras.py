@@ -1,15 +1,17 @@
-"""Factor analysis, analysis harness, LSTM dataset prep."""
+"""Factor analysis, analysis kernels, LSTM dataset prep."""
 
 from __future__ import annotations
+
+import hashlib
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from energy_consumption_forecasting_spark.ml.analysis import (
-    ablation,
-    naive_ar_cv_mae,
-    permutation_importance,
+    blocked_cv_mae,
+    hashed_permutation,
+    trailing_mean_mae,
 )
 from energy_consumption_forecasting_spark.ml.factor import (
     corr_from_moment_row,
@@ -54,31 +56,98 @@ def test_factoring_recovers_structure(spark, corr_df):
     assert dom[0] == dom[1] != dom[2]
 
 
-@pytest.fixture(scope="module")
-def ts_df(spark):
+def _ts_series():
+    """The series behind ``ts_df``, as a pandas frame: 100 days of ``y``
+    with a weekly cycle and a trend, and a feature ``x``."""
     import datetime as dt
 
-    rows = [
-        (
-            dt.date(2021, 1, 1) + dt.timedelta(days=i),
-            float(100 + (i % 7) * 5 + i * 0.3),
-            float(10 + i % 5),
-        )
-        for i in range(100)
-    ]
-    return spark.createDataFrame(rows, "d date, y double, x double")
+    import pandas as pd
+
+    i = np.arange(100)
+    return pd.DataFrame(
+        {
+            "d": [dt.date(2021, 1, 1) + dt.timedelta(days=int(k)) for k in i],
+            "y": 100 + (i % 7) * 5 + i * 0.3,
+            "x": (10 + i % 5).astype(float),
+        }
+    )
 
 
-def test_naive_ar_cv_mae(spark, ts_df):
-    m = naive_ar_cv_mae(ts_df, "d", "y", p=7, n_folds=3)
+@pytest.fixture(scope="module")
+def ts_df(spark):
+    return spark.createDataFrame(_ts_series(), "d date, y double, x double")
+
+
+def _daily_kernel_input(ts):
+    """``ts`` in the shape of ``ml_queries._daily_features``, rows in
+    reverse date order (each kernel orders by ``d`` itself)."""
+    return (
+        ts.rename(columns={"y": "demand", "x": "n_orders"})
+        .assign(n_orders=lambda f: f["n_orders"].astype("int64"))
+        .assign(avg_price=lambda f: f["demand"] / f["n_orders"])
+        .iloc[::-1]
+    )
+
+
+def _python_trailing_mean_mae(y, p, first_scored):
+    """Plain-Python reference: each window and the error list summed
+    left to right, one addition at a time."""
+    errs = []
+    for i in range(max(first_scored, 1), len(y)):
+        window = y[max(0, i - p) : i]
+        total = 0.0
+        for v in window:
+            total += v
+        errs.append(abs(total / len(window) - y[i]))
+    if not errs:
+        return float("nan")
+    total = 0.0
+    for e in errs:
+        total += e
+    return total / len(errs)
+
+
+def test_naive_ar_cv_mae():
+    y = _ts_series()["y"].to_numpy()
+    m = blocked_cv_mae(y, 7, 3)
     assert 0 < m < 50
 
 
-def test_ablation(spark, ts_df):
-    res = ablation(ts_df, {"x": ["x"]}, lambda df: naive_ar_cv_mae(df, "d", "y", n_folds=2))
-    assert set(res) == {"none", "drop_x"}
-    # scorer ignores x → identical scores
-    assert res["none"] == pytest.approx(res["drop_x"])
+def test_trailing_mean_mae_equals_python_reference():
+    """The numpy objective is the plain-Python loop bit for bit, for
+    every order and scored prefix, and the blocked-CV score is the mean
+    of the per-block values over ntile blocks (the first n % k one row
+    longer) with validation past 0.8 of each block."""
+    rng = np.random.RandomState(3)
+    y = np.round(rng.uniform(1e4, 1e6, 257), 2)
+    for p in range(1, 15):
+        for first in (0, 1, 5, 200, 256, 257):
+            got = trailing_mean_mae(y, p, first)
+            want = _python_trailing_mean_mae(list(y), p, first)
+            assert got == want or (np.isnan(got) and np.isnan(want)), (p, first)
+        blocks, start = [], 0
+        for k in range(4):
+            size = 257 // 4 + (k < 257 % 4)
+            first = next(j for j in range(size) if j + 1 > 0.8 * size)
+            block = list(y[start : start + size])
+            blocks.append(_python_trailing_mean_mae(block, p, first))
+            start += size
+        assert blocked_cv_mae(y, p, 4) == sum(blocks) / 4
+    assert np.isnan(trailing_mean_mae(y[:1], 3, 0))
+    # 3 rows in 3 blocks: each block's one row has no history
+    assert np.isnan(blocked_cv_mae(y[:3], 7, 3))
+
+
+def test_ablation():
+    from energy_consumption_forecasting_spark.queries.more_relational import (
+        _ablation,
+    )
+
+    res = dict(_ablation(_daily_kernel_input(_ts_series())).values.tolist())
+    assert set(res) == {"none", "drop_volume", "drop_price"}
+    # the objective reads demand only → identical scores
+    assert res["none"] == res["drop_volume"] == res["drop_price"]
+    assert res["none"] == blocked_cv_mae(_ts_series()["y"].to_numpy(), 7, 3)
 
 
 def test_learning_curve_monotone_rows(spark):
@@ -98,15 +167,94 @@ def test_learning_curve_monotone_rows(spark):
     assert n_rows[-1] == _daily(spark, SF_SMALL).count() - 1
 
 
-def test_permutation_importance_signal(spark, ts_df):
-    # scorer: MAE of predicting y from x*10 — shuffling x must hurt
-    def scorer(df):
-        return float(
-            df.agg(F.avg(F.abs(F.col("x") * 10 - F.col("y")))).first()[0]
-        )
+def test_permutation_importance_signal():
+    from energy_consumption_forecasting_spark.queries.more_relational import (
+        _permutation_importance,
+    )
 
-    imp = permutation_importance(ts_df, ["x"], scorer)
-    assert imp["x"] > 0  # degradation when x is shuffled
+    ts = _ts_series()
+    x, y = ts["x"].to_numpy(), ts["y"].to_numpy()
+    shuffled = hashed_permutation(x, "x")
+    assert sorted(shuffled) == sorted(x) and not np.array_equal(shuffled, x)
+    # row r takes the value of the row whose md5("42|x|<rank>") sorts r-th
+    keys = sorted(
+        (hashlib.md5(f"42|x|{r}".encode()).hexdigest(), r) for r in range(1, 101)
+    )
+    assert list(hashed_permutation(np.arange(1, 101), "x")) == [r for _, r in keys]
+
+    # scorer: MAE of predicting y from x*10 — shuffling x must hurt
+    def score(col):
+        return float(np.abs(col * 10 - y).mean())
+
+    assert score(shuffled) - score(x) > 0  # degradation when x is shuffled
+    # the m15 kernel: its predictor reads n_orders, never avg_price
+    frame = _daily_kernel_input(ts).assign(demand=lambda f: f["n_orders"] * 9.5)
+    imp = dict(_permutation_importance(frame).values.tolist())
+    assert imp["n_orders"] > 0 and imp["avg_price"] == 0.0
+
+
+def test_ablation_none_equals_sensitivity_at_order_7(spark):
+    """m16's baseline and m17's p = 7 score the same daily demand with
+    the same objective, so the two doubles are equal bit for bit."""
+    from energy_consumption_forecasting_spark.queries.more_relational import (
+        m16_ablation,
+        m17_sensitivity,
+    )
+    from tests.conftest import SF_SMALL
+
+    none = {r["config"]: r["cv_mae"] for r in m16_ablation(spark, SF_SMALL).collect()}
+    sens = {r["p"]: r["cv_mae"] for r in m17_sensitivity(spark, SF_SMALL).collect()}
+    assert none["none"] == sens[7]
+
+
+def test_permutation_importance_ignores_shuffle_width_and_aqe(spark):
+    """The m15 shuffle is keyed on the date rank, so the rows are the
+    same at any shuffle width, with AQE on or off."""
+    from energy_consumption_forecasting_spark.queries.more_relational import (
+        m15_permutation_importance,
+    )
+    from tests.conftest import SF_SMALL, pinned_conf
+
+    results = []
+    for width in ("7", "32"):
+        for aqe in ("true", "false"):
+            with pinned_conf(spark, "spark.sql.shuffle.partitions", width):
+                with pinned_conf(spark, "spark.sql.adaptive.enabled", aqe):
+                    rows = m15_permutation_importance(spark, SF_SMALL).collect()
+            results.append(sorted(map(tuple, rows)))
+    assert results[0][1][0] == "n_orders" and results[0][1][1] > 0
+    assert all(r == results[0] for r in results[1:])
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "m13_bayesopt_ar_order",
+        "m13_bayesopt_eval",
+        "m15_permutation_importance",
+        "m16_ablation",
+        "m16_ablation_eval",
+        "m17_sensitivity",
+        "m17_sensitivity_eval",
+    ],
+)
+def test_daily_series_queries_on_zero_orders(spark, tmp_path, name):
+    """On an orders table with no rows, each daily-series analysis query
+    collects without an error: no rows, or for m13_bayesopt_eval its
+    one aggregate row with no evaluations."""
+    import pyarrow.parquet as pq
+
+    from energy_consumption_forecasting_spark.queries import load_all
+    from tests.conftest import SF_SMALL
+
+    schema = pq.read_schema(f"{SF_SMALL}/orders.parquet")
+    pq.write_table(schema.empty_table(), str(tmp_path / "orders.parquet"))
+    qs, _ = load_all()
+    rows = qs[name](spark, str(tmp_path)).collect()
+    if name == "m13_bayesopt_eval":
+        assert [tuple(r) for r in rows] == [(0, 0, True, True, True)]
+    else:
+        assert rows == []
 
 
 def test_sequence_dataset_shapes(spark, ts_df):
